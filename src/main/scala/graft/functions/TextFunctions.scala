@@ -33,22 +33,38 @@ object TextFunctions {
   def normText(text: Column): Column =
     lower(trim(regexp_replace(text, "\\s+", " ")))
 
-  /** Word 3-shingles (distinct) from an ALREADY-MATERIALIZED token array
-    * column. Docs with fewer than 3 tokens yield an empty array.
+  /** Adjacent word n-grams (n = 2 or 3) in position order, duplicates
+    * kept; fewer than n tokens yield an empty array, NULL tokens NULL.
     *
-    * Callers iterating many shingles per row must bind the token array to
-    * a real column first (`withColumn("toks", wsTokens(text))`): lambda
-    * bodies are not subexpression-eliminated, so passing `wsTokens(text)`
-    * directly re-runs the regex split once per element_at — O(shingles x
-    * tokens) instead of O(tokens) per document. */
-  def shingles3FromToks(toks: Column): Column =
-    when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), size(toks) - 3),
-        i => concat_ws(" ", element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))))
+    * The lambda reads only its own element — the token zipped with its 1-
+    * and 2-shifted slices — and never indexes the outer array. That is
+    * the invariant: Catalyst may inline a bound `toks` column back into
+    * an expression (PushPredicateThroughNonJoin substitutes a Project's
+    * aliases into a Filter, with no cost check), and lambda bodies are not
+    * subexpression-eliminated, so a body like `element_at(toks, i + 1)`
+    * would re-tokenize the whole text once per element — O(tokens²) per
+    * document. Here an inlined tokenizer runs a constant number of times
+    * per row, outside the lambda. */
+  private def wordNgrams(toks: Column, n: Int): Column = {
+    val names = Seq("a", "b", "c").take(n)
+    val shifted = names.zipWithIndex.map { case (name, k) =>
+      (if (k == 0) toks else slice(toks, lit(k + 1), size(toks))).as(name)
+    }
+    transform(
+      slice(arrays_zip(shifted: _*), lit(1), greatest(size(toks) - (n - 1), lit(0))),
+      z => concat_ws(" ", names.map(z.getField): _*))
+  }
 
-  /** Word 3-shingles straight from text — fine for single-expression use;
-    * see [[shingles3FromToks]] for the hot-path form. */
+  /** Word 3-shingles (distinct, first-occurrence order) from a token
+    * array; see [[wordNgrams]] for why this is safe to inline. */
+  def shingles3FromToks(toks: Column): Column = array_distinct(wordNgrams(toks, 3))
+
+  /** Adjacent word bigrams, NOT distinct (occurrence counts are the
+    * statistic), joined with ' ' — tokens are whitespace-split, so ' ' is
+    * a safe separator. */
+  def bigramsFromToks(toks: Column): Column = wordNgrams(toks, 2)
+
+  /** Word 3-shingles straight from text. */
   def shingles3(text: Column): Column = shingles3FromToks(wsTokens(text))
 
   /** Distinct 3-shingles hashed to 60-bit md5 longs in one fused pass —

@@ -1850,16 +1850,11 @@ object Similarity {
     * terms, never corpus-sized; the fusion touches probe-grained
     * shortlists only. */
   def s15HybridSearch(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions.wsTokens
+    import graft.functions.TextFunctions.{bigramsFromToks, wsTokens}
     val docs = Tables.load(spark, dir, "documents")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val toks = docs.select(col("doc_id"), wsTokens(col("text")).as("toks"))
-    val bg = toks.select(col("doc_id"), explode(
-        when(size(col("toks")) >= 2,
-          transform(sequence(lit(0), size(col("toks")) - 2),
-            i => concat_ws(" ",
-              element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
-          .otherwise(array().cast("array<string>"))).as("bg"))
+    val bg = toks.select(col("doc_id"), explode(bigramsFromToks(col("toks"))).as("bg"))
     // the inverted index: one map-side-partial aggregate; checkpointed
     // because postings, df AND the query side all read it
     val tf = bg.groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("tf"))

@@ -363,11 +363,7 @@ object TextAnalysis {
     // every bench rep deposit the whole exploded bigram stream in the
     // block manager — exactly the state accumulation a repeated job must
     // not carry; two column-pruned scans are the stateless price)
-    def docBg = docs.select(col("doc_id"), explode(
-      when(size(col("toks")) >= 2,
-        transform(sequence(lit(0), size(col("toks")) - 2),
-          i => concat_ws(" ", element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
-        .otherwise(array().cast("array<string>"))).as("bg"))
+    def docBg = docs.select(col("doc_id"), explode(bigramsFromToks(col("toks"))).as("bg"))
     // the LM model itself — distinct-bigram-sized, the operator's one
     // irreducible state — IS worth pinning: two consumers below (prefix
     // marginalization + the scoring join) would otherwise each rebuild it
@@ -522,13 +518,7 @@ object TextAnalysis {
   def t10Collocations(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
       .withColumn("toks", wsTokens(col("text")))
-    // adjacent-pair strings (tokens are whitespace-split, so ' ' is a safe
-    // separator); NOT distinct — occurrence counts are the statistic
-    val bigrams = docs.select(explode(
-      when(size(col("toks")) >= 2,
-        transform(sequence(lit(0), size(col("toks")) - 2),
-          i => concat_ws(" ", element_at(col("toks"), i + 1), element_at(col("toks"), i + 2))))
-        .otherwise(array().cast("array<string>"))).as("bg"))
+    val bigrams = docs.select(explode(bigramsFromToks(col("toks"))).as("bg"))
     val uni = docs.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val bigAll = bigrams.groupBy(col("bg")).agg(count(lit(1)).as("c12"))
@@ -837,10 +827,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), wsTokens(col("text")).as("toks"))
     val grams = docs
       .select(col("doc_id"), when(isTarget, 1L).otherwise(0L).as("is_target"),
-        explode(when(size(col("toks")) < 2, array().cast("array<string>"))
-          .otherwise(transform(sequence(lit(1), size(col("toks")) - 1),
-            i => concat_ws(" ", element_at(col("toks"), i), element_at(col("toks"), i + 1)))))
-          .as("gram"))
+        explode(bigramsFromToks(col("toks"))).as("gram"))
       .select(col("doc_id"), col("is_target"),
         (md5Long60(col("gram")) % ImpBuckets).as("b"))
       .localCheckpoint(true) // 3 consumers: bucket stats, totals, per-doc sum

@@ -26,7 +26,8 @@ class PlanPinSpec extends AnyFunSuite {
   val Pinned = Seq("q1_pricing_summary", "q3_shipping_priority",
     "q9_topn_per_group", "p6_curated_join", "p29_bucketed_join",
     "p46_analyze_priority", "d1_dedup_exact", "d3_dedup_minhash",
-    "s1_ann_brute", "t5_hash_split", "m1_multimodal_meta")
+    "s1_ann_brute", "t5_hash_split", "t8_repetition", "t11_filter_funnel",
+    "m1_multimodal_meta")
 
   private def newestLedger: Option[java.io.File] = {
     val docs = new java.io.File("docs")

@@ -328,6 +328,29 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("no lambda re-tokenizes: after optimization, no LambdaFunction body " +
+    "in the t11 filter, t4 or t8 plans contains RegExpReplace or StringSplit " +
+    "(an inlined token column inside a lambda is O(tokens²) per document)") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, RegExpReplace, StringSplit}
+    import graft.operators.TextAnalysis
+    val frames = Seq(
+      "filterKept" -> TextAnalysis.filterKept(spark, sf),
+      "t11_filter_funnel" -> TextAnalysis.t11FilterFunnel(spark, sf),
+      "t4_fingerprint" -> TextAnalysis.t4Fingerprint(spark, sf),
+      "t8_repetition" -> TextAnalysis.t8Repetition(spark, sf))
+    frames.foreach { case (name, df) =>
+      val tokenizing = df.queryExecution.optimizedPlan
+        .collectWithSubqueries { case p => p.expressions }.flatten
+        .flatMap(_.collect { case l: LambdaFunction => l.function })
+        .filter(_.exists {
+          case _: RegExpReplace | _: StringSplit => true
+          case _ => false
+        })
+      assert(tokenizing.isEmpty,
+        s"$name: lambda bodies re-run the tokenizer:\n${tokenizing.mkString("\n")}")
+    }
+  }
+
   test("fused hyperplaneBucket is bit-identical to the declarative HOF form") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions

@@ -22,13 +22,32 @@ class TextFunctionsSpec extends AnyFunSuite {
       .getSeq[String](0) == Seq("a", "b", "c"))
   }
 
+  private def sh(text: String): Seq[String] =
+    one(text).select(shingles3(col("text"))).collect()(0).getSeq[String](0)
+
   test("shingles3: fewer than 3 tokens yields empty, duplicates collapse") {
-    assert(one("a b").select(size(shingles3(col("text")))).collect()(0).getInt(0) == 0)
-    assert(one("a b c").select(shingles3(col("text"))).collect()(0)
-      .getSeq[String](0) == Seq("a b c"))
-    // repeated trigram counted once (distinct)
-    assert(one("x y x y x y x y").select(size(shingles3(col("text")))).collect()(0)
-      .getInt(0) == 2) // "x y x" and "y x y"
+    Seq("", "   \t  ", "a", "a b").foreach(t => assert(sh(t) == Seq.empty, s"[$t]"))
+    assert(sh("a b c") == Seq("a b c"))
+    // repeated trigrams kept once, in first-occurrence order
+    assert(sh("x y x y x y x y") == Seq("x y x", "y x y"))
+  }
+
+  test("shingles3: tab/newline separators and non-ASCII tokens keep " +
+    "position order; NULL text stays NULL") {
+    assert(sh("a\tb\nc  d") == Seq("a b c", "b c d"))
+    assert(sh("é ü 中文 テスト ß") == Seq("é ü 中文", "ü 中文 テスト", "中文 テスト ß"))
+    import spark.implicits._
+    assert(Seq(Option.empty[String]).toDF("text").select(shingles3(col("text")))
+      .collect()(0).isNullAt(0))
+  }
+
+  test("bigramsFromToks: adjacent pairs in order, duplicates kept, fewer " +
+    "than 2 tokens yield empty") {
+    def bg(text: String): Seq[String] =
+      one(text).select(bigramsFromToks(wsTokens(col("text")))).collect()(0).getSeq[String](0)
+    Seq("", " \n ", "a").foreach(t => assert(bg(t) == Seq.empty, s"[$t]"))
+    assert(bg("a b") == Seq("a b"))
+    assert(bg("x y x y") == Seq("x y", "y x", "x y"))
   }
 
   test("normText: case folds, whitespace runs collapse, ends trim") {
