@@ -47,8 +47,10 @@ object GraftSession {
   def tune(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder = b
     .config("spark.sql.extensions", "graft.GraftExtensions")
     // generated-class cache sized past the query surface (static conf;
-    // default 100 cannot hold a 219-plan interleaved sweep — SuiteProbe
-    // measured 19-23 janino recompiles per evicted plan's next run).
+    // default 100 cannot hold a 219-plan interleaved sweep — the r19
+    // warm-state probe, last present at commit 31c6c3b as
+    // graft.SuiteProbe, measured 19-23 janino recompiles per evicted
+    // plan's next run).
     // Measured r20 at 5000: in-suite rep-1 recompiles drop 23/19/19 ->
     // 14/11/2 and q16/q7 rep-1 wall -28%/-26%; NOT a full fix — Spark
     // keys this cache by weak reference, so entries die with GC of the

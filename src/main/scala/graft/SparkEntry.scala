@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{Analytics, AnalyticsExt, Behavior, Dedup, HeavyHitters, Multimodal, Similarity, SkewJoin, TextAnalysis, TopK}
+import graft.operators.{Analytics, AnalyticsExt, Behavior, Dedup, HeavyHitters, Multimodal, RunOracles, Similarity, SkewJoin, TextAnalysis, TopK}
 import graft.pipeline.PipelineQueries
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
@@ -35,28 +35,11 @@ object SparkEntry {
     Analytics.oracle ++ AnalyticsExt.oracle ++ Behavior.oracle ++ PipelineQueries.oracle ++
       TextAnalysis.oracle ++ Dedup.oracle ++ Similarity.oracle ++ TopK.oracle ++
       Multimodal.oracle ++ SkewJoin.oracle ++ graft.streaming.StreamQueries.oracle ++
-      Map("t14_heavy_hitters" -> HeavyHitters.t14Oracle)
+      Map("t14_heavy_hitters" -> HeavyHitters.t14Oracle) ++ RunOracles.published
 
-  /** Called by Verify after a query's result parquet lands. Operators whose
-    * oracle SQL is built from run-derived state (s3's k-means centroids) key
-    * that state by `dir` and only publish it once the producing plan has
-    * actually materialized — a failed run must not ship an oracle for a
-    * result that does not exist. */
-  def markMaterialized(name: String, dir: String): Unit = name match {
-    case "s3_ann_ivf" => Similarity.confirmMaterialized(dir)
-    case "s4_ann_pq" => Similarity.confirmPqMaterialized(dir)
-    case "s6_cluster_assign" => Similarity.confirmS6Materialized(dir)
-    case "s11_index_delta" => Similarity.confirmS11Materialized(dir)
-    case "s12_index_drift" => Similarity.confirmS12Materialized(dir)
-    case "s17_tombstone_plan" => Similarity.confirmS17Materialized(dir)
-    case "s22_shard_plan" => Similarity.confirmS22Materialized(dir)
-    case "s23_route_fanout" => Similarity.confirmS23Materialized(dir)
-    case "s20_nprobe_sweep" => Similarity.confirmS20Materialized(dir)
-    case "s24_tuning_frontier" => Similarity.confirmS24Materialized(dir)
-    case "s25_cell_rebalance" => Similarity.confirmS25Materialized(dir)
-    case "s14_ivf_pq" => Similarity.confirmS14Materialized(dir)
-    case "d12_semantic_dedup" => Similarity.confirmD12Materialized(dir)
-    case "d15_prototype_prune" => Similarity.confirmD15Materialized(dir)
-    case _ => ()
-  }
+  /** Called by Verify after a query's result parquet lands: publishes the
+    * run-derived oracle (if any) that `name`'s body registered for `dir`.
+    * See [[RunOracles]]. */
+  def markMaterialized(name: String, dir: String): Unit =
+    RunOracles.confirm(name, dir)
 }

@@ -42,8 +42,9 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        // let run-state-derived oracles (s3's centroids) publish for this
-        // dir now that the result they describe actually exists
+        // the result now exists: confirm the run-derived oracle (the model
+        // its body trained, e.g. s3's centroids) it registered for this dir
+        // in graft.operators.RunOracles; unregistered names are a no-op
         SparkEntry.markMaterialized(name, sfDir)
       } catch { case e: Throwable =>
         failed += name

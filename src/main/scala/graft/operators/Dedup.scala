@@ -83,7 +83,7 @@ object Dedup {
     * n and a one-short prefix silently loses recall. */
   /** d17 containment threshold as an exact rational (9/10). Defined here
     * beside [[TauNum]]/[[TauDen]] — NOT next to d17 — because
-    * `staticOracle` (a strict val above d17's source position) forces
+    * `oracle` (a strict val above d17's source position) forces
     * `d17OracleSql` during object init: constants it interpolates must
     * already be initialized or they read as 0. */
   val TauCNum = 9
@@ -720,6 +720,7 @@ object Dedup {
     * dup_group (CC label; self for singletons), is_keeper, group_size. */
   def d12SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val (cents, data) = Similarity.kmeansWithData(spark, dir)
+    RunOracles.pending("d12_semantic_dedup", dir, d12OracleSql(cents))
     // consumed three times (both pair sides + the output spine): one
     // materialized assignment pass, the cosineMatrix never re-runs
     val asg = Similarity.assignCells(data, cents)
@@ -850,8 +851,9 @@ object Dedup {
     // 2.1/4.1 MiB per run, exactly the sizes the r14 tail logged. With
     // model literals out of every closure, the artifact is fully
     // explained here and re-accepted on the rationale above.
-    // r16 closure, whole-suite this time (graft.TaskBinaryScan: every
-    // benchQueries entry at sf0.1 with per-query stderr markers): 5
+    // r16 closure, whole-suite this time (graft.TaskBinaryScan, last
+    // present at commit 31c6c3b: every benchQueries entry at sf0.1 with
+    // per-query stderr markers): 5
     // warnings total — 2x 2.1 MiB + 3x 4.1 MiB — ALL between this
     // query's markers, zero anywhere else. The 2.1 MiB ones are this
     // query's smaller candidate-side stages (same unknown-stats
@@ -1204,6 +1206,7 @@ object Dedup {
   def d15PrototypePrune(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (cents, data) = Similarity.kmeansWithData(spark, dir)
+    RunOracles.pending("d15_prototype_prune", dir, d15OracleSql(cents))
     val asg = Similarity.assignCells(data, cents)
       .select(col("vec_id"), col("cell"), col("cell_cos_e6"))
     val ranged = asg
@@ -1261,21 +1264,7 @@ object Dedup {
        |FROM r ORDER BY vec_id""".stripMargin
   }
 
-  /** d12's/d15's entries appear only once their results have materialized
-    * (the s3 convention: Verify calls `SparkEntry.markMaterialized` →
-    * [[Similarity.confirmD12Materialized]] / confirmD15Materialized);
-    * otherwise each degrades to the driver's rows-only check rather than
-    * shipping an oracle built from a model no result used. */
-  def oracle: Map[String, String] =
-    staticOracle ++ (Similarity.confirmedD12Model match {
-      case Some(cents) => Map("d12_semantic_dedup" -> d12OracleSql(cents))
-      case None => Map.empty
-    }) ++ (Similarity.confirmedD15Model match {
-      case Some(cents) => Map("d15_prototype_prune" -> d15OracleSql(cents))
-      case None => Map.empty
-    })
-
-  private val staticOracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = Map(
     "d27_weighted_jaccard" -> d27OracleSql,
     "d25_dedup_epochs" -> d25OracleSql,
     "d26_embed_decontam" -> d26OracleSql,

@@ -550,51 +550,6 @@ object Similarity {
        |WHERE rank <= $LshTopK ORDER BY probe_id, rank""".stripMargin
   }
 
-  /** s3's entry appears only once its result has MATERIALIZED (Verify calls
-    * [[confirmMaterialized]] after the parquet lands) for exactly one dir;
-    * otherwise s3 degrades to the driver's rows-only check rather than
-    * shipping an oracle for a result that does not exist (failed run) or an
-    * ambiguous one (two dirs verified in one JVM). */
-  def oracle: Map[String, String] =
-    staticOracle ++ (confirmedCentroids.toMap match {
-      case one if one.size == 1 => Map("s3_ann_ivf" -> s3OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedPq.toMap match {
-      case one if one.size == 1 => Map("s4_ann_pq" -> s4OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS6.toMap match {
-      case one if one.size == 1 => Map("s6_cluster_assign" -> s6OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS11.toMap match {
-      case one if one.size == 1 => Map("s11_index_delta" -> s11OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS12.toMap match {
-      case one if one.size == 1 => Map("s12_index_drift" -> s12OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS14.toMap match {
-      case one if one.size == 1 =>
-        Map("s14_ivf_pq" -> s14OracleSql(one.head._2._1, one.head._2._2))
-      case _ => Map.empty
-    }) ++ (confirmedS17.toMap match {
-      case one if one.size == 1 => Map("s17_tombstone_plan" -> s17OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS20.toMap match {
-      case one if one.size == 1 => Map("s20_nprobe_sweep" -> s20OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS22.toMap match {
-      case one if one.size == 1 => Map("s22_shard_plan" -> s22OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS23.toMap match {
-      case one if one.size == 1 => Map("s23_route_fanout" -> s23OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS24.toMap match {
-      case one if one.size == 1 => Map("s24_tuning_frontier" -> s24OracleSql(one.head._2))
-      case _ => Map.empty
-    }) ++ (confirmedS25.toMap match {
-      case one if one.size == 1 => Map("s25_cell_rebalance" -> s25OracleSql(one.head._2))
-      case _ => Map.empty
-    })
-
   /** s5 band signatures: the identical 64-plane literals, sliced per the
     * KnnBands x KnnPlanesPerBand config. */
   private lazy val knnBandSql: String = {
@@ -691,7 +646,7 @@ object Similarity {
        | CAST(vec_rank AS BIGINT) AS vec_rank, CAST(n_sources AS BIGINT) AS n_sources
        |FROM r WHERE fused_rank <= $FusedK ORDER BY probe_id, fused_rank""".stripMargin
 
-  private lazy val staticOracle: Map[String, String] = Map(
+  lazy val oracle: Map[String, String] = Map(
     "s19_graph_beam" -> s19OracleSql,
     "s26_hnsw_layers" -> s26OracleSql,
     "s27_hnsw_recall" -> s27OracleSql,
@@ -903,13 +858,9 @@ object Similarity {
     * self-contained so Bench's per-query timings never depend on which
     * consumer ran first, and the data half of the pair is a localCheckpoint
     * Bench's between-query unpersist would invalidate if memoized across
-    * queries. `pendingCentroids` below is the oracle-publication ledger,
-    * not a training memo.) */
-  private[graft] def kmeansWithData(spark: SparkSession, dir: String): (Seq[(Long, Array[Long])], DataFrame) = {
-    val r = kmeansOver(emb(spark, dir))
-    pendingCentroids.put(dir, r._1)
-    r
-  }
+    * queries.) */
+  private[graft] def kmeansWithData(spark: SparkSession, dir: String): (Seq[(Long, Array[Long])], DataFrame) =
+    kmeansOver(emb(spark, dir))
 
   /** The Lloyd loop over ANY (vec_id, embedding) frame — the full corpus
     * for s3/s4/s6/d12, the already-indexed corpus slice for s11 (whose
@@ -985,67 +936,6 @@ object Similarity {
         .mkString("[", ", ", "]") + ")"
     }.mkString(",\n  ")
 
-  /** k-means models keyed by the dir they were trained on. The training is
-    * fully deterministic (fixed init, fixed-point arithmetic), so an entry
-    * is a memo of a pure function of `dir` — two dirs in one JVM can never
-    * cross-wire. `pending` = computed while building an s3 plan; an entry
-    * reaches [[oracle]] only after [[confirmMaterialized]] moves it to
-    * `confirmed`, i.e. after the s3 RESULT for that dir actually landed. */
-  private val pendingCentroids =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedCentroids =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  /** Verify's post-materialization hook (via `SparkEntry.markMaterialized`):
-    * publishes `dir`'s centroids to the oracle. A no-op for a dir s3 never
-    * ran against — the oracle then simply omits s3 (rows-only check). */
-  def confirmMaterialized(dir: String): Unit =
-    pendingCentroids.get(dir).foreach(cs => confirmedCentroids.put(dir, cs))
-
-  /** s4's twin of [[confirmMaterialized]], for the PQ codebooks. */
-  def confirmPqMaterialized(dir: String): Unit =
-    pendingPq.get(dir).foreach(b => confirmedPq.put(dir, b))
-
-  /** s6's twin: the same trained centroids (pending entries are memos of a
-    * pure function of dir, shared with s3), but confirmed SEPARATELY — a
-    * failed s6 run must not inherit an oracle because s3 happened to
-    * materialize, and vice versa. */
-  private val confirmedS6 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS6Materialized(dir: String): Unit =
-    pendingCentroids.get(dir).foreach(cs => confirmedS6.put(dir, cs))
-
-  /** d12's twin (the model is the same pendingCentroids memo the
-    * per-cluster dedup assigned with; confirmed separately like s6). The
-    * confirmed model is read back by `Dedup.oracle` to generate d12's
-    * SQL — the map lives here beside its siblings, the consumer there. */
-  private val confirmedD12 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmD12Materialized(dir: String): Unit =
-    pendingCentroids.get(dir).foreach(cs => confirmedD12.put(dir, cs))
-
-  /** d15's twin of the d12 pattern (same pendingCentroids memo, confirmed
-    * separately; consumed by `Dedup.oracle`). */
-  private val confirmedD15 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmD15Materialized(dir: String): Unit =
-    pendingCentroids.get(dir).foreach(cs => confirmedD15.put(dir, cs))
-
-  private[operators] def confirmedD15Model: Option[Seq[(Long, Array[Long])]] =
-    confirmedD15.toMap match {
-      case one if one.size == 1 => Some(one.head._2)
-      case _ => None
-    }
-
-  private[operators] def confirmedD12Model: Option[Seq[(Long, Array[Long])]] =
-    confirmedD12.toMap match {
-      case one if one.size == 1 => Some(one.head._2)
-      case _ => None
-    }
-
   /** `s6_cluster_assign`: corpus-wide cluster assignment — every vector's
     * max-cosine cell from the deterministic k-means model, with its cosine
     * to the chosen centroid. This is the corpus-CURATION face of the s3
@@ -1056,6 +946,7 @@ object Similarity {
     * Tie-break = max cosine then min cid, identical to s3's assignment. */
   def s6ClusterAssign(spark: SparkSession, dir: String): DataFrame = {
     val (cents, data) = kmeansWithData(spark, dir)
+    RunOracles.pending("s6_cluster_assign", dir, s6OracleSql(cents))
     assignCells(data, cents)
       .select(col("vec_id"), col("cell").as("cluster_id"),
         col("cell_cos_e6").as("cos_e6"))
@@ -1085,14 +976,6 @@ object Similarity {
     * swaps this for a snapshot/date predicate, exactly like d8. */
   private def isNewVec(c: Column): Column =
     graft.functions.TextFunctions.md5Long60(c.cast("string")) % 100 >= Dedup.NewBucketMin
-
-  private val pendingS11 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS11 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS11Materialized(dir: String): Unit =
-    pendingS11.get(dir).foreach(cs => confirmedS11.put(dir, cs))
 
   /** Test hooks for the s11 exactness pin (package-private): the batch
     * membership predicate and a fresh corpus-slice model — the spec
@@ -1126,7 +1009,7 @@ object Similarity {
   def s11IndexDelta(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val (cents, corpusData) = kmeansOver(e.filter(!isNewVec(col("vec_id"))))
-    pendingS11.put(dir, cents)
+    RunOracles.pending("s11_index_delta", dir, s11OracleSql(cents))
     val corpusIdx = assignCells(corpusData, cents) // at scale: the stored index
     // batch is consumed twice (nn probe + output spine) — checkpoint the
     // small side, not the corpus
@@ -1200,6 +1083,7 @@ object Similarity {
   def s3AnnIvf(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be positive, got $nprobe")
     val (cents, data) = kmeansWithData(spark, dir)
+    RunOracles.pending("s3_ann_ivf", dir, s3OracleSql(cents))
     val e = data
       .withColumn("_cos", cosineMatrix(col("embedding"), centroidMatrix(cents)))
     val scored = scoredCells(cents, col("_cos"))
@@ -1292,14 +1176,8 @@ object Similarity {
           (0 until SubDim).map(d => Math.floorDiv(r.getAs[Long](s"s$d"), n)).toArray
       } // a cell no vector chose keeps its previous centroid, like s3
     }
-    pendingPq.put(dir, books)
     (books, data)
   }
-
-  private val pendingPq =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Long]]]]
-  private val confirmedPq =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Array[Long]]]]
 
   /** Left-to-right double dot product — the IEEE sequence DuckDB's
     * `list_sum(list_transform(list_zip(...)))` produces (same pairing the
@@ -1330,6 +1208,7 @@ object Similarity {
     * self excluded. */
   def s4AnnPq(spark: SparkSession, dir: String): DataFrame = {
     val (books, data) = pqTrain(spark, dir)
+    RunOracles.pending("s4_ann_pq", dir, s4OracleSql(books))
     val enc = data.select(col("vec_id"), col("embedding"),
       pqEncode(col("f"), books).as("codes"))
     val probes = data.filter(col("vec_id") < NumProbes)
@@ -1433,7 +1312,7 @@ object Similarity {
   def s14IvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (books, data) = pqTrain(spark, dir)
     val (cents, _) = kmeansIters(data) // data already carries the floored f
-    pendingS14.put(dir, (cents, books))
+    RunOracles.pending("s14_ivf_pq", dir, s14OracleSql(cents, books))
     val e = data.withColumn("_cos",
       cosineMatrix(col("embedding"), centroidMatrix(cents)))
     val topCells = slice(reverse(array_sort(scoredCells(cents, col("_cos")))), 1, NProbe)
@@ -1467,17 +1346,6 @@ object Similarity {
         floor(cos * lit(1000000.0)).cast("long").as("cos_e6"), col("rank"))
       .orderBy(col("probe_id"), col("rank"))
   }
-
-  /** Both s14 models keyed by dir — published to the oracle only after
-    * Verify confirms the s14 parquet landed, like every model oracle. */
-  private val pendingS14 = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(Long, Array[Long])], Array[Array[Array[Long]]])]
-  private val confirmedS14 = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(Long, Array[Long])], Array[Array[Array[Long]]])]
-
-  /** s14's twin of [[confirmMaterialized]] — publishes BOTH models. */
-  def confirmS14Materialized(dir: String): Unit =
-    pendingS14.get(dir).foreach(m => confirmedS14.put(dir, m))
 
   /** s14 oracle: s3's cell/probe CTEs + s4's encode/ADC CTEs, with the
     * ADC scan restricted to the probed cells' members — mirroring the
@@ -1990,14 +1858,6 @@ object Similarity {
 
   // ------------------------------------------------ s12: index drift monitor
 
-  private val pendingS12 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS12 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS12Materialized(dir: String): Unit =
-    pendingS12.get(dir).foreach(cs => confirmedS12.put(dir, cs))
-
   /** Drift cosine between two fixed-point vectors, mirroring the oracle's
     * `cosSql` shape exactly: elementwise double products summed in index
     * order, `dot / (sqrt(na) * sqrt(nb))`, e6 floor. Both inputs are
@@ -2045,7 +1905,7 @@ object Similarity {
     import spark.implicits._
     val e = emb(spark, dir)
     val (cents, _) = kmeansOver(e.filter(!isNewVec(col("vec_id"))))
-    pendingS12.put(dir, cents)
+    RunOracles.pending("s12_index_drift", dir, s12OracleSql(cents))
     val withCos = e.select(col("vec_id"), col("embedding"),
         isNewVec(col("vec_id")).cast("long").as("is_new"))
       .withColumn("_cos", cosineMatrix(col("embedding"), centroidMatrix(cents)))
@@ -2177,14 +2037,6 @@ object Similarity {
 
   // ------------------- s17: tombstone maintenance (index-side erasure plan)
 
-  private val pendingS17 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS17 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS17Materialized(dir: String): Unit =
-    pendingS17.get(dir).foreach(cs => confirmedS17.put(dir, cs))
-
   /** A posting list compacts when its dead postings reach
     * 1/[[DeadRewriteDen]] of its members; below that the store carries
     * tombstones and filters at query time. */
@@ -2215,7 +2067,7 @@ object Similarity {
   def s17TombstonePlan(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val (cents, data) = kmeansOver(e)
-    pendingS17.put(dir, cents)
+    RunOracles.pending("s17_tombstone_plan", dir, s17OracleSql(cents))
     val dead = (col("vec_id") % graft.pipeline.PipelineQueries.ErasureMod === 0)
       .cast("long")
     val per = assignCells(data, cents)
@@ -3527,11 +3379,17 @@ object Similarity {
     * nothing wider than 4 longs crosses the budget explode or its
     * window. The exact baseline is s1's verified plan, checkpointed and
     * joined per budget as a key-only semi join. Centroids publish to the
-    * oracle through the s3 materialization gate. */
+    * oracle through [[RunOracles]]. */
   def s20NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
+    val (cents, sweep) = s20Sweep(spark, dir)
+    RunOracles.pending("s20_nprobe_sweep", dir, s20OracleSql(cents))
+    sweep
+  }
+
+  /** s20's plan plus the centroids it trained — s24 builds on both. */
+  private def s20Sweep(spark: SparkSession, dir: String): (Seq[(Long, Array[Long])], DataFrame) = {
     val maxB = SweepBudgets.max
     val (cents, data) = kmeansWithData(spark, dir)
-    pendingS20.put(dir, cents)
     val e = data
       .withColumn("_cos", cosineMatrix(col("embedding"), centroidMatrix(cents)))
     val scored = scoredCells(cents, col("_cos"))
@@ -3570,7 +3428,7 @@ object Similarity {
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val hits = topk.join(exact, Seq("probe_id", "vec_id"), "left_semi")
       .groupBy(col("nprobe")).agg(count(lit(1)).as("n_hits"))
-    byBudget.groupBy(col("nprobe"))
+    val sweep = byBudget.groupBy(col("nprobe"))
       .agg(count(lit(1)).as("n_candidates"))
       .join(topk.groupBy(col("nprobe")).agg(count(lit(1)).as("n_results")),
         Seq("nprobe"))
@@ -3581,18 +3439,8 @@ object Similarity {
         col("n_exact"),
         expr("coalesce(n_hits, 0) * 1000000 div n_exact").as("recall_e6"))
       .orderBy(col("nprobe"))
+    (cents, sweep)
   }
-
-  private val pendingS20 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS20 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  /** s20's twin of [[confirmMaterialized]] (same centroids memo,
-    * confirmed separately — a failed s20 run must not inherit an oracle
-    * because s3 happened to materialize). */
-  def confirmS20Materialized(dir: String): Unit =
-    pendingS20.get(dir).foreach(cs => confirmedS20.put(dir, cs))
 
   private def s20OracleSql(cents: Seq[(Long, Array[Long])]): String = {
     val budgets = SweepBudgets.map(b => s"($b)").mkString(", ")
@@ -3648,14 +3496,6 @@ object Similarity {
   }
 
   // ------------------- s22: posting-list → shard placement plan
-
-  private val pendingS22 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS22 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS22Materialized(dir: String): Unit =
-    pendingS22.get(dir).foreach(cs => confirmedS22.put(dir, cs))
 
   /** s22: serving shards the index's posting lists are packed onto. */
   val NumShards = 4L
@@ -3715,7 +3555,7 @@ object Similarity {
   def s22ShardPlan(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val (cents, data) = kmeansOver(e)
-    pendingS22.put(dir, cents)
+    RunOracles.pending("s22_shard_plan", dir, s22OracleSql(cents))
     val cells = assignCells(data, cents)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"))
@@ -3791,14 +3631,6 @@ object Similarity {
 
   // ------------------- s23: probe routing fan-out over the shard plan
 
-  private val pendingS23 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS23 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS23Materialized(dir: String): Unit =
-    pendingS23.get(dir).foreach(cs => confirmedS23.put(dir, cs))
-
   /** s23: cells each probe routes to — the serving nprobe dial. */
   val RouteNprobe = 4
 
@@ -3826,7 +3658,7 @@ object Similarity {
     * the whole audit is metadata-sized except the (tiny) probe scan. */
   def s23RouteFanout(spark: SparkSession, dir: String): DataFrame = {
     val (cents, data) = kmeansWithData(spark, dir)
-    pendingS23.put(dir, cents)
+    RunOracles.pending("s23_route_fanout", dir, s23OracleSql(cents))
     val placed = serpentinePlacement(
       assignCells(data, cents).groupBy(col("cell"))
         .agg(count(lit(1)).as("n_members")))
@@ -3935,14 +3767,6 @@ object Similarity {
 
   // ------------------- s24: sweep → Pareto frontier + marginal knee
 
-  private val pendingS24 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS24 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS24Materialized(dir: String): Unit =
-    pendingS24.get(dir).foreach(cs => confirmedS24.put(dir, cs))
-
   /** `s24_tuning_frontier`: the DECISION layer over s20's recall/cost
     * sweep — which nprobe settings are Pareto-efficient (no other
     * setting reaches ≥ recall at ≤ candidate cost with one strictly
@@ -3960,8 +3784,8 @@ object Similarity {
     * element_at for the lag — no window, no self-join, and the only
     * generate roots in a 1-row aggregate (the sanctioned p17 shape). */
   def s24TuningFrontier(spark: SparkSession, dir: String): DataFrame = {
-    val sweep = s20NprobeSweep(spark, dir)
-    pendingS20.get(dir).foreach(cs => pendingS24.put(dir, cs))
+    val (cents, sweep) = s20Sweep(spark, dir)
+    RunOracles.pending("s24_tuning_frontier", dir, s24OracleSql(cents))
     val chain = sweep.agg(sort_array(collect_list(struct(
       col("nprobe"), col("n_candidates"), col("recall_e6")))).as("ch"))
     chain
@@ -4013,14 +3837,6 @@ object Similarity {
 
   // ------------------- s25: overfull-cell split / rebalance plan
 
-  private val pendingS25 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-  private val confirmedS25 =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, Array[Long])]]
-
-  def confirmS25Materialized(dir: String): Unit =
-    pendingS25.get(dir).foreach(cs => confirmedS25.put(dir, cs))
-
   /** s25 overfull threshold, as a fraction of the mean cell size:
     * cap = ceil(9·N/(8·k)), i.e. 12.5% above mean. Deliberately tight —
     * the md5-uniform synthetic corpus yields near-balanced cells
@@ -4049,7 +3865,7 @@ object Similarity {
   def s25CellRebalance(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     val (cents, data) = kmeansOver(e)
-    pendingS25.put(dir, cents)
+    RunOracles.pending("s25_cell_rebalance", dir, s25OracleSql(cents))
     val cells = assignCells(data, cents)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"))

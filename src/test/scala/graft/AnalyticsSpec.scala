@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import graft.operators.RunOracles
 
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.tune(
@@ -24,6 +25,15 @@ class AnalyticsSpec extends AnyFunSuite {
       val df = fn(spark, sf)
       assert(df.count() > 0, s"query $name returned no rows")
     }
+    // every query is oracle-checked: by a static entry, or by a run-derived
+    // one its body registered for this dir (the registry is JVM-global, so
+    // entries other specs published are not counted as static)
+    val static = SparkEntry.oracleSql.keySet -- RunOracles.published.keySet
+    val registered = RunOracles.registered
+    val unchecked = SparkEntry.queries.keySet.filterNot(n => static(n) || registered((n, sf)))
+    assert(unchecked.isEmpty, s"queries with no oracle: $unchecked")
+    val stray = registered.map(_._1) -- SparkEntry.queries.keySet
+    assert(stray.isEmpty, s"run-derived oracles registered under no query: $stray")
   }
 
   test("every oracle key has a query") {

@@ -937,22 +937,22 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // building the s3 plan trains k-means (pending state per dir) but must
     // NOT publish an oracle — the result it describes does not exist yet
     Similarity.s3AnnIvf(spark, sf)
-    assert(!Similarity.oracle.contains("s3_ann_ivf"),
+    assert(!SparkEntry.oracleSql.contains("s3_ann_ivf"),
       "oracle shipped for a result that never materialized")
     // confirming a dir s3 never ran against is a no-op
-    Similarity.confirmMaterialized("/no/such/dir")
-    assert(!Similarity.oracle.contains("s3_ann_ivf"))
+    SparkEntry.markMaterialized("s3_ann_ivf", "/no/such/dir")
+    assert(!SparkEntry.oracleSql.contains("s3_ann_ivf"))
     // Verify's post-write hook publishes the dir's centroids
-    Similarity.confirmMaterialized(sf)
-    assert(Similarity.oracle.contains("s3_ann_ivf"))
+    SparkEntry.markMaterialized("s3_ann_ivf", sf)
+    assert(SparkEntry.oracleSql.contains("s3_ann_ivf"))
     // two dirs confirmed in one JVM is ambiguous (the single-dump oracle
     // cannot say which run it describes) — degrade to the rows-only check
     val tmp = java.nio.file.Files.createTempDirectory("graft_s3_dir").toString
     spark.read.parquet(s"$sf/embeddings.parquet")
       .write.parquet(s"$tmp/embeddings.parquet")
     Similarity.s3AnnIvf(spark, tmp)
-    Similarity.confirmMaterialized(tmp)
-    assert(!Similarity.oracle.contains("s3_ann_ivf"))
+    SparkEntry.markMaterialized("s3_ann_ivf", tmp)
+    assert(!SparkEntry.oracleSql.contains("s3_ann_ivf"))
   }
 
   test("s1: exactly top-k per probe, ranks contiguous, cosine descending") {
@@ -981,9 +981,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(hits.toDouble / brute.size >= 0.6,
       s"recall@5 $hits/${brute.size} below the 4-bit-code + rerank floor")
     // run-state oracle gating, like s3: pending until Verify confirms
-    assert(!Similarity.oracle.contains("s4_ann_pq"))
-    Similarity.confirmPqMaterialized(sf)
-    assert(Similarity.oracle.get("s4_ann_pq").exists(_.contains("cents")))
+    assert(!SparkEntry.oracleSql.contains("s4_ann_pq"))
+    SparkEntry.markMaterialized("s4_ann_pq", sf)
+    assert(SparkEntry.oracleSql.get("s4_ann_pq").exists(_.contains("cents")))
   }
 
   test("d9: a junk prefix shifts no downstream chunk boundaries — the " +
@@ -1098,9 +1098,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
     // gating: pending until Verify confirms THIS entry (s3's confirm for
     // the same dir must not leak an s6 oracle)
-    assert(!Similarity.oracle.contains("s6_cluster_assign"))
-    Similarity.confirmS6Materialized(sf)
-    assert(Similarity.oracle.get("s6_cluster_assign").exists(_.contains("cents")))
+    assert(!SparkEntry.oracleSql.contains("s6_cluster_assign"))
+    SparkEntry.markMaterialized("s6_cluster_assign", sf)
+    assert(SparkEntry.oracleSql.get("s6_cluster_assign").exists(_.contains("cents")))
   }
 
   test("s5: every vector ranked, ranks contiguous, no self-neighbors, and " +

@@ -6,7 +6,7 @@ name, rows sorted by all columns, floats compared to 1e-9 rel).
 
 Usage: tools/check.py [sfdir] [out] [query ...]
 """
-import json, math, subprocess, sys, glob, os
+import json, math, subprocess, sys, glob, os, time
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
@@ -99,6 +99,7 @@ def compare(name, sql):
     return "OK" if bad == 0 else f"{bad} DIFFS"
 
 def main():
+    start = time.time()
     run_verify()
     with open(f"{OUT}/oracle_sql.json") as f:
         oracle = json.load(f)
@@ -108,13 +109,15 @@ def main():
             continue
         results[name] = compare(name, oracle[name])
         print(f"  {name}: {results[name]}")
-    # queries with spark output but no oracle → rows-only
+    # every query is oracle-checked, so an output this run wrote without an
+    # oracle fails (a run-derived oracle that was never registered or
+    # confirmed); stale dirs of a reused OUT and names outside ONLY are skipped
     for d in sorted(glob.glob(f"{OUT}/*/")):
         name = d.rstrip("/").split("/")[-1]
-        if name not in oracle:
-            import duckdb
-            n = duckdb.sql(f"SELECT count(*) FROM read_parquet('{d}*.parquet')").fetchone()[0]
-            print(f"  {name}: rows-only ({n} rows)")
+        if name in oracle or (ONLY and name not in ONLY) or os.path.getmtime(d) < start:
+            continue
+        results[name] = "NO-ORACLE"
+        print(f"  {name}: {results[name]}")
     nbad = sum(1 for v in results.values() if v != "OK")
     print(f"{'ALL GREEN' if nbad == 0 else f'{nbad} FAILING'} ({len(results)} checked)")
     sys.exit(1 if nbad else 0)
