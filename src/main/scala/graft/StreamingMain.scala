@@ -36,7 +36,7 @@ object StreamingMain {
     }
 
     val events = StreamPipelines.dedupStream(
-      StreamPipelines.fileEventsStream(spark, watchDir), Seq("event_id"))
+      StreamPipelines.fileStream(spark, watchDir, StreamPipelines.EventsSchema), Seq("event_id"))
 
     val windows = StreamPipelines.windowedTypeCountsPreWatermarked(events)
       .writeStream.format("memory").queryName("event_windows")

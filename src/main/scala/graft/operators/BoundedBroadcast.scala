@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions.broadcast
   * default 4M rows the built hash relation is low-hundreds of MB — far
   * under the 8 GB cap with executor headroom. Production deployments
   * size it via `SPARK_GRAFT_BROADCAST_MAX_ROWS` (the
-  * SPARK_GRAFT_STREAM_STATE_PARTITIONS pattern: a scale dial with a
-  * local default, guide §2 "scale-adaptive, not a local constant").
+  * SPARK_GRAFT_STREAM_STATE_PARTITIONS pattern, parsed where it is used
+  * by `StreamQueries.statePartitions`: a scale dial with a local
+  * default, guide §2 "scale-adaptive, not a local constant").
   *
   * The measured count comes from the caller, who reads it off an
   * already-checkpointed frame (a near-free job over materialized

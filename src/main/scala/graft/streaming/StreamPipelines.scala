@@ -32,18 +32,30 @@ object StreamPipelines {
     * it in generated code). */
   final case class SessState(buffered: List[(Long, Long, Double)], emitted: Long)
 
+  /** Declared schemas of the three landing zones [[fileStream]] reads:
+    * the event drop, the daily-crawl vector drop and the continuous-crawl
+    * document drop. */
+  val EventsSchema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
+  val EmbeddingsSchema = "vec_id LONG, embedding ARRAY<FLOAT>"
+  val DocumentsSchema = "doc_id LONG, text STRING"
+
   /** File-source ingest: continuously pick up parquet drops in `dir`
     * (the streaming sensor+ingest). Schema must be declared up front —
     * streaming reads never infer — and only `*.parquet` paths are picked
     * up: landing zones accumulate manifests, _SUCCESS markers and
     * half-written temp files, and ONE unreadable file would otherwise
     * kill the continuous query (the streaming analog of the batch side's
-    * quarantine ingest). */
-  def fileEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-      .option("pathGlobFilter", "*.parquet")
-      .parquet(dir)
+    * quarantine ingest). Parquet column pruning means extra columns in
+    * the drops are never read. `maxFilesPerTrigger` > 0 bounds each
+    * micro-batch (the knob that keeps per-batch delta cost flat when a
+    * backlog of drops accumulates). */
+  def fileStream(spark: SparkSession, dir: String, schema: String,
+                 maxFilesPerTrigger: Int = 0): DataFrame = {
+    val r = spark.readStream.schema(schema).option("pathGlobFilter", "*.parquet")
+    (if (maxFilesPerTrigger > 0)
+       r.option("maxFilesPerTrigger", maxFilesPerTrigger)
+     else r).parquet(dir)
+  }
 
   /** Windowed per-type aggregate with a watermark: late events beyond
     * `lateness` are dropped, state for closed windows is reclaimed. */
@@ -335,21 +347,6 @@ object StreamPipelines {
     events.withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
-  /** File-source embeddings ingest — the daily-crawl vector drop as a
-    * stream (same declared-schema + glob-filter contract as
-    * [[fileEventsStream]]). `maxFilesPerTrigger` > 0 bounds each
-    * micro-batch (the knob that keeps per-batch delta cost flat when a
-    * backlog of drops accumulates). */
-  def fileEmbeddingsStream(spark: SparkSession, dir: String,
-                           maxFilesPerTrigger: Int = 0): DataFrame = {
-    val r = spark.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("pathGlobFilter", "*.parquet")
-    (if (maxFilesPerTrigger > 0)
-       r.option("maxFilesPerTrigger", maxFilesPerTrigger)
-     else r).parquet(dir)
-  }
-
   /** Streaming index maintenance — s11's batch delta run as a continuous
     * stage: every micro-batch of arriving vectors is assigned to the
     * FIXED broadcast model's cells (the model PREDATES the stream, s11's
@@ -385,20 +382,6 @@ object StreamPipelines {
       .assignCells(batch.select(col("vec_id"), col("embedding")), cents)
       .select(col("vec_id"), col("cell"), col("cell_cos_e6"))
       .write.mode("overwrite").parquet(s"$stateDir/b$batchId")
-
-  /** File-source documents ingest — the continuous-crawl document drop as
-    * a stream (same declared-schema + glob-filter contract as
-    * [[fileEventsStream]]; parquet column pruning means extra columns in
-    * the drops are never read). */
-  def fileDocumentsStream(spark: SparkSession, dir: String,
-                          maxFilesPerTrigger: Int = 0): DataFrame = {
-    val r = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("pathGlobFilter", "*.parquet")
-    (if (maxFilesPerTrigger > 0)
-       r.option("maxFilesPerTrigger", maxFilesPerTrigger)
-     else r).parquet(dir)
-  }
 
   /** Streaming corpus dedup — d1's exact content dedup run as a
     * continuous ingest stage (the crawl-pipeline shape: every arriving

@@ -1,8 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The streaming shapes promoted onto the MEASURED oracle surface
   * (SURVEY §2's streaming family was test-only through round 18): each
@@ -14,39 +19,6 @@ import org.apache.spark.sql.streaming.Trigger
   * order, micro-batch boundaries, foreachBatch idempotence, state-dir
   * merge), not a unit replay of its parts. */
 object StreamQueries {
-
-  /** `st1_stream_dedup`: the streaming corpus-dedup ingest
-    * ([[StreamPipelines.corpusDedupSink]] — d1's exact content dedup run
-    * as a continuous crawl stage) drained over a DETERMINISTIC two-batch
-    * arrival of the documents table: even doc_ids land as the older
-    * input file, odd doc_ids as the newer one, `maxFilesPerTrigger=1`
-    * makes each file its own micro-batch (the file source processes
-    * oldest-first), and `Trigger.AvailableNow` drains the backlog and
-    * stops. The accepted set is batch-ORDER-dependent — a hash seen in
-    * batch 0 keeps its even-side min doc_id and blocks the odd side —
-    * so the oracle must restate the streaming semantics (per-batch
-    * keeper + anti-join against prior state), not just d1: exactly the
-    * asymmetry that makes this a streaming CORRECTNESS row rather than
-    * a re-labeled batch one. Output: one row per accepted document
-    * (norm_hash, doc_id, src_batch), ordered by hash.
-    *
-    * Scale: the staging writes are the test-scale stand-in for a crawl
-    * landing zone (production streams FROM such a zone; it doesn't
-    * create one). Everything the stream files is fingerprint-sized —
-    * text dies in each micro-batch's scan; the state merge is the
-    * hash-keyed anti-join d8 ships at batch scale. */
-  /** Recursively delete a run's scratch dir. The staged arrival files are
-    * a full table copy; Bench times these queries every rep of every
-    * sweep, so leaving them to accumulate in /tmp leaks a corpus copy per
-    * rep. Called in a `finally` AFTER the drained state has been
-    * localCheckpoint'ed (the returned frame must not depend on files
-    * this deletes). Best-effort: cleanup failure must not fail the query. */
-  private def deleteWork(work: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(work)).iterator().asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
 
   /** Partition count for the drains' stateful operators. A stateful
     * streaming query instantiates `spark.sql.shuffle.partitions` state
@@ -64,9 +36,17 @@ object StreamQueries {
     * measured local default. Results are partition-count-invariant,
     * which the hash-checked oracle rows prove at every scale
     * (state-partition count is fixed into the checkpoint at first
-    * batch, and every drain here starts from a fresh checkpoint). */
-  private val StreamStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse(4)
+    * batch, and every drain here starts from a fresh checkpoint).
+    * Parsed when a stateful drain builds its session, not when this
+    * object initialises: a malformed value fails those drains with an
+    * error that names the variable, never the whole query registry. */
+  private[graft] def statePartitions(env: Option[String]): Int =
+    env.fold(4) { v =>
+      val n = v.toIntOption.filter(_ > 0)
+      require(n.isDefined,
+        s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, got '$v'")
+      n.get
+    }
 
   /** A child session for a drain's streaming query: shares the
     * SparkContext, inherits the engine's builder-level tuning from the
@@ -85,56 +65,131 @@ object StreamQueries {
     * neutral — and stays on the caller's session. */
   private def streamSession(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions",
+      statePartitions(sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")).toString)
     s
   }
 
-  def st1StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st1").toString
-    try st1Run(spark, dir, work) finally deleteWork(work)
+  /** Recursively delete a run's scratch dir. The staged arrival files are
+    * a full table copy; Bench times these queries every rep of every
+    * sweep, so leaving them to accumulate in /tmp leaks a corpus copy per
+    * rep. Called in [[drain]]'s `finally` AFTER the drained state has
+    * been localCheckpoint'ed (the returned frame must not depend on files
+    * this deletes). Best-effort: a non-fatal cleanup failure must not fail
+    * the query. The walk is closed (it holds an open directory handle). */
+  private def deleteWork(work: String): Unit =
+    try Using.resource(Files.walk(Paths.get(work))) { paths =>
+      paths.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
+    } catch { case NonFatal(_) => () }
+
+  /** The one drain harness behind st1-st10. In a fresh `graft_<name>`
+    * scratch dir it stages `arrivals` in order as `a.parquet`,
+    * `b.parquet`, … with forced modification times 1e9, 2e9, … ms, so
+    * the file source's oldest-first listing order is deterministic and,
+    * at one file per trigger, each arrival is its own micro-batch. It
+    * reads them back as a `schema` file stream on `streamOn`, lets `body`
+    * build the sink (`work` is the scratch dir, for the sink's state or
+    * output path), starts it under a checkpoint with the AvailableNow
+    * trigger, awaits the drain and fails if the stream died.
+    *
+    * The frame `readBack(work)` returns is localCheckpoint'ed (eager):
+    * that pins the drained state in block storage, so the scratch dir —
+    * staged table copy, checkpoint, state — is deleted the moment this
+    * returns instead of leaking per rep. The delete runs in a `finally`,
+    * also when the stream dies or `body` throws.
+    *
+    * Staging writes run on the arrival frames' session and the read-back
+    * on the session `readBack` closes over (the caller's); only the
+    * stream reads on `streamOn`. */
+  private[graft] def drain(name: String, arrivals: Seq[DataFrame], schema: String,
+                           streamOn: SparkSession)(
+      body: (DataFrame, String) => DataStreamWriter[Row],
+      readBack: String => DataFrame): DataFrame = {
+    val work = Files.createTempDirectory(s"graft_$name").toString
+    try {
+      val in = new File(work, "in"); in.mkdirs()
+      arrivals.zipWithIndex.foreach { case (side, i) =>
+        val stem = ('a' + i).toChar.toString
+        val tmp = s"$work/stage_$stem"
+        side.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = new File(tmp).listFiles()
+          .find(f => f.getName.endsWith(".parquet")).get
+        val dst = new File(in, s"$stem.parquet")
+        Files.move(part.toPath, dst.toPath)
+        require(dst.setLastModified((i + 1) * 1000000000L), s"cannot stamp mtime on $dst")
+      }
+      val stream = StreamPipelines.fileStream(streamOn, in.toString, schema,
+        maxFilesPerTrigger = 1)
+      val q = body(stream, work)
+        .option("checkpointLocation", s"$work/ckpt")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      require(q.exception.isEmpty, s"$name stream died: ${q.exception}")
+      readBack(work).localCheckpoint(eager = true)
+    } finally deleteWork(work)
   }
 
-  private def st1Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val state = s"$work/state"
+  /** The documents table as st1/st3's two-batch arrival: even doc_ids
+    * as the older file, odd doc_ids as the newer one. */
+  private def parityArrivals(spark: SparkSession, dir: String): Seq[DataFrame] = {
     val docs = graft.Tables.load(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    // stage the two arrival files with forced modification times so the
-    // file source's oldest-first listing order is deterministic
-    def stage(name: String, even: Boolean, mtime: Long): Unit = {
-      val tmp = s"$work/stage_$name"
-      docs.filter((col("doc_id") % 2 === 0) === even)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(in, s"$name.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(mtime), s"cannot stamp mtime on $dst")
-    }
-    stage("a", even = true, 1000000000L)
-    stage("b", even = false, 2000000000L)
-    val q = StreamPipelines.corpusDedupSink(spark,
-        StreamPipelines.fileDocumentsStream(spark, in.toString,
-          maxFilesPerTrigger = 1),
-        state)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st1 stream died: ${q.exception}")
-    val batchDirs = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("b")).sortBy(_.getName.drop(1).toLong)
-    require(batchDirs.length == 2,
-      s"expected 2 micro-batches, got ${batchDirs.map(_.getName).toSeq}")
-    // localCheckpoint (eager) pins the fingerprint-sized state in block
-    // storage so the scratch dir — staged table copy, checkpoint, state —
-    // can be deleted the moment this returns instead of leaking per rep
-    batchDirs.map { d =>
-      spark.read.parquet(d.getPath)
-        .select(col("norm_hash"), col("doc_id"),
-          lit(d.getName.drop(1).toLong).as("src_batch"))
-    }.reduce(_ unionByName _).localCheckpoint(eager = true)
-      .orderBy(col("norm_hash"), col("doc_id"))
+    Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 =!= 0))
   }
+
+  /** st2/st4's two-batch TIME split of `ev` (which carries `ts_us`): the
+    * older half, below the data-derived midpoint, arrives first. */
+  private def midpointHalves(ev: DataFrame): Seq[DataFrame] = {
+    val cut = ev.agg(
+      expr("CAST((min(ts_us) + max(ts_us) + 1) div 2 AS BIGINT)").as("cut_us"))
+    Seq(col("ts_us") < col("cut_us"), col("ts_us") >= col("cut_us"))
+      .map(side => ev.crossJoin(broadcast(cut)).filter(side).drop("cut_us"))
+  }
+
+  /** The newest state version of st2/st4's versioned sink, once the
+    * two-batch version chain is proven on disk. */
+  private def twoBatchState(spark: SparkSession, state: String): DataFrame = {
+    val versions = new File(state).listFiles()
+      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong)
+    require(versions.contains(2L),
+      s"expected the two-batch version chain, got v${versions.sorted.toSeq}")
+    spark.read.parquet(s"$state/v${versions.max}")
+  }
+
+  /** `st1_stream_dedup`: the streaming corpus-dedup ingest
+    * ([[StreamPipelines.corpusDedupSink]] — d1's exact content dedup run
+    * as a continuous crawl stage) drained over a DETERMINISTIC two-batch
+    * arrival of the documents table: even doc_ids land as the older
+    * input file, odd doc_ids as the newer one, `maxFilesPerTrigger=1`
+    * makes each file its own micro-batch (the file source processes
+    * oldest-first), and the AvailableNow trigger drains the backlog and
+    * stops. The accepted set is batch-ORDER-dependent — a hash seen in
+    * batch 0 keeps its even-side min doc_id and blocks the odd side —
+    * so the oracle must restate the streaming semantics (per-batch
+    * keeper + anti-join against prior state), not just d1: exactly the
+    * asymmetry that makes this a streaming CORRECTNESS row rather than
+    * a re-labeled batch one. Output: one row per accepted document
+    * (norm_hash, doc_id, src_batch), ordered by hash.
+    *
+    * Scale: the staging writes are the test-scale stand-in for a crawl
+    * landing zone (production streams FROM such a zone; it doesn't
+    * create one). Everything the stream files is fingerprint-sized —
+    * text dies in each micro-batch's scan; the state merge is the
+    * hash-keyed anti-join d8 ships at batch scale. */
+  def st1StreamDedup(spark: SparkSession, dir: String): DataFrame =
+    drain("st1", parityArrivals(spark, dir), StreamPipelines.DocumentsSchema, spark)(
+      (stream, work) => StreamPipelines.corpusDedupSink(spark, stream, s"$work/state"),
+      { work =>
+        val batchDirs = new File(s"$work/state").listFiles()
+          .filter(_.getName.startsWith("b")).sortBy(_.getName.drop(1).toLong)
+        require(batchDirs.length == 2,
+          s"expected 2 micro-batches, got ${batchDirs.map(_.getName).toSeq}")
+        batchDirs.map { d =>
+          spark.read.parquet(d.getPath)
+            .select(col("norm_hash"), col("doc_id"),
+              lit(d.getName.drop(1).toLong).as("src_batch"))
+        }.reduce(_ unionByName _)
+      }).orderBy(col("norm_hash"), col("doc_id"))
 
   /** st1 oracle: the STREAMING semantics as batch SQL — batch 0 keeps
     * the min even doc_id per hash; batch 1 keeps the min odd doc_id per
@@ -182,55 +237,18 @@ object StreamQueries {
     * documented shape. Integer columns only (epoch micros, value
     * cents). */
   def st2StreamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st2").toString
-    try st2Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st2Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val state = s"$work/state"
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"),
         floor(col("value") * 100).cast("long").as("value_c"))
-    val cut = ev.agg(
-      expr("CAST((min(ts_us) + max(ts_us) + 1) div 2 AS BIGINT)").as("cut_us"))
-    def stage(name: String, older: Boolean, mtime: Long): Unit = {
-      val tmp = s"$work/stage_$name"
-      val side = ev.crossJoin(broadcast(cut))
-        .filter(if (older) col("ts_us") < col("cut_us")
-                else col("ts_us") >= col("cut_us"))
-        .drop("cut_us")
-      side.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(in, s"$name.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      require(dst.setLastModified(mtime), s"cannot stamp mtime on $dst")
-    }
-    stage("a", older = true, 1000000000L)
-    stage("b", older = false, 2000000000L)
-    val stream = spark.readStream
-      .schema("user_id LONG, event_id LONG, ts_us LONG, " +
-        "event_type STRING, value_c LONG")
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.upsertSink(spark, stream, state,
-        Seq("user_id"), "ts_us", "event_id")
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st2 stream died: ${q.exception}")
-    val versions = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong)
-    require(versions.contains(2L),
-      s"expected the two-batch version chain, got v${versions.sorted.toSeq}")
-    spark.read.parquet(s"$state/v${versions.max}")
-      .select(col("user_id"), col("event_id"), col("ts_us"),
-        col("event_type"), col("value_c"))
-      .localCheckpoint(eager = true)
+    drain("st2", midpointHalves(ev),
+        "user_id LONG, event_id LONG, ts_us LONG, event_type STRING, value_c LONG", spark)(
+      (stream, work) => StreamPipelines.upsertSink(spark, stream, s"$work/state",
+        Seq("user_id"), "ts_us", "event_id"),
+      work => twoBatchState(spark, s"$work/state")
+        .select(col("user_id"), col("event_id"), col("ts_us"),
+          col("event_type"), col("value_c")))
       .orderBy(col("user_id"))
   }
 
@@ -244,21 +262,6 @@ object StreamQueries {
       |    ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
       | FROM events) WHERE rn = 1
       |ORDER BY user_id""".stripMargin
-
-  /** Stage one arrival file: write `side` as a single parquet file named
-    * `name.parquet` under `in` with a forced modification time, so the
-    * file source's oldest-first listing order is deterministic (the
-    * st1/st2 staging rule, shared by st3/st4/st5). */
-  private def stageFile(in: java.io.File, work: String, name: String,
-                        side: DataFrame, mtime: Long): Unit = {
-    val tmp = s"$work/stage_$name"
-    side.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.endsWith(".parquet")).get
-    val dst = new java.io.File(in, s"$name.parquet")
-    java.nio.file.Files.move(part.toPath, dst.toPath)
-    require(dst.setLastModified(mtime), s"cannot stamp mtime on $dst")
-  }
 
   /** `st3_stream_quality`: the streaming quality gate
     * ([[StreamPipelines.qualityGateSink]] — t24's hashed-linear
@@ -277,46 +280,28 @@ object StreamQueries {
     * Scale: scoring is t24's zero-join per-row fold; only (doc_id,
     * n_toks, score) outlive each micro-batch scan, and state is
     * append-only batch dirs. */
-  def st3StreamQuality(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st3").toString
-    try st3Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st3Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val state = s"$work/state"
-    val docs = graft.Tables.load(spark, dir, "documents")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    stageFile(in, work, "a", docs.filter(col("doc_id") % 2 === 0), 1000000000L)
-    stageFile(in, work, "b", docs.filter(col("doc_id") % 2 =!= 0), 2000000000L)
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING")
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.qualityGateSink(spark, stream, state)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st3 stream died: ${q.exception}")
-    val batchIds = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("keep_b")).map(_.getName.drop(6).toLong).sorted
-    require(batchIds.sameElements(Array(0L, 1L)),
-      s"expected 2 micro-batches, got ${batchIds.toSeq}")
-    val kept = batchIds.map { b =>
-      val k = spark.read.parquet(s"$state/keep_b$b")
-        .select(col("doc_id"), col("n_toks"), col("score"),
-          lit(b).as("src_batch"))
-      // the yield ledger must agree with its own keep set — the
-      // streaming bookkeeping is part of what this row verifies
-      val led = spark.read.parquet(s"$state/ledger_b$b")
-        .select(col("n_keep")).head.getLong(0)
-      val nk = k.count()
-      require(led == nk, s"st3 batch $b ledger n_keep=$led but kept $nk")
-      k
-    }.reduce(_ unionByName _).localCheckpoint(eager = true)
-    kept.orderBy(col("doc_id"))
-  }
+  def st3StreamQuality(spark: SparkSession, dir: String): DataFrame =
+    drain("st3", parityArrivals(spark, dir), StreamPipelines.DocumentsSchema, spark)(
+      (stream, work) => StreamPipelines.qualityGateSink(spark, stream, s"$work/state"),
+      { work =>
+        val state = s"$work/state"
+        val batchIds = new File(state).listFiles()
+          .filter(_.getName.startsWith("keep_b")).map(_.getName.drop(6).toLong).sorted
+        require(batchIds.sameElements(Array(0L, 1L)),
+          s"expected 2 micro-batches, got ${batchIds.toSeq}")
+        batchIds.map { b =>
+          val k = spark.read.parquet(s"$state/keep_b$b")
+            .select(col("doc_id"), col("n_toks"), col("score"),
+              lit(b).as("src_batch"))
+          // the yield ledger must agree with its own keep set — the
+          // streaming bookkeeping is part of what this row verifies
+          val led = spark.read.parquet(s"$state/ledger_b$b")
+            .select(col("n_keep")).head.getLong(0)
+          val nk = k.count()
+          require(led == nk, s"st3 batch $b ledger n_keep=$led but kept $nk")
+          k
+        }.reduce(_ unionByName _)
+      }).orderBy(col("doc_id"))
 
   /** st3 oracle: t24's score restated per document (the same md5-bucket
     * integer-weight fold), admitted at score>0, with src_batch the
@@ -356,47 +341,20 @@ object StreamQueries {
     * join against dimension-sized state (the scd2Sink caveat applies:
     * whole-state rewrite per batch — right for a dimension). */
   def st4StreamScd2(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st4").toString
-    try st4Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st4Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val state = s"$work/state"
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
         col("event_type"), col("value"), col("ts"),
         unix_micros(col("ts")).as("ts_us"))
-    val cut = ev.agg(
-      expr("CAST((min(ts_us) + max(ts_us) + 1) div 2 AS BIGINT)").as("cut_us"))
-    def side(older: Boolean) = ev.crossJoin(broadcast(cut))
-      .filter(if (older) col("ts_us") < col("cut_us")
-              else col("ts_us") >= col("cut_us"))
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("value"), col("ts"))
-    stageFile(in, work, "a", side(older = true), 1000000000L)
-    stageFile(in, work, "b", side(older = false), 2000000000L)
-    val stream = spark.readStream
-      .schema("user_id LONG, event_id LONG, event_type STRING, " +
-        "value DOUBLE, ts TIMESTAMP")
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.scd2Sink(spark, stream, state)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st4 stream died: ${q.exception}")
-    val versions = new java.io.File(state).listFiles()
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong)
-    require(versions.contains(2L),
-      s"expected the two-batch version chain, got v${versions.sorted.toSeq}")
-    spark.read.parquet(s"$state/v${versions.max}")
-      .select(col("user_id"), col("version"), col("event_type"),
-        col("value"), col("effective_from_us"), col("effective_to_us"),
-        col("is_current"))
-      .localCheckpoint(eager = true)
+    val arrivals = midpointHalves(ev).map(_.select(col("user_id"), col("event_id"),
+      col("event_type"), col("value"), col("ts")))
+    drain("st4", arrivals,
+        "user_id LONG, event_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP", spark)(
+      (stream, work) => StreamPipelines.scd2Sink(spark, stream, s"$work/state"),
+      work => twoBatchState(spark, s"$work/state")
+        .select(col("user_id"), col("version"), col("event_type"),
+          col("value"), col("effective_from_us"), col("effective_to_us"),
+          col("is_current")))
       .orderBy(col("user_id"), col("version"))
   }
 
@@ -424,46 +382,26 @@ object StreamQueries {
     * Scale: state is per-user open-tail only (closed sessions leave the
     * buffer); the emitted rows are session-grained. */
   def st5StreamFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st5").toString
-    try st5Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st5Run(spark: SparkSession, dir: String, work: String): DataFrame = {
     import spark.implicits._
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val out = s"$work/out"
     val ev = graft.Tables.load(spark, dir, "events")
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
         col("ts"), col("event_type"))
-    stageFile(in, work, "a", ev, 1000000000L)
     val maxTsMs = ev.agg(max(col("ts"))).head.getTimestamp(0).getTime
     val yearMs = 365L * 86400L * 1000L
     def sentinel(offsetMs: Long) = Seq(
       (-1L, -1L, new java.sql.Timestamp(maxTsMs + offsetMs), "view"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    stageFile(in, work, "b", sentinel(yearMs), 2000000000L)
-    stageFile(in, work, "c", sentinel(2 * yearMs), 3000000000L)
     val ss = streamSession(spark)
-    val stream = ss.readStream
-      .schema("user_id LONG, event_id LONG, ts TIMESTAMP, event_type STRING")
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-      .as[StreamPipelines.FunnelEv]
-    implicit val sp: SparkSession = ss
-    val q = StreamPipelines.funnelize(stream)
-      .filter(col("user_id") >= 0)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st5 stream died: ${q.exception}")
-    spark.read.parquet(out)
-      .select(col("user_id"), col("session_id"), col("n_events"),
-        col("reached1"), col("reached2"), col("reached3"),
-        col("has1"), col("has2"), col("has3"))
-      .localCheckpoint(eager = true)
+    drain("st5", Seq(ev, sentinel(yearMs), sentinel(2 * yearMs)),
+        "user_id LONG, event_id LONG, ts TIMESTAMP, event_type STRING", ss)(
+      (stream, work) => StreamPipelines.funnelize(stream.as[StreamPipelines.FunnelEv])(ss)
+        .filter(col("user_id") >= 0).toDF()
+        .writeStream.format("parquet").option("path", s"$work/out"),
+      work => spark.read.parquet(s"$work/out")
+        .select(col("user_id"), col("session_id"), col("n_events"),
+          col("reached1"), col("reached2"), col("reached3"),
+          col("has1"), col("has2"), col("has3")))
       .orderBy(col("user_id"), col("session_id"))
   }
 
@@ -530,21 +468,23 @@ object StreamQueries {
     (ev, (minUs + maxUs + 1) / 2 + 1750L * 1000000L, maxUs)
   }
 
-  /** One far-future sentinel row (st5's flush rule): a synthetic user −1
-    * event `offsetUs` past the corpus max, typed `zz_sentinel` so window
-    * grains that carry event_type can filter it by name and the rest by
-    * its out-of-range event time. Two such batches advance the watermark
-    * past every real window/session end independent of trailing
-    * no-data-batch scheduling. */
-  private def sentinelRow(spark: SparkSession, maxUs: Long, offsetUs: Long): DataFrame =
-    spark.range(1).select(lit(-1L).as("event_id"),
-      timestamp_micros(lit(maxUs + offsetUs)).as("ts"), lit(-1L).as("user_id"),
-      lit("zz_sentinel").as("event_type"), lit(0.0).as("value"))
+  /** The r20 rows' two-batch time split of `ev` at `cutUs`. */
+  private def timeHalves(ev: DataFrame, cutUs: Long): Seq[DataFrame] =
+    Seq(ev.filter(unix_micros(col("ts")) < cutUs), ev.filter(unix_micros(col("ts")) >= cutUs))
+
+  /** The two far-future sentinel arrivals (st5's flush rule): a synthetic
+    * user −1 event one and two years past the corpus max, typed
+    * `zz_sentinel` so window grains that carry event_type can filter it
+    * by name and the rest by its out-of-range event time. The two batches
+    * advance the watermark past every real window/session end
+    * independent of trailing no-data-batch scheduling. */
+  private def sentinels(spark: SparkSession, maxUs: Long): Seq[DataFrame] =
+    Seq(YearUs, 2 * YearUs).map(offsetUs =>
+      spark.range(1).select(lit(-1L).as("event_id"),
+        timestamp_micros(lit(maxUs + offsetUs)).as("ts"), lit(-1L).as("user_id"),
+        lit("zz_sentinel").as("event_type"), lit(0.0).as("value")))
 
   private val YearUs = 365L * 86400L * 1000000L
-
-  private val EventsStreamSchema =
-    "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
 
   /** `st6_stream_window`: the watermarked windowed aggregate
     * ([[StreamPipelines.windowedTypeCounts]] — hourly per-type counts and
@@ -565,34 +505,15 @@ object StreamQueries {
     * the watermark horizon, never by history; the aggregate itself is
     * partial/merge-shaped like any batch agg. */
   def st6StreamWindow(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st6").toString
-    try st6Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st6Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val out = s"$work/out"
     val (ev, cutUs, maxUs) = eventsWithCut(spark, dir)
-    stageFile(in, work, "a", ev.filter(unix_micros(col("ts")) < cutUs), 1000000000L)
-    stageFile(in, work, "b", ev.filter(unix_micros(col("ts")) >= cutUs), 2000000000L)
-    stageFile(in, work, "c", sentinelRow(spark, maxUs, YearUs), 3000000000L)
-    stageFile(in, work, "d", sentinelRow(spark, maxUs, 2 * YearUs), 4000000000L)
-    val ss = streamSession(spark)
-    val stream = ss.readStream.schema(EventsStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.windowedTypeCounts(stream)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st6 stream died: ${q.exception}")
-    spark.read.parquet(out)
-      .filter(col("event_type") =!= "zz_sentinel")
-      .select(unix_micros(col("win_start")).as("win_start_us"),
-        col("event_type"), col("n_events"), col("sum_value"))
-      .localCheckpoint(eager = true)
+    drain("st6", timeHalves(ev, cutUs) ++ sentinels(spark, maxUs),
+        StreamPipelines.EventsSchema, streamSession(spark))(
+      (stream, work) => StreamPipelines.windowedTypeCounts(stream)
+        .writeStream.format("parquet").option("path", s"$work/out"),
+      work => spark.read.parquet(s"$work/out")
+        .filter(col("event_type") =!= "zz_sentinel")
+        .select(unix_micros(col("win_start")).as("win_start_us"),
+          col("event_type"), col("n_events"), col("sum_value")))
       .orderBy(col("win_start_us"), col("event_type"))
   }
 
@@ -621,37 +542,20 @@ object StreamQueries {
     * Scale: the dim broadcasts while it fits (p15's own bound); nothing
     * is stateful, so throughput is scan-bound. */
   def st7StreamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st7").toString
-    try st7Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st7Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val out = s"$work/out"
     val (ev, cutUs, _) = eventsWithCut(spark, dir)
-    stageFile(in, work, "a", ev.filter(unix_micros(col("ts")) < cutUs), 1000000000L)
-    stageFile(in, work, "b", ev.filter(unix_micros(col("ts")) >= cutUs), 2000000000L)
     val arrived = graft.Tables.load(spark, dir, "customer")
       .filter(expr(s"CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 15), 16, 10) AS BIGINT) % 100") >= graft.pipeline.Curated.LateBucketMax)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val stream = spark.readStream.schema(EventsStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.enrichStream(stream, arrived, "user_id", "c_custkey")
-      .select(col("event_id"), col("user_id"),
-        coalesce(col("c_name"), lit("INFERRED")).as("c_name"),
-        coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("c_mktsegment"),
-        col("is_inferred"))
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st7 stream died: ${q.exception}")
-    spark.read.parquet(out)
-      .select(col("event_id"), col("user_id"), col("c_name"),
-        col("c_mktsegment"), col("is_inferred"))
-      .localCheckpoint(eager = true)
+    drain("st7", timeHalves(ev, cutUs), StreamPipelines.EventsSchema, spark)(
+      (stream, work) => StreamPipelines.enrichStream(stream, arrived, "user_id", "c_custkey")
+        .select(col("event_id"), col("user_id"),
+          coalesce(col("c_name"), lit("INFERRED")).as("c_name"),
+          coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("c_mktsegment"),
+          col("is_inferred"))
+        .writeStream.format("parquet").option("path", s"$work/out"),
+      work => spark.read.parquet(s"$work/out")
+        .select(col("event_id"), col("user_id"), col("c_name"),
+          col("c_mktsegment"), col("is_inferred")))
       .orderBy(col("event_id"))
   }
 
@@ -686,40 +590,22 @@ object StreamQueries {
     * Scale: state is per OPEN session (merged intervals), reclaimed at
     * finalization; the aggregate partial-merges map-side like any agg. */
   def st8StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st8").toString
-    try st8Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st8Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val out = s"$work/out"
     val (ev, _, maxUs) = eventsWithCut(spark, dir)
-    stageFile(in, work, "a", ev, 1000000000L)
-    stageFile(in, work, "b", sentinelRow(spark, maxUs, YearUs), 2000000000L)
-    stageFile(in, work, "c", sentinelRow(spark, maxUs, 2 * YearUs), 3000000000L)
-    val ss = streamSession(spark)
-    val stream = ss.readStream.schema(EventsStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    // The sentinel filter MUST happen on the read-back, not in the
-    // streaming query: a filter on a grouping key placed after the
-    // aggregation is pushed by Catalyst below the EventTimeWatermark
-    // node, so the sentinel rows would be dropped AT THE SCAN, the
-    // watermark would never advance past the corpus max, and the last
-    // real session would never flush (measured: the corpus-max session
-    // silently vanished from the drained output).
-    val q = StreamPipelines.sessionWindowAgg(stream)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st8 stream died: ${q.exception}")
-    spark.read.parquet(out)
-      .filter(col("user_id") >= 0)
-      .select(col("user_id"), unix_micros(col("start")).as("start_us"),
-        unix_micros(col("end")).as("end_us"), col("n_events"), col("sum_value"))
-      .localCheckpoint(eager = true)
+    drain("st8", ev +: sentinels(spark, maxUs),
+        StreamPipelines.EventsSchema, streamSession(spark))(
+      (stream, work) => StreamPipelines.sessionWindowAgg(stream)
+        .writeStream.format("parquet").option("path", s"$work/out"),
+      // The sentinel filter MUST happen on the read-back, not in the
+      // streaming query: a filter on a grouping key placed after the
+      // aggregation is pushed by Catalyst below the EventTimeWatermark
+      // node, so the sentinel rows would be dropped AT THE SCAN, the
+      // watermark would never advance past the corpus max, and the last
+      // real session would never flush (measured: the corpus-max session
+      // silently vanished from the drained output).
+      work => spark.read.parquet(s"$work/out")
+        .filter(col("user_id") >= 0)
+        .select(col("user_id"), unix_micros(col("start")).as("start_us"),
+          unix_micros(col("end")).as("end_us"), col("n_events"), col("sum_value")))
       .orderBy(col("user_id"), col("start_us"))
   }
 
@@ -769,36 +655,18 @@ object StreamQueries {
     * Scale: state per side is the watermark-deep tail only; the join
     * shuffles on the key like its batch twin (q23's range join). */
   def st9StreamInterval(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st9").toString
-    try st9Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st9Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val out = s"$work/out"
     val (ev, cutUs, _) = eventsWithCut(spark, dir)
-    stageFile(in, work, "a", ev.filter(unix_micros(col("ts")) < cutUs), 1000000000L)
-    stageFile(in, work, "b", ev.filter(unix_micros(col("ts")) >= cutUs), 2000000000L)
-    val ss = streamSession(spark)
-    val stream = ss.readStream.schema(EventsStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.intervalJoin(
-        stream.filter(col("event_type") === "click"),
-        stream.filter(col("event_type") === "purchase"),
-        "user_id", windowMinutes = 720)
-      .select(col("l_key").as("user_id"),
-        col("l_event_id").as("click_id"), col("r_event_id").as("purch_id"),
-        unix_micros(col("l_ts")).as("click_ts_us"),
-        unix_micros(col("r_ts")).as("purch_ts_us"))
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st9 stream died: ${q.exception}")
-    spark.read.parquet(out)
-      .localCheckpoint(eager = true)
+    drain("st9", timeHalves(ev, cutUs), StreamPipelines.EventsSchema, streamSession(spark))(
+      (stream, work) => StreamPipelines.intervalJoin(
+          stream.filter(col("event_type") === "click"),
+          stream.filter(col("event_type") === "purchase"),
+          "user_id", windowMinutes = 720)
+        .select(col("l_key").as("user_id"),
+          col("l_event_id").as("click_id"), col("r_event_id").as("purch_id"),
+          unix_micros(col("l_ts")).as("click_ts_us"),
+          unix_micros(col("r_ts")).as("purch_ts_us"))
+        .writeStream.format("parquet").option("path", s"$work/out"),
+      work => spark.read.parquet(s"$work/out"))
       .orderBy(col("click_id"), col("purch_id"))
   }
 
@@ -828,34 +696,15 @@ object StreamQueries {
     * Scale: state is (open days × ≤[[graft.operators.Behavior.QBuckets]])
     * rows — watermark-bounded, data-volume-free. */
   def st10StreamHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_st10").toString
-    try st10Run(spark, dir, work) finally deleteWork(work)
-  }
-
-  private def st10Run(spark: SparkSession, dir: String, work: String): DataFrame = {
-    val in = new java.io.File(work, "in"); in.mkdirs()
-    val out = s"$work/out"
     val (ev, cutUs, maxUs) = eventsWithCut(spark, dir)
-    stageFile(in, work, "a", ev.filter(unix_micros(col("ts")) < cutUs), 1000000000L)
-    stageFile(in, work, "b", ev.filter(unix_micros(col("ts")) >= cutUs), 2000000000L)
-    stageFile(in, work, "c", sentinelRow(spark, maxUs, YearUs), 3000000000L)
-    stageFile(in, work, "d", sentinelRow(spark, maxUs, 2 * YearUs), 4000000000L)
-    val ss = streamSession(spark)
-    val stream = ss.readStream.schema(EventsStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = StreamPipelines.histogramStream(stream)
-      .writeStream.format("parquet").option("path", out)
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(q.exception.isEmpty, s"st10 stream died: ${q.exception}")
-    spark.read.parquet(out)
-      .filter(unix_micros(col("day_start")) <= maxUs)
-      .select(unix_micros(col("day_start")).as("day_start_us"),
-        col("bucket"), col("cnt"))
-      .localCheckpoint(eager = true)
+    drain("st10", timeHalves(ev, cutUs) ++ sentinels(spark, maxUs),
+        StreamPipelines.EventsSchema, streamSession(spark))(
+      (stream, work) => StreamPipelines.histogramStream(stream)
+        .writeStream.format("parquet").option("path", s"$work/out"),
+      work => spark.read.parquet(s"$work/out")
+        .filter(unix_micros(col("day_start")) <= maxUs)
+        .select(unix_micros(col("day_start")).as("day_start_us"),
+          col("bucket"), col("cnt")))
       .orderBy(col("day_start_us"), col("bucket"))
   }
 

@@ -337,7 +337,9 @@ class PlanSpec extends AnyFunSuite {
       "filterKept" -> TextAnalysis.filterKept(spark, sf),
       "t11_filter_funnel" -> TextAnalysis.t11FilterFunnel(spark, sf),
       "t4_fingerprint" -> TextAnalysis.t4Fingerprint(spark, sf),
-      "t8_repetition" -> TextAnalysis.t8Repetition(spark, sf))
+      "t8_repetition" -> TextAnalysis.t8Repetition(spark, sf),
+      "t20_dup_profile" -> TextAnalysis.t20DupProfile(spark, sf),
+      "d14_substring_dedup" -> Dedup.d14SubstringDedup(spark, sf))
     frames.foreach { case (name, df) =>
       val tokenizing = df.queryExecution.optimizedPlan
         .collectWithSubqueries { case p => p.expressions }.flatten

@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite {
       Files.copy(parts.next, dir.resolve(name))
     }
     drop("drop1.parquet", Seq((1L, ts(10), 7L, "click", 1.0), (2L, ts(20), 7L, "view", 2.0)))
-    val q = StreamPipelines.fileEventsStream(spark, dir.toString)
+    val q = StreamPipelines.fileStream(spark, dir.toString, StreamPipelines.EventsSchema)
       .writeStream.format("memory").queryName(out).outputMode("append").start()
     try {
       q.processAllAvailable()
@@ -69,7 +69,7 @@ class StreamingSpec extends AnyFunSuite {
     // scheduled job — drain everything available, commit the offset
     // checkpoint, exit. Re-running later consumes only what arrived since.
     def runOnce(): Unit = {
-      val q = StreamPipelines.fileEventsStream(spark, dir.toString)
+      val q = StreamPipelines.fileStream(spark, dir.toString, StreamPipelines.EventsSchema)
         .writeStream.format("parquet").option("path", sink)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -370,7 +370,8 @@ class StreamingSpec extends AnyFunSuite {
     // maxFilesPerTrigger=1 forces one micro-batch per drop — the point is
     // batch-decomposition invariance, so MAKE it decompose
     val q = StreamPipelines.indexDeltaSink(spark,
-        StreamPipelines.fileEmbeddingsStream(spark, in.toString, maxFilesPerTrigger = 1),
+        StreamPipelines.fileStream(spark, in.toString, StreamPipelines.EmbeddingsSchema,
+          maxFilesPerTrigger = 1),
         state, cents)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -425,7 +426,8 @@ class StreamingSpec extends AnyFunSuite {
     drop("a.parquet", batchA)
     drop("b.parquet", batchB)
     val q = StreamPipelines.corpusDedupSink(spark,
-        StreamPipelines.fileDocumentsStream(spark, in.toString, maxFilesPerTrigger = 1),
+        StreamPipelines.fileStream(spark, in.toString, StreamPipelines.DocumentsSchema,
+          maxFilesPerTrigger = 1),
         state)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -532,7 +534,8 @@ class StreamingSpec extends AnyFunSuite {
     drop("a.parquet", batchA)
     drop("b.parquet", batchB)
     val q = StreamPipelines.qualityGateSink(spark,
-        StreamPipelines.fileDocumentsStream(spark, in.toString, maxFilesPerTrigger = 1),
+        StreamPipelines.fileStream(spark, in.toString, StreamPipelines.DocumentsSchema,
+          maxFilesPerTrigger = 1),
         state)
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -696,6 +699,74 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("norm_hash"), col("doc_id")).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(st1 == d1, "streamed dedup state != batch d1 keepers")
+  }
+
+  test("st3 (the streaming quality-gate row): the drained (doc_id, " +
+    "n_toks, score) rows are t24's keep rows, each from the arrival its " +
+    "doc_id parity stages it in") {
+    val sf = "/root/testdata/sf0.001"
+    val st3 = graft.streaming.StreamQueries.st3StreamQuality(spark, sf).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_toks"),
+        r.getAs[Long]("score"), r.getAs[Long]("src_batch"))).toSeq
+    val keeps = graft.operators.TextAnalysis.t24ClassifierScore(spark, sf)
+      .filter(col("label") === "keep")
+      .select(col("doc_id"), col("n_toks"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(keeps.nonEmpty)
+    assert(st3.map(r => (r._1, r._2, r._3)) == keeps,
+      "streamed quality-gate rows != batch t24 keep rows")
+    st3.foreach { case (id, _, _, b) =>
+      assert(b == id % 2, s"doc $id drained from batch $b") }
+  }
+
+  test("st4 (the streaming SCD2 row): the drained dimension equals " +
+    "batch p5_scd2_user row for row — st4's oracle is p5's SQL") {
+    val sf = "/root/testdata/sf0.001"
+    val st4 = graft.streaming.StreamQueries.st4StreamScd2(spark, sf).collect().toSeq
+    val p5 = graft.pipeline.Scd2.p5Scd2User(spark, sf)
+      .orderBy(col("user_id"), col("version")).collect().toSeq
+    assert(p5.nonEmpty)
+    assert(st4 == p5, "streamed SCD2 dimension != batch p5")
+  }
+
+  test("drain harness: no scratch dir survives a drain that returns or " +
+    "one whose body throws, the throw surfaces, and the returned frame " +
+    "outlives its deleted files") {
+    import spark.implicits._
+    import graft.streaming.StreamQueries
+    val name = s"drainspec${System.nanoTime()}"
+    def leftovers() = new java.io.File(System.getProperty("java.io.tmpdir"))
+      .listFiles().map(_.getName).filter(_.startsWith(s"graft_$name")).toSeq
+    val rows = Seq(1L -> "older arrival", 2L -> "newer arrival")
+    val arrivals = rows.map(r => Seq(r).toDF("doc_id", "text"))
+    val drained = StreamQueries.drain(name, arrivals,
+        StreamPipelines.DocumentsSchema, spark)(
+      (stream, work) => stream.writeStream.format("parquet")
+        .option("path", s"$work/out"),
+      work => spark.read.parquet(s"$work/out"))
+    assert(leftovers().isEmpty, s"scratch dir left behind: ${leftovers()}")
+    assert(drained.collect().map(r => (r.getLong(0), r.getString(1)))
+      .sortBy(_._1).toSeq == rows)
+    val boom = intercept[IllegalStateException] {
+      StreamQueries.drain(name, arrivals, StreamPipelines.DocumentsSchema, spark)(
+        (_, _) => throw new IllegalStateException("planted sink failure"),
+        work => spark.read.parquet(s"$work/out"))
+    }
+    assert(boom.getMessage == "planted sink failure")
+    assert(leftovers().isEmpty,
+      s"scratch dir left behind by a failed drain: ${leftovers()}")
+  }
+
+  test("state-partition dial: unset gives the default 4; a non-integer " +
+    "or non-positive value is rejected with the variable's name") {
+    import graft.streaming.StreamQueries.statePartitions
+    assert(statePartitions(None) == 4)
+    assert(statePartitions(Some("8")) == 8)
+    Seq("0", "-1", "", "x", "4x").foreach { v =>
+      val e = intercept[IllegalArgumentException](statePartitions(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_STATE_PARTITIONS"),
+        s"'$v' rejected without naming the variable: ${e.getMessage}")
+    }
   }
 
   test("st6-st10 (the r20 promoted streaming rows): each drained state " +
