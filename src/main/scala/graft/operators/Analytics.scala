@@ -504,13 +504,18 @@ object Analytics {
     * orders join into a broadcast at runtime. The customer lookup is a
     * broadcast dim join. Quantities sum as exact longs — no float can
     * disagree with the oracle's HAVING. */
-  def q39BigOrders(spark: SparkSession, dir: String): DataFrame = {
-    val big = t(spark, dir, "lineitem")
+  def q39BigOrders(spark: SparkSession, dir: String): DataFrame =
+    q39BigOrdersOver(spark, dir, t(spark, dir, "lineitem"), t(spark, dir, "orders"))
+
+  /** q39 over the given fact frames: the parquet facts, or p29's bucketed layout. */
+  def q39BigOrdersOver(spark: SparkSession, dir: String,
+                       lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    val big = lineitem
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity").cast("long")).as("total_qty"))
       .filter(col("total_qty") > 250L)
     val cust = t(spark, dir, "customer").select(col("c_custkey"), col("c_name"))
-    t(spark, dir, "orders")
+    orders
       .join(big, col("o_orderkey") === col("l_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
@@ -596,12 +601,16 @@ object Analytics {
     * deduplicates matching lineitems for free (no DISTINCT pass), and
     * the 5-row priority aggregate collapses map-side. No fact re-scan,
     * no correlated re-plan. */
-  def q44LateShipPriority(spark: SparkSession, dir: String): DataFrame = {
-    val ord = t(spark, dir, "orders")
+  def q44LateShipPriority(spark: SparkSession, dir: String): DataFrame =
+    q44LateShipPriorityOver(t(spark, dir, "lineitem"), t(spark, dir, "orders"))
+
+  /** q44 over the given fact frames: the parquet facts, or p35's bucketed layout. */
+  def q44LateShipPriorityOver(lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    val ord = orders
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val li = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
+    val li = lineitem.select(col("l_orderkey"), col("l_shipdate"))
     ord.join(li,
         col("l_orderkey") === col("o_orderkey") &&
           col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAY"),
@@ -766,12 +775,17 @@ object Analytics {
     * grain), nation broadcasts. The top-20 runs as
     * TakeOrderedAndProject — per-partition top-20, one tiny merge, no
     * global sort. */
-  def q49ReturnedItems(spark: SparkSession, dir: String): DataFrame = {
-    val ord = t(spark, dir, "orders")
+  def q49ReturnedItems(spark: SparkSession, dir: String): DataFrame =
+    q49ReturnedItemsOver(spark, dir, t(spark, dir, "lineitem"), t(spark, dir, "orders"))
+
+  /** q49 over the given fact frames: the parquet facts, or p37's bucketed layout. */
+  def q49ReturnedItemsOver(spark: SparkSession, dir: String,
+                           lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    val ord = orders
       .filter(col("o_orderdate") >= lit("1995-10-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
       .select(col("o_orderkey"), col("o_custkey"))
-    val li = t(spark, dir, "lineitem")
+    val li = lineitem
       .filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
@@ -870,10 +884,14 @@ object Analytics {
     * Scale: the ship-year window pushes into the fact scan; ONE
     * fact-fact shuffle on orderkey, then a 3-row aggregate with
     * conditional map-side partials — both counts ride one pass. */
-  def q52ShipDelayModes(spark: SparkSession, dir: String): DataFrame = {
-    val ord = t(spark, dir, "orders")
+  def q52ShipDelayModes(spark: SparkSession, dir: String): DataFrame =
+    q52ShipDelayModesOver(t(spark, dir, "lineitem"), t(spark, dir, "orders"))
+
+  /** q52 over the given fact frames: the parquet facts, or p38's bucketed layout. */
+  def q52ShipDelayModesOver(lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    val ord = orders
       .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    t(spark, dir, "lineitem")
+    lineitem
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_shipdate"))

@@ -40,9 +40,17 @@ object BoundedBroadcast {
     * executor memory anywhere, 2 OoM under the 512M-row broadcast cap. */
   val DefaultMaxRows = 4000000L
 
-  def maxRows: Long =
-    sys.env.get("SPARK_GRAFT_BROADCAST_MAX_ROWS").map(_.toLong)
-      .getOrElse(DefaultMaxRows)
+  def maxRows: Long = maxRowsFrom(sys.env.get("SPARK_GRAFT_BROADCAST_MAX_ROWS"))
+
+  /** Unset gives [[DefaultMaxRows]]; anything but a positive integer fails
+    * naming the variable (`0` or `-1` would silently drop every hint). */
+  private[graft] def maxRowsFrom(env: Option[String]): Long =
+    env.fold(DefaultMaxRows) { v =>
+      val n = v.toLongOption.filter(_ > 0)
+      require(n.isDefined,
+        s"SPARK_GRAFT_BROADCAST_MAX_ROWS must be a positive integer, got '$v'")
+      n.get
+    }
 
   /** `broadcast(df)` iff `measuredRows` (a count the caller measured of
     * df or a superset of it) is within [[maxRows]]; otherwise `df`

@@ -117,13 +117,19 @@ object Similarity {
     * eval itself is a probe-grained semi-join + three probe-sized
     * aggregates — cost is the indexes' own cost, the report adds nothing
     * fact-sized. */
-  def s8RecallEval(spark: SparkSession, dir: String): DataFrame = {
-    // each result feeds TWO consumers (hits + its count); checkpoint so
-    // the quadratic probe×corpus subplans run once, not twice (the
-    // shared-frame pattern d3/d10 use for shingleArrays)
+  def s8RecallEval(spark: SparkSession, dir: String): DataFrame =
+    recallReport(spark, dir, s2AnnLsh(spark, dir))
+
+  /** Per-probe recall of an ANN index's `(probe_id, neighbor_id)` result
+    * against s1's exact truth (s8, s27): n_exact, n_approx, n_hit and
+    * floor-e6 recall. Each side feeds TWO consumers (hits + its count);
+    * checkpoint so the quadratic probe×corpus subplans run once, not
+    * twice (the shared-frame pattern d3/d10 use for shingleArrays). */
+  private def recallReport(spark: SparkSession, dir: String,
+                           index: DataFrame): DataFrame = {
     val exact = s1AnnBrute(spark, dir).select(col("probe_id"), col("neighbor_id"))
       .localCheckpoint(true)
-    val approx = s2AnnLsh(spark, dir).select(col("probe_id"), col("neighbor_id"))
+    val approx = index.select(col("probe_id"), col("neighbor_id"))
       .localCheckpoint(true)
     val hits = exact.join(approx, Seq("probe_id", "neighbor_id"), "left_semi")
       .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hit"))
@@ -1185,6 +1191,34 @@ object Similarity {
   private def dotD(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y), lit(0.0), (acc, v) => acc + v)
 
+  /** The PQ + re-rank tail of s4 and s14 over (probe, candidate) rows
+    * carrying `pe`, `embedding` and `codes`. Each row scores `adc_e6`,
+    * the asymmetric distance: the sum over subspaces of dot(probe
+    * subvector, chosen centroid), each partial floored to an e6 long
+    * BEFORE the sum, the codebooks inlined as array-of-arrays literals of
+    * exact doubles (e6/1e6). The top [[PqShortlist]] per probe by ADC are
+    * then ranked by exact cosine (`rank`, `cos_e6`) and [[LshTopK]] kept. */
+  private def adcRerank(cands: DataFrame,
+                        books: Array[Array[Array[Long]]]): DataFrame = {
+    val adc = (0 until NumSub).map { j =>
+      val bookLit = array(books(j).map(cent =>
+        array(cent.map(v => lit(v.toDouble / KmScale)): _*)): _*)
+      val chosen = element_at(bookLit, element_at(col("codes"), j + 1).cast("int") + 1)
+      floor(dotD(slice(col("pe"), j * SubDim + 1, SubDim), chosen) * lit(1000000.0))
+        .cast("long")
+    }.reduce(_ + _)
+    val wAdc = Window.partitionBy(col("probe_id"))
+      .orderBy(col("adc_e6").desc, col("vec_id"))
+    val cos = cosineFast(col("pe"), col("embedding"))
+    val wFinal = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
+    cands.withColumn("adc_e6", adc)
+      .withColumn("short_rank", row_number().over(wAdc))
+      .filter(col("short_rank") <= PqShortlist)
+      .withColumn("rank", row_number().over(wFinal).cast("long"))
+      .filter(col("rank") <= LshTopK)
+      .withColumn("cos_e6", floor(cos * lit(1000000.0)).cast("long"))
+  }
+
   /** ADC shortlist size per probe: coarse 4-bit codes rank a candidate
     * pool, exact cosine re-ranks only these — the standard PQ + re-rank
     * pipeline (recall vs s1 asserted in the spec). */
@@ -1213,26 +1247,9 @@ object Similarity {
       pqEncode(col("f"), books).as("codes"))
     val probes = data.filter(col("vec_id") < NumProbes)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val adc = (0 until NumSub).map { j =>
-      // codebook j as an array-of-arrays literal of exact doubles (e6/1e6)
-      val bookLit = array(books(j).map(cent =>
-        array(cent.map(v => lit(v.toDouble / KmScale)): _*)): _*)
-      val chosen = element_at(bookLit, element_at(col("codes"), j + 1).cast("int") + 1)
-      floor(dotD(slice(col("pe"), j * SubDim + 1, SubDim), chosen) * lit(1000000.0))
-        .cast("long")
-    }.reduce(_ + _)
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc_e6").desc, col("vec_id"))
-    val cos = cosineFast(col("pe"), col("embedding"))
-    val wFinal = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
-    enc.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("adc_e6", adc)
-      .withColumn("short_rank", row_number().over(wAdc))
-      .filter(col("short_rank") <= PqShortlist)
-      .withColumn("rank", row_number().over(wFinal).cast("long"))
-      .filter(col("rank") <= LshTopK)
+    adcRerank(enc.join(broadcast(probes), col("vec_id") =!= col("probe_id")), books)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("adc_e6"),
-        floor(cos * lit(1000000.0)).cast("long").as("cos_e6"), col("rank"))
+        col("cos_e6"), col("rank"))
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -1323,27 +1340,11 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
         element_at(topCells, 1).getField("cid").as("main_cell"),
         explode(transform(topCells, c => c.getField("cid"))).as("cell"))
-    val adc = (0 until NumSub).map { j =>
-      val bookLit = array(books(j).map(cent =>
-        array(cent.map(v => lit(v.toDouble / KmScale)): _*)): _*)
-      val chosen = element_at(bookLit, element_at(col("codes"), j + 1).cast("int") + 1)
-      floor(dotD(slice(col("pe"), j * SubDim + 1, SubDim), chosen) * lit(1000000.0))
-        .cast("long")
-    }.reduce(_ + _)
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc_e6").desc, col("vec_id"))
-    val cos = cosineFast(col("pe"), col("embedding"))
-    val wFinal = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
-    enc.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("adc_e6", adc)
-      .withColumn("short_rank", row_number().over(wAdc))
-      .filter(col("short_rank") <= PqShortlist)
-      .withColumn("rank", row_number().over(wFinal).cast("long"))
-      .filter(col("rank") <= LshTopK)
+    adcRerank(enc.join(broadcast(probes), Seq("cell"))
+        .filter(col("vec_id") =!= col("probe_id")), books)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         col("main_cell").cast("long").as("cell"), col("adc_e6"),
-        floor(cos * lit(1000000.0)).cast("long").as("cos_e6"), col("rank"))
+        col("cos_e6"), col("rank"))
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -2140,6 +2141,33 @@ object Similarity {
        |ORDER BY cell""".stripMargin
   }
 
+  /** The SQ8 model of `e` (s18, s30): the per-dimension corpus min/max
+    * packed into ONE `(mins, maxs)` array row — the stats pass collapses
+    * to Dim rows map-side — and the column that codes `embedding` on that
+    * grid once the row is joined on: `floor((x-mn)·255/(mx-mn))` clamped
+    * to [0,255], a degenerate dimension (mx = mn) coded 0. */
+  private def sq8Model(e: DataFrame): (DataFrame, Column) = {
+    val stats = e
+      .select(posexplode(col("embedding")).as(Seq("pos", "v")))
+      .select(col("pos"), col("v").cast("double").as("vd"))
+      .groupBy(col("pos"))
+      .agg(min(col("vd")).as("mn"), max(col("vd")).as("mx"))
+    val packed = stats
+      .agg(expr("array_sort(collect_list(struct(pos, mn, mx)))").as("s"))
+      .select(expr("transform(s, r -> r.mn)").as("mins"),
+        expr("transform(s, r -> r.mx)").as("maxs"))
+    val codes = expr(
+      s"""transform(sequence(0, ${Dim - 1}), i ->
+         | CASE WHEN element_at(maxs, i + 1) = element_at(mins, i + 1)
+         |  THEN CAST(0 AS BIGINT)
+         |  ELSE CAST(least(CAST(255 AS BIGINT), greatest(CAST(0 AS BIGINT),
+         |   CAST(floor((CAST(element_at(embedding, i + 1) AS DOUBLE)
+         |     - element_at(mins, i + 1)) * 255.0
+         |    / (element_at(maxs, i + 1) - element_at(mins, i + 1)))
+         |    AS BIGINT))) AS BIGINT) END)""".stripMargin)
+    (packed, codes)
+  }
+
   /** `s18_sq8_quantize`: int8 scalar quantization (SQ8) of the embedding
     * corpus + its reconstruction-error audit — the third member of the
     * compression family (PQ s4 = 8 B/vector, binary s7 = 8 B/vector,
@@ -2163,31 +2191,14 @@ object Similarity {
     * (mx = mn) code as 0 explicitly — no NaN ever reaches a cast. */
   def s18Sq8Quantize(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val stats = e
-      .select(posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("pos"), col("v").cast("double").as("vd"))
-      .groupBy(col("pos"))
-      .agg(min(col("vd")).as("mn"), max(col("vd")).as("mx"))
-    val packed = stats
-      .agg(expr("array_sort(collect_list(struct(pos, mn, mx)))").as("s"))
-      .select(expr("transform(s, r -> r.mn)").as("mins"),
-        expr("transform(s, r -> r.mx)").as("maxs"))
-    val codeExpr =
-      s"""transform(sequence(0, ${Dim - 1}), i ->
-         | CASE WHEN element_at(maxs, i + 1) = element_at(mins, i + 1)
-         |  THEN CAST(0 AS BIGINT)
-         |  ELSE CAST(least(CAST(255 AS BIGINT), greatest(CAST(0 AS BIGINT),
-         |   CAST(floor((CAST(element_at(embedding, i + 1) AS DOUBLE)
-         |     - element_at(mins, i + 1)) * 255.0
-         |    / (element_at(maxs, i + 1) - element_at(mins, i + 1)))
-         |    AS BIGINT))) AS BIGINT) END)""".stripMargin
+    val (packed, sq8Codes) = sq8Model(e)
     val diff =
       s"""(CAST(element_at(embedding, i + 1) AS DOUBLE)
          | - (element_at(mins, i + 1)
          |  + (element_at(codes, i + 1) * (element_at(maxs, i + 1)
          |     - element_at(mins, i + 1))) / 255.0))""".stripMargin
     e.crossJoin(broadcast(packed))
-      .withColumn("codes", expr(codeExpr))
+      .withColumn("codes", sq8Codes)
       .select(col("vec_id"),
         expr("aggregate(codes, CAST(0 AS BIGINT), (acc, x) -> acc + x)")
           .as("sum_code"),
@@ -2282,30 +2293,12 @@ object Similarity {
     val pl = planesFor(BinPlanes)
     val sigs = e.select(col("vec_id"),
       hyperplaneBucket(col("embedding"), pl).as("sig"))
-    // index 2: SQ8 codes on the corpus min/max grid (s18's model — the
-    // stats pass collapses to Dim rows map-side; packed is ONE broadcast row)
-    val stats = e
-      .select(posexplode(col("embedding")).as(Seq("pos", "v")))
-      .select(col("pos"), col("v").cast("double").as("vd"))
-      .groupBy(col("pos"))
-      .agg(min(col("vd")).as("mn"), max(col("vd")).as("mx"))
-    val packed = stats
-      .agg(expr("array_sort(collect_list(struct(pos, mn, mx)))").as("s"))
-      .select(expr("transform(s, r -> r.mn)").as("mins"),
-        expr("transform(s, r -> r.mx)").as("maxs"))
-    val codeExpr =
-      s"""transform(sequence(0, ${Dim - 1}), i ->
-         | CASE WHEN element_at(maxs, i + 1) = element_at(mins, i + 1)
-         |  THEN CAST(0 AS BIGINT)
-         |  ELSE CAST(least(CAST(255 AS BIGINT), greatest(CAST(0 AS BIGINT),
-         |   CAST(floor((CAST(element_at(embedding, i + 1) AS DOUBLE)
-         |     - element_at(mins, i + 1)) * 255.0
-         |    / (element_at(maxs, i + 1) - element_at(mins, i + 1)))
-         |    AS BIGINT))) AS BIGINT) END)""".stripMargin
+    // index 2: SQ8 codes on the corpus min/max grid (s18's model)
+    val (packed, sq8Codes) = sq8Model(e)
     // the code table feeds TWO consumers (candidate side + probe side):
     // checkpoint so the stats+quantize subplan runs once
     val codes = e.crossJoin(broadcast(packed))
-      .select(col("vec_id"), expr(codeExpr).as("codes"))
+      .select(col("vec_id"), sq8Codes.as("codes"))
       .localCheckpoint(true)
     // stage 1: Hamming pre-rank over the sketch table
     val probes = sigs.filter(col("vec_id") < NumProbes)
@@ -2882,25 +2875,8 @@ object Similarity {
     * metric is a probe-grained semi-join + three tiny aggregates — the
     * eval adds nothing fact-sized (at 100 TB the probe panel is the
     * sampled SLO panel, so eval cost = index cost). */
-  def s27HnswRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = s1AnnBrute(spark, dir).select(col("probe_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    val approx = s26HnswLayers(spark, dir)
-      .select(col("probe_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    val hits = exact.join(approx, Seq("probe_id", "neighbor_id"), "left_semi")
-      .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hit"))
-    exact.groupBy(col("probe_id")).agg(count(lit(1)).as("n_exact"))
-      .join(approx.groupBy(col("probe_id")).agg(count(lit(1)).as("n_approx")),
-        Seq("probe_id"), "left")
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"), col("n_exact"),
-        coalesce(col("n_approx"), lit(0L)).as("n_approx"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-        floor(coalesce(col("n_hit"), lit(0L)) * lit(1000000.0) / col("n_exact"))
-          .cast("long").as("recall_e6"))
-      .orderBy(col("probe_id"))
-  }
+  def s27HnswRecall(spark: SparkSession, dir: String): DataFrame =
+    recallReport(spark, dir, s26HnswLayers(spark, dir))
 
   private lazy val s27OracleSql: String =
     s"""WITH ex AS MATERIALIZED ($s1OracleSql),

@@ -1008,6 +1008,39 @@ object PipelineQueries {
       // leaf of unknowable grain; re-deriving this aggregate costs one
       // extra pruned scan per consumer, which at metadata grain is noise
 
+  /** [[monthManifest]] with each month's snapshot `version` (1-based, in
+    * landing order), checkpointed: calendar-grained, and p27, p28 and
+    * p41 each read it several times. */
+  private def versionedManifest(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    monthManifest(spark, dir)
+      .withColumn("version",
+        row_number().over(Window.orderBy(col("mo"))).cast("long"))
+      .localCheckpoint(true)
+  }
+
+  /** Every file of the snapshot chain (p27, p41): a month-file is born at
+    * its landing version and removed at the next year's first version
+    * (-1 while live), which is also where its year-file is born; a
+    * year-file is never removed. */
+  private def chainFiles(ver: DataFrame): DataFrame = {
+    val yrFirst = ver.groupBy(col("yr"))
+      .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
+    val monthFiles = ver
+      .join(broadcast(yrFirst.select((col("yr") - 1).as("yr"),
+        col("y_first").as("removed_v"))), Seq("yr"), "left")
+      .select(concat(lit("month_"), col("mo").cast("string")).as("key"),
+        lit("month").as("kind"), col("version").as("born_v"),
+        coalesce(col("removed_v"), lit(-1L)).as("removed_v"), col("n_rows"))
+    val yearFiles = yrFirst.as("a")
+      .join(broadcast(yrFirst.select(col("yr"), col("y_first")).as("b")),
+        col("b.yr") === col("a.yr") + 1)
+      .select(concat(lit("year_"), col("a.yr").cast("string")).as("key"),
+        lit("year").as("kind"), col("b.y_first").as("born_v"),
+        lit(-1L).as("removed_v"), col("a.y_rows").as("n_rows"))
+    monthFiles.unionByName(yearFiles)
+  }
+
   /** Time-travel read path: the live file set at `version` — year-files
     * for every closed year, month-files for the in-progress one. The
     * version row itself is a 1-row collect off the manifest (the
@@ -1223,29 +1256,11 @@ object PipelineQueries {
     * self-join. Exactly how a real `expire_snapshots` plans: off
     * metadata, never reading data files. */
   def p27ExpireSnapshots(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ver = monthManifest(spark, dir)
-      .withColumn("version",
-        row_number().over(Window.orderBy(col("mo"))).cast("long"))
-      .localCheckpoint(true) // calendar-grained; 4 consumers below
-    val yrFirst = ver.groupBy(col("yr"))
-      .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
-    val monthFiles = ver
-      .join(broadcast(yrFirst.select((col("yr") - 1).as("yr"),
-        col("y_first").as("removed_v"))), Seq("yr"), "left")
-      .select(concat(lit("month_"), col("mo").cast("string")).as("key"),
-        lit("month").as("kind"), col("version").as("born_v"),
-        coalesce(col("removed_v"), lit(-1L)).as("removed_v"), col("n_rows"))
-    val yearFiles = yrFirst.as("a")
-      .join(broadcast(yrFirst.select(col("yr"), col("y_first")).as("b")),
-        col("b.yr") === col("a.yr") + 1)
-      .select(concat(lit("year_"), col("a.yr").cast("string")).as("key"),
-        lit("year").as("kind"), col("b.y_first").as("born_v"),
-        lit(-1L).as("removed_v"), col("a.y_rows").as("n_rows"))
+    val ver = versionedManifest(spark, dir)
     val floorV = ver.agg(max(col("version")).as("max_v"))
       .select(greatest(col("max_v") - RetainVersions + 1, lit(1L))
         .as("min_retained"))
-    val files = monthFiles.unionByName(yearFiles)
+    val files = chainFiles(ver)
       .crossJoin(broadcast(floorV))
       .withColumn("verdict",
         when(col("removed_v") === -1L, "live")
@@ -1349,11 +1364,7 @@ object PipelineQueries {
     * deployment reads the two manifests — the whole plan is
     * metadata-sized. */
   def p28ReplicationDelta(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ver = monthManifest(spark, dir)
-      .withColumn("version",
-        row_number().over(Window.orderBy(col("mo"))).cast("long"))
-      .localCheckpoint(true) // calendar-grained; cursors + delta read it
+    val ver = versionedManifest(spark, dir)
     val heads = ver.agg(max(col("version")).as("v_head"))
       .withColumn("v_rep", greatest(col("v_head") - ReplicaLag, lit(1L)))
     val hMark = ver.join(broadcast(heads), col("version") === col("v_head"))
@@ -1451,7 +1462,8 @@ object PipelineQueries {
     * written once per landing cycle, read by every downstream query). */
   def p29BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
-    graft.sources.Bucketed.q39OverBuckets(spark, dir, li, ord)
+    graft.operators.Analytics.q39BigOrdersOver(spark, dir,
+      spark.table(li), spark.table(ord))
   }
 
   /** `p34_bucketed_priority` / `p35_bucketed_semi` / `p36_bucketed_trade`
@@ -1462,12 +1474,13 @@ object PipelineQueries {
     * inequality), q47 (bilateral trade: partitioning preserved through
     * broadcast dim joins on both sides), q49 (the customer-grain
     * aggregate keeps its own algebra-required shuffle — only the fact
-    * shuffle is deleted), q52 (ship-tier mix). Each is semantically
-    * identical to its q-twin — the oracle is the q-twin's SQL verbatim,
-    * so the layout changes the PLAN, never the answer — and each has a
-    * BASELINE row, so a regression of any deleted exchange is loud in
-    * the bench. At 100 TB these five queries repay the bucketed write
-    * every landing cycle: the orderkey shuffle they shared is the
+    * shuffle is deleted), q52 (ship-tier mix). p35/p37/p38 run their
+    * q-twin's body over the layout, as p29 runs q39's. Each is
+    * semantically identical to its q-twin — the oracle is the q-twin's
+    * SQL verbatim, so the layout changes the PLAN, never the answer — and
+    * each has a BASELINE row, so a regression of any deleted exchange is
+    * loud in the bench. At 100 TB these five queries repay the bucketed
+    * write every landing cycle: the orderkey shuffle they shared is the
     * engine's single biggest recurring cost, and `SourcesSpec` pins per
     * twin that NO exchange partitions on the orderkey while the
     * unbucketed form pays ≥1. */
@@ -1477,7 +1490,7 @@ object PipelineQueries {
   }
   def p35BucketedSemi(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
-    graft.sources.Bucketed.q44OverBuckets(spark, dir, li, ord)
+    graft.operators.Analytics.q44LateShipPriorityOver(spark.table(li), spark.table(ord))
   }
   def p36BucketedTrade(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
@@ -1485,25 +1498,13 @@ object PipelineQueries {
   }
   def p37BucketedReturns(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
-    graft.sources.Bucketed.q49OverBuckets(spark, dir, li, ord)
+    graft.operators.Analytics.q49ReturnedItemsOver(spark, dir,
+      spark.table(li), spark.table(ord))
   }
   def p38BucketedDelay(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
-    graft.sources.Bucketed.q52OverBuckets(spark, dir, li, ord)
+    graft.operators.Analytics.q52ShipDelayModesOver(spark.table(li), spark.table(ord))
   }
-
-  // q39's oracle verbatim: the layout changes the PLAN, never the answer
-  private val p29Oracle: String =
-    """WITH big AS (
-      | SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-      | FROM lineitem GROUP BY l_orderkey HAVING sum(CAST(l_quantity AS BIGINT)) > 250)
-      |SELECT c_custkey, c_name, o_orderkey,
-      | strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-      | CAST(floor(o_totalprice * 100) AS BIGINT) AS totalprice_cents,
-      | total_qty
-      |FROM orders JOIN big ON o_orderkey = l_orderkey
-      | JOIN customer ON o_custkey = c_custkey
-      |ORDER BY total_qty DESC, o_orderkey""".stripMargin
 
   /** `p30_asof_read`: the time-travel READ path of the p25 snapshot
     * chain as a first-class oracle query — [[p25AsOf]]'s live-set rule
@@ -1944,30 +1945,12 @@ object PipelineQueries {
     * the vacuumed-restore (infeasible) arm. */
   def p41RollbackPlan(spark: SparkSession, dir: String,
                       depth: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ver = monthManifest(spark, dir)
-      .withColumn("version",
-        row_number().over(Window.orderBy(col("mo"))).cast("long"))
-      .localCheckpoint(true) // calendar-grained; 3 consumers below
-    val yrFirst = ver.groupBy(col("yr"))
-      .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
-    val monthFiles = ver
-      .join(broadcast(yrFirst.select((col("yr") - 1).as("yr"),
-        col("y_first").as("removed_v"))), Seq("yr"), "left")
-      .select(concat(lit("month_"), col("mo").cast("string")).as("key"),
-        lit("month").as("kind"), col("version").as("born_v"),
-        coalesce(col("removed_v"), lit(-1L)).as("removed_v"), col("n_rows"))
-    val yearFiles = yrFirst.as("a")
-      .join(broadcast(yrFirst.select(col("yr"), col("y_first")).as("b")),
-        col("b.yr") === col("a.yr") + 1)
-      .select(concat(lit("year_"), col("a.yr").cast("string")).as("key"),
-        lit("year").as("kind"), col("b.y_first").as("born_v"),
-        lit(-1L).as("removed_v"), col("a.y_rows").as("n_rows"))
+    val ver = versionedManifest(spark, dir)
     val scal = ver.agg(max(col("version")).as("head"))
       .select(col("head"),
         greatest(col("head") - depth, lit(1L)).as("target"),
         greatest(col("head") - RetainVersions + 1, lit(1L)).as("min_retained"))
-    val files = monthFiles.unionByName(yearFiles)
+    val files = chainFiles(ver)
       .crossJoin(broadcast(scal))
       .withColumn("live_head", col("removed_v") === -1L ||
         col("removed_v") > col("head"))
@@ -3289,7 +3272,8 @@ object PipelineQueries {
       graft.operators.Analytics.oracle("q52_ship_delay_modes"),
     "p31_join_prune_plan" -> p31Oracle,
     "p30_asof_read" -> p30Oracle,
-    "p29_bucketed_join" -> p29Oracle,
+    "p29_bucketed_join" ->
+      graft.operators.Analytics.oracle("q39_big_orders"),
     "p28_replication_delta" -> p28Oracle,
     "p27_expire_snapshots" -> p27Oracle,
     "p26_partition_evolution" -> p26Oracle,

@@ -10,7 +10,7 @@ import graft.Tables
   * `l_orderkey`/`o_orderkey` hash shuffle that every fact-fact operator
   * (q3, q39, q33's edge build, q42's baskets) pays to co-locate lineitem
   * with orders. Bucketing pays that shuffle ONCE at write time — both
-  * facts land hash-bucketed on the order key ([[writeFactLayout]]) — and
+  * facts land hash-bucketed on the order key ([[ensureFactLayout]]) — and
   * every subsequent consumer reads co-located buckets: the join needs no
   * exchange, and any aggregation keyed on the bucket column (or a
   * superset of it) reuses the SAME storage partitioning, because
@@ -45,23 +45,28 @@ object Bucketed {
     * triggers a full rewrite — staleness can't be adopted. Table names
     * carry a sanitized dir tag so different SF dirs never collide.
     * Idempotent under a lost race — the write is mode(Overwrite) of
-    * identical data and the adopt DDL is create-if-absent. */
+    * identical data and the adopt DDL is create-if-absent.
+    *
+    * Both facts share one bucket count and sort each bucket on the key,
+    * so their join needs neither an Exchange nor a Sort. Returns the
+    * (lineitem, orders) table names. */
   private val builtLayouts =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  def ensureFactLayout(spark: SparkSession, dir: String,
-                       nBuckets: Int = 32): (String, String) =
-    builtLayouts.getOrElseUpdate(s"$dir#$nBuckets", {
+  def ensureFactLayout(spark: SparkSession, dir: String): (String, String) =
+    builtLayouts.getOrElseUpdate(dir, {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val prefix = s"bkt_${tag}_"
-      adoptOrWrite(spark, dir, "lineitem", "l_orderkey", s"${prefix}lineitem", nBuckets)
-      adoptOrWrite(spark, dir, "orders", "o_orderkey", s"${prefix}orders", nBuckets)
+      adoptOrWrite(spark, dir, "lineitem", "l_orderkey", s"${prefix}lineitem")
+      adoptOrWrite(spark, dir, "orders", "o_orderkey", s"${prefix}orders")
       (s"${prefix}lineitem", s"${prefix}orders")
     })
 
   /** Test hook: forget a memoized layout so a spec can replay the
     * next-JVM path (catalog empty, warehouse dir intact) in-process. */
-  private[graft] def forgetLayout(dir: String, nBuckets: Int = 32): Unit =
-    builtLayouts.remove(s"$dir#$nBuckets")
+  private[graft] def forgetLayout(dir: String): Unit =
+    builtLayouts.remove(dir)
+
+  private val NBuckets = 32
 
   /** The source's content address: every file's (name, size, mtime) under
     * `dir/name.parquet` — cheap (one listStatus), and any upstream
@@ -78,8 +83,7 @@ object Bucketed {
   }
 
   private def adoptOrWrite(spark: SparkSession, dir: String, source: String,
-                           bucketCol: String, table: String,
-                           nBuckets: Int): Unit = {
+                           bucketCol: String, table: String): Unit = {
     val fp = sourceFingerprint(spark, dir, source)
     val loc = new org.apache.hadoop.fs.Path(
       spark.sessionState.catalog.defaultTablePath(
@@ -97,14 +101,14 @@ object Bucketed {
         }.toMap
       }
     val valid = stored.get("fingerprint").contains(fp) &&
-      stored.get("buckets").contains(nBuckets.toString) &&
+      stored.get("buckets").contains(NBuckets.toString) &&
       stored.get("bucket_col").contains(bucketCol) &&
       stored.get("schema").exists(_.nonEmpty)
     if (valid) {
       if (!spark.catalog.tableExists(table))
         spark.sql(s"CREATE TABLE `$table` (${stored("schema")}) USING parquet " +
           s"CLUSTERED BY (`$bucketCol`) SORTED BY (`$bucketCol`) " +
-          s"INTO $nBuckets BUCKETS LOCATION '${loc.toString}'")
+          s"INTO $NBuckets BUCKETS LOCATION '${loc.toString}'")
     } else {
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
       if (fs.exists(loc)) fs.delete(loc, true)
@@ -113,53 +117,17 @@ object Bucketed {
       // never takes the files with it; the marker lands only after the
       // data write committed, so a crash between the two re-runs the write
       df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
+        .bucketBy(NBuckets, bucketCol).sortBy(bucketCol)
         .option("path", loc.toString)
         .format("parquet").saveAsTable(table)
       val out = fs.create(marker, true)
-      try out.write((s"fingerprint=$fp\nbuckets=$nBuckets\n" +
+      try out.write((s"fingerprint=$fp\nbuckets=$NBuckets\n" +
         s"bucket_col=$bucketCol\nschema=${df.schema.toDDL}\n").getBytes("UTF-8"))
       finally out.close()
     }
   }
 
-  /** One-time bucketed layout of the two TPC-H facts on the order key.
-    * Same bucket count on both sides (a requirement for the exchange-free
-    * join); `sortBy(bucketCol)` inside each bucket so single-file buckets
-    * also satisfy the sort-merge join's ordering without a Sort node.
-    * Returns the (lineitem, orders) table names. */
-  def writeFactLayout(spark: SparkSession, dir: String,
-                      nBuckets: Int = 32, prefix: String = "bkt_"): (String, String) = {
-    Sinks.writeBucketed(Tables.load(spark, dir, "lineitem"),
-      s"${prefix}lineitem", "l_orderkey", nBuckets)
-    Sinks.writeBucketed(Tables.load(spark, dir, "orders"),
-      s"${prefix}orders", "o_orderkey", nBuckets)
-    (s"${prefix}lineitem", s"${prefix}orders")
-  }
-
-  /** q39's jumbo-order feed over the bucketed layout — semantically
-    * identical to `Analytics.q39BigOrders`, but BOTH fact stages run on
-    * the storage partitioning:
-    *
-    *  - the per-order quantity aggregate groups by `l_orderkey` = the
-    *    bucket key, so the partial/final HashAggregate pair collapses to
-    *    ONE exchange-free aggregate over the bucketed scan;
-    *  - the orders⋈aggregate join clusters on the same key, already
-    *    satisfied on both sides — no exchange there either;
-    *  - the customer lookup stays a broadcast dim join.
-    *
-    * The only Exchange in the whole plan is the final presentational
-    * `rangepartitioning` for the global orderBy. At 100 TB that is the
-    * difference between shuffling the full lineitem fact per run and
-    * shuffling 20 result rows. */
-  /** q3's shipping-priority feed over the bucketed layout — semantically
-    * identical to `Analytics.q3ShippingPriority` (same oracle). The
-    * orderkey sort-merge join runs on the storage partitioning, and the
-    * (o_orderkey, o_orderdate, o_orderpriority) aggregate is ALSO
-    * exchange-free — `HashPartitioning(o_orderkey)` satisfies any
-    * clustering that contains the bucket key — so with the segment dim
-    * broadcast and the top-20 a TakeOrdered, the whole plan carries
-    * ZERO hash exchanges (SourcesSpec pins it). */
+  /** q3 + `broadcast(cust)`: threshold -1 specs need it; q3 must not (customer grows with SF). */
   def q3OverBuckets(spark: SparkSession, dir: String,
                     lineitemTable: String, ordersTable: String): DataFrame = {
     val cutoff = lit("1998-06-01").cast("timestamp")
@@ -182,39 +150,7 @@ object Bucketed {
       .limit(20)
   }
 
-  /** q44's late-ship priority count over the bucketed layout — the SEMI
-    * join shape: orders semi-joins lineitem on the bucket key (plus the
-    * cross-table lateness inequality as the extra join condition), so
-    * the only hash exchange left in the plan moves the 5-row priority
-    * partials. Semantically identical to
-    * `Analytics.q44LateShipPriority` (same oracle). */
-  def q44OverBuckets(spark: SparkSession, dir: String,
-                     lineitemTable: String, ordersTable: String): DataFrame = {
-    val ord = spark.table(ordersTable)
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val li = spark.table(lineitemTable)
-      .select(col("l_orderkey"), col("l_shipdate"))
-    ord.join(li,
-        col("l_orderkey") === col("o_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAY"),
-        "left_semi")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_late_orders"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** q47's bilateral trade volume over the bucketed layout — both fact
-    * sides keep their storage partitioning through the broadcast dim
-    * joins (a BroadcastHashJoin preserves the streamed side's
-    * partitioning), so the orderkey sort-merge join is exchange-free and
-    * the only hash exchange left moves the ≤|nation-pairs|×|years|
-    * aggregate partials. Semantically identical to
-    * `Analytics.q47VolumeShipping` (same oracle; the customer-nation
-    * dim attaches by broadcast here — it is nation-filtered to ~2/25 of
-    * customers, the same dim-sized side the supplier half already
-    * broadcasts). */
+  /** q47 + `broadcast(cust)`: threshold -1 specs need it; q47 must not (customer grows with SF). */
   def q47OverBuckets(spark: SparkSession, dir: String,
                      lineitemTable: String, ordersTable: String): DataFrame = {
     val nat = Tables.load(spark, dir, "nation")
@@ -241,80 +177,5 @@ object Bucketed {
         year(col("l_shipdate")).cast("long").as("l_year"))
       .agg(sum(col("rev_c")).as("revenue_cents"))
       .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-  }
-
-  /** q49's returned-revenue churn list over the bucketed layout — the
-    * orderkey sort-merge join is exchange-free; the customer-grain
-    * aggregate and the name lookup keep q49's own shape (that shuffle
-    * is the algebra — the group key is not the bucket key).
-    * Semantically identical to `Analytics.q49ReturnedItems` (same
-    * oracle). */
-  def q49OverBuckets(spark: SparkSession, dir: String,
-                     lineitemTable: String, ordersTable: String): DataFrame = {
-    val ord = spark.table(ordersTable)
-      .filter(col("o_orderdate") >= lit("1995-10-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val li = spark.table(lineitemTable)
-      .filter(col("l_returnflag") === "R")
-      .select(col("l_orderkey"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
-          .cast("long").as("rev_c"))
-    val cust = Tables.load(spark, dir, "customer")
-      .join(broadcast(Tables.load(spark, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"))
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey"))
-      .agg(sum(col("rev_c")).as("revenue_cents"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"),
-        col("revenue_cents"))
-      .orderBy(col("revenue_cents").desc, col("c_custkey"))
-      .limit(20)
-  }
-
-  /** q52's ship-tier priority mix over the bucketed layout — the
-    * orderkey sort-merge join is exchange-free; the only hash exchange
-    * left moves 3 tier-partial rows. Semantically identical to
-    * `Analytics.q52ShipDelayModes` (same oracle). */
-  def q52OverBuckets(spark: SparkSession, dir: String,
-                     lineitemTable: String, ordersTable: String): DataFrame = {
-    val ord = spark.table(ordersTable)
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    spark.table(lineitemTable)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .withColumn("delay_days",
-        datediff(col("l_shipdate"), col("o_orderdate")).cast("long"))
-      .groupBy(when(col("delay_days") < 30, "FAST")
-        .when(col("delay_days") < 75, "MED")
-        .otherwise("SLOW").as("ship_tier"))
-      .agg(
-        sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-          .otherwise(0L)).as("critical_lines"),
-        sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
-          .otherwise(1L)).as("other_lines"))
-      .orderBy(col("ship_tier"))
-  }
-
-  def q39OverBuckets(spark: SparkSession, dir: String,
-                     lineitemTable: String, ordersTable: String): DataFrame = {
-    val big = spark.table(lineitemTable)
-      .groupBy(col("l_orderkey"))
-      .agg(sum(col("l_quantity").cast("long")).as("total_qty"))
-      .filter(col("total_qty") > 250L)
-    val cust = Tables.load(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"))
-    spark.table(ordersTable)
-      .join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
-        floor(col("o_totalprice") * 100).cast("long").as("totalprice_cents"),
-        col("total_qty"))
-      .orderBy(col("total_qty").desc, col("o_orderkey"))
   }
 }

@@ -55,6 +55,17 @@ class BoundedBroadcastSpec extends AnyFunSuite {
     assert(a == b, "guarded and unguarded joins disagree")
   }
 
+  test("bound dial: unset gives the 4M-row default; a non-integer or " +
+    "non-positive value is rejected with the variable's name") {
+    assert(BoundedBroadcast.maxRowsFrom(None) == 4000000L)
+    assert(BoundedBroadcast.maxRowsFrom(Some("8")) == 8L)
+    Seq("0", "-1", "", "x", "4x").foreach { v =>
+      val e = intercept[IllegalArgumentException](BoundedBroadcast.maxRowsFrom(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BROADCAST_MAX_ROWS"),
+        s"'$v' rejected without naming the variable: ${e.getMessage}")
+    }
+  }
+
   test("default bound is far under the 512M-row broadcast relation cap") {
     assert(BoundedBroadcast.DefaultMaxRows <= 512000000L / 10,
       "default bound leaves no headroom under the broadcast cap")

@@ -126,8 +126,7 @@ class SourcesSpec extends AnyFunSuite {
   test("bucketed FACT layout: q39's feed runs with ZERO hash exchanges — " +
     "the per-order aggregate AND the fact-fact join both reuse the " +
     "storage partitioning — and matches the shuffled form row-for-row") {
-    val (liT, ordT) = graft.sources.Bucketed.writeFactLayout(
-      spark, sf, nBuckets = 4, prefix = "r15bkt_")
+    val (liT, ordT) = graft.sources.Bucketed.ensureFactLayout(spark, sf)
     // pin the sort-merge shape: without this AQE would broadcast the small
     // aggregate at sf0.001 and the no-exchange claim would be vacuous
     // (the dim join's explicit broadcast() hint survives a -1 threshold)
@@ -137,7 +136,8 @@ class SourcesSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val bucketed = graft.sources.Bucketed.q39OverBuckets(spark, sf, liT, ordT)
+      val bucketed = graft.operators.Analytics.q39BigOrdersOver(spark, sf,
+        spark.table(liT), spark.table(ordT))
       val p = bucketed.queryExecution.executedPlan.toString
       assert(!p.contains("Exchange hashpartitioning"),
         s"hash exchange in the bucketed fact plan:\n$p")
@@ -169,8 +169,8 @@ class SourcesSpec extends AnyFunSuite {
     "least one — and every twin matches its q-twin row-for-row") {
     import graft.sources.Bucketed
     import graft.operators.Analytics
-    val (liT, ordT) = Bucketed.writeFactLayout(
-      spark, sf, nBuckets = 4, prefix = "r17bkt_")
+    import graft.pipeline.PipelineQueries
+    val (liT, ordT) = Bucketed.ensureFactLayout(spark, sf)
     // a plan LINE that both repartitions by hash AND mentions the order
     // key is the fact shuffle the layout exists to delete (group-by
     // shuffles on other keys — q49's customer grain — are the algebra
@@ -186,15 +186,15 @@ class SourcesSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
       val cases: Seq[(String,
-          (SparkSession, String, String, String) => org.apache.spark.sql.DataFrame,
+          (SparkSession, String) => org.apache.spark.sql.DataFrame,
           (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
-        ("p34/q3", Bucketed.q3OverBuckets, Analytics.q3ShippingPriority),
-        ("p35/q44", Bucketed.q44OverBuckets, Analytics.q44LateShipPriority),
-        ("p36/q47", Bucketed.q47OverBuckets, Analytics.q47VolumeShipping),
-        ("p37/q49", Bucketed.q49OverBuckets, Analytics.q49ReturnedItems),
-        ("p38/q52", Bucketed.q52OverBuckets, Analytics.q52ShipDelayModes))
+        ("p34/q3", PipelineQueries.p34BucketedPriority, Analytics.q3ShippingPriority),
+        ("p35/q44", PipelineQueries.p35BucketedSemi, Analytics.q44LateShipPriority),
+        ("p36/q47", PipelineQueries.p36BucketedTrade, Analytics.q47VolumeShipping),
+        ("p37/q49", PipelineQueries.p37BucketedReturns, Analytics.q49ReturnedItems),
+        ("p38/q52", PipelineQueries.p38BucketedDelay, Analytics.q52ShipDelayModes))
       cases.foreach { case (name, twin, orig) =>
-        val b = twin(spark, sf, liT, ordT)
+        val b = twin(spark, sf)
         val bp = b.queryExecution.executedPlan.toString
         assert(orderkeyExchanges(bp) == 0,
           s"$name: orderkey exchange survived in the bucketed plan:\n$bp")
