@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every `SparkEntry.benchQueries` entry against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
@@ -270,12 +269,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarning()
+    val spark = GraftSession.harness("WARN")
     // warm up the JVM/codegen/scan paths so the first measured query isn't
     // charged for session bring-up
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

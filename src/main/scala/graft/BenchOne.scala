@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic runner: one named query, N back-to-back reps, per-rep times
   * on stdout. `graft.Bench` deliberately interleaves reps across queries to
@@ -20,12 +19,7 @@ object BenchOne {
     val name = args.headOption.getOrElse("q18_approx_stats")
     val reps = if (args.length > 1) args(1).toInt else 6
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarning()
+    val spark = GraftSession.harness("WARN")
     val fn = if (name.startsWith("verified:")) SparkEntry.queries(name.stripPrefix("verified:"))
              else SparkEntry.benchQueries(name)
     val rt = Runtime.getRuntime

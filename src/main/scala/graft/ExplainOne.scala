@@ -37,12 +37,7 @@ object ExplainOne {
     val name = args.headOption.getOrElse("q1_pricing_summary")
     val sfDir = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.silenceBoundedWindowWarning()
+    val spark = GraftSession.harness("ERROR")
     // plan-audit dial: dump a plan as it would look where a side is too
     // big to auto-broadcast (e.g. -1 disables auto-broadcast so the
     // corpus-attach joins show their at-scale sort-merge shape). Explain

@@ -14,8 +14,30 @@ object GraftSession {
     tune(SparkSession.builder().master(s"local[$cores]"), shufflePartitions)
       .getOrCreate()
 
+  /** The harness mains' session (Bench, BenchOne, Verify, JobCountProbe,
+    * ExplainOne): `local[SPARK_GRAFT_CPUS]` with as many shuffle
+    * partitions, engine defaults, `logLevel`, and the bounded-window
+    * warning silenced. */
+  def harness(logLevel: String): SparkSession = {
+    val cpus = coresFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+    val spark = tune(SparkSession.builder().master(s"local[$cpus]"),
+      shufflePartitions = cpus).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    silenceBoundedWindowWarning()
+    spark
+  }
+
+  /** Unset gives 4; anything but a positive integer fails naming the
+    * variable (`0` would otherwise fail deep inside Spark). */
+  private[graft] def coresFrom(env: Option[String]): Int =
+    env.fold(4) { v =>
+      val n = v.toIntOption.filter(_ > 0)
+      require(n.isDefined, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+      n.get
+    }
+
   /** Silence WindowExec's "No Partition Defined" warning — HARNESS MAINS
-    * ONLY (Bench/BenchOne/Verify call this; library code never does).
+    * ONLY ([[harness]] and perfbench call this; library code never does).
     *
     * The engine's distributed prefix sums end in one deliberate
     * single-partition window over a #partitions- or rule-table-sized

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -23,12 +22,7 @@ object JobCountProbe {
     val name = args.headOption.getOrElse("q1_pricing_summary")
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.silenceBoundedWindowWarning()
+    val spark = GraftSession.harness("ERROR")
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger

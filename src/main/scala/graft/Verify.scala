@@ -11,12 +11,7 @@ object Verify {
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet
       else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarning()
+    val spark = GraftSession.harness("WARN")
     try run(spark, sfDir, outDir, only)
     finally spark.stop()
   }

@@ -7,9 +7,9 @@ import scala.util.Try
   *
   * Re-expresses the reference's Airflow TaskGroup chain
   * (/root/reference/dags/pipeline_orchestration_dag.py:212): stages declare
-  * dependencies, run in topological order, and a failure skips every
-  * transitive dependent while unrelated stages still run — the same
-  * fail-fast semantics an Airflow DAG gives the reference. Per-stage
+  * dependencies, run one at a time in topological order, and a failure
+  * skips every transitive dependent while unrelated stages still run —
+  * the same fail-fast semantics an Airflow DAG gives the reference. Per-stage
   * `retries`/`retryDelayMs` and the `onFailure` callback mirror the
   * reference's default_args (`retries`, `retry_delay`,
   * `email_on_failure` — pipeline_orchestration_dag.py:31-35).
@@ -83,17 +83,6 @@ object Runner {
 
   def run(pipeline: String, policy: OverlapPolicy, stages: Seq[Stage]): Seq[StageResult] =
     run(pipeline, policy, stages, noFailureHook)
-
-  /** [[runParallel]] under the same per-name guard: stages within one run
-    * still parallelize; RUNS of one pipeline never overlap. */
-  def runParallel(pipeline: String, policy: OverlapPolicy, stages: Seq[Stage],
-                  parallelism: Int,
-                  onFailure: (String, Throwable) => Unit): Seq[StageResult] =
-    withRunLock(pipeline, policy)(runParallel(stages, parallelism, onFailure))
-
-  def runParallel(pipeline: String, policy: OverlapPolicy,
-                  stages: Seq[Stage]): Seq[StageResult] =
-    runParallel(pipeline, policy, stages, 4, noFailureHook)
 
   /** Thrown when a timed-out stage body refuses to die: retrying would
     * run two attempts CONCURRENTLY against the same outputs, so this
@@ -172,10 +161,11 @@ object Runner {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Run stages respecting deps. Throws IllegalArgumentException on an
-    * unknown dep or a cycle (a mis-declared DAG is a bug, not a runtime
-    * failure). `onFailure(stage, error)` fires once per stage whose retry
-    * budget is exhausted. */
+  /** Run stages one at a time in Kahn order; results come back in that
+    * order. Throws IllegalArgumentException on an unknown dep or a cycle
+    * (a mis-declared DAG is a bug, not a runtime failure).
+    * `onFailure(stage, error)` fires once per stage whose retry budget is
+    * exhausted. */
   def run(stages: Seq[Stage],
           onFailure: (String, Throwable) => Unit = noFailureHook): Seq[StageResult] = {
     val byName = stages.map(s => s.name -> s).toMap
@@ -206,58 +196,6 @@ object Runner {
       }
     }
     order.map(s => StageResult(s.name, status(s.name))).toSeq
-  }
-
-  /** Like [[run]] but independent stages execute CONCURRENTLY (Airflow's
-    * parallel branches): each stage starts as soon as all its deps succeed,
-    * failures skip transitive dependents. `parallelism` bounds concurrent
-    * stages. Results are in declaration order. */
-  def runParallel(stages: Seq[Stage], parallelism: Int = 4,
-                  onFailure: (String, Throwable) => Unit = noFailureHook): Seq[StageResult] = {
-    import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
-    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
-    import scala.concurrent.duration.Duration
-
-    val byName = stages.map(s => s.name -> s).toMap
-    stages.foreach(s => s.deps.foreach(d =>
-      require(byName.contains(d), s"stage ${s.name}: unknown dep $d")))
-    // reuse the sequential validator for cycle detection
-    require({
-      val indeg = mutable.Map(stages.map(s => s.name -> s.deps.size): _*)
-      val seen = mutable.ArrayBuffer.empty[String]
-      val ready = mutable.Queue(stages.filter(_.deps.isEmpty): _*)
-      while (ready.nonEmpty) {
-        val s = ready.dequeue(); seen += s.name
-        stages.filter(_.deps.contains(s.name)).foreach { dep =>
-          indeg(dep.name) -= 1
-          if (indeg(dep.name) == 0) ready.enqueue(dep)
-        }
-      }
-      seen.size == stages.size
-    }, s"cycle among stages")
-
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val done = new ConcurrentHashMap[String, Promise[Status]]()
-    stages.foreach(s => done.put(s.name, Promise[Status]()))
-    try {
-      stages.foreach { s =>
-        val depFutures = Future.sequence(s.deps.map(d => done.get(d).future))
-        depFutures.map { depStatuses =>
-          s.deps.zip(depStatuses).find(_._2 != Succeeded) match {
-            case Some((d, _)) => done.get(s.name).success(Skipped(s"dep $d did not succeed"))
-            case None => Future {
-              done.get(s.name).success(attempt(s, onFailure))
-            }
-          }
-        }
-      }
-      stages.map(s => StageResult(s.name,
-        Await.result(done.get(s.name).future, Duration.Inf)))
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(10, TimeUnit.SECONDS)
-    }
   }
 }
 

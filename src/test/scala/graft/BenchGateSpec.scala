@@ -175,4 +175,15 @@ class BenchGateSpec extends AnyFunSuite {
     assert(parsed == Bench.FallbackFloor,
       s"BASELINE.md floors $parsed != FallbackFloor ${Bench.FallbackFloor}")
   }
+
+  test("cores dial: unset gives the default 4; a non-integer or " +
+    "non-positive SPARK_GRAFT_CPUS is rejected with the variable's name") {
+    assert(GraftSession.coresFrom(None) == 4)
+    assert(GraftSession.coresFrom(Some("8")) == 8)
+    Seq("0", "-1", "", "x", "4x").foreach { v =>
+      val e = intercept[IllegalArgumentException](GraftSession.coresFrom(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"),
+        s"'$v' rejected without naming the variable: ${e.getMessage}")
+    }
+  }
 }

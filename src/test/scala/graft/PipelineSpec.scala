@@ -184,19 +184,37 @@ class PipelineSpec extends AnyFunSuite {
   test("runner: topological order, fail-fast skips dependents only") {
     import Runner._
     val ran = scala.collection.mutable.ArrayBuffer.empty[String]
+    // each body's (start, end): perfbench attributes work to a stage by
+    // time window, which holds only while no two stage spans overlap
+    val spans = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    def body(name: String, fail: Boolean = false): () => Unit = () => {
+      val t0 = System.nanoTime()
+      ran += name
+      Thread.sleep(5)
+      spans += (t0 -> System.nanoTime())
+      if (fail) throw new RuntimeException("boom")
+    }
     val stages = Seq(
-      Stage("sense")(() => ran += "sense"),
-      Stage("ingest", Seq("sense"))(() => { ran += "ingest"; throw new RuntimeException("boom") }),
-      Stage("stage", Seq("ingest"))(() => ran += "stage"),
-      Stage("quality", Seq("stage"))(() => ran += "quality"),
-      Stage("archive", Seq("sense"))(() => ran += "archive"))
-    val res = Runner.run(stages).map(r => r.name -> r.status).toMap
+      Stage("sense")(body("sense")),
+      Stage("ingest", Seq("sense"))(body("ingest", fail = true)),
+      Stage("stage", Seq("ingest"))(body("stage")),
+      Stage("quality", Seq("stage"))(body("quality")),
+      Stage("archive", Seq("sense"))(body("archive")))
+    val results = Runner.run(stages)
+    val res = results.map(r => r.name -> r.status).toMap
     assert(res("sense") == Succeeded)
     assert(res("ingest").isInstanceOf[Failed])
     assert(res("stage").isInstanceOf[Skipped])
     assert(res("quality").isInstanceOf[Skipped])
     assert(res("archive") == Succeeded)
     assert(!ran.contains("stage") && !ran.contains("quality"))
+    assert(ran.toList == List("sense", "ingest", "archive"))
+    assert(results.map(_.name) == Seq("sense", "ingest", "archive", "stage", "quality"),
+      "results are not in Kahn order")
+    val bySt = spans.sortBy(_._1)
+    bySt.zip(bySt.tail).foreach { case ((_, end), (next, _)) =>
+      assert(end <= next, s"stage spans overlap: $spans")
+    }
   }
 
   test("runner: retries recover transient failures; exhaustion skips " +
@@ -228,21 +246,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(byName("child").isInstanceOf[Skipped])
     assert(doomedCalls.get() == 3, "1 initial + 2 retries")
     assert(failures.toList == List("doomed" -> "permanent"), "hook fires once, after exhaustion")
-
-    // runParallel honors the same retry/hook contract
-    val pFailures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val pCalls = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pres = Runner.runParallel(Seq(
-      Stage("pflaky", retries = 1)(() =>
-        if (pCalls.incrementAndGet() < 2) throw new RuntimeException("transient")),
-      Stage("pbad", retries = 1)(() => throw new RuntimeException("boom")),
-      Stage("pchild", Seq("pbad"))(() => ())),
-      parallelism = 2, onFailure = (n, _) => { pFailures.add(n); () })
-    val pByName = pres.map(r => r.name -> r.status).toMap
-    assert(pByName("pflaky") == Succeeded)
-    assert(pByName("pbad").isInstanceOf[Failed])
-    assert(pByName("pchild").isInstanceOf[Skipped])
-    assert(pFailures.toArray.toList == List("pbad"))
   }
 
   test("runner: rejects cycles and unknown deps") {
@@ -255,37 +258,12 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("runParallel: independent branches overlap, failure skips dependents") {
-    import Runner._
-    val t0 = System.nanoTime()
-    val spans = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-    def timed(name: String, ms: Long, fail: Boolean = false): Stage =
-      Stage(name, Seq.empty)(() => {
-        val s = System.nanoTime(); Thread.sleep(ms); spans.put(name, (s, System.nanoTime()))
-        if (fail) throw new RuntimeException("boom")
-      })
-    val res = Runner.runParallel(Seq(
-      timed("a", 300), timed("b", 300),
-      Stage("bad")(() => throw new RuntimeException("boom")),
-      Stage("child", Seq("bad"))(() => ()),
-      Stage("joint", Seq("a", "b"))(() => ())), parallelism = 4)
-    val byName = res.map(r => r.name -> r.status).toMap
-    assert(byName("a") == Succeeded && byName("b") == Succeeded)
-    assert(byName("bad").isInstanceOf[Failed])
-    assert(byName("child").isInstanceOf[Skipped])
-    assert(byName("joint") == Succeeded)
-    // a and b actually overlapped in time
-    val (as, ae) = spans.get("a"); val (bs, be) = spans.get("b")
-    assert(as < be && bs < ae, "independent stages did not run concurrently")
-  }
-
   test("runner: concurrent runs of one named pipeline serialize under " +
     "QueueRun, fail fast under FailFast, and never block other pipelines " +
     "— the reference's max_active_runs=1") {
     import Runner._
-    // two QueueRun runs of the same name: stage bodies track concurrent
-    // occupancy; the guard must keep it at 1 even though each RUN uses
-    // runParallel internally
+    // two QueueRun runs of the same name on two threads: stage bodies
+    // track concurrent occupancy; the guard must keep it at 1
     val active = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxActive = new java.util.concurrent.atomic.AtomicInteger(0)
     def body(): Unit = {
@@ -296,7 +274,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     def stages = Seq(Stage("s1")(body _), Stage("s2", Seq("s1"))(body _))
     val threads = (1 to 2).map(_ => new Thread(() =>
-      Runner.runParallel("etl_daily", QueueRun, stages)))
+      Runner.run("etl_daily", QueueRun, stages)))
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(maxActive.get() == 1,
       s"two QueueRun runs of one pipeline interleaved (max active ${maxActive.get()})")
@@ -321,30 +299,25 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("runner: a hung stage times out, fires the hook, and skips " +
-    "dependents — sequential and parallel") {
+    "dependents") {
     import Runner._
     val notified = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def dag = Seq(
+    val t0 = System.nanoTime()
+    val byName = Runner.run(Seq(
       Stage("hung", timeoutMs = 200)(() => Thread.sleep(60000)),
       Stage("after", Seq("hung"))(() => ()),
-      Stage("free")(() => ()))
-    for (runner <- Seq(
-        (s: Seq[Stage]) => Runner.run(s, (n, _) => { notified.add(n); () }),
-        (s: Seq[Stage]) => Runner.runParallel(s, 2, (n, _) => { notified.add(n); () }))) {
-      notified.clear()
-      val t0 = System.nanoTime()
-      val byName = runner(dag).map(r => r.name -> r.status).toMap
-      val tookMs = (System.nanoTime() - t0) / 1000000
-      byName("hung") match {
-        case Failed(e) => assert(e.isInstanceOf[java.util.concurrent.TimeoutException],
-          s"expected TimeoutException, got $e")
-        case other => fail(s"hung stage: $other")
-      }
-      assert(byName("after").isInstanceOf[Skipped])
-      assert(byName("free") == Succeeded)
-      assert(tookMs < 30000, s"timeout did not bound the run (${tookMs}ms)")
-      assert(notified.contains("hung"), "failure hook did not fire on timeout")
+      Stage("free")(() => ())), (n, _) => { notified.add(n); () })
+      .map(r => r.name -> r.status).toMap
+    val tookMs = (System.nanoTime() - t0) / 1000000
+    byName("hung") match {
+      case Failed(e) => assert(e.isInstanceOf[java.util.concurrent.TimeoutException],
+        s"expected TimeoutException, got $e")
+      case other => fail(s"hung stage: $other")
     }
+    assert(byName("after").isInstanceOf[Skipped])
+    assert(byName("free") == Succeeded)
+    assert(tookMs < 30000, s"timeout did not bound the run (${tookMs}ms)")
+    assert(notified.contains("hung"), "failure hook did not fire on timeout")
   }
 
   test("runner: a timed-out attempt retries like any failure") {
