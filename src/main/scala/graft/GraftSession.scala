@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * to keep parity with the DuckDB oracle.
   */
 object GraftSession {
-  def local(cores: Int = 32, shufflePartitions: Int = 32): SparkSession =
+  /** The runnable mains' session (PipelineMain, StreamingMain). */
+  def local(cores: Int, shufflePartitions: Int): SparkSession =
     tune(SparkSession.builder().master(s"local[$cores]"), shufflePartitions)
       .getOrCreate()
 
@@ -19,7 +20,7 @@ object GraftSession {
     * partitions, engine defaults, `logLevel`, and the bounded-window
     * warning silenced. */
   def harness(logLevel: String): SparkSession = {
-    val cpus = coresFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+    val cpus = coresFrom(sys.env.get("SPARK_GRAFT_CPUS"), 4)
     val spark = tune(SparkSession.builder().master(s"local[$cpus]"),
       shufflePartitions = cpus).getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
@@ -27,10 +28,11 @@ object GraftSession {
     spark
   }
 
-  /** Unset gives 4; anything but a positive integer fails naming the
-    * variable (`0` would otherwise fail deep inside Spark). */
-  private[graft] def coresFrom(env: Option[String]): Int =
-    env.fold(4) { v =>
+  /** `SPARK_GRAFT_CPUS`: unset gives `default`; anything but a positive
+    * integer fails naming the variable (`0` or `x` would otherwise fail
+    * deep inside Spark). */
+  private[graft] def coresFrom(env: Option[String], default: Int): Int =
+    env.fold(default) { v =>
       val n = v.toIntOption.filter(_ > 0)
       require(n.isDefined, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
       n.get
@@ -40,15 +42,16 @@ object GraftSession {
     * ONLY ([[harness]] and perfbench call this; library code never does).
     *
     * The engine's distributed prefix sums end in one deliberate
-    * single-partition window over a #partitions- or rule-table-sized
-    * frame (m6/t11/t12/p16, SURVEY §5 "distributed prefix sums"); the
-    * frames cannot grow with data, which `PlanSpec`'s global
-    * bounded-input pin enforces structurally. A literal partition key
-    * would state the intent in-plan but does not survive Spark 4's
-    * `EliminateWindowPartitions` (foldable keys are stripped), so the
-    * warning fires on every run — dozens of identical lines that bury
-    * real warnings in the bench tail. Scoped to the one logger; every
-    * other WARN still surfaces. */
+    * single-partition window over a #partitions-sized frame
+    * (`operators.PrefixSum`, the only producer of the `rid` range id;
+    * SURVEY §5 "distributed prefix sums"), and a few rule-table windows
+    * (t11) do the same over a literal table; the frames cannot grow with
+    * data, which `PlanSpec`'s global bounded-input pin enforces
+    * structurally. A literal partition key would state the intent
+    * in-plan but does not survive Spark 4's `EliminateWindowPartitions`
+    * (foldable keys are stripped), so the warning fires on every run —
+    * dozens of identical lines that bury real warnings in the bench
+    * tail. Scoped to the one logger; every other WARN still surfaces. */
   def silenceBoundedWindowWarning(): Unit =
     try {
       org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -135,8 +135,8 @@ object PipelineMain {
       config.entities.foreach(e => Files.writeString(l.resolve(e.pattern), "placeholder\n"))
       l.toString
     }
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")).getOrCreate()
+    val spark = GraftSession.local(
+      GraftSession.coresFrom(sys.env.get("SPARK_GRAFT_CPUS"), 8), shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
 
     // failure hook: the reference's email_on_failure analog (no SMTP in a

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.{Files, Paths}
 import graft.streaming.StreamPipelines
@@ -21,8 +20,8 @@ object StreamingMain {
     val watchDir = if (args.length > 0) args(0) else Files.createTempDirectory("graft_watch").toString
     val stateDir = if (args.length > 1) args(1) else Files.createTempDirectory("graft_state").toString
     val runSeconds = if (args.length > 2) args(2).toInt else 20
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")).getOrCreate()
+    val spark = GraftSession.local(
+      GraftSession.coresFrom(sys.env.get("SPARK_GRAFT_CPUS"), 8), shufflePartitions = 32)
     spark.sparkContext.setLogLevel("WARN")
 
     Files.createDirectories(Paths.get(watchDir))

@@ -619,10 +619,9 @@ object AnalyticsExt {
     * and the smallest value attaining the max.
     *
     * Scale: the fact reduces to a VALUE-grained (price, nA, nB) table in
-    * one map-side-partial shuffle; the CDF is a distributed two-level
-    * prefix sum over that table (range partitions → rid-grained offsets
-    * — the t12/m6 machinery; no single-task window ever sees the value
-    * grain). The cross-multiplied integer form needs no division until
+    * one map-side-partial shuffle; the CDF is the [[PrefixSum]]
+    * distributed prefix sum over that table (no single-task window ever
+    * sees the value grain). The cross-multiplied integer form needs no division until
     * the final render, and the multiply runs in `Decimal(38,0)` (exact
     * integers to 10³⁸): `ca·tb`, `ks_num` and `ks_num·10⁶` are exact
     * for cohorts to ~10¹⁵ rows per side (product 10³⁰·10⁶ < 10³⁸) —
@@ -631,32 +630,13 @@ object AnalyticsExt {
     * integral divide of a ≤10⁶ quotient, emitted BIGINT; DuckDB's
     * HUGEINT (int128, exact to 1.7·10³⁸) matches it bit-for-bit. */
   def q43KsDrift(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = Tables.load(spark, dir, "orders")
       .select(floor(col("o_totalprice") * 100).cast("long").as("c"),
         when(year(col("o_orderdate")) <= 1997, 1L).otherwise(0L).as("isa"))
       .groupBy(col("c"))
       .agg(sum(col("isa")).as("na"), sum(lit(1L) - col("isa")).as("nb"))
-    val ordered = g.repartitionByRange(col("c")).sortWithinPartitions(col("c"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true) // value-grained; offsets + cum both read it
-    // rid-grained offsets: the only unpartitioned window reads
-    // #partition rows (PlanSpec's global pin allowlists the rid grain)
-    val offsets = ordered.groupBy(col("rid"))
-      .agg(sum(col("na")).as("sa"), sum(col("nb")).as("sb"))
-      .withColumn("basea", coalesce(sum(col("sa")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("baseb", coalesce(sum(col("sb")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("basea"), col("baseb"))
     val tot = g.agg(sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
-    val wRun = Window.partitionBy(col("rid")).orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = ordered.join(broadcast(offsets), Seq("rid"))
-      .withColumn("ca", col("basea") + sum(col("na")).over(wRun))
-      .withColumn("cb", col("baseb") + sum(col("nb")).over(wRun))
+    val cum = PrefixSum(g, Seq(col("c")), None, 0).runningSums("na" -> "ca", "nb" -> "cb")
       .crossJoin(broadcast(tot))
       .withColumn("diff", abs(col("ca").cast("decimal(38,0)") * col("tb") -
         col("cb").cast("decimal(38,0)") * col("ta")))

@@ -609,7 +609,6 @@ object Dedup {
     // CcLocalPairLimit pairs (or for non-long ids), where the label table
     // is far past any broadcast budget — small graphs take ccLocal
     val idType = pairs.schema("a").dataType
-    val t0 = System.nanoTime()
     var round = 0
     var changed = 1L
     while (changed > 0) {
@@ -638,14 +637,9 @@ object Dedup {
       // exact fixpoint test — a filter over the just-checkpointed blocks
       changed = next.filter(col("l") =!= col("prev")).count()
       labels = next.select(col("v"), col("l"))
-      if (CcDebug) System.err.println(
-        f"[cc:$opName] round $round: changed=$changed (${(System.nanoTime() - t0) / 1e9}%.2fs cum)")
     }
     labels
   }
-
-  /** GRAFT_CC_DEBUG=1 prints per-round convergence timing to stderr. */
-  private val CcDebug = sys.env.contains("GRAFT_CC_DEBUG")
 
   /** `d6_dedup_clusters`: consolidate near-dup PAIRS (d2) into CLUSTERS
     * (connected components — [[connectedComponents]]), elect the min
@@ -1200,31 +1194,17 @@ object Dedup {
     * 1-2.
     *
     * Scale: assignment is the one broadcast-model cosineMatrix pass
-    * (s6's shape); the per-cell rank runs on the t19/t12 distributed
-    * range-partition machinery — never a bare `partitionBy(cell)` window
-    * that would buffer an n/k-sized cell in one sort task. */
+    * (s6's shape); the per-cell rank is a [[PrefixSum]] row count —
+    * never a bare `partitionBy(cell)` window that would buffer an
+    * n/k-sized cell in one sort task. */
   def d15PrototypePrune(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (cents, data) = Similarity.kmeansWithData(spark, dir)
     RunOracles.pending("d15_prototype_prune", dir, d15OracleSql(cents))
     val asg = Similarity.assignCells(data, cents)
       .select(col("vec_id"), col("cell"), col("cell_cos_e6"))
-    val ranged = asg
-      .repartitionByRange(col("cell"), col("cell_cos_e6").desc, col("vec_id"))
-      .sortWithinPartitions(col("cell"), col("cell_cos_e6").desc, col("vec_id"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true) // feeds offsets, per-cell totals AND ranks
-    val offs = ranged.groupBy(col("rid"), col("cell"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("cbase", coalesce(sum(col("cnt")).over(
-        Window.partitionBy(col("cell")).orderBy(col("rid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("rid"), col("cell"), col("cbase"))
-    val nPer = ranged.groupBy(col("cell")).agg(count(lit(1)).as("n_cell"))
-    val wRun = Window.partitionBy(col("rid"), col("cell"))
-      .orderBy(col("cell_cos_e6").desc, col("vec_id"))
-    ranged.join(broadcast(offs), Seq("rid", "cell"))
-      .withColumn("rank_in_cell", (col("cbase") + row_number().over(wRun)).cast("long"))
+    val ps = PrefixSum(asg, Seq(col("cell_cos_e6").desc, col("vec_id")), Some("cell"), 0)
+    val nPer = ps.ranged.groupBy(col("cell")).agg(count(lit(1)).as("n_cell"))
+    ps.runningCount("rank_in_cell")
       .join(broadcast(nPer), Seq("cell"))
       .withColumn("bucket", expr("((rank_in_cell - 1) * 3) div n_cell"))
       .withColumn("is_kept", when(col("bucket") >= 1, 1L).otherwise(0L))

@@ -393,19 +393,16 @@ object Multimodal {
     * sharing the boundary key, which is the looser ±|modalities| bound
     * PropertySpec asserts.
     *
-    * Shape: one narrow scan; BOTH orders are t12's distributed prefix
-    * sum — the per-modality shuffle ranks (range-partition by (modality,
-    * shuffle key), per-(range, modality) counts → broadcast per-modality
-    * base offsets → in-range windows; a bare partitionBy(media_type)
-    * window would buffer a third of the corpus in one sort task) and the
-    * global sequence number (range-partition by the mix key, same
-    * machinery) — the manifest is corpus-sized, so no single-task or
+    * Shape: one narrow scan; BOTH orders are [[PrefixSum]] row counts —
+    * the per-modality shuffle ranks (grouped by modality; a bare
+    * partitionBy(media_type) window would buffer a third of the corpus in
+    * one sort task) and the global sequence number over the mix key —
+    * the manifest is corpus-sized, so no single-task or
     * modality-task window appears anywhere and any cluster width yields
     * the byte-identical manifest. An unweighted media_type raises
     * instead of silently keying null (nulls would sort an unweighted
     * burst to the manifest front). */
   def m6MixManifest(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // unknown modality = raise, never a silent null key (nulls would sort
     // to the manifest FRONT as an unweighted burst — the exact invariant
     // violation this operator exists to prevent)
@@ -414,53 +411,19 @@ object Multimodal {
         .cast("long")) { case (acc, (m, w)) =>
       when(col("media_type") === m, lit((MixScale / w).toLong)).otherwise(acc)
     }
-    // per-modality shuffle ranks, DISTRIBUTED: a bare
+    // per-modality shuffle ranks, distributed: a bare
     // Window.partitionBy(media_type) would buffer a third of the corpus
-    // in one sort task — the same t12 range-partition/prefix-count
-    // machinery the global seq uses below computes r with per-range
-    // windows instead (per-(range, modality) counts → broadcast base
-    // offsets keyed by modality → in-range row_number)
+    // in one sort task
     val shuffled = mediaTable(spark, dir)
       .select(col("doc_id"), col("media_type"),
         md5(col("doc_id").cast("string")).as("shuf"))
-      .repartitionByRange(col("media_type"), col("shuf"), col("doc_id"))
-      .sortWithinPartitions(col("media_type"), col("shuf"), col("doc_id"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true)
-    val modOffsets = shuffled.groupBy(col("rid"), col("media_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("mbase", coalesce(sum(col("cnt")).over(
-        Window.partitionBy(col("media_type")).orderBy(col("rid"))
-          .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("media_type"), col("mbase"))
-    val wModRun = Window.partitionBy(col("rid"), col("media_type"))
-      .orderBy(col("shuf"), col("doc_id"))
-    val keyed = shuffled.join(broadcast(modOffsets), Seq("rid", "media_type"))
-      .withColumn("r", (col("mbase") + row_number().over(wModRun)).cast("long"))
+    val keyed = PrefixSum(shuffled, Seq(col("shuf"), col("doc_id")), Some("media_type"), 0)
+      .runningCount("r")
       .withColumn("mix_key", col("r") * stride)
       .select(col("doc_id"), col("media_type"), col("r"), col("mix_key"))
     // distributed global sequence over (mix_key, media_type, doc_id)
-    val ordered = keyed
-      .repartitionByRange(col("mix_key"), col("media_type"), col("doc_id"))
-      .sortWithinPartitions(col("mix_key"), col("media_type"), col("doc_id"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true)
-    // deliberately unpartitioned: the frame is rid-grained (#partitions
-    // rows, can never grow with data) — one partition IS the design.
-    // A literal partition key would not survive the optimizer
-    // (EliminateWindowPartitions strips foldable keys), so the shape is
-    // enforced by PlanSpec's global bounded-input pin and the WindowExec
-    // warning is silenced per-logger in the Bench/Verify harness mains.
-    val offsets = ordered.groupBy(col("rid")).agg(count(lit(1)).as("cnt"))
-      .withColumn("base", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRun = Window.partitionBy(col("rid"))
-      .orderBy(col("mix_key"), col("media_type"), col("doc_id"))
-    ordered.join(broadcast(offsets), Seq("rid"))
-      .withColumn("seq", (col("base") + row_number().over(wRun)).cast("long"))
+    PrefixSum(keyed, Seq(col("mix_key"), col("media_type"), col("doc_id")), None, 0)
+      .runningCount("seq")
       .select(col("seq"), col("doc_id"), col("media_type"), col("r"), col("mix_key"))
       .orderBy(col("seq"))
   }
@@ -653,35 +616,20 @@ object Multimodal {
     * straddle bin boundaries, GPT-pretraining style — t12's rule).
     *
     * Scale: the manifest order is m6's already-distributed machinery;
-    * the cost prefix sum is t12's range-partition/per-range-total/
-    * broadcast-base shape over the seq key — no single-task window
-    * anywhere, any partition count yields the byte-identical packing.
+    * the cost prefix sum is a [[PrefixSum]] over the seq key — no
+    * single-task window anywhere, any partition count yields the
+    * byte-identical packing.
     * Payloads never move: the cost needs only the payload LENGTH, which
     * dies in the scan projection. */
   def m9PackInterleaved(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lens = mediaTable(spark, dir)
       .select(col("doc_id"), length(col("content")).cast("long").as("len"))
     val items = m6MixManifest(spark, dir)
       .join(lens, Seq("doc_id"))
       .withColumn("cost_toks", costToks)
-    val ranged = items
-      .repartitionByRange(col("seq"))
-      .sortWithinPartitions(col("seq"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true) // feeds the range totals AND the output pass
-    // rid-grained frame (#partitions rows): the sanctioned unpartitioned
-    // prefix-sum base step, same as m6/t12/p16
-    val offs = ranged.groupBy(col("rid")).agg(sum(col("cost_toks")).as("cnt"))
-      .withColumn("base", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRun = Window.partitionBy(col("rid")).orderBy(col("seq"))
-    ranged.join(broadcast(offs), Seq("rid"))
-      .withColumn("tape_off", col("base") + coalesce(
-        sum(col("cost_toks")).over(wRun.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
+    PrefixSum(items, Seq(col("seq")), None, 0)
+      .runningSums("cost_toks" -> "tape_end")
+      .withColumn("tape_off", col("tape_end") - col("cost_toks"))
       .select(col("seq"), col("doc_id"), col("media_type"), col("cost_toks"),
         col("tape_off"),
         expr(s"tape_off div $MediaBinToks").as("bin_first"),
@@ -827,37 +775,22 @@ object Multimodal {
     * same-source clump, same-source pair collisions and their e6 rate.
     *
     * Scale: the shuffle key is md5 arithmetic; the global batch sequence
-    * is m6's distributed two-level prefix sum (range partitions →
-    * rid-grained offsets; no single-task window ever sees row-grain
-    * input), and the audit is two grouped aggregations of the SAME
-    * checkpointed assignment — (batch, source) grain then batch grain,
+    * is a [[PrefixSum]] row count (no single-task window ever sees
+    * row-grain input), and the audit is two grouped aggregations of the
+    * SAME checkpointed assignment — (batch, source) grain then batch grain,
     * each map-side partial. Media types ride the manifest (the payload
     * dies in its scan, per the m1-m5 contract). The collision count is
     * exact integer arithmetic (Σ c·(c-1)/2), never a pair join. */
   def m10BatchNegatives(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.md5Long60
-    import org.apache.spark.sql.expressions.Window
     val pairs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"))
       .join(mediaTable(spark, dir).select(col("doc_id"), col("media_type")),
         Seq("doc_id"))
       .withColumn("shuf",
         md5Long60(concat(col("doc_id").cast("string"), lit(":m10"))))
-    val ordered = pairs
-      .repartitionByRange(col("shuf"), col("doc_id"))
-      .sortWithinPartitions(col("shuf"), col("doc_id"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true)
-    // rid-grained offsets: the only unpartitioned window reads #partition
-    // rows (m6's design; PlanSpec's global pin allowlists the rid grain)
-    val offsets = ordered.groupBy(col("rid")).agg(count(lit(1)).as("cnt"))
-      .withColumn("base", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRun = Window.partitionBy(col("rid")).orderBy(col("shuf"), col("doc_id"))
-    val batched = ordered.join(broadcast(offsets), Seq("rid"))
-      .withColumn("seq", (col("base") + row_number().over(wRun)).cast("long"))
+    val batched = PrefixSum(pairs, Seq(col("shuf"), col("doc_id")), None, 0)
+      .runningCount("seq")
       .withColumn("batch_id", expr(s"(seq - 1) div $BatchSize"))
     val bySrc = batched.groupBy(col("batch_id"), col("source"))
       .agg(count(lit(1)).as("cnt"),
@@ -1322,12 +1255,10 @@ object Multimodal {
     * nominal, the modality mix (a loader wants balanced shards), and
     * the first doc (the shard's index key); `~TOTAL` foots.
     *
-    * Scale: t12's distributed prefix-sum machinery verbatim —
-    * range-partition by the tape key, per-range totals (one row per
-    * range) to exclusive base offsets broadcast back, running sum
-    * within each sorted range; the manifest is a shard-grained
-    * aggregate of that. Partition-count invariance is spec-pinned (3
-    * vs 7 ranges, byte-identical). */
+    * Scale: the tape offset is a [[PrefixSum]] over the tape key (t12's
+    * shape); the manifest is a shard-grained aggregate of that.
+    * Partition-count invariance is spec-pinned (3 vs 7 ranges,
+    * byte-identical). */
   def m15ShardManifest(spark: SparkSession, dir: String): DataFrame =
     m15ShardManifestRanged(spark, dir, 0)
 
@@ -1335,29 +1266,15 @@ object Multimodal {
     * default) — the spec's partition-invariance hook. */
   def m15ShardManifestRanged(spark: SparkSession, dir: String,
                              ranges: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), md5(col("doc_id").cast("string")).as("key"),
         (col("n_chars") + length(repeat(md5(col("text")), 4)) / 2)
           .cast("long").as("n_bytes"),
         element_at(array(lit("image"), lit("audio"), lit("video")),
           (col("doc_id") % 3 + 1).cast("int")).as("media_type"))
-    val ordered =
-      (if (ranges > 0) base.repartitionByRange(ranges, col("key"), col("doc_id"))
-       else base.repartitionByRange(col("key"), col("doc_id")))
-        .sortWithinPartitions(col("key"), col("doc_id"))
-        .withColumn("rid", spark_partition_id())
-        .localCheckpoint(true)
-    val offsets = ordered.groupBy(col("rid")).agg(sum(col("n_bytes")).as("tot"))
-      .withColumn("base", coalesce(sum(col("tot")).over(
-        Window.orderBy(col("rid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRun = Window.partitionBy(col("rid")).orderBy(col("key"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val per = ordered.join(broadcast(offsets), Seq("rid"))
-      .withColumn("offset",
-        col("base") + coalesce(sum(col("n_bytes")).over(wRun), lit(0L)))
+    val per = PrefixSum(base, Seq(col("key"), col("doc_id")), None, ranges)
+      .runningSums("n_bytes" -> "end")
+      .withColumn("offset", col("end") - col("n_bytes"))
       .select(expr(s"offset div $ShardBytes").as("shard"), col("doc_id"),
         col("n_bytes"), col("media_type"), col("key"))
       .groupBy(col("shard"))

@@ -1461,29 +1461,15 @@ object Similarity {
     * indirection). Without this, gappy ids would dangle seed edges that
     * the scoring join silently drops, thinning effective seed degree
     * below [[NndSearchK]] and weakening the coverage contract
-    * [[s10NnDescentFrom]] documents. The rank itself is t12's
-    * DISTRIBUTED prefix sum (range partition → per-range counts →
-    * broadcast base offsets → in-range row_number) — never a single-task
-    * global window. */
+    * [[s10NnDescentFrom]] documents. The rank itself is the
+    * [[PrefixSum]] distributed row count — never a single-task global
+    * window. */
   def s10RandomSeed(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir).select(col("vec_id"))
     val nTot = e.agg(count(lit(1)).as("n_tot"))
-    // 0-based dense rank over vec_id, distributed (the t12 machinery);
-    // checkpointed so the offsets pass and the rank join see one
-    // consistent range partitioning
-    val ordered = e.repartitionByRange(col("vec_id"))
-      .sortWithinPartitions(col("vec_id"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true)
-    val offsets = ordered.groupBy(col("rid")).agg(count(lit(1)).as("cnt"))
-      .withColumn("base", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRk = Window.partitionBy(col("rid")).orderBy(col("vec_id"))
-    val ranks = ordered.join(broadcast(offsets), Seq("rid"))
-      .withColumn("rk", (col("base") + row_number().over(wRk) - 1).cast("long"))
-      .select(col("rk"), col("vec_id").as("neighbor_id"))
+    // 0-based dense rank over vec_id, distributed
+    val ranks = PrefixSum(e, Seq(col("vec_id")), None, 0).runningCount("rk1")
+      .select((col("rk1") - 1).as("rk"), col("vec_id").as("neighbor_id"))
     e.crossJoin(broadcast(nTot))
       .withColumn("j", explode(array((1 to NndSearchK).map(lit(_)): _*)))
       .withColumn("rk",

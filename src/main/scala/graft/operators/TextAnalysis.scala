@@ -648,43 +648,22 @@ object TextAnalysis {
     * The tape offset is an EXCLUSIVE PREFIX SUM over a global order —
     * the textbook case where the naive form (one `Window.orderBy` with no
     * partitions) collapses to a single task. This is the distributed
-    * form: range-partition by the order key, per-range token totals
-    * (tiny: one row per range) turned into range base offsets, broadcast
-    * back, running sum WITHIN each sorted range. The output is exact
-    * integer arithmetic independent of where the range bounds land, so
-    * any partition count produces byte-identical results (asserted in
-    * spec with 3 vs 7 ranges); per-range window state is corpus/ranges
-    * rows — ranges scale with the cluster. */
+    * form, [[PrefixSum]]: any partition count produces byte-identical
+    * results (asserted in spec with 3 vs 7 ranges); per-range window
+    * state is corpus/ranges rows — ranges scale with the cluster. */
   def t12SequencePack(spark: SparkSession, dir: String): DataFrame =
     t12SequencePackRanged(spark, dir, 0)
 
   /** [[t12SequencePack]] with an explicit range count (0 = session
     * default) — the spec's partition-invariance hook. */
   def t12SequencePackRanged(spark: SparkSession, dir: String, ranges: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), md5(col("doc_id").cast("string")).as("key"),
         size(wsTokens(col("text"))).cast("long").as("n_toks"))
       .filter(col("n_toks") > 0) // zero-token docs occupy no tape
-    val ordered =
-      (if (ranges > 0) base.repartitionByRange(ranges, col("key"), col("doc_id"))
-       else base.repartitionByRange(col("key"), col("doc_id")))
-        .sortWithinPartitions(col("key"), col("doc_id"))
-        .withColumn("rid", spark_partition_id())
-        .localCheckpoint(true)
-    // per-range totals -> exclusive base offsets; range-count rows, so the
-    // unpartitioned window is bounded by cluster parallelism, not data
-    // (PlanSpec's global pin asserts the input grain; the harness mains
-    // silence WindowExec's single-partition warning)
-    val offsets = ordered.groupBy(col("rid")).agg(sum(col("n_toks")).as("tot"))
-      .withColumn("base", coalesce(sum(col("tot")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRun = Window.partitionBy(col("rid")).orderBy(col("key"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ordered.join(broadcast(offsets), Seq("rid"))
-      .withColumn("tok_offset",
-        col("base") + coalesce(sum(col("n_toks")).over(wRun), lit(0L)))
+    PrefixSum(base, Seq(col("key"), col("doc_id")), None, ranges)
+      .runningSums("n_toks" -> "tok_end")
+      .withColumn("tok_offset", col("tok_end") - col("n_toks"))
       .select(col("doc_id"), col("n_toks"), col("tok_offset"),
         expr(s"tok_offset div $BinTokens").as("start_bin"),
         expr(s"(tok_offset + n_toks - 1) div $BinTokens").as("end_bin"),
@@ -864,37 +843,20 @@ object TextAnalysis {
     * no bigram carry null score/bucket and are NOT kept (nothing
     * measured — the conservative side of the gate, t16's null rule).
     *
-    * Scale: t16's own plans plus a per-source rank computed with the
-    * t12/m6 distributed machinery (range-partition by (source, score,
-    * doc_id), per-(range, source) counts → broadcast per-source base
-    * offsets → in-range windows) — a bare `partitionBy(source)` window
+    * Scale: t16's own plans plus a per-source [[PrefixSum]] rank over
+    * (score, doc_id) — a bare `partitionBy(source)` window
     * would buffer the largest source in ONE sort task, exactly the
     * pathology the global PlanSpec pin bans. The bucket/keep verdict is
     * a per-row expression on the rank. */
   def t19PerplexityPrune(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.load(spark, dir, "documents").select(col("doc_id"), col("source"))
     val scored = t16LmScore(spark, dir)
       .filter(col("n_bigrams") > 0)
       .join(docs, Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("lm_score_e6"))
-    val ranged = scored
-      .repartitionByRange(col("source"), col("lm_score_e6"), col("doc_id"))
-      .sortWithinPartitions(col("source"), col("lm_score_e6"), col("doc_id"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true) // feeds offsets, per-source totals AND ranks
-    // (rid, source)-grained frame: the sanctioned bounded prefix-sum base
-    val offs = ranged.groupBy(col("rid"), col("source"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("sbase", coalesce(sum(col("cnt")).over(
-        Window.partitionBy(col("source")).orderBy(col("rid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("rid"), col("source"), col("sbase"))
-    val nPer = ranged.groupBy(col("source")).agg(count(lit(1)).as("n_scored"))
-    val wRun = Window.partitionBy(col("rid"), col("source"))
-      .orderBy(col("lm_score_e6"), col("doc_id"))
-    val verdicts = ranged.join(broadcast(offs), Seq("rid", "source"))
-      .withColumn("rank_in_source", (col("sbase") + row_number().over(wRun)).cast("long"))
+    val ps = PrefixSum(scored, Seq(col("lm_score_e6"), col("doc_id")), Some("source"), 0)
+    val nPer = ps.ranged.groupBy(col("source")).agg(count(lit(1)).as("n_scored"))
+    val verdicts = ps.runningCount("rank_in_source")
       .join(broadcast(nPer), Seq("source"))
       .withColumn("bucket", expr("((n_scored - rank_in_source) * 3) div n_scored"))
       .select(col("doc_id"), col("lm_score_e6"), col("rank_in_source"),

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.PrefixSum
 
 /** Registry of the pipeline-core driver queries (SURVEY.md §2, p1-p7). */
 object PipelineQueries {
@@ -184,10 +185,9 @@ object PipelineQueries {
     *
     * Shape: the input is a FILE LISTING (one row per z-cell with rows +
     * estimated bytes) — metadata-sized, never the data; the planner is
-    * one distributed exclusive prefix-sum over it in z order (t12's
-    * range-partition machinery: per-range totals → broadcast base
-    * offsets → in-range running sum, byte-identical at any partition
-    * count) and one integer division: `bin = cum_before div target`,
+    * one distributed exclusive prefix-sum over it in z order
+    * ([[PrefixSum]], byte-identical at any partition count) and one
+    * integer division: `bin = cum_before div target`,
     * `target = ceil(total/CompactBins)` in exact integer arithmetic.
     * Greedy-by-offset guarantees at most [[CompactBins]] bins, each
     * within one file of the target, and monotone-in-z assignment (bins
@@ -216,30 +216,13 @@ object PipelineQueries {
     * width must produce byte-identical plans (t12's guarantee, asserted
     * the same way). */
   def p16CompactionPlanRanged(spark: SparkSession, dir: String, ranges: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val files = p16FileListing(spark, dir)
       .localCheckpoint(true) // metadata-sized; consumed by total + ranges
     val tot = files.agg(sum(col("bytes")).as("total"))
-    val ordered =
-      (if (ranges > 0) files.repartitionByRange(ranges, col("zcell"))
-       else files.repartitionByRange(col("zcell")))
-      .sortWithinPartitions(col("zcell"))
-      .withColumn("rid", spark_partition_id())
-      .localCheckpoint(true)
-    // deliberately unpartitioned: rid-grained frame (#ranges rows) — one
-    // partition IS the design (PlanSpec's global pin asserts the grain;
-    // the harness mains silence WindowExec's single-partition warning)
-    val offsets = ordered.groupBy(col("rid")).agg(sum(col("bytes")).as("rtot"))
-      .withColumn("base", coalesce(sum(col("rtot")).over(
-        Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("rid"), col("base"))
-    val wRun = Window.partitionBy(col("rid")).orderBy(col("zcell"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ordered.join(broadcast(offsets), Seq("rid"))
+    PrefixSum(files, Seq(col("zcell")), None, ranges)
+      .runningSums("bytes" -> "cum")
       .crossJoin(broadcast(tot))
-      .withColumn("cum_before",
-        col("base") + coalesce(sum(col("bytes")).over(wRun), lit(0L)))
+      .withColumn("cum_before", col("cum") - col("bytes"))
       .withColumn("target", expr(s"(total + ${CompactBins - 1}) div $CompactBins"))
       .withColumn("bin", expr("cum_before div target"))
       .groupBy(col("bin"))
@@ -821,13 +804,11 @@ object PipelineQueries {
     * reduces the audit to two rank lookups, each computed as a
     * union-sort: endpoint events and per-file query points merge into
     * one value-ordered stream (tie column encodes ≤ vs < semantics) and
-    * a distributed two-level prefix sum (the t12/m6 machinery) reads
-    * the running event count at each query row. O(n log n) in files,
-    * linear shuffles — the shape that survives a million-file manifest.
+    * a [[PrefixSum]] reads the running event count at each query row.
+    * O(n log n) in files, linear shuffles — the shape that survives a million-file manifest.
     * The oracle states the textbook pairwise BETWEEN form, so the
     * hash-match proves the rank identity. */
   def p24OverlapDepth(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val files = zkeyedOrders(spark, dir)
       .withColumn("zcell",
         shiftrightunsigned(col("zkey"), 2 * ZGridBits - ZFileBits))
@@ -842,20 +823,8 @@ object PipelineQueries {
           lit(null).cast("string").as("qz"))
         .unionByName(queries.select(col("v"), col("tie"), lit(0L).as("e"),
           col("qz")))
-      val ordered = u.repartitionByRange(col("v"), col("tie"), col("qz"))
-        .sortWithinPartitions(col("v"), col("tie"), col("qz"))
-        .withColumn("rid", spark_partition_id())
-        .localCheckpoint(true)
-      val offsets = ordered.groupBy(col("rid")).agg(sum(col("e")).as("se"))
-        .withColumn("base", coalesce(sum(col("se")).over(
-          Window.orderBy(col("rid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("rid"), col("base"))
-      val wRun = Window.partitionBy(col("rid"))
-        .orderBy(col("v"), col("tie"), col("qz"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      ordered.join(broadcast(offsets), Seq("rid"))
-        .withColumn("cnt", col("base") + sum(col("e")).over(wRun))
+      PrefixSum(u, Seq(col("v"), col("tie"), col("qz")), None, 0)
+        .runningSums("e" -> "cnt")
         .filter(col("qz").isNotNull)
         .select(col("qz"), col("cnt"))
     }

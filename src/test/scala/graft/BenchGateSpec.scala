@@ -178,10 +178,13 @@ class BenchGateSpec extends AnyFunSuite {
 
   test("cores dial: unset gives the default 4; a non-integer or " +
     "non-positive SPARK_GRAFT_CPUS is rejected with the variable's name") {
-    assert(GraftSession.coresFrom(None) == 4)
-    assert(GraftSession.coresFrom(Some("8")) == 8)
-    Seq("0", "-1", "", "x", "4x").foreach { v =>
-      val e = intercept[IllegalArgumentException](GraftSession.coresFrom(Some(v)))
+    assert(GraftSession.coresFrom(None, 4) == 4)
+    assert(GraftSession.coresFrom(Some("8"), 4) == 8)
+    // PipelineMain and StreamingMain default to 8 and validate the same way
+    assert(GraftSession.coresFrom(None, 8) == 8)
+    assert(GraftSession.coresFrom(Some("2"), 8) == 2)
+    for (default <- Seq(4, 8); v <- Seq("0", "-1", "", "x", "4x")) {
+      val e = intercept[IllegalArgumentException](GraftSession.coresFrom(Some(v), default))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"),
         s"'$v' rejected without naming the variable: ${e.getMessage}")
     }

@@ -647,6 +647,8 @@ class PlanSpec extends AnyFunSuite {
     // EliminateWindowPartitions strips foldable keys, which is why the
     // pin is on the input grain, not the partition spec.)
     // rid/media_type/fail_idx: range-slot keys (parallelism-bounded);
+    // `rid` is the range id `operators.PrefixSum` tags its checkpointed
+    // range frame with, and that helper is its only producer;
     // r_name/n_name: DIM-table keys (cardinality = the broadcast dim's
     // row count, data-independent — q19's ratio-to-report grain). A
     // row-grain key (doc_id, event_id, o_orderkey) is NOT here and a
