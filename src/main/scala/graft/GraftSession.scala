@@ -32,9 +32,15 @@ object GraftSession {
     * integer fails naming the variable (`0` or `x` would otherwise fail
     * deep inside Spark). */
   private[graft] def coresFrom(env: Option[String], default: Int): Int =
+    dial("SPARK_GRAFT_CPUS", env, default, Int.MaxValue).toInt
+
+  /** The env dial parser: `env` is variable `name`'s value; unset gives
+    * `default`, anything but a positive integer no larger than `max`
+    * fails naming the variable. */
+  private[graft] def dial(name: String, env: Option[String], default: Long, max: Long): Long =
     env.fold(default) { v =>
-      val n = v.toIntOption.filter(_ > 0)
-      require(n.isDefined, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+      val n = v.toLongOption.filter(n => n > 0 && n <= max)
+      require(n.isDefined, s"$name must be a positive integer, got '$v'")
       n.get
     }
 

@@ -41,10 +41,10 @@ object StreamingMain {
       .writeStream.format("memory").queryName("event_windows")
       .outputMode("append").trigger(Trigger.ProcessingTime("2 seconds")).start()
 
-    val curated = StreamPipelines.upsertSink(spark,
-      events.selectExpr("user_id", "event_id", "event_type", "value",
-        "unix_micros(ts) AS ts_us"),
-      stateDir, Seq("user_id"), "ts_us", "event_id")
+    val curated = StreamPipelines.batchSink(
+        events.selectExpr("user_id", "event_id", "event_type", "value",
+          "unix_micros(ts) AS ts_us"), stateDir)(
+        StreamPipelines.upsertBatch(spark, stateDir, Seq("user_id"), "ts_us", "event_id"))
       .trigger(Trigger.ProcessingTime("2 seconds")).start()
 
     Thread.sleep(runSeconds * 1000L)

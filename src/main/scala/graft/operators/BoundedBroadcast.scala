@@ -45,12 +45,7 @@ object BoundedBroadcast {
   /** Unset gives [[DefaultMaxRows]]; anything but a positive integer fails
     * naming the variable (`0` or `-1` would silently drop every hint). */
   private[graft] def maxRowsFrom(env: Option[String]): Long =
-    env.fold(DefaultMaxRows) { v =>
-      val n = v.toLongOption.filter(_ > 0)
-      require(n.isDefined,
-        s"SPARK_GRAFT_BROADCAST_MAX_ROWS must be a positive integer, got '$v'")
-      n.get
-    }
+    graft.GraftSession.dial("SPARK_GRAFT_BROADCAST_MAX_ROWS", env, DefaultMaxRows, Long.MaxValue)
 
   /** `broadcast(df)` iff `measuredRows` (a count the caller measured of
     * df or a superset of it) is within [[maxRows]]; otherwise `df`

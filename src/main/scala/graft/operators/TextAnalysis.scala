@@ -1292,23 +1292,23 @@ object TextAnalysis {
     * → the same `replace` rewrite feeding the next round's group. */
   private def bpeOracleRound(r: Int): String = {
     val prev = s"v${r - 1}"
-    s"""s$r AS (
+    s"""s$r AS MATERIALIZED (
        | SELECT word, freq, sym,
        |  list_filter(string_split(sym, '|'), x -> x <> '') AS syms
        | FROM $prev),
-       |p$r AS (
+       |p$r AS MATERIALIZED (
        | SELECT word, freq, unnest(range(1, len(syms))) AS i, syms
        | FROM s$r WHERE len(syms) >= 2),
-       |q$r AS (
+       |q$r AS MATERIALIZED (
        | SELECT word, freq, syms[CAST(i AS INT)] AS lhs,
        |  syms[CAST(i AS INT) + 1] AS rhs
        | FROM p$r),
-       |b$r AS (
+       |b$r AS MATERIALIZED (
        | SELECT lhs, rhs, CAST(sum(freq) AS BIGINT) AS n_weighted,
        |  CAST(count(DISTINCT word) AS BIGINT) AS n_types
        | FROM q$r GROUP BY 1, 2
        | ORDER BY n_weighted DESC, lhs, rhs LIMIT 1),
-       |v$r AS (
+       |v$r AS MATERIALIZED (
        | SELECT v.word, v.freq,
        |  replace(v.sym, '|' || b.lhs || '||' || b.rhs || '|',
        |          '|' || b.lhs || b.rhs || '|') AS sym
@@ -1327,15 +1327,19 @@ object TextAnalysis {
 
   /** The shared training-CTE chain (word freqs → v0 symbol strings → K
     * argmax/rewrite round groups b1/v1 … bK/vK) — t27's oracle reads the
-    * chosen merges off b1..bK; t29's replays them onto the full word set. */
+    * chosen merges off b1..bK; t29's replays them onto the full word set.
+    * Every CTE here and in [[bpeApplyCtes]] is MATERIALIZED: each round
+    * reads the previous one twice (its pair counts and its rewrite), so an
+    * inlined chain re-derives round r-1 in both branches and its cost
+    * doubles per round. */
   private lazy val bpeTrainCtes: String = {
     val rounds = (1 to BpeTrainRounds).map(bpeOracleRound).mkString(",\n")
-    s"""w AS (
+    s"""w AS MATERIALIZED (
        | SELECT lower(unnest($tokSql)) AS word FROM documents),
-       |vf AS (
+       |vf AS MATERIALIZED (
        | SELECT word, CAST(count(*) AS BIGINT) AS freq FROM w
        | WHERE regexp_matches(word, '^[a-z0-9]+$$') GROUP BY 1),
-       |v0 AS (
+       |v0 AS MATERIALIZED (
        | SELECT word, freq,
        |  '|' || array_to_string(list_transform(range(1, length(word) + 1),
        |    i -> substr(word, CAST(i AS INT), 1)), '||') || '|' AS sym
@@ -1343,25 +1347,29 @@ object TextAnalysis {
        |$rounds""".stripMargin
   }
 
-  /** t29's oracle: the training chain's own b1..bK merges replayed in
-    * round order onto EVERY word type (u-chain — no len≥2 filter, same
-    * `replace` semantics), then the per-doc card off the doc×word counts. */
-  private lazy val t29OracleSql: String = {
-    val applies = (1 to BpeTrainRounds).map { r =>
-      s"""u$r AS (
+  /** The apply chain u1..uK over a caller-defined u0: the training
+    * chain's b1..bK merges replayed in round order (t29, t35). */
+  private lazy val bpeApplyCtes: String =
+    (1 to BpeTrainRounds).map { r =>
+      s"""u$r AS MATERIALIZED (
          | SELECT u.word,
          |  replace(u.sym, '|' || b.lhs || '||' || b.rhs || '|',
          |          '|' || b.lhs || b.rhs || '|') AS sym
          | FROM u${r - 1} u, b$r b)"""
     }.mkString(",\n")
+
+  /** t29's oracle: the training chain's own b1..bK merges replayed in
+    * round order onto EVERY word type (u-chain — no len≥2 filter, same
+    * `replace` semantics), then the per-doc card off the doc×word counts. */
+  private lazy val t29OracleSql: String =
     s"""WITH $bpeTrainCtes,
-       |u0 AS (
+       |u0 AS MATERIALIZED (
        | SELECT word,
        |  '|' || array_to_string(list_transform(range(1, length(word) + 1),
        |    i -> substr(word, CAST(i AS INT), 1)), '||') || '|' AS sym
        | FROM (SELECT DISTINCT word FROM w
        |       WHERE regexp_matches(word, '^[a-z0-9]+$$'))),
-       |$applies,
+       |$bpeApplyCtes,
        |enc AS (
        | SELECT word,
        |  CAST(len(list_filter(string_split(sym, '|'), x -> x <> ''))
@@ -1379,7 +1387,6 @@ object TextAnalysis {
        |   // sum(n_occ * n_tok) AS BIGINT) AS chars_per_token_e6
        |FROM dw JOIN enc USING (word)
        |GROUP BY 1 ORDER BY doc_id""".stripMargin
-  }
 
   /** `t23_zipf_curve`: corpus health telemetry — the token
     * rank-frequency (Zipf) curve, summarized per power-of-two frequency
@@ -2072,23 +2079,16 @@ object TextAnalysis {
     rows.unionByName(tot).orderBy(col("verdict"))
   }
 
-  private lazy val t35OracleSql: String = {
-    val applies = (1 to BpeTrainRounds).map { r =>
-      s"""u$r AS (
-         | SELECT u.word,
-         |  replace(u.sym, '|' || b.lhs || '||' || b.rhs || '|',
-         |          '|' || b.lhs || b.rhs || '|') AS sym
-         | FROM u${r - 1} u, b$r b)"""
-    }.mkString(",\n")
+  private lazy val t35OracleSql: String =
     s"""WITH $bpeTrainCtes,
-       |u0 AS (
+       |u0 AS MATERIALIZED (
        | SELECT word,
        |  '|' || array_to_string(list_transform(range(1, length(word) + 1),
        |    i -> substr(word, CAST(i AS INT), 1)), '||') || '|' AS sym
        | FROM (SELECT DISTINCT lower(w_raw) AS word FROM (
        |        SELECT unnest($tokSql) AS w_raw FROM documents)
        |       WHERE regexp_matches(lower(w_raw), '^[a-z0-9]+$$'))),
-       |$applies,
+       |$bpeApplyCtes,
        |enc AS (
        | SELECT word,
        |  CAST(len(list_filter(string_split(sym, '|'), x -> x <> ''))
@@ -2124,7 +2124,6 @@ object TextAnalysis {
        |  CAST(sum(n_tokens) AS BIGINT), CAST(1000000 AS BIGINT)
        | FROM per)
        |ORDER BY verdict""".stripMargin
-  }
 
   private lazy val t34OracleSql: String =
     s"""WITH t AS (

@@ -1,36 +1,53 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.io.File
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+import scala.util.{Try, Using}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import graft.pipeline.Merge
 
 /** Structured Streaming pipelines (SURVEY.md §2 streaming block).
   *
-  * The continuous analog of the reference's sensor→ingest→staging chain
-  * (/root/reference/dags/pipeline_orchestration_dag.py:79-143): instead of
+  * The continuous analog of the reference's sensor→ingest→staging→curation
+  * chain (`dags/pipeline_orchestration_dag.py:79-182`): instead of
   * polling for a file then batch-loading it, a file-source stream picks up
   * arrivals incrementally; windowed aggregation with a watermark replaces
-  * the batch DQ count; `flatMapGroupsWithState` sessionization is the
-  * streaming twin of the batch `q12_sessionize` window; and a foreachBatch
-  * upsert sink gives the curated zone incremental SCD-ish merge semantics.
+  * the batch DQ count; the gap sessionizer ([[sessionize]], [[funnelize]])
+  * is the streaming twin of the batch `q12_sessionize` window; and the
+  * foreachBatch sink ([[batchSink]]) runs idempotent micro-batch bodies —
+  * corpus dedup, quality gate, index filing, and the versioned upsert and
+  * SCD2 states of the curated zone.
+  *
+  * One mechanism per concern: one foreachBatch sink, one versioned-state
+  * protocol ([[versionedBatch]]: merge base strictly before the batch's own
+  * `v<N>` output, GC only after the write), one lister for the numbered
+  * state dirs and one flatMapGroupsWithState state machine.
   *
   * Scale: state is per-key and watermark-bounded (dropped once sessions
   * close), the windowed agg is partial-aggregated before shuffle like any
-  * batch agg, and the upsert sink reuses the batch [[Merge.upsert]] path.
+  * batch agg, and the upsert state reuses the batch [[Merge.upsert]] path.
   */
 object StreamPipelines {
 
+  /** What the gap sessionizer reads of an event. */
+  trait GapEvent { def user_id: Long; def event_id: Long; def ts: java.sql.Timestamp }
+
   final case class Ev(user_id: Long, event_id: Long, ts: java.sql.Timestamp, value: Double)
+    extends GapEvent
 
   final case class SessionOut(
     user_id: Long, session_id: Long, n_events: Long,
     start_us: Long, duration_us: Long, sum_value: Double)
 
-  /** Sessionization state: buffered (ts_us, event_id, value) + count of
-    * sessions already emitted (public: Spark's state Encoder instantiates
-    * it in generated code). */
-  final case class SessState(buffered: List[(Long, Long, Double)], emitted: Long)
+  /** Gap-sessionizer state: the buffered (ts_us, event_id, payload) of a
+    * user's still-open sessions + the count of sessions already emitted
+    * (public: Spark's state Encoder instantiates it in generated code). */
+  final case class GapState[V](buffered: List[(Long, Long, V)], emitted: Long)
 
   /** Declared schemas of the three landing zones [[fileStream]] reads:
     * the event drop, the daily-crawl vector drop and the continuous-crawl
@@ -118,59 +135,14 @@ object StreamPipelines {
     * Semantics match the batch `q12_sessionize` (30 min gap) exactly once
     * the watermark passes everything. */
   def sessionize(events: Dataset[Ev], gapMinutes: Int = 30)
-                (implicit spark: SparkSession): Dataset[SessionOut] = {
-    import spark.implicits._
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-
-    def toSessions(userId: Long, evs: List[(Long, Long, Double)], baseSessionId: Long): List[SessionOut] = {
-      // evs sorted by (ts, event_id); split on gaps
-      val groups = evs.foldLeft(List.empty[List[(Long, Long, Double)]]) {
-        case (acc, e) => acc match {
-          case cur :: rest if e._1 - cur.head._1 <= gapUs => (e :: cur) :: rest
-          case _ => List(e) :: acc
-        }
-      }.map(_.reverse).reverse
-      groups.zipWithIndex.map { case (g, i) =>
-        SessionOut(userId, baseSessionId + i + 1, g.length,
-          g.head._1, g.last._1 - g.head._1,
-          math.round(g.map(_._3).sum * 100.0) / 100.0)
-      }
+                (implicit spark: SparkSession): Dataset[SessionOut] =
+    gapSessions(events, gapMinutes, (e: Ev) => e.value) { (userId, sessionId, g) =>
+      SessionOut(userId, sessionId, g.length, g.head._1, g.last._1 - g.head._1,
+        math.round(g.map(_._3).sum * 100.0) / 100.0)
     }
 
-    events
-      .withWatermark("ts", "0 seconds")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[Ev], state: GroupState[SessState]) =>
-          val old = state.getOption.getOrElse(SessState(Nil, 0L))
-          val incoming = it.map(e => (e.ts.getTime * 1000L, e.event_id, e.value)).toList
-          val all = (old.buffered ++ incoming).sortBy(t => (t._1, t._2))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          if (all.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // sessions whose last event is older than watermark - gap are closed
-            val sessions = toSessions(userId, all, old.emitted)
-            val (closed, open) = sessions.partition(s => s.start_us + s.duration_us + gapUs < wmUs)
-            val keep = all.filter(e => open.exists(s => e._1 >= s.start_us))
-            if (keep.isEmpty) state.remove()
-            else {
-              state.update(SessState(keep, old.emitted + closed.length))
-              state.setTimeoutTimestamp((all.map(_._1).max / 1000L) + gapMinutes * 60L * 1000L + 1L)
-            }
-            closed.iterator
-          }
-      }
-  }
-
   final case class FunnelEv(user_id: Long, event_id: Long,
-    ts: java.sql.Timestamp, event_type: String)
-
-  /** Funnel state: buffered (ts_us, event_id, event_type) of still-open
-    * sessions + sessions already emitted (the [[SessState]] layout with
-    * the funnel's type column instead of value). */
-  final case class FunnelState(buffered: List[(Long, Long, String)], emitted: Long)
+    ts: java.sql.Timestamp, event_type: String) extends GapEvent
 
   /** reached* follow q20's ORDERED semantics; has* are unordered type
     * presence — the pair is what lets a consumer (and the spec) see the
@@ -195,83 +167,66 @@ object StreamPipelines {
     * state holds only each user's open tail, same as the sessionizer. */
   def funnelize(events: Dataset[FunnelEv], gapMinutes: Int = 30)
                (implicit spark: SparkSession): Dataset[FunnelOut] = {
+    val steps = graft.operators.Behavior.FunnelSteps
+    gapSessions(events, gapMinutes, (e: FunnelEv) => e.event_type) { (userId, sessionId, g) =>
+      val t1 = g.collect { case (t, _, ty) if ty == steps(0) => t }
+        .minOption
+      val t2 = t1.flatMap(a => g.collect {
+        case (t, _, ty) if ty == steps(1) && t >= a => t }.minOption)
+      val t3 = t2.flatMap(a => g.collect {
+        case (t, _, ty) if ty == steps(2) && t >= a => t }.minOption)
+      val types = g.map(_._3).toSet
+      FunnelOut(userId, sessionId, g.length,
+        if (t1.isDefined) 1L else 0L, if (t2.isDefined) 1L else 0L,
+        if (t3.isDefined) 1L else 0L,
+        if (types(steps(0))) 1L else 0L, if (types(steps(1))) 1L else 0L,
+        if (types(steps(2))) 1L else 0L)
+    }
+  }
+
+  /** The one gap-session state machine behind [[sessionize]] and
+    * [[funnelize]] (flatMapGroupsWithState, event-time timeout): per user
+    * it buffers (ts_us, event_id, `payload`) in a [[GapState]], sorts by
+    * (ts_us, event_id), splits where consecutive events are more than
+    * `gapMinutes` apart, and emits `summary(user, session_id, events)` for
+    * each session the watermark has closed (last event + gap < watermark),
+    * numbering sessions on from the count already emitted. Only the open
+    * tail stays in state. Times are FULL microseconds (`getTime` alone is
+    * ms-truncated): the corpus carries sub-ms event times, and the batch
+    * q12/q20/st5 oracles sessionize and order on epoch_us — the grain must
+    * match or a sub-ms gap, or a same-ms tie, resolves differently
+    * stream-vs-batch. */
+  private def gapSessions[E <: GapEvent, V: TypeTag, O <: Product : TypeTag](
+      events: Dataset[E], gapMinutes: Int, payload: E => V)(
+      summary: (Long, Long, List[(Long, Long, V)]) => O)(
+      implicit spark: SparkSession): Dataset[O] = {
     import spark.implicits._
     val gapUs = gapMinutes.toLong * 60L * 1000000L
-    val steps = graft.operators.Behavior.FunnelSteps
-
-    def verdict(userId: Long, evs: List[(Long, Long, String)],
-                baseSessionId: Long): List[FunnelOut] = {
-      // evs sorted by (ts, event_id); split on gaps like toSessions
-      val groups = evs.foldLeft(List.empty[List[(Long, Long, String)]]) {
-        case (acc, e) => acc match {
-          case cur :: rest if e._1 - cur.head._1 <= gapUs => (e :: cur) :: rest
-          case _ => List(e) :: acc
-        }
-      }.map(_.reverse).reverse
-      groups.zipWithIndex.map { case (g, i) =>
-        val t1 = g.collect { case (t, _, ty) if ty == steps(0) => t }
-          .minOption
-        val t2 = t1.flatMap(a => g.collect {
-          case (t, _, ty) if ty == steps(1) && t >= a => t }.minOption)
-        val t3 = t2.flatMap(a => g.collect {
-          case (t, _, ty) if ty == steps(2) && t >= a => t }.minOption)
-        val types = g.map(_._3).toSet
-        FunnelOut(userId, baseSessionId + i + 1, g.length,
-          if (t1.isDefined) 1L else 0L, if (t2.isDefined) 1L else 0L,
-          if (t3.isDefined) 1L else 0L,
-          if (types(steps(0))) 1L else 0L, if (types(steps(1))) 1L else 0L,
-          if (types(steps(2))) 1L else 0L)
-      }
-    }
-
     events
       .withWatermark("ts", "0 seconds")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
-          val old = state.getOption.getOrElse(FunnelState(Nil, 0L))
-          // FULL microseconds (getTime alone is ms-truncated): the corpus
-          // carries sub-ms event times, and the batch q20/st5 oracle
-          // sessionizes and orders on epoch_us — the grain must match or
-          // same-ms ties order differently stream-vs-batch
+        (userId: Long, it: Iterator[E], state: GroupState[GapState[V]]) =>
+          val old = state.getOption.getOrElse(GapState[V](Nil, 0L))
           val incoming = it.map(e =>
-            (Math.floorDiv(e.ts.getTime, 1000L) * 1000000L +
-              e.ts.getNanos / 1000L, e.event_id, e.event_type)).toList
+            (Math.floorDiv(e.ts.getTime, 1000L) * 1000000L + e.ts.getNanos / 1000L,
+              e.event_id, payload(e))).toList
           val all = (old.buffered ++ incoming).sortBy(t => (t._1, t._2))
+          val sessions = all.foldLeft(List.empty[List[(Long, Long, V)]]) {
+            case (cur :: rest, e) if e._1 - cur.head._1 <= gapUs => (e :: cur) :: rest
+            case (acc, e) => List(e) :: acc
+          }.map(_.reverse).reverse
+          // sessions are time-ordered, so the closed ones are a prefix
           val wmUs = state.getCurrentWatermarkMs() * 1000L
-          if (all.isEmpty) {
-            state.remove()
-            Iterator.empty
-          } else {
-            // a session is closed once the watermark passes last event + gap
-            val sessions = verdict(userId, all, old.emitted)
-            // session spans for the open/closed partition (the gap split
-            // is deterministic, so spans align index-for-index with
-            // `sessions`)
-            val spans = {
-              val groups = all.foldLeft(List.empty[List[(Long, Long, String)]]) {
-                case (acc, e) => acc match {
-                  case cur :: rest if e._1 - cur.head._1 <= gapUs => (e :: cur) :: rest
-                  case _ => List(e) :: acc
-                }
-              }.map(_.reverse).reverse
-              groups.map(g => (g.head._1, g.last._1))
-            }
-            val closedIdx = spans.zipWithIndex.collect {
-              case ((_, last), i) if last + gapUs < wmUs => i }.toSet
-            val closed = sessions.zipWithIndex.collect {
-              case (s, i) if closedIdx(i) => s }
-            val openStarts = spans.zipWithIndex.collect {
-              case ((start, _), i) if !closedIdx(i) => start }
-            val keep = all.filter(e => openStarts.exists(e._1 >= _))
-            if (keep.isEmpty) state.remove()
-            else {
-              state.update(FunnelState(keep, old.emitted + closed.length))
-              state.setTimeoutTimestamp(
-                (all.map(_._1).max / 1000L) + gapMinutes * 60L * 1000L + 1L)
-            }
-            closed.iterator
+          val (closed, open) = sessions.span(_.last._1 + gapUs < wmUs)
+          val keep = open.flatten
+          if (keep.isEmpty) state.remove()
+          else {
+            state.update(GapState(keep, old.emitted + closed.length))
+            state.setTimeoutTimestamp(keep.last._1 / 1000L + gapMinutes * 60L * 1000L + 1L)
           }
+          closed.iterator.zipWithIndex.map { case (g, i) =>
+            summary(userId, old.emitted + i + 1, g) }
       }
   }
 
@@ -347,10 +302,29 @@ object StreamPipelines {
     events.withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
 
+  /** The one foreachBatch sink: creates `stateDir` and runs `body` on
+    * every micro-batch (append mode). `body` is one of the public `*Batch`
+    * functions below — [[indexDeltaBatch]], [[corpusDedupBatch]],
+    * [[qualityGateBatch]], [[upsertBatch]], [[scd2Batch]] — each public so
+    * its replay semantics are testable outside a live stream.
+    * foreachBatch is AT-LEAST-ONCE (a batch whose write completed but whose
+    * checkpoint commit did not is re-run on recovery); every body is
+    * IDEMPOTENT per (batch, batchId), which makes the sink
+    * effectively-once: its output dirs are deterministic in the batchId
+    * and overwritten whole, and its merge base never includes its own
+    * previous attempt. */
+  def batchSink(stream: DataFrame, stateDir: String)(body: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] = {
+    new File(stateDir).mkdirs()
+    stream.writeStream.outputMode(OutputMode.Append()).foreachBatch {
+      (batch: Dataset[Row], batchId: Long) => body(batch.toDF(), batchId)
+    }
+  }
+
   /** Streaming index maintenance — s11's batch delta run as a continuous
     * stage: every micro-batch of arriving vectors is assigned to the
     * FIXED broadcast model's cells (the model PREDATES the stream, s11's
-    * convention) and appended to the index state dir. Per-batch cost is
+    * convention) and filed as `b<batchId>`. Per-batch cost is
     * batch × model — the d8/s11 "today's work is proportional to today's
     * batch" invariant in streaming form — and because per-row argmax
     * under a fixed model is batch-decomposition-invariant, the
@@ -359,22 +333,6 @@ object StreamPipelines {
     * file drops were micro-batched. Rebuild pressure is s12's dial; this
     * stage only files arrivals, exactly like a production vector store's
     * ingest path. */
-  def indexDeltaSink(spark: SparkSession, stream: DataFrame, stateDir: String,
-                     cents: Seq[(Long, Array[Long])])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    new java.io.File(stateDir).mkdirs()
-    stream.writeStream.outputMode(OutputMode.Append()).foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        indexDeltaBatch(spark, stateDir, cents)(batch.toDF(), batchId)
-    }
-  }
-
-  /** One micro-batch of [[indexDeltaSink]] — public so replay semantics
-    * are testable outside a live stream (the [[upsertBatch]] pattern).
-    * foreachBatch is at-least-once; this body is idempotent per
-    * (batch, batchId): the output dir is deterministic in the batchId and
-    * overwritten whole, so a replayed batch replaces its own previous
-    * attempt instead of double-filing its vectors. */
   def indexDeltaBatch(spark: SparkSession, stateDir: String,
                       cents: Seq[(Long, Array[Long])])
                      (batch: DataFrame, batchId: Long): Unit =
@@ -389,8 +347,9 @@ object StreamPipelines {
     * and only novel content joins the corpus — d8's batch-vs-corpus
     * asymmetry as a stream). Each micro-batch fingerprints its documents
     * (d1's md5-of-normalized-text), keeps one doc per in-batch hash (min
-    * doc_id, d1's keeper rule), anti-joins against the accumulated
-    * fingerprint state, and appends only the survivors.
+    * doc_id, d1's keeper rule), anti-joins against the fingerprints of
+    * the `b<N>` dirs with N < batchId (never its own previous attempt),
+    * and files only the survivors as `b<batchId>`.
     *
     * Scale: state rows are fingerprint-sized (16 B hash + id), never
     * documents; the per-batch cost is one batch-side window plus one
@@ -399,30 +358,10 @@ object StreamPipelines {
     * filter on the state side prunes most probes before the shuffle.
     * Text itself dies in the micro-batch scan: only (norm_hash, doc_id)
     * is ever filed. */
-  def corpusDedupSink(spark: SparkSession, stream: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    new java.io.File(stateDir).mkdirs()
-    stream.writeStream.outputMode(OutputMode.Append()).foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        corpusDedupBatch(spark, stateDir)(batch.toDF(), batchId)
-    }
-  }
-
-  /** One micro-batch of [[corpusDedupSink]] — public so replay semantics
-    * are testable outside a live stream. foreachBatch is at-least-once;
-    * this body is idempotent per (batch, batchId): the merge base is
-    * ONLY batch dirs with a strictly smaller id (a replay never trusts
-    * its own previous attempt's dir, complete or torn — the
-    * [[upsertBatch]] rule), and the output dir is deterministic in the
-    * batchId and overwritten whole. */
   def corpusDedupBatch(spark: SparkSession, stateDir: String)
                       (batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val fs = new java.io.File(stateDir)
-    fs.mkdirs()
-    val prior = fs.listFiles()
-      .filter(f => f.getName.startsWith("b") && f.getName.drop(1).toLong < batchId)
-      .map(_.getPath)
+    val prior = numberedDirs(stateDir, "b").filter(_ < batchId).map(b => s"$stateDir/b$b")
     val w = Window.partitionBy(col("norm_hash"))
     val batchKeep = batch
       .select(col("doc_id"), md5(graft.functions.TextFunctions.normText(col("text"))).as("norm_hash"))
@@ -432,7 +371,7 @@ object StreamPipelines {
     val novel =
       if (prior.isEmpty) batchKeep
       else batchKeep.join(
-        spark.read.parquet(prior.toIndexedSeq: _*).select(col("norm_hash")),
+        spark.read.parquet(prior: _*).select(col("norm_hash")),
         Seq("norm_hash"), "left_anti")
     novel.write.mode("overwrite").parquet(s"$stateDir/b$batchId")
   }
@@ -440,7 +379,8 @@ object StreamPipelines {
   /** Streaming quality gate — t24's hashed-linear classifier run as a
     * continuous ingest filter (the crawl-pipeline shape: score every
     * arriving document with the SAME model the batch operator applies,
-    * admit keeps, and file a per-batch yield ledger). Reuses
+    * admit keeps as `keep_b<batchId>`, and file a per-batch yield ledger
+    * as `ledger_b<batchId>`). Reuses
     * [[graft.operators.TextAnalysis.classifierScoreCol]] verbatim, so a
     * document scores identically whether it arrives by stream or by
     * backfill — the train/serve-parity property t24 exists to provide.
@@ -448,22 +388,8 @@ object StreamPipelines {
     * Scale: scoring is the same zero-join per-row fold as t24; only
     * (doc_id, score) plus a 1-row ledger outlive each micro-batch scan.
     * State is append-only batch dirs — no compaction debt. */
-  def qualityGateSink(spark: SparkSession, stream: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    new java.io.File(stateDir).mkdirs()
-    stream.writeStream.outputMode(OutputMode.Append()).foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        qualityGateBatch(spark, stateDir)(batch.toDF(), batchId)
-    }
-  }
-
-  /** One micro-batch of [[qualityGateSink]] — public so replay semantics
-    * are testable outside a live stream. Idempotent per (batch,
-    * batchId): both output dirs are deterministic in the batchId and
-    * overwritten whole (the [[corpusDedupBatch]] rule). */
   def qualityGateBatch(spark: SparkSession, stateDir: String)
                       (batch: DataFrame, batchId: Long): Unit = {
-    new java.io.File(stateDir).mkdirs()
     val scored = batch
       .withColumn("toks", graft.functions.TextFunctions.wsTokens(col("text")))
       .select(col("doc_id"),
@@ -482,76 +408,26 @@ object StreamPipelines {
       .write.mode("overwrite").parquet(s"$stateDir/ledger_b$batchId")
   }
 
-  /** How many superseded upsert-state versions to retain for recovery;
+  /** How many superseded versions a versioned sink retains for recovery;
     * older version dirs are deleted after each successful batch write. */
   val UpsertKeepVersions = 2
 
-  /** foreachBatch incremental upsert sink: every micro-batch merges into a
-    * versioned parquet state dir via the batch last-writer-wins merge.
+  /** Incremental upsert: every micro-batch merges into the versioned state
+    * via the batch last-writer-wins merge ([[Merge.upsert]]).
     *
     * Cost note: each batch REWRITES the full merged state (read latest
     * version + merge + write next version), so per-batch cost grows with
     * total state size — the simple-and-correct shape for dimension-sized
     * state; for fact-sized state use a partitioned/merge-on-read layout.
-    * Superseded version dirs beyond the last [[UpsertKeepVersions]] are
-    * deleted after a successful write so disk stays bounded on a
-    * long-running stream. */
-  def upsertSink(spark: SparkSession, stream: DataFrame, stateDir: String,
-                 keys: Seq[String], orderCol: String, tieCol: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    new java.io.File(stateDir).mkdirs()
-    stream.writeStream.outputMode(OutputMode.Append()).foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        upsertBatch(spark, stateDir, keys, orderCol, tieCol)(batch.toDF(), batchId)
-    }
-  }
-
-  /** One micro-batch of the upsert sink — public so replay semantics are
-    * testable outside a live stream. foreachBatch is AT-LEAST-ONCE (a batch
-    * whose write completed but whose checkpoint commit did not is re-run on
-    * recovery); this body is IDEMPOTENT per (batch, batchId), which makes
-    * the sink effectively-once:
-    *  - the output version dir is `v(batchId+1)` — deterministic in the
-    *    batchId, so a replay overwrites its own previous attempt, never
-    *    stacks a second copy;
-    *  - the merge base is always the newest version at-or-before
-    *    `v(batchId)` — a replay never trusts its own previous attempt's
-    *    dir (complete OR torn mid-write), it re-derives the identical
-    *    content from the pre-batch state plus the re-delivered batch.
     * StreamingSpec asserts both the complete-output replay and the
-    * torn-write recovery. */
+    * torn-write recovery of [[versionedBatch]]. */
   def upsertBatch(spark: SparkSession, stateDir: String, keys: Seq[String],
-                  orderCol: String, tieCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val fs = new java.io.File(stateDir)
-    fs.mkdirs()
-    def versions() = fs.listFiles().filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong)
-    val cur = versions()
-    // Merge base = the newest version STRICTLY BEFORE this batch's own
-    // output (v(batchId+1)). On a replay the previous attempt's write may
-    // have completed OR torn mid-write — either way its dir cannot be
-    // trusted as a merge base (reading a partial v(batchId+1) and merging
-    // the batch into it would silently drop every key the torn write
-    // lost). Re-deriving from the pre-batch version + the re-delivered
-    // batch reproduces the completed attempt's exact content, which is
-    // what makes the sink effectively-once; the GC below always retains
-    // the pre-batch version (UpsertKeepVersions >= 1) precisely so this
-    // base exists.
-    val base = cur.filter(_ <= batchId)
-    val current = if (base.isEmpty) None
-      else Some(spark.read.parquet(s"$stateDir/v${base.max}"))
-    val merged = current match {
-      case Some(c) => Merge.upsert(c, batch, keys, orderCol, tieCol)
-      case None => Merge.upsert(batch.limit(0), batch, keys, orderCol, tieCol)
+                  orderCol: String, tieCol: String)(batch: DataFrame, batchId: Long): Unit =
+    versionedBatch(spark, stateDir, batchId) { current =>
+      Merge.upsert(current.getOrElse(batch.limit(0)), batch, keys, orderCol, tieCol)
     }
-    merged.write.mode("overwrite").parquet(s"$stateDir/v${batchId + 1}")
-    // GC superseded versions only AFTER the new one landed, keeping a
-    // couple for recovery from a torn write of the latest
-    versions().sorted.dropRight(UpsertKeepVersions + 1).foreach { v =>
-      deleteVersionDir(new java.io.File(s"$stateDir/v$v"))
-    }
-    ()
-  }
 
-  /** Streaming SCD2 — p5's dimension build as an idempotent foreachBatch
+  /** Streaming SCD2 — p5's dimension build as an idempotent micro-batch
     * stage: each micro-batch of change events EXTENDS the versioned
     * dimension instead of rebuilding it (the dbt-curation shape run
     * continuously). Per batch, for every key it touches:
@@ -566,34 +442,14 @@ object StreamPipelines {
     * within one batch — the replay condition StreamingSpec pins), the
     * accumulated state is ROW-IDENTICAL to the batch `p5_scd2_user` over
     * the full log: closing-at-next-change commutes with the batch split.
-    *
-    * Idempotent per (batch, batchId) — the [[upsertBatch]] rules: output
-    * dir `v(batchId+1)` deterministic and overwritten whole; merge base
-    * strictly predates the batch's own output (a replay never trusts its
-    * previous attempt, complete or torn); superseded versions GC'd only
-    * after the new write lands.
+    * Replay and GC follow [[versionedBatch]].
     *
     * Scale: per-batch cost is one batch-sized window + one key-grained
-    * join against dimension-sized state (the upsert-sink caveat: state
+    * join against dimension-sized state (the [[upsertBatch]] caveat: state
     * rewrites whole per batch — right for a dimension; a fact-sized
     * history wants a partitioned merge-on-read layout). */
-  def scd2Sink(spark: SparkSession, stream: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    new java.io.File(stateDir).mkdirs()
-    stream.writeStream.outputMode(OutputMode.Append()).foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        scd2Batch(spark, stateDir)(batch.toDF(), batchId)
-    }
-  }
-
-  /** One micro-batch of [[scd2Sink]] — public so replay semantics are
-    * testable outside a live stream. */
   def scd2Batch(spark: SparkSession, stateDir: String)
                (batch: DataFrame, batchId: Long): Unit = {
-    val fs = new java.io.File(stateDir)
-    fs.mkdirs()
-    def versions() = fs.listFiles().filter(_.getName.startsWith("v"))
-      .map(_.getName.drop(1).toLong)
     val changes = batch.select(col("user_id"), col("event_id"),
       col("event_type"), round(col("value"), 2).as("value"),
       unix_micros(col("ts")).as("ts_us"))
@@ -601,11 +457,9 @@ object StreamPipelines {
       .fromChangeLog(changes, Seq("user_id"), "ts_us", "event_id")
       .select(col("user_id"), col("version"), col("event_type"), col("value"),
         col("effective_from_us"), col("effective_to_us"), col("is_current"))
-    val base = versions().filter(_ <= batchId)
-    val merged =
-      if (base.isEmpty) bscd
-      else {
-        val prior = spark.read.parquet(s"$stateDir/v${base.max}")
+    versionedBatch(spark, stateDir, batchId) {
+      case None => bscd
+      case Some(prior) =>
         val caps = changes.groupBy(col("user_id"))
           .agg(min(col("ts_us")).as("first_new_ts"))
         val touched = col("first_new_ts").isNotNull && col("is_current") === 1
@@ -620,36 +474,60 @@ object StreamPipelines {
           .withColumn("version", col("version") + coalesce(col("vbase"), lit(0L)))
           .drop("vbase")
         closed.unionByName(shifted)
-      }
-    merged.write.mode("overwrite").parquet(s"$stateDir/v${batchId + 1}")
-    versions().sorted.dropRight(UpsertKeepVersions + 1).foreach { v =>
-      deleteVersionDir(new java.io.File(s"$stateDir/v$v"))
     }
-    ()
   }
 
-  /** Recursive version-dir GC shared by the upsert/SCD2 sinks: a parquet
+  /** The versioned-state protocol of [[upsertBatch]] and [[scd2Batch]]:
+    * `merge` maps the merge base (None before the first version) to the
+    * next state, which is written whole as `v(batchId+1)`.
+    *  - The output dir is deterministic in the batchId, so a replay
+    *    overwrites its own previous attempt, never stacks a second copy.
+    *  - The merge base is the newest version STRICTLY BEFORE this batch's
+    *    own output, i.e. at-or-before `v(batchId)`. On a replay the
+    *    previous attempt's write may have completed OR torn mid-write —
+    *    either way its dir cannot be trusted (merging into a partial
+    *    `v(batchId+1)` would silently drop every key the torn write lost).
+    *    Re-deriving from the pre-batch version + the re-delivered batch
+    *    reproduces the completed attempt's exact content.
+    *  - Superseded versions beyond the newest [[UpsertKeepVersions]] + 1
+    *    are GC'd only AFTER the new one landed, so disk stays bounded on a
+    *    long-running stream and the pre-batch base a replay needs is
+    *    always retained (UpsertKeepVersions >= 1). */
+  private def versionedBatch(spark: SparkSession, stateDir: String, batchId: Long)
+                            (merge: Option[DataFrame] => DataFrame): Unit = {
+    val base = versions(stateDir).filter(_ <= batchId).lastOption
+    merge(base.map(v => spark.read.parquet(s"$stateDir/v$v")))
+      .write.mode("overwrite").parquet(s"$stateDir/v${batchId + 1}")
+    versions(stateDir).dropRight(UpsertKeepVersions + 1).foreach { v =>
+      if (!deleteTree(s"$stateDir/v$v"))
+        System.err.println(s"[stream-gc] could not delete $stateDir/v$v — torn state retained")
+    }
+  }
+
+  /** The ids N of the `<prefix>N` entries under `dir`, ascending (none if
+    * `dir` does not exist): the sinks' `v<N>` versions and `b<N>` batch
+    * dirs. */
+  private[streaming] def numberedDirs(dir: String, prefix: String): Seq[Long] =
+    Option(new File(dir).list()).toSeq.flatten
+      .collect { case n if n.startsWith(prefix) => n.drop(prefix.length).toLongOption }
+      .flatten.sorted
+
+  private[streaming] def versions(stateDir: String): Seq[Long] = numberedDirs(stateDir, "v")
+
+  /** Latest state of a versioned sink dir. */
+  def currentState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    versions(stateDir).lastOption.map(v => spark.read.parquet(s"$stateDir/v$v"))
+
+  /** Recursively delete `path`; true iff it is gone afterwards. A parquet
     * output can contain a SUBDIRECTORY (a lingering _temporary from an
-    * interrupted write), and a non-recursive listFiles().delete() pass
-    * leaves it behind silently — File.delete() returns false on a
-    * non-empty dir and nothing notices, so torn state accumulates
-    * without error. Recurse, and say so on stderr if the root survives. */
-  private def deleteVersionDir(dir: java.io.File): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rec)
-      f.delete()
-    }
-    rec(dir)
-    if (dir.exists)
-      System.err.println(s"[stream-gc] could not delete $dir — torn state retained")
-  }
-
-  /** Latest state of an upsert sink dir. */
-  def currentState(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    val fs = new java.io.File(stateDir)
-    val versions = Option(fs.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong)
-    if (versions.isEmpty) None else Some(spark.read.parquet(s"$stateDir/v${versions.max}"))
+    * interrupted write), so a one-level delete would leave torn state
+    * behind without error. Best-effort: a path that cannot be deleted is
+    * skipped, and the result reports a surviving root. The walk is closed
+    * (it holds an open directory handle). */
+  private[streaming] def deleteTree(path: String): Boolean = {
+    try Using.resource(Files.walk(Paths.get(path))) { paths =>
+      paths.iterator().asScala.toSeq.reverse.foreach(p => Try(Files.deleteIfExists(p)))
+    } catch { case NonFatal(_) => () }
+    !Files.exists(Paths.get(path))
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-import scala.util.Using
-import scala.util.control.NonFatal
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -41,12 +38,7 @@ object StreamQueries {
     * object initialises: a malformed value fails those drains with an
     * error that names the variable, never the whole query registry. */
   private[graft] def statePartitions(env: Option[String]): Int =
-    env.fold(4) { v =>
-      val n = v.toIntOption.filter(_ > 0)
-      require(n.isDefined,
-        s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a positive integer, got '$v'")
-      n.get
-    }
+    graft.GraftSession.dial("SPARK_GRAFT_STREAM_STATE_PARTITIONS", env, 4, Int.MaxValue).toInt
 
   /** A child session for a drain's streaming query: shares the
     * SparkContext, inherits the engine's builder-level tuning from the
@@ -70,18 +62,6 @@ object StreamQueries {
     s
   }
 
-  /** Recursively delete a run's scratch dir. The staged arrival files are
-    * a full table copy; Bench times these queries every rep of every
-    * sweep, so leaving them to accumulate in /tmp leaks a corpus copy per
-    * rep. Called in [[drain]]'s `finally` AFTER the drained state has
-    * been localCheckpoint'ed (the returned frame must not depend on files
-    * this deletes). Best-effort: a non-fatal cleanup failure must not fail
-    * the query. The walk is closed (it holds an open directory handle). */
-  private def deleteWork(work: String): Unit =
-    try Using.resource(Files.walk(Paths.get(work))) { paths =>
-      paths.iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    } catch { case NonFatal(_) => () }
-
   /** The one drain harness behind st1-st10. In a fresh `graft_<name>`
     * scratch dir it stages `arrivals` in order as `a.parquet`,
     * `b.parquet`, … with forced modification times 1e9, 2e9, … ms, so
@@ -95,8 +75,9 @@ object StreamQueries {
     * The frame `readBack(work)` returns is localCheckpoint'ed (eager):
     * that pins the drained state in block storage, so the scratch dir —
     * staged table copy, checkpoint, state — is deleted the moment this
-    * returns instead of leaking per rep. The delete runs in a `finally`,
-    * also when the stream dies or `body` throws.
+    * returns instead of leaking a table copy per Bench rep. The delete
+    * runs in a `finally`, also when the stream dies or `body` throws, and
+    * is best-effort: a cleanup failure never fails the query.
     *
     * Staging writes run on the arrival frames' session and the read-back
     * on the session `readBack` closes over (the caller's); only the
@@ -126,7 +107,7 @@ object StreamQueries {
       q.awaitTermination()
       require(q.exception.isEmpty, s"$name stream died: ${q.exception}")
       readBack(work).localCheckpoint(eager = true)
-    } finally deleteWork(work)
+    } finally StreamPipelines.deleteTree(work)
   }
 
   /** The documents table as st1/st3's two-batch arrival: even doc_ids
@@ -149,15 +130,13 @@ object StreamQueries {
   /** The newest state version of st2/st4's versioned sink, once the
     * two-batch version chain is proven on disk. */
   private def twoBatchState(spark: SparkSession, state: String): DataFrame = {
-    val versions = new File(state).listFiles()
-      .filter(_.getName.startsWith("v")).map(_.getName.drop(1).toLong)
-    require(versions.contains(2L),
-      s"expected the two-batch version chain, got v${versions.sorted.toSeq}")
-    spark.read.parquet(s"$state/v${versions.max}")
+    val versions = StreamPipelines.versions(state)
+    require(versions.contains(2L), s"expected the two-batch version chain, got v$versions")
+    StreamPipelines.currentState(spark, state).get
   }
 
   /** `st1_stream_dedup`: the streaming corpus-dedup ingest
-    * ([[StreamPipelines.corpusDedupSink]] — d1's exact content dedup run
+    * ([[StreamPipelines.corpusDedupBatch]] — d1's exact content dedup run
     * as a continuous crawl stage) drained over a DETERMINISTIC two-batch
     * arrival of the documents table: even doc_ids land as the older
     * input file, odd doc_ids as the newer one, `maxFilesPerTrigger=1`
@@ -178,16 +157,16 @@ object StreamQueries {
     * hash-keyed anti-join d8 ships at batch scale. */
   def st1StreamDedup(spark: SparkSession, dir: String): DataFrame =
     drain("st1", parityArrivals(spark, dir), StreamPipelines.DocumentsSchema, spark)(
-      (stream, work) => StreamPipelines.corpusDedupSink(spark, stream, s"$work/state"),
+      (stream, work) => StreamPipelines.batchSink(stream, s"$work/state")(
+        StreamPipelines.corpusDedupBatch(spark, s"$work/state")),
       { work =>
-        val batchDirs = new File(s"$work/state").listFiles()
-          .filter(_.getName.startsWith("b")).sortBy(_.getName.drop(1).toLong)
-        require(batchDirs.length == 2,
-          s"expected 2 micro-batches, got ${batchDirs.map(_.getName).toSeq}")
-        batchDirs.map { d =>
-          spark.read.parquet(d.getPath)
-            .select(col("norm_hash"), col("doc_id"),
-              lit(d.getName.drop(1).toLong).as("src_batch"))
+        val state = s"$work/state"
+        val batchIds = StreamPipelines.numberedDirs(state, "b")
+        require(batchIds.length == 2,
+          s"expected 2 micro-batches, got ${batchIds.map(b => s"b$b")}")
+        batchIds.map { b =>
+          spark.read.parquet(s"$state/b$b")
+            .select(col("norm_hash"), col("doc_id"), lit(b).as("src_batch"))
         }.reduce(_ unionByName _)
       }).orderBy(col("norm_hash"), col("doc_id"))
 
@@ -217,7 +196,7 @@ object StreamQueries {
       |ORDER BY norm_hash, doc_id""".stripMargin
 
   /** `st2_stream_upsert`: the incremental-merge stream
-    * ([[StreamPipelines.upsertSink]] — p7's last-writer-wins merge run
+    * ([[StreamPipelines.upsertBatch]] — p7's last-writer-wins merge run
     * as a continuous foreachBatch stage with versioned parquet state)
     * drained over a deterministic two-batch arrival of the events
     * change log: the older TIME HALF (ts below the data-derived
@@ -244,8 +223,8 @@ object StreamQueries {
         floor(col("value") * 100).cast("long").as("value_c"))
     drain("st2", midpointHalves(ev),
         "user_id LONG, event_id LONG, ts_us LONG, event_type STRING, value_c LONG", spark)(
-      (stream, work) => StreamPipelines.upsertSink(spark, stream, s"$work/state",
-        Seq("user_id"), "ts_us", "event_id"),
+      (stream, work) => StreamPipelines.batchSink(stream, s"$work/state")(
+        StreamPipelines.upsertBatch(spark, s"$work/state", Seq("user_id"), "ts_us", "event_id")),
       work => twoBatchState(spark, s"$work/state")
         .select(col("user_id"), col("event_id"), col("ts_us"),
           col("event_type"), col("value_c")))
@@ -264,7 +243,7 @@ object StreamQueries {
       |ORDER BY user_id""".stripMargin
 
   /** `st3_stream_quality`: the streaming quality gate
-    * ([[StreamPipelines.qualityGateSink]] — t24's hashed-linear
+    * ([[StreamPipelines.qualityGateBatch]] — t24's hashed-linear
     * classifier run as a continuous crawl-ingest filter) drained over a
     * deterministic two-batch arrival of the documents table (even
     * doc_ids older, odd newer — st1's split). Each micro-batch scores
@@ -282,13 +261,12 @@ object StreamQueries {
     * append-only batch dirs. */
   def st3StreamQuality(spark: SparkSession, dir: String): DataFrame =
     drain("st3", parityArrivals(spark, dir), StreamPipelines.DocumentsSchema, spark)(
-      (stream, work) => StreamPipelines.qualityGateSink(spark, stream, s"$work/state"),
+      (stream, work) => StreamPipelines.batchSink(stream, s"$work/state")(
+        StreamPipelines.qualityGateBatch(spark, s"$work/state")),
       { work =>
         val state = s"$work/state"
-        val batchIds = new File(state).listFiles()
-          .filter(_.getName.startsWith("keep_b")).map(_.getName.drop(6).toLong).sorted
-        require(batchIds.sameElements(Array(0L, 1L)),
-          s"expected 2 micro-batches, got ${batchIds.toSeq}")
+        val batchIds = StreamPipelines.numberedDirs(state, "keep_b")
+        require(batchIds == Seq(0L, 1L), s"expected 2 micro-batches, got $batchIds")
         batchIds.map { b =>
           val k = spark.read.parquet(s"$state/keep_b$b")
             .select(col("doc_id"), col("n_toks"), col("score"),
@@ -323,7 +301,7 @@ object StreamQueries {
   }
 
   /** `st4_stream_scd2`: the streaming SCD2 dimension build
-    * ([[StreamPipelines.scd2Sink]] — p5's dbt-curation shape run as an
+    * ([[StreamPipelines.scd2Batch]] — p5's dbt-curation shape run as an
     * idempotent foreachBatch stage with versioned parquet state) drained
     * over st2's deterministic two-batch TIME split of the events change
     * log (older half below the data-derived midpoint arrives first).
@@ -338,7 +316,7 @@ object StreamQueries {
     * key's prior max) THROUGH the streaming machinery.
     *
     * Scale: per-batch cost is one batch-sized window + one key-grained
-    * join against dimension-sized state (the scd2Sink caveat applies:
+    * join against dimension-sized state (the scd2Batch caveat applies:
     * whole-state rewrite per batch — right for a dimension). */
   def st4StreamScd2(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.Tables.load(spark, dir, "events")
@@ -350,7 +328,8 @@ object StreamQueries {
       col("event_type"), col("value"), col("ts")))
     drain("st4", arrivals,
         "user_id LONG, event_id LONG, event_type STRING, value DOUBLE, ts TIMESTAMP", spark)(
-      (stream, work) => StreamPipelines.scd2Sink(spark, stream, s"$work/state"),
+      (stream, work) => StreamPipelines.batchSink(stream, s"$work/state")(
+        StreamPipelines.scd2Batch(spark, s"$work/state")),
       work => twoBatchState(spark, s"$work/state")
         .select(col("user_id"), col("version"), col("event_type"),
           col("value"), col("effective_from_us"), col("effective_to_us"),
@@ -387,13 +366,10 @@ object StreamQueries {
       .select(col("user_id").cast("long").as("user_id"),
         col("event_id").cast("long").as("event_id"),
         col("ts"), col("event_type"))
-    val maxTsMs = ev.agg(max(col("ts"))).head.getTimestamp(0).getTime
-    val yearMs = 365L * 86400L * 1000L
-    def sentinel(offsetMs: Long) = Seq(
-      (-1L, -1L, new java.sql.Timestamp(maxTsMs + offsetMs), "view"))
-      .toDF("user_id", "event_id", "ts", "event_type")
+    val maxUs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
     val ss = streamSession(spark)
-    drain("st5", Seq(ev, sentinel(yearMs), sentinel(2 * yearMs)),
+    drain("st5", ev +: sentinels(spark, maxUs).map(_.select(col("user_id"),
+        col("event_id"), col("ts"), col("event_type"))),
         "user_id LONG, event_id LONG, ts TIMESTAMP, event_type STRING", ss)(
       (stream, work) => StreamPipelines.funnelize(stream.as[StreamPipelines.FunnelEv])(ss)
         .filter(col("user_id") >= 0).toDF()

@@ -188,5 +188,9 @@ class BenchGateSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"),
         s"'$v' rejected without naming the variable: ${e.getMessage}")
     }
+    // an Int dial: one past Int.MaxValue is rejected, with the same message
+    val e = intercept[IllegalArgumentException](GraftSession.coresFrom(Some("2147483648"), 4))
+    assert(e.getMessage ==
+      "requirement failed: SPARK_GRAFT_CPUS must be a positive integer, got '2147483648'")
   }
 }

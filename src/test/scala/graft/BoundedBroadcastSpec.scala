@@ -64,6 +64,11 @@ class BoundedBroadcastSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_BROADCAST_MAX_ROWS"),
         s"'$v' rejected without naming the variable: ${e.getMessage}")
     }
+    // a Long dial: values past Int.MaxValue are accepted
+    assert(BoundedBroadcast.maxRowsFrom(Some("2147483648")) == 2147483648L)
+    val e = intercept[IllegalArgumentException](BoundedBroadcast.maxRowsFrom(Some("0")))
+    assert(e.getMessage ==
+      "requirement failed: SPARK_GRAFT_BROADCAST_MAX_ROWS must be a positive integer, got '0'")
   }
 
   test("default bound is far under the 512M-row broadcast relation cap") {

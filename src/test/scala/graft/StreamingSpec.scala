@@ -143,6 +143,35 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming sessionization splits on sub-millisecond gaps like " +
+    "batch q12") {
+    import spark.implicits._
+    implicit val s: SparkSession = spark
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val out = s"mem_sess_us_${System.nanoTime()}"
+    val q = StreamPipelines.sessionize(mem.toDS())
+      .writeStream.format("memory").queryName(out).outputMode("append").start()
+    def tsUs(minutes: Long, us: Int): Timestamp = {
+      val t = ts(minutes); t.setNanos(us * 1000); t
+    }
+    try {
+      val b = 1000L
+      // events at T+100 µs and T+30 min+900 µs: 30 min + 800 µs apart,
+      // more than the gap at q12's microsecond grain, so two sessions
+      // (at millisecond grain they sit exactly 30 min apart and merge)
+      mem.addData(Ev(1L, 1L, tsUs(b, 100), 1.0), Ev(1L, 2L, tsUs(b + 30, 900), 2.0))
+      q.processAllAvailable()
+      mem.addData(Ev(99L, 999L, ts(b + 10000), 0.0))
+      q.processAllAvailable()
+      val sessions = spark.table(out).as[SessionOut].collect()
+        .filter(_.user_id == 1L).sortBy(_.session_id)
+      val t0 = b * 60000000L
+      assert(sessions.map(s => (s.session_id, s.n_events, s.start_us, s.duration_us)).toSeq ==
+        Seq((1L, 1L, t0 + 100L, 0L), (2L, 1L, t0 + 30L * 60000000L + 900L, 0L)))
+    } finally q.stop()
+  }
+
   test("built-in session_window agg closes the same sessions as the " +
     "fMGWS sessionizer on the same stream") {
     import spark.implicits._
@@ -249,7 +278,8 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = Files.createTempDirectory("graft_upsert").toString
     val mem = MemoryStream[(Long, String, Long, Long)]
     val stream = mem.toDF().toDF("k", "v", "ver", "tie")
-    val q = StreamPipelines.upsertSink(spark, stream, stateDir, Seq("k"), "ver", "tie").start()
+    val q = StreamPipelines.batchSink(stream, stateDir)(
+      StreamPipelines.upsertBatch(spark, stateDir, Seq("k"), "ver", "tie")).start()
     try {
       mem.addData((1L, "a1", 1L, 1L), (2L, "b1", 1L, 2L))
       q.processAllAvailable()
@@ -369,10 +399,10 @@ class StreamingSpec extends AnyFunSuite {
     drop("b.parquet", vecs.drop(2))
     // maxFilesPerTrigger=1 forces one micro-batch per drop — the point is
     // batch-decomposition invariance, so MAKE it decompose
-    val q = StreamPipelines.indexDeltaSink(spark,
+    val q = StreamPipelines.batchSink(
         StreamPipelines.fileStream(spark, in.toString, StreamPipelines.EmbeddingsSchema,
           maxFilesPerTrigger = 1),
-        state, cents)
+        state)(StreamPipelines.indexDeltaBatch(spark, state, cents))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -425,10 +455,10 @@ class StreamingSpec extends AnyFunSuite {
     val batchB = Seq(4L -> "alpha beta gamma", 5L -> "novel content here", 6L -> "same text")
     drop("a.parquet", batchA)
     drop("b.parquet", batchB)
-    val q = StreamPipelines.corpusDedupSink(spark,
+    val q = StreamPipelines.batchSink(
         StreamPipelines.fileStream(spark, in.toString, StreamPipelines.DocumentsSchema,
           maxFilesPerTrigger = 1),
-        state)
+        state)(StreamPipelines.corpusDedupBatch(spark, state))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -506,6 +536,45 @@ class StreamingSpec extends AnyFunSuite {
     assert(stateRows() == streamed, "replay altered the dimension state")
   }
 
+  test("SCD2 sink recovers a torn write of its latest version from the " +
+    "pre-batch state, and GC keeps the version bound") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft_scd2_torn").toString
+    val apply = StreamPipelines.scd2Batch(spark, state) _
+    def changes(rows: (Long, Long, String, Double, Long)*) =
+      rows.map { case (u, e, t, v, m) => (u, e, t, v, ts(m)) }
+        .toDF("user_id", "event_id", "event_type", "value", "ts")
+    val batches = Seq(
+      changes((1L, 1L, "view", 1.0, 1L), (2L, 2L, "click", 2.0, 2L)),
+      changes((1L, 3L, "click", 3.0, 3L)),
+      changes((2L, 4L, "purchase", 4.0, 4L), (3L, 5L, "view", 5.0, 5L)))
+    batches.zipWithIndex.foreach { case (b, i) => apply(b, i.toLong) }
+    def stateRows() = StreamPipelines.currentState(spark, state).get
+      .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("version"),
+        r.getAs[String]("event_type"), r.getAs[Long]("effective_from_us"),
+        Option(r.getAs[java.lang.Long]("effective_to_us")).map(_.longValue),
+        r.getAs[Long]("is_current"))).toSet
+    val committed = stateRows()
+    assert(committed.size == 5 && committed.count(_._6 == 1L) == 3,
+      s"unexpected committed dimension: $committed")
+    // TORN WRITE: the previous attempt of batch 2 crashed mid-write of v3,
+    // leaving a readable-but-partial dir (one of its five rows)
+    val v3 = new java.io.File(s"$state/v3")
+    val v3Df = spark.read.parquet(v3.toString)
+    val partial = v3Df.collect().take(1)
+    val schema = v3Df.schema
+    v3.listFiles().foreach(_.delete())
+    spark.createDataFrame(java.util.Arrays.asList(partial: _*), schema)
+      .coalesce(1).write.mode("overwrite").parquet(v3.toString)
+    assert(stateRows() != committed, "torn-write precondition")
+    apply(batches(2), 2L)
+    assert(stateRows() == committed, "torn v3 not recovered from pre-batch state")
+    val versions = new java.io.File(state).listFiles()
+      .filter(_.getName.startsWith("v")).map(_.getName)
+    assert(versions.length <= StreamPipelines.UpsertKeepVersions + 1,
+      s"stale versions not GC'd: ${versions.mkString(",")}")
+  }
+
   test("streaming quality gate: streamed keeps equal batch t24's keep " +
     "labels on the same corpus, the ledger conserves counts, and batch " +
     "replay is idempotent") {
@@ -533,10 +602,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     drop("a.parquet", batchA)
     drop("b.parquet", batchB)
-    val q = StreamPipelines.qualityGateSink(spark,
+    val q = StreamPipelines.batchSink(
         StreamPipelines.fileStream(spark, in.toString, StreamPipelines.DocumentsSchema,
           maxFilesPerTrigger = 1),
-        state)
+        state)(StreamPipelines.qualityGateBatch(spark, state))
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -691,7 +760,7 @@ class StreamingSpec extends AnyFunSuite {
     info(s"st2: ${got.size} users, $overwritten cross-batch overwrites")
     // ---- st1: on a corpus with no exact-dup groups the streamed
     // keepers are exactly d1's keeper set (the cross-batch anti-join
-    // arm is pinned on the planted corpus in the corpusDedupSink test)
+    // arm is pinned on the planted corpus in the streaming corpus dedup test)
     val st1 = graft.streaming.StreamQueries.st1StreamDedup(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val d1 = graft.operators.Dedup.d1DedupExact(spark, sf)
@@ -767,6 +836,10 @@ class StreamingSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_STREAM_STATE_PARTITIONS"),
         s"'$v' rejected without naming the variable: ${e.getMessage}")
     }
+    // an Int dial: one past Int.MaxValue is rejected, with the same message
+    val e = intercept[IllegalArgumentException](statePartitions(Some("2147483648")))
+    assert(e.getMessage == "requirement failed: SPARK_GRAFT_STREAM_STATE_PARTITIONS " +
+      "must be a positive integer, got '2147483648'")
   }
 
   test("st6-st10 (the r20 promoted streaming rows): each drained state " +

@@ -103,12 +103,14 @@ def main():
     run_verify()
     with open(f"{OUT}/oracle_sql.json") as f:
         oracle = json.load(f)
-    results = {}
+    results, walls = {}, {}
     for name in sorted(oracle):
         if ONLY and name not in ONLY:
             continue
+        t0 = time.time()
         results[name] = compare(name, oracle[name])
-        print(f"  {name}: {results[name]}")
+        walls[name] = time.time() - t0
+        print(f"  {name}: {results[name]} ({walls[name]:.1f} s)", flush=True)
     # every query is oracle-checked, so an output this run wrote without an
     # oracle fails (a run-derived oracle that was never registered or
     # confirmed); stale dirs of a reused OUT and names outside ONLY are skipped
@@ -118,6 +120,8 @@ def main():
             continue
         results[name] = "NO-ORACLE"
         print(f"  {name}: {results[name]}")
+    print("slowest compares: " + ", ".join(
+        f"{n} {w:.1f} s" for n, w in sorted(walls.items(), key=lambda kv: -kv[1])[:5]))
     nbad = sum(1 for v in results.values() if v != "OK")
     print(f"{'ALL GREEN' if nbad == 0 else f'{nbad} FAILING'} ({len(results)} checked)")
     sys.exit(1 if nbad else 0)
