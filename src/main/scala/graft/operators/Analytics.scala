@@ -69,10 +69,10 @@ object Analytics {
     val reg = t(spark, dir, "region").filter(col("r_name") === "ASIA")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(supp),
+      .join(supp,
         col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
+      .join(nat, col("s_nationkey") === col("n_nationkey"))
+      .join(reg, col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
       .orderBy(col("revenue").desc, col("n_name"))
@@ -90,8 +90,8 @@ object Analytics {
   /** Hierarchical rollup region → nation over customer balances. */
   def q7Rollup(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "customer")
-      .join(broadcast(t(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      .join(t(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
+      .join(t(spark, dir, "region"), col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_customers"), round(sum(col("c_acctbal")), 2).as("sum_acctbal"))
       .select(
@@ -249,7 +249,7 @@ object Analytics {
       .distinct()
     // equal-width range bucket — the SAME expression at both consumers
     val bucketed = melted.filter(col("v").isNotNull)
-      .join(broadcast(stats.select(col(grp), col("tag"), col("mn"), col("mx"))),
+      .join(stats.select(col(grp), col("tag"), col("mn"), col("mx")),
         Seq(grp, "tag"))
       .filter(col("mn") =!= col("mx"))
       .withColumn("bucket", least(lit(buckets - 1),
@@ -288,13 +288,13 @@ object Analytics {
     // located in the cumulative counts of the sorted distinct values
     val wB = Window.partitionBy(col(grp), col("tag"), col("bucket")).orderBy(col("v"))
     val picked = bucketed
-      .join(broadcast(bucketRanks.select(col(grp), col("tag"), col("bucket")).distinct()),
+      .join(bucketRanks.select(col(grp), col("tag"), col("bucket")).distinct(),
         Seq(grp, "tag", "bucket"))
       .groupBy(col(grp), col("tag"), col("bucket"), col("v"))
       .agg(count(lit(1)).as("c"))
       .withColumn("cum", coalesce(
         sum(col("c")).over(wB.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .join(broadcast(bucketRanks),
+      .join(bucketRanks,
         Seq(grp, "tag", "bucket")) // + rank-in-range filter next line
       .filter(col("local_rank") > col("cum") &&
         col("local_rank") <= col("cum") + col("c"))
@@ -342,7 +342,7 @@ object Analytics {
     val custKeys = t(spark, dir, "orders").select(col("o_custkey")).distinct()
     t(spark, dir, "customer")
       .join(custKeys, col("c_custkey") === col("o_custkey"), "left")
-      .join(broadcast(t(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(t(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(
         count(lit(1)).as("n_customers"),
@@ -404,25 +404,29 @@ object Analytics {
     * the offer table — offer-sized, not fact-sized. No fact-fact
     * self-join, no second scan. */
   def q35MinCostSupplier(spark: SparkSession, dir: String): DataFrame = {
+    // semi joins keep supplier's size estimate; n_name attaches last
+    val euNations = t(spark, dir, "nation").join(
+      t(spark, dir, "region").filter(col("r_name") === "EUROPE"),
+      col("n_regionkey") === col("r_regionkey"), "left_semi")
     val euSupp = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-      .filter(col("r_name") === "EUROPE")
-      .select(col("s_suppkey"), col("s_name"), col("n_name"))
+      .join(euNations, col("s_nationkey") === col("n_nationkey"), "left_semi")
+      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
     val promoParts = t(spark, dir, "part")
       .filter(col("p_type") === "PROMO")
       .select(col("p_partkey"), col("p_name"))
     val offers = t(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
         floor(col("l_extendedprice") * 100).cast("long").as("cents"))
-      .join(broadcast(promoParts), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(euSupp), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("p_partkey"), col("p_name"), col("s_suppkey"), col("s_name"), col("n_name"))
+      .join(promoParts, col("l_partkey") === col("p_partkey"))
+      .join(euSupp, col("l_suppkey") === col("s_suppkey"))
+      .groupBy(col("p_partkey"), col("p_name"), col("s_suppkey"), col("s_name"),
+        col("s_nationkey"))
       .agg(min(col("cents")).as("offer_cents"))
     offers
       .withColumn("best_cents",
         min(col("offer_cents")).over(Window.partitionBy(col("p_partkey"))))
       .filter(col("offer_cents") === col("best_cents"))
+      .join(t(spark, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
       .select(col("p_partkey"), col("p_name"), col("s_suppkey"), col("s_name"),
         col("n_name"), col("offer_cents"))
       .orderBy(col("p_partkey"), col("s_suppkey"))
@@ -477,7 +481,7 @@ object Analytics {
     t(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
         floor(col("l_extendedprice") * 100).cast("long").as("price_c"))
-      .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
+      .join(parts, col("l_partkey") === col("p_partkey"))
       .withColumn("n_li", count(lit(1)).over(w))
       .withColumn("sum_qty", sum(col("qty")).over(w))
       .withColumn("is_small",
@@ -502,8 +506,8 @@ object Analytics {
     * jumbo orders (threshold 250 ≈ 1.4% of orders at any SF, because
     * per-order lineitem count is a schema constant), so AQE turns the
     * orders join into a broadcast at runtime. The customer lookup is a
-    * broadcast dim join. Quantities sum as exact longs — no float can
-    * disagree with the oracle's HAVING. */
+    * size-gated hint (p29's threshold −1 pin needs it). Quantities sum
+    * as exact longs — no float can disagree with the oracle's HAVING. */
   def q39BigOrders(spark: SparkSession, dir: String): DataFrame =
     q39BigOrdersOver(spark, dir, t(spark, dir, "lineitem"), t(spark, dir, "orders"))
 
@@ -517,7 +521,8 @@ object Analytics {
     val cust = t(spark, dir, "customer").select(col("c_custkey"), col("c_name"))
     orders
       .join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      .join(BoundedBroadcast.hintIfBounded(cust, cust.count()),
+        col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
         floor(col("o_totalprice") * 100).cast("long").as("totalprice_cents"),
@@ -549,9 +554,9 @@ object Analytics {
       .select(col("o_custkey")).distinct()
     val nat = t(spark, dir, "nation").select(col("n_nationkey"), col("n_name"))
     cust.join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-      .crossJoin(broadcast(pos))
+      .crossJoin(broadcast(pos)) // hint: scalar
       .filter(col("bal_c") * col("n_pos") > col("sum_pos"))
-      .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
+      .join(nat, col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_cust"), sum(col("bal_c")).as("sum_bal_cents"))
       .orderBy(col("n_name"))
@@ -579,7 +584,7 @@ object Analytics {
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
       .filter(col("qty").between(1L, 30L))
-      .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
+      .join(parts, col("l_partkey") === col("p_partkey"))
       .filter(block("Brand#3", 1, 15, 1, 11) ||
         block("Brand#12", 10, 30, 10, 20) ||
         block("Brand#21", 20, 50, 20, 30))
@@ -640,7 +645,7 @@ object Analytics {
           .cast("long").as("rev_c"))
     val part = t(spark, dir, "part")
       .select(col("p_partkey"), col("p_type").startsWith("PROMO").as("promo"))
-    li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
+    li.join(part, col("l_partkey") === col("p_partkey"))
       .agg(sum(when(col("promo"), col("rev_c")).otherwise(0L))
           .as("promo_cents"),
         sum(col("rev_c")).as("total_cents"))
@@ -668,8 +673,8 @@ object Analytics {
         * 100).cast("long")).as("revenue_cents"))
     val mx = rev.agg(max(col("revenue_cents")).as("max_rev"))
     val sup = t(spark, dir, "supplier").select(col("s_suppkey"), col("s_name"))
-    rev.join(broadcast(mx), col("revenue_cents") === col("max_rev"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+    rev.join(broadcast(mx), col("revenue_cents") === col("max_rev")) // hint: scalar
+      .join(sup, col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("revenue_cents"))
       .orderBy(col("s_suppkey"))
   }
@@ -690,10 +695,10 @@ object Analytics {
     val nat = t(spark, dir, "nation")
       .filter(col("n_name").isin("NATION_13", "NATION_19"))
     val sup = t(spark, dir, "supplier")
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
+      .join(nat, col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
     val cust = t(spark, dir, "customer")
-      .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
+      .join(nat, col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
     val li = t(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -701,7 +706,7 @@ object Analytics {
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(sup, col("l_suppkey") === col("s_suppkey"))
     val ord = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
@@ -731,14 +736,14 @@ object Analytics {
     val supNat = t(spark, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
     val sup = t(spark, dir, "supplier")
-      .join(broadcast(supNat), col("s_nationkey") === col("n_nationkey"))
+      .join(supNat, col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
     val mktCust = t(spark, dir, "customer")
-      .join(broadcast(t(spark, dir, "nation")
-          .join(broadcast(t(spark, dir, "region")
-              .filter(col("r_name") === "ASIA")),
+      .join(t(spark, dir, "nation")
+          .join(t(spark, dir, "region")
+              .filter(col("r_name") === "ASIA"),
             col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey"))),
+          .select(col("n_nationkey")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"))
     val ord = t(spark, dir, "orders")
@@ -750,8 +755,8 @@ object Analytics {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
-      .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(part, col("l_partkey") === col("p_partkey"))
+      .join(sup, col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(
@@ -790,14 +795,14 @@ object Analytics {
       .select(col("l_orderkey"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
+    // nation attaches last: customer⋈nation's estimate is the product
     val cust = t(spark, dir, "customer")
-      .join(broadcast(t(spark, dir, "nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_name"), col("n_name"))
+      .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
       .agg(sum(col("rev_c")).as("revenue_cents"))
       .join(cust, col("o_custkey") === col("c_custkey"))
+      .join(t(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("c_name"), col("n_name"),
         col("revenue_cents"))
       .orderBy(col("revenue_cents").desc, col("c_custkey"))
@@ -823,7 +828,7 @@ object Analytics {
       .select(col("p_partkey"),
         floor(col("p_retailprice") * 100).cast("long").as("retail_c"))
     val sup = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+      .join(t(spark, dir, "nation"),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name"))
     val ord = t(spark, dir, "orders")
@@ -833,8 +838,8 @@ object Analytics {
         col("l_quantity").cast("long").as("qty"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
-      .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(part, col("l_partkey") === col("p_partkey"))
+      .join(sup, col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name").as("nation"),
         year(col("o_orderdate")).cast("long").as("o_year"))
@@ -864,7 +869,7 @@ object Analytics {
         * 100).cast("long")).as("revenue_cents"))
     val scalar = rev.agg(sum(col("revenue_cents")).as("total_c"),
       count(lit(1)).as("n_parts"))
-    rev.join(broadcast(scalar))
+    rev.join(broadcast(scalar)) // hint: scalar
       .filter(col("revenue_cents") >
         expr("3 * CAST(total_c AS DECIMAL(38,0)) div (2 * n_parts)"))
       .select(col("l_partkey").as("p_partkey"), col("revenue_cents"),
@@ -929,7 +934,7 @@ object Analytics {
         floor(col("s_acctbal") * 100).cast("long").as("bal_c"))
     val balScalar = supBal.agg(sum(col("bal_c")).as("tot_bal"),
       count(lit(1)).as("n_sup"))
-    val keepSup = supBal.join(broadcast(balScalar))
+    val keepSup = supBal.join(broadcast(balScalar)) // hint: scalar
       .filter(col("bal_c") * col("n_sup") >= col("tot_bal"))
       .select(col("s_suppkey"))
     val part = t(spark, dir, "part")
@@ -937,8 +942,8 @@ object Analytics {
       .select(col("p_partkey"), col("p_brand"), col("p_type"))
     t(spark, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"))
-      .join(broadcast(part), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(keepSup), col("l_suppkey") === col("s_suppkey"),
+      .join(part, col("l_partkey") === col("p_partkey"))
+      .join(keepSup, col("l_suppkey") === col("s_suppkey"),
         "left_semi")
       .groupBy(col("p_brand"), col("p_type"))
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
@@ -967,19 +972,19 @@ object Analytics {
         col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
       .select(col("l_partkey"), col("l_suppkey"),
         col("l_quantity").cast("long").as("qty"))
-      .join(broadcast(part), col("l_partkey") === col("p_partkey"))
+      .join(part, col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(col("qty")).as("sq"))
     val tq = sq.groupBy(col("l_partkey")).agg(sum(col("sq")).as("total_q"))
     val sup = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+      .join(t(spark, dir, "nation"),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("n_name"))
     sq.join(tq, Seq("l_partkey"))
       .filter(col("sq") * 2 > col("total_q"))
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_dominant_parts"), sum(col("sq")).as("dominant_qty"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(sup, col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("n_name"),
         col("n_dominant_parts"), col("dominant_qty"))
       .orderBy(col("s_suppkey"))
@@ -1066,7 +1071,7 @@ object Analytics {
     val perOrder = pair.groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_supp"), sum(col("late")).as("n_late_supp"))
     val sup = t(spark, dir, "supplier")
-      .join(broadcast(t(spark, dir, "nation")),
+      .join(t(spark, dir, "nation"),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_name"), col("n_name"))
     pair.filter(col("late") === 1L)
@@ -1074,7 +1079,7 @@ object Analytics {
       .filter(col("n_supp") >= 2 && col("n_late_supp") === 1L)
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("numwait"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(sup, col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("n_name"), col("numwait"))
       .orderBy(col("numwait").desc, col("s_suppkey"))
   }

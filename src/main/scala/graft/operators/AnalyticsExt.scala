@@ -103,8 +103,8 @@ object AnalyticsExt {
     * groupingSets API; the dims stay broadcast). */
   def q17GroupingSets(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "customer")
-      .join(broadcast(Tables.load(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.load(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      .join(Tables.load(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
+      .join(Tables.load(spark, dir, "region"), col("n_regionkey") === col("r_regionkey"))
       .groupingSets(Seq(Seq(col("r_name")), Seq(col("n_name")), Seq.empty),
         col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_customers"), round(sum(col("c_acctbal")), 2).as("sum_acctbal"))
@@ -172,8 +172,8 @@ object AnalyticsExt {
     val exactDistinct = li.select(col("l_returnflag"), col("l_orderkey")).distinct()
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("exact_orders"))
-    sketches.join(broadcast(exactPct), Seq("l_returnflag"))
-      .join(broadcast(exactDistinct), Seq("l_returnflag"))
+    sketches.join(exactPct, Seq("l_returnflag"))
+      .join(exactDistinct, Seq("l_returnflag"))
       .select(
         col("l_returnflag"),
         col("exact_orders"),
@@ -240,7 +240,7 @@ object AnalyticsExt {
       .select((col("day") + col("off")).as("day"), col("n"), col("cents"))
       .groupBy(col("day"))
       .agg(sum(col("n")).as("n_orders_7d"), sum(col("cents")).as("cents_7d"))
-    orders.join(broadcast(band), Seq("day"))
+    orders.join(band, Seq("day"))
       .select(col("o_orderkey"), col("day").cast("long").as("day"),
         col("n_orders_7d"), col("cents_7d"))
       .orderBy(col("o_orderkey"))
@@ -252,8 +252,8 @@ object AnalyticsExt {
     * the windowed data is groups-sized, not fact-sized). */
   def q19RatioReport(spark: SparkSession, dir: String): DataFrame = {
     val byNation = Tables.load(spark, dir, "customer")
-      .join(broadcast(Tables.load(spark, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.load(spark, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      .join(Tables.load(spark, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
+      .join(Tables.load(spark, dir, "region"), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
       .agg(sum(col("c_acctbal")).as("bal"))
     val wRegion = Window.partitionBy(col("r_name"))
@@ -291,7 +291,7 @@ object AnalyticsExt {
     val bin = least(
       floor((col("v") - col("vmin")) * lit(HistBins.toDouble) / (col("vmax") - col("vmin"))),
       lit((HistBins - 1).toDouble)).cast("long")
-    li.crossJoin(broadcast(stats))
+    li.crossJoin(broadcast(stats)) // hint: scalar
       .select(bin.as("bin_idx"), col("v"), col("vmin"), col("vmax"))
       .groupBy(col("bin_idx"))
       .agg(
@@ -344,12 +344,12 @@ object AnalyticsExt {
     val med = Analytics.exactPercentiles(base, "prio", Seq(("x_c", 0.5, "med_raw")))
       .select(col("prio"), col("n"),
         (col("med_raw") * 2).cast("long").as("med_x2"))
-    val dev = base.join(broadcast(med), Seq("prio"))
+    val dev = base.join(med, Seq("prio"))
       .withColumn("ad", abs(col("x_c") * 2 - col("med_x2"))) // half-cents
     val mad = Analytics.exactPercentiles(
         dev.select(col("prio"), col("ad")), "prio", Seq(("ad", 0.5, "mad_raw")))
       .select(col("prio"), (col("mad_raw") * 2).cast("long").as("mad_x2"))
-    dev.join(broadcast(mad), Seq("prio"))
+    dev.join(mad, Seq("prio"))
       // 2·ad > K·mad_x2 <=> |x−med| > K·MAD, all integers
       .withColumn("is_out",
         (col("ad") * 2 > lit(MadK) * col("mad_x2")).cast("long"))
@@ -517,7 +517,7 @@ object AnalyticsExt {
     val nodeRow = deg.agg(count(lit(1)).as("n_nodes"),
       sum(expr("d * (d - 1) div 2")).as("n_wedges"))
     val edgeRow = edges.agg(count(lit(1)).as("n_edges"))
-    nodeRow.crossJoin(broadcast(edgeRow)).crossJoin(broadcast(triRow))
+    nodeRow.crossJoin(broadcast(edgeRow)).crossJoin(broadcast(triRow)) // hint: scalar
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
         when(col("n_wedges") === 0L, lit(0L))
           .otherwise(expr("(3 * n_triangles * 1000000) div n_wedges"))
@@ -552,8 +552,8 @@ object AnalyticsExt {
       .filter(col("has_ret") === 1L && col("n_supp") >= 2 && col("n_supp_ret") === 1L)
     culprit.groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_culprit_orders"))
-      .join(broadcast(Tables.load(spark, dir, "supplier")
-        .select(col("s_suppkey"), col("s_name"))),
+      .join(Tables.load(spark, dir, "supplier")
+        .select(col("s_suppkey"), col("s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("n_culprit_orders"))
       .orderBy(col("n_culprit_orders").desc, col("s_suppkey"))
@@ -598,11 +598,11 @@ object AnalyticsExt {
       .groupBy(col("part")).agg(count(lit(1)).as("n_item"))
     val nOrders = byOrder.agg(count(lit(1)).as("n_orders"))
     pairs
-      .join(broadcast(supp.select(col("part").as("pa"), col("n_item").as("n_a"))),
+      .join(supp.select(col("part").as("pa"), col("n_item").as("n_a")),
         Seq("pa"))
-      .join(broadcast(supp.select(col("part").as("pb"), col("n_item").as("n_b"))),
+      .join(supp.select(col("part").as("pb"), col("n_item").as("n_b")),
         Seq("pb"))
-      .crossJoin(broadcast(nOrders))
+      .crossJoin(broadcast(nOrders)) // hint: scalar
       .withColumn("conf_e6", expr("n_both * 1000000 div n_a"))
       .withColumn("lift_e6", expr("conf_e6 * n_orders div n_b"))
       .select(col("pa"), col("pb"), col("n_both"), col("n_a"), col("n_b"),
@@ -637,11 +637,11 @@ object AnalyticsExt {
       .agg(sum(col("isa")).as("na"), sum(lit(1L) - col("isa")).as("nb"))
     val tot = g.agg(sum(col("na")).as("ta"), sum(col("nb")).as("tb"))
     val cum = PrefixSum(g, Seq(col("c")), None, 0).runningSums("na" -> "ca", "nb" -> "cb")
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(tot)) // hint: scalar
       .withColumn("diff", abs(col("ca").cast("decimal(38,0)") * col("tb") -
         col("cb").cast("decimal(38,0)") * col("ta")))
     val mx = cum.agg(max(col("diff")).as("ks_num"))
-    cum.join(broadcast(mx), col("diff") === col("ks_num"))
+    cum.join(broadcast(mx), col("diff") === col("ks_num")) // hint: scalar
       .groupBy(col("ta"), col("tb"), col("ks_num"))
       .agg(min(col("c")).as("at_cents"))
       // the Decimal(38,0) math stays INTERNAL; the emitted envelope

@@ -89,7 +89,7 @@ object Behavior {
       .join(cohorts, Seq("user_id"))
       .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
       .agg(count(lit(1)).as("n_active"))
-      .join(broadcast(cohortSize), Seq("cohort_week"))
+      .join(cohortSize, Seq("cohort_week"))
       .select(col("cohort_week"), col("week_offset"), col("n_active"), col("cohort_n"),
         floor(col("n_active") * lit(1000000.0) / col("cohort_n")).cast("long")
           .as("retention_e6"))
@@ -363,7 +363,7 @@ object Behavior {
         // differs cross-engine on exact .5 products
         floor(col("value") * lit(100)).cast("long").as("value_e2"))
     val stats = ev.agg(max(col("day_idx")).as("ref_day"))
-    ev.crossJoin(broadcast(stats))
+    ev.crossJoin(broadcast(stats)) // hint: scalar
       .withColumn("age", col("ref_day") - col("day_idx"))
       .filter(col("age") < lit(DecayDays))
       .withColumn("w_contrib",
@@ -465,7 +465,7 @@ object Behavior {
       .agg(count(lit(1)).as("n"))
       .localCheckpoint(true)
     val outTotals = edges.groupBy(col("from_type")).agg(sum(col("n")).as("n_out"))
-    edges.join(broadcast(outTotals), Seq("from_type"))
+    edges.join(outTotals, Seq("from_type"))
       .select(col("from_type"), col("to_type"), col("n"),
         floor(col("n") * lit(1000000.0) / col("n_out")).cast("long").as("share_e6"))
       .orderBy(col("from_type"), col("to_type"))
@@ -759,7 +759,7 @@ object Behavior {
     attributed.groupBy(col("att_type"))
       .agg(count(lit(1)).as("n_purchases"),
         sum(col("value_cents")).as("revenue_cents"))
-      .crossJoin(broadcast(totals))
+      .crossJoin(broadcast(totals)) // hint: scalar
       .withColumn("share_e6",
         floor(col("n_purchases") * lit(1000000.0) / col("n_total")).cast("long"))
       .select(col("att_type"), col("n_purchases"), col("revenue_cents"),

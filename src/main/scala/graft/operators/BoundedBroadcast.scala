@@ -3,36 +3,32 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
-/** Size-BOUNDED broadcast hint — the guard the r20 verdict ordered for
-  * every broadcast whose small side is small by DATA VOLUME, not by a
-  * compile-time dial.
+/** The engine's one broadcast policy.
   *
-  * An explicit `broadcast()` hint overrides AQE's size estimate checks:
-  * Spark builds the relation regardless and fails only at the hard
-  * 8 GB / 512-million-row broadcast cap (or the driver OOMs first). That
-  * is the right trade for frames a DIAL bounds (probe panels, beam
-  * fronts — constants at any corpus size) but wrong for frames that are
-  * merely PROPORTIONALLY small (q33's node-grained rank: customers and
-  * suppliers scale with SF, so "node-grained" is billions of rows at
-  * 100 TB; s28/s29's touched/affected sets: batch-proportional, bounded
-  * only by the batch convention). This helper applies the hint ONLY
-  * under a measured row bound and otherwise leaves the join strategy to
-  * the planner/AQE — the join result is identical either way, so oracle
-  * semantics cannot change.
+  * Spark's planner decides whether a join side broadcasts: its size
+  * estimate at planning, AQE's measured stage sizes at run time. An
+  * explicit `broadcast()` skips both checks and fails only at the 8 GB /
+  * 512M-row broadcast cap (q33's r20 bug), so no hint sits on a side
+  * that grows with the scale factor (customer, part, supplier, orders,
+  * lineitem, or a frame at their grain) nor on a plain nation/region
+  * scan. A dimension FILTER is a `left_semi` join, which keeps the left
+  * side's estimate where an inner join's is the product of its inputs',
+  * and dimension attributes attach after the fact aggregate (q35).
   *
-  * The bound is rows, not bytes, because every caller's frame is a
-  * handful of fixed-width columns (longs / a short class string): at the
-  * default 4M rows the built hash relation is low-hundreds of MB — far
-  * under the 8 GB cap with executor headroom. Production deployments
-  * size it via `SPARK_GRAFT_BROADCAST_MAX_ROWS` (the
-  * SPARK_GRAFT_STREAM_STATE_PARTITIONS pattern, parsed where it is used
-  * by `StreamQueries.statePartitions`: a scale dial with a local
-  * default, guide §2 "scale-adaptive, not a local constant").
+  * A raw hint stays only where the planner cannot size the side, and its
+  * line names the bound (BoundedBroadcastSpec's hint lint checks it):
+  * `// hint: scalar` for a global aggregate or key lookup (one row), or
+  * `// hint: dial` for a side bounded by a named constant (the probe
+  * panel, a beam, the k-means cells, a config or layout list,
+  * [[PrefixSum]]'s per-range offsets).
   *
-  * The measured count comes from the caller, who reads it off an
-  * already-checkpointed frame (a near-free job over materialized
-  * blocks) or accepts one bounded re-derivation; this object never
-  * triggers actions itself.
+  * [[hintIfBounded]] is the only size-gated hint: the caller passes a row
+  * count it measured (off a checkpointed frame, or one bounded
+  * re-derivation; this object runs no action) and the hint applies only
+  * up to [[maxRows]] — rows, not bytes, as each gated frame is a few
+  * fixed-width columns. `SPARK_GRAFT_BROADCAST_MAX_ROWS` overrides the
+  * 4M default. Over the bound the planner/AQE choose; the join result is
+  * identical either way.
   */
 object BoundedBroadcast {
   /** Local default: 4M rows ≈ low-hundreds-of-MB built relation for the

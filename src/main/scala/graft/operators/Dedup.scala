@@ -117,27 +117,21 @@ object Dedup {
     *    prevent. The groupBy ships one row per mapper per hot hash, and
     *    the join back is SIZE-ADAPTIVE: dfreq is materialized (it feeds
     *    exactly one join, and a checkpointed input carries no stats so
-    *    nothing would ever auto-broadcast) and broadcast while it fits —
-    *    then the big shingle-row side is never shuffled on h at all, its
+    *    nothing would ever auto-broadcast) and broadcast under
+    *    `hintIfBounded`'s row bound — then the big shingle-row side is never shuffled on h at all, its
     *    only shuffle is the per-doc groupBy. Beyond the limit (billions
     *    of distinct shingles) the join stays shuffle-based with AQE skew
     *    splitting. */
   private def shingleArrays(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingleRows(spark, dir).localCheckpoint(true)
     val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("df")).localCheckpoint(true)
-    val dfreqSide = if (dfreq.count() <= DfreqBroadcastLimit) broadcast(dfreq) else dfreq
-    sh.join(dfreqSide, Seq("h"))
+    sh.join(BoundedBroadcast.hintIfBounded(dfreq, dfreq.count()), Seq("h"))
       .groupBy(col("doc_id"))
       .agg(
         transform(array_sort(collect_list(struct(col("df"), col("h")))),
           x => x.getField("h")).as("shingles"),
         count(lit(1)).as("n"))
   }
-
-  /** Distinct-shingle count under which the df table broadcasts: 2M
-    * (long, long) rows is a few tens of MB, inside the session's 64 MB
-    * broadcast budget. */
-  val DfreqBroadcastLimit = 2000000L
 
   /** Exact prefix-filtered Jaccard (PPJoin-style): a pair with
     * jac >= tau shares >= ceil(tau*n) shingles, so each side must expose
@@ -1205,7 +1199,7 @@ object Dedup {
     val ps = PrefixSum(asg, Seq(col("cell_cos_e6").desc, col("vec_id")), Some("cell"), 0)
     val nPer = ps.ranged.groupBy(col("cell")).agg(count(lit(1)).as("n_cell"))
     ps.runningCount("rank_in_cell")
-      .join(broadcast(nPer), Seq("cell"))
+      .join(broadcast(nPer), Seq("cell")) // hint: dial
       .withColumn("bucket", expr("((rank_in_cell - 1) * 3) div n_cell"))
       .withColumn("is_kept", when(col("bucket") >= 1, 1L).otherwise(0L))
       .select(col("vec_id"), col("cell"), col("cell_cos_e6").as("cos_e6"),
@@ -1565,7 +1559,7 @@ object Dedup {
     val arrays = shingleArrays(spark, dir).localCheckpoint(true)
     val full = arrays.select(col("doc_id"), explode(col("shingles")).as("h"))
     val dfreq = full.groupBy(col("h")).agg(count(lit(1)).as("df")).localCheckpoint(true)
-    val dfreqSide = if (dfreq.count() <= DfreqBroadcastLimit) broadcast(dfreq) else dfreq
+    val dfreqSide = BoundedBroadcast.hintIfBounded(dfreq, dfreq.count())
     val nblk = expr(s"(df + ${PrefixBlockSize - 1}) div $PrefixBlockSize")
     val prefLen = expr(
       s"cast(n - (($TauCNum * n + ${TauCDen - 1}) div $TauCDen) + 1 as int)")
@@ -1874,7 +1868,7 @@ object Dedup {
       .withColumn("word", expr(s"pos div $D20WordBits"))
       .withColumn("pmask",
         expr(s"shiftleft(CAST(1 AS BIGINT), CAST(pos % $D20WordBits AS INT))"))
-      .join(broadcast(bloom), Seq("shard", "word"), "left")
+      .join(broadcast(bloom), Seq("shard", "word"), "left") // hint: dial
       .withColumn("hit",
         when(coalesce(col("bits"), lit(0L)).bitwiseAND(col("pmask")) =!= 0L,
           1L).otherwise(0L))
@@ -2185,8 +2179,8 @@ object Dedup {
       .map { case ((b, r), ci) => (ci.toLong, b.toLong, r.toLong, lshTheoryE6(b, r)) }
       .toDF("cfg", "bands", "rows_per_band", "theory_e6")
     val nTrue = truth.agg(count(lit(1)).as("n_true_pairs"))
-    broadcast(cfgRows).join(perCfg, Seq("cfg"), "left")
-      .join(broadcast(nTrue))
+    broadcast(cfgRows).join(perCfg, Seq("cfg"), "left") // hint: dial
+      .join(broadcast(nTrue)) // hint: scalar
       .select(col("bands"), col("rows_per_band"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"),
@@ -2274,7 +2268,7 @@ object Dedup {
       .localCheckpoint(true) // <=64 rows; per-bucket + ~TOTAL read it
     val scal = per.agg(sum(col("n_postings")).as("tot_post"),
       sum(col("pairs")).as("tot_pairs"))
-    val rows = per.join(broadcast(scal))
+    val rows = per.join(broadcast(scal)) // hint: scalar
       .select(lpad(col("fbin").cast("string"), 2, "0").as("key"),
         col("fbin"), col("n_shingles"), col("n_postings"),
         expr("n_postings * CAST(1000000 AS DECIMAL(38,0)) div greatest(tot_post, 1)")
@@ -2621,8 +2615,7 @@ object Dedup {
     // double-count its weight)
     val sh = shingleRows(spark, dir).distinct().localCheckpoint(true)
     val dfreq = sh.groupBy(col("h")).agg(count(lit(1)).as("df")).localCheckpoint(true)
-    val dfreqSide = if (dfreq.count() <= DfreqBroadcastLimit) broadcast(dfreq) else dfreq
-    val wp = sh.join(dfreqSide, Seq("h"))
+    val wp = sh.join(BoundedBroadcast.hintIfBounded(dfreq, dfreq.count()), Seq("h"))
       .select(col("doc_id"), col("h"), expr("1000000L div df").as("w"))
       .localCheckpoint(true) // doc totals + both pair-join sides
     val docW = wp.groupBy(col("doc_id"))

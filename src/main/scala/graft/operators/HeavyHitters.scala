@@ -86,7 +86,7 @@ object HeavyHitters {
       if (cands.isEmpty) toks.filter(lit(false)) else toks.filter(col("token").isInCollection(cands))
     candToks
       .groupBy(col("token")).agg(count(lit(1)).as("n_occurrences"))
-      .crossJoin(broadcast(total))
+      .crossJoin(broadcast(total)) // hint: scalar
       .filter(col("n_occurrences") * MgK > col("n"))
       .select(col("token"), col("n_occurrences"),
         floor(col("n_occurrences") * lit(1000000.0) / col("n")).cast("long").as("share_e6"))

@@ -66,7 +66,7 @@ final class PrefixSum private (
           coalesce(sum(col(s"${out}_tot")).over(slots), lit(0L)))
       }
       .select((keys ++ outs.map(o => s"${o}_base")).map(col): _*)
-    runs.foldLeft(ranged.join(broadcast(offsets), keys)) { case (f, (out, run)) =>
+    runs.foldLeft(ranged.join(broadcast(offsets), keys)) { case (f, (out, run)) => // hint: dial
         f.withColumn(out, col(s"${out}_base") + run)
       }
       .drop(("rid" +: outs.map(o => s"${o}_base")): _*)

@@ -77,7 +77,7 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
     val cos = cosineFast(col("pe"), col("embedding"))
     val w = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
-    e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+    e.join(broadcast(probes), col("vec_id") =!= col("probe_id")) // hint: dial
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
@@ -94,7 +94,7 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"), col("bucket"))
     val cos = cosineFast(col("pe"), col("embedding"))
     val w = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
-    e.join(broadcast(probes), Seq("bucket"))
+    e.join(broadcast(probes), Seq("bucket")) // hint: dial
       .filter(col("vec_id") =!= col("probe_id"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= LshTopK)
@@ -240,7 +240,7 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
     val relCos = cosineFast(col("pe"), col("embedding"))
     val wRel = Window.partitionBy(col("probe_id")).orderBy(relCos.desc, col("vec_id"))
-    e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+    e.join(broadcast(probes), col("vec_id") =!= col("probe_id")) // hint: dial
       .withColumn("rank", row_number().over(wRel))
       .filter(col("rank") <= MmrCandN)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
@@ -307,10 +307,11 @@ object Similarity {
 
   /** s9 oracle: the same greedy unroll as SQL CTEs — candidates via s1's
     * brute ranking widened to [[MmrCandN]], integer MMR algebra, same
-    * tie-breaks. Generated by the same loop bounds as the Spark fold. */
+    * tie-breaks. Generated by the same loop bounds as the Spark fold. CTEs
+    * read more than once are `AS MATERIALIZED` (DuckDB inlines the rest). */
   private lazy val s9OracleSql: String = {
     val candCte =
-      s"""cand AS (
+      s"""cand AS MATERIALIZED (
          | SELECT probe_id, neighbor_id, rel_e6 FROM (
          |  SELECT p.vec_id AS probe_id, x.vec_id AS neighbor_id,
          |   CAST(floor(${cosSql("p.embedding", "x.embedding")} * 1000000.0) AS BIGINT) AS rel_e6,
@@ -320,7 +321,7 @@ object Similarity {
          |  WHERE p.vec_id < $NumProbes)
          | WHERE rank <= $MmrCandN)""".stripMargin
     val pairsCte =
-      s"""pairs AS (
+      s"""pairs AS MATERIALIZED (
          | SELECT a.probe_id, a.neighbor_id AS id_a, b.neighbor_id AS id_b,
          |  CAST(floor(${cosSql("ea.embedding", "eb.embedding")} * 1000000.0) AS BIGINT) AS sim_e6
          | FROM cand a JOIN cand b
@@ -328,7 +329,7 @@ object Similarity {
          | JOIN embeddings ea ON ea.vec_id = a.neighbor_id
          | JOIN embeddings eb ON eb.vec_id = b.neighbor_id)""".stripMargin
     val sel1 =
-      s"""sel1 AS (
+      s"""sel1 AS MATERIALIZED (
          | SELECT probe_id, neighbor_id, rel_e6, CAST(0 AS BIGINT) AS max_sim_e6,
          |  rel_e6 * $MmrLambdaNum AS mmr10_e6, CAST(1 AS BIGINT) AS pick_rank
          | FROM (SELECT *, row_number() OVER (PARTITION BY probe_id
@@ -351,7 +352,7 @@ object Similarity {
          |   ORDER BY rel_e6 * $MmrLambdaNum - max_sim_e6 * $MmrDivNum DESC,
          |    neighbor_id) AS rn FROM ms$k)
          | WHERE rn = 1),
-         |sel$k AS (SELECT * FROM sel${k - 1} UNION ALL SELECT * FROM pick$k)""".stripMargin
+         |sel$k AS ${if (k < MmrK) "MATERIALIZED " else ""}(SELECT * FROM sel${k - 1} UNION ALL SELECT * FROM pick$k)""".stripMargin
     }.mkString(",\n")
     s"""WITH $candCte,
        |$pairsCte,
@@ -484,7 +485,7 @@ object Similarity {
     val wHam = Window.partitionBy(col("probe_id"))
       .orderBy(col("hamming"), col("vec_id"))
     val shortlist = sigs
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      .join(broadcast(probes), col("vec_id") =!= col("probe_id")) // hint: dial
       .withColumn("hamming",
         bit_count(col("sig").bitwiseXOR(col("psig"))).cast("long"))
       .withColumn("hrank", row_number().over(wHam))
@@ -498,7 +499,7 @@ object Similarity {
     val wCos = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
     shortlist
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(pvecs), Seq("probe_id"))
+      .join(broadcast(pvecs), Seq("probe_id")) // hint: dial
       .withColumn("rank", row_number().over(wCos).cast("long"))
       .filter(col("rank") <= TopK)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("hamming"),
@@ -1104,7 +1105,7 @@ object Similarity {
         explode(transform(topCells, c => c.getField("cid"))).as("cell"))
     val cos = cosineFast(col("pe"), col("embedding"))
     val w = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
-    assigned.join(broadcast(probes), Seq("cell"))
+    assigned.join(broadcast(probes), Seq("cell")) // hint: dial
       .filter(col("vec_id") =!= col("probe_id"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= LshTopK)
@@ -1247,7 +1248,7 @@ object Similarity {
       pqEncode(col("f"), books).as("codes"))
     val probes = data.filter(col("vec_id") < NumProbes)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    adcRerank(enc.join(broadcast(probes), col("vec_id") =!= col("probe_id")), books)
+    adcRerank(enc.join(broadcast(probes), col("vec_id") =!= col("probe_id")), books) // hint: dial
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("adc_e6"),
         col("cos_e6"), col("rank"))
       .orderBy(col("probe_id"), col("rank"))
@@ -1340,7 +1341,7 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
         element_at(topCells, 1).getField("cid").as("main_cell"),
         explode(transform(topCells, c => c.getField("cid"))).as("cell"))
-    adcRerank(enc.join(broadcast(probes), Seq("cell"))
+    adcRerank(enc.join(broadcast(probes), Seq("cell")) // hint: dial
         .filter(col("vec_id") =!= col("probe_id")), books)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         col("main_cell").cast("long").as("cell"), col("adc_e6"),
@@ -1470,7 +1471,7 @@ object Similarity {
     // 0-based dense rank over vec_id, distributed
     val ranks = PrefixSum(e, Seq(col("vec_id")), None, 0).runningCount("rk1")
       .select((col("rk1") - 1).as("rk"), col("vec_id").as("neighbor_id"))
-    e.crossJoin(broadcast(nTot))
+    e.crossJoin(broadcast(nTot)) // hint: scalar
       .withColumn("j", explode(array((1 to NndSearchK).map(lit(_)): _*)))
       .withColumn("rk",
         graft.functions.TextFunctions.md5Long60(
@@ -1587,7 +1588,7 @@ object Similarity {
   /** s10 oracle: the identical seed and [[NndIters]] expansion/score/cut
     * rounds as unrolled CTEs — same stride arithmetic, same undirected
     * hop, same (cos desc, id) tie-break. Generated by the same loop
-    * bounds as the Spark fold. */
+    * bounds as the Spark fold; CTEs read twice are materialized as in s9. */
   private lazy val s10OracleSql: String = {
     val md5Seed = "CAST(('0x' || substr(md5(e.vec_id || ':' || j), 1, 15)) AS BIGINT)" +
       " % (SELECT count(*) FROM embeddings)"
@@ -1609,13 +1610,13 @@ object Similarity {
          |  ${cosSql("ea.embedding", "eb.embedding")} AS cos
          | FROM $src c JOIN embeddings ea ON ea.vec_id = c.vec_id
          |  JOIN embeddings eb ON eb.vec_id = c.neighbor_id),
-         |$out AS (
+         |$out AS ${if (out == s"g$NndIters") "" else "MATERIALIZED "}(
          | SELECT vec_id, neighbor_id, cos, rank FROM (
          |  SELECT *, row_number() OVER (PARTITION BY vec_id
          |    ORDER BY cos DESC, neighbor_id) AS rank FROM ${out}_s)
          | WHERE rank <= $NndSearchK)""".stripMargin
     def hopCte(nn: String, out: String): String =
-      s"""${out}_u AS (
+      s"""${out}_u AS MATERIALIZED (
          | SELECT vec_id, neighbor_id FROM $nn
          | UNION SELECT neighbor_id, vec_id FROM $nn),
          |$out AS (
@@ -1716,7 +1717,7 @@ object Similarity {
       .localCheckpoint(true)
     val dfq = tf.groupBy(col("bg")).agg(count(lit(1)).as("df"))
     val post = tf.join(dfq, Seq("bg"))
-      .crossJoin(broadcast(nDocs))
+      .crossJoin(broadcast(nDocs)) // hint: scalar
       .filter(col("df") * lit(DfCapDen) <= col("n_docs"))
     val lex0 = post.join(
         tf.filter(col("doc_id") < NumProbes)
@@ -1792,13 +1793,13 @@ object Similarity {
     val cos = cosineFast(col("pe"), col("embedding"))
     val wCos = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
     val pre = e.filter(col("lang") === FilterLang)
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      .join(broadcast(probes), col("vec_id") =!= col("probe_id")) // hint: dial
       .withColumn("pre_rank", row_number().over(wCos).cast("long"))
       .filter(col("pre_rank") <= TopK)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
         floor(cos * lit(1000000.0)).cast("long").as("cos_e6"), col("pre_rank"))
     val wPost = Window.partitionBy(col("probe_id")).orderBy(col("fetch_rank"))
-    val post = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+    val post = e.join(broadcast(probes), col("vec_id") =!= col("probe_id")) // hint: dial
       .withColumn("fetch_rank", row_number().over(wCos))
       .filter(col("fetch_rank") <= PostOverFetch)
       .filter(col("lang") === FilterLang)
@@ -2183,7 +2184,7 @@ object Similarity {
          | - (element_at(mins, i + 1)
          |  + (element_at(codes, i + 1) * (element_at(maxs, i + 1)
          |     - element_at(mins, i + 1))) / 255.0))""".stripMargin
-    e.crossJoin(broadcast(packed))
+    e.crossJoin(broadcast(packed)) // hint: scalar
       .withColumn("codes", sq8Codes)
       .select(col("vec_id"),
         expr("aggregate(codes, CAST(0 AS BIGINT), (acc, x) -> acc + x)")
@@ -2283,7 +2284,7 @@ object Similarity {
     val (packed, sq8Codes) = sq8Model(e)
     // the code table feeds TWO consumers (candidate side + probe side):
     // checkpoint so the stats+quantize subplan runs once
-    val codes = e.crossJoin(broadcast(packed))
+    val codes = e.crossJoin(broadcast(packed)) // hint: scalar
       .select(col("vec_id"), sq8Codes.as("codes"))
       .localCheckpoint(true)
     // stage 1: Hamming pre-rank over the sketch table
@@ -2292,7 +2293,7 @@ object Similarity {
     val wHam = Window.partitionBy(col("probe_id"))
       .orderBy(col("hamming"), col("vec_id"))
     val st1 = sigs
-      .join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      .join(broadcast(probes), col("vec_id") =!= col("probe_id")) // hint: dial
       .withColumn("hamming",
         bit_count(col("sig").bitwiseXOR(col("psig"))).cast("long"))
       .withColumn("r1", row_number().over(wHam))
@@ -2305,7 +2306,7 @@ object Similarity {
       .orderBy(col("sq8_l2"), col("vec_id"))
     val st2 = st1
       .join(codes, Seq("vec_id"))
-      .join(broadcast(pcodes), Seq("probe_id"))
+      .join(broadcast(pcodes), Seq("probe_id")) // hint: dial
       .withColumn("sq8_l2",
         expr(s"""aggregate(sequence(0, ${Dim - 1}), CAST(0 AS BIGINT),
            | (acc, i) -> acc + (element_at(pc, i + 1) - element_at(codes, i + 1))
@@ -2320,7 +2321,7 @@ object Similarity {
     val wCos = Window.partitionBy(col("probe_id")).orderBy(cos.desc, col("vec_id"))
     val finals = st2
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(pvecs), Seq("probe_id"))
+      .join(broadcast(pvecs), Seq("probe_id")) // hint: dial
       .withColumn("rank", row_number().over(wCos).cast("long"))
       .filter(col("rank") <= CascadeK)
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("hamming"),
@@ -2446,7 +2447,7 @@ object Similarity {
       .localCheckpoint(true)
     val cembs = e.select(col("vec_id").as("cand"), col("embedding").as("ce"))
     val entries = probes.select(col("probe_id"))
-      .crossJoin(broadcast(
+      .crossJoin(broadcast( // hint: dial
         e.filter(col("vec_id") < BeamEntries).select(col("vec_id").as("cand"))))
       .filter(col("cand") =!= col("probe_id"))
     BeamMachinery(graph, probes, cembs, entries)
@@ -2458,9 +2459,9 @@ object Similarity {
     // the candidate set is probe-panel-grained (dial-bounded), the
     // embedding table is the corpus: broadcast the panel so the corpus
     // side streams exchange-free each round (s26's hnswRound rule)
-    broadcast(cands)
+    broadcast(cands) // hint: dial
       .join(m.cembs, Seq("cand"))
-      .join(broadcast(m.probes), Seq("probe_id"))
+      .join(broadcast(m.probes), Seq("probe_id")) // hint: dial
       .select(col("probe_id"), col("cand"),
         floor(cosineFast(col("pe"), col("ce")) * lit(1000000.0))
           .cast("long").as("cos_e6"))
@@ -2474,7 +2475,7 @@ object Similarity {
     // beam is panel-grained, the graph is the corpus-sized index —
     // broadcast the beam so the expansion streams the graph without
     // shuffling it each round (s26's hnswRound rule)
-    val nb = broadcast(beam)
+    val nb = broadcast(beam) // hint: dial
       .join(m.graph, col("cand") === col("g_src"))
       .select(col("probe_id"), col("g_dst").as("cand"))
     val candSet = beam.select(col("probe_id"), col("cand"))
@@ -2667,7 +2668,7 @@ object Similarity {
         min(col("vec_id")).as("e0"))
       .select(coalesce(col("e2"), col("e1"), col("e0")).as("cand"))
     val entry = probes.select(col("probe_id"))
-      .crossJoin(broadcast(entryRow)).localCheckpoint(true)
+      .crossJoin(broadcast(entryRow)).localCheckpoint(true) // hint: scalar
     val cembs = e.select(col("vec_id").as("cand"), col("embedding").as("ce"))
     HnswMachinery(probes, entry, cembs, g2, g1, g0)
   }
@@ -2699,7 +2700,7 @@ object Similarity {
     // with no exchange and no sort — the structurally right index-probe
     // plan at any scale (guide §3.1/§2.4); a sort-merge here shuffles the
     // graph once per round
-    val nb = broadcast(base).join(graph, col("cand") === col("g_src"))
+    val nb = broadcast(base).join(graph, col("cand") === col("g_src")) // hint: dial
       .select(col("probe_id"), col("g_dst").as("cand"))
     val candSet0 = base.union(nb)
       .filter(col("cand") =!= col("probe_id")).distinct()
@@ -2711,9 +2712,9 @@ object Similarity {
     // same rule for the scoring join: the candidate set is panel-grained,
     // the embedding table is the corpus — broadcast the panel so the
     // corpus side is one exchange-free, sort-free scan per round
-    val scored = broadcast(candSet)
+    val scored = broadcast(candSet) // hint: dial
       .join(m.cembs, Seq("cand"))
-      .join(broadcast(m.probes), Seq("probe_id"))
+      .join(broadcast(m.probes), Seq("probe_id")) // hint: dial
       .select(col("probe_id"), col("cand"),
         floor(cosineFast(col("pe"), col("ce")) * lit(1000000.0))
           .cast("long").as("cos_e6"))
@@ -3363,7 +3364,7 @@ object Similarity {
         posexplode(transform(topCells, c => c.getField("cid"))))
       .select(col("probe_id"), col("pe"), (col("pos") + 1).as("cell_rank"),
         col("col").as("cell"))
-    val cand = assigned.join(broadcast(probes), Seq("cell"))
+    val cand = assigned.join(broadcast(probes), Seq("cell")) // hint: dial
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"), col("cell_rank"),
         floor(cosineFast(col("pe"), col("embedding")) * lit(1000000.0))
@@ -3376,7 +3377,7 @@ object Similarity {
       SweepBudgets.map(_.toLong).toDF("nprobe")
     }
     val byBudget = cand
-      .crossJoin(broadcast(budgetTable))
+      .crossJoin(broadcast(budgetTable)) // hint: dial
       .filter(col("cell_rank") <= col("nprobe"))
     val w = Window.partitionBy(col("probe_id"), col("nprobe"))
       .orderBy(col("cos_e6").desc, col("vec_id"))
@@ -3395,7 +3396,7 @@ object Similarity {
       .join(topk.groupBy(col("nprobe")).agg(count(lit(1)).as("n_results")),
         Seq("nprobe"))
       .join(hits, Seq("nprobe"), "left")
-      .crossJoin(broadcast(nExact))
+      .crossJoin(broadcast(nExact)) // hint: scalar
       .select(col("nprobe").cast("long").as("nprobe"), col("n_candidates"),
         col("n_results"), coalesce(col("n_hits"), lit(0L)).as("n_hits"),
         col("n_exact"),
@@ -3633,7 +3634,7 @@ object Similarity {
         posexplode(transform(topCells, c => c.getField("cid"))))
       .select(col("probe_id"), (col("pos") + 1).cast("long").as("cell_rank"),
         col("col").as("cell"))
-      .join(broadcast(placed.select(col("cell"), col("shard"))), Seq("cell"))
+      .join(broadcast(placed.select(col("cell"), col("shard"))), Seq("cell")) // hint: dial
       .localCheckpoint(true) // probes x nprobe rows; 3 grain consumers
     val perProbe = routes.groupBy(col("probe_id"))
       .agg(countDistinct(col("cell")).as("n_cells"),
@@ -3649,7 +3650,7 @@ object Similarity {
       .agg(countDistinct(col("cell")).as("n_cells"),
         countDistinct(col("probe_id")).as("n_probes"),
         count(lit(1)).as("hits"))
-      .crossJoin(broadcast(totHits))
+      .crossJoin(broadcast(totHits)) // hint: scalar
       .select(concat(lit("~SHARD_"), col("shard").cast("string")).as("key"),
         lit("shard").as("grain"), col("shard"), col("n_cells"), lit(1L).as("n_shards"),
         col("n_probes"), col("hits"),
@@ -3659,7 +3660,7 @@ object Similarity {
         countDistinct(col("shard")).as("n_shards"),
         countDistinct(col("probe_id")).as("n_probes"),
         count(lit(1)).as("hits"))
-      .crossJoin(broadcast(
+      .crossJoin(broadcast( // hint: scalar
         perProbe.agg(sum(col("fanout_e6")).as("fsum"))))
       .select(lit("~TOTAL").as("key"), lit("total").as("grain"),
         lit(-1L).as("shard"), col("n_cells"), col("n_shards"),
@@ -3833,7 +3834,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_members"))
     val scal = cells.agg(sum(col("n_members")).as("total"),
       count(lit(1)).as("k"))
-    val per = cells.join(broadcast(scal))
+    val per = cells.join(broadcast(scal)) // hint: scalar
       .withColumn("cap", expr(
         s"($RebalanceCapNum * total + $RebalanceCapDen * k - 1L)" +
           s" div ($RebalanceCapDen * k)"))

@@ -526,7 +526,7 @@ object TextAnalysis {
     // n2 is the UNFILTERED bigram total: P(w1 w2) is relative to the whole
     // corpus, not to the pairs that happened to clear the report threshold
     val totals = uni.agg(sum(col("c")).as("n1"))
-      .crossJoin(broadcast(bigAll.agg(sum(col("c12")).as("n2"))))
+      .crossJoin(broadcast(bigAll.agg(sum(col("c12")).as("n2")))) // hint: scalar
     // lift = P(w1 w2) / (P(w1) * P(w2)); every factor is a long-derived
     // double, the op tree mirrors the oracle SQL exactly
     val lift = (col("c12").cast("double") / col("n2").cast("double")) /
@@ -537,7 +537,7 @@ object TextAnalysis {
       .withColumn("w2", element_at(split(col("bg"), " "), 2))
       .join(uni.select(col("w").as("w1"), col("c").as("c1")), Seq("w1"))
       .join(uni.select(col("w").as("w2"), col("c").as("c2")), Seq("w2"))
-      .crossJoin(broadcast(totals))
+      .crossJoin(broadcast(totals)) // hint: scalar
       .select(col("w1"), col("w2"), col("c12").as("pair_count"),
         col("c1").as("w1_count"), col("c2").as("w2_count"),
         floor(lift * lit(1000000.0)).cast("long").as("lift_e6"))
@@ -626,7 +626,7 @@ object TextAnalysis {
       .rowsBetween(Window.unboundedPreceding, -1)
     rulesDf
       .join(drops, col("rule_idx") === col("fail_idx"), "left")
-      .crossJoin(broadcast(total))
+      .crossJoin(broadcast(total)) // hint: scalar
       .withColumn("n_dropped", coalesce(col("n"), lit(0L)))
       .withColumn("n_in",
         col("n_total") - coalesce(sum(col("n_dropped")).over(wPrev), lit(0L)))
@@ -703,7 +703,7 @@ object TextAnalysis {
     val wTop = Window.partitionBy(col("doc_id"))
       .orderBy(col("weight_e6").desc, col("term"))
     tf.join(dfreq, Seq("term"))
-      .crossJoin(broadcast(total))
+      .crossJoin(broadcast(total)) // hint: scalar
       .withColumn("weight_e6",
         floor(col("tf").cast("double") * col("n_docs").cast("double") /
           col("df").cast("double") * lit(1000000.0)).cast("long"))
@@ -813,11 +813,11 @@ object TextAnalysis {
     val totals = grams.agg(count(lit(1)).as("tr"), sum(col("is_target")).as("tt"))
     val ratios = grams.groupBy(col("b"))
       .agg(count(lit(1)).as("n_r"), sum(col("is_target")).as("n_t"))
-      .crossJoin(broadcast(totals))
+      .crossJoin(broadcast(totals)) // hint: scalar
       .select(col("b"), expr(
         s"((n_t + 1) * (tr + $ImpBuckets) * 1000000) div ((n_r + 1) * (tt + $ImpBuckets))")
         .as("ratio_e6"))
-    val perDoc = grams.join(broadcast(ratios), Seq("b"))
+    val perDoc = grams.join(broadcast(ratios), Seq("b")) // hint: dial
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"), sum(col("ratio_e6")).as("rsum"))
     docs.select(col("doc_id"), when(isTarget, 1L).otherwise(0L).as("is_target"))
@@ -855,9 +855,10 @@ object TextAnalysis {
       .join(docs, Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("lm_score_e6"))
     val ps = PrefixSum(scored, Seq(col("lm_score_e6"), col("doc_id")), Some("source"), 0)
+    // source-grained, off the checkpointed ranged frame (no size estimate)
     val nPer = ps.ranged.groupBy(col("source")).agg(count(lit(1)).as("n_scored"))
     val verdicts = ps.runningCount("rank_in_source")
-      .join(broadcast(nPer), Seq("source"))
+      .join(BoundedBroadcast.hintIfBounded(nPer, nPer.count()), Seq("source"))
       .withColumn("bucket", expr("((n_scored - rank_in_source) * 3) div n_scored"))
       .select(col("doc_id"), col("lm_score_e6"), col("rank_in_source"),
         col("n_scored"), col("bucket"))
@@ -1164,7 +1165,7 @@ object TextAnalysis {
       .localCheckpoint(true) // |sources| rows; totals + shares read it
     val tot = src.agg(sum(col("n_tokens")).as("tot_tokens"),
       sum(col("w_sqrt")).as("tot_sqrt"))
-    src.crossJoin(broadcast(tot))
+    src.crossJoin(broadcast(tot)) // hint: scalar
       .select(col("source"), col("n_docs"), col("n_tokens"),
         expr("n_tokens * CAST(1000000 AS DECIMAL(38,0)) div tot_tokens")
           .as("natural_share_e6"),
@@ -1214,8 +1215,8 @@ object TextAnalysis {
       .agg(sum(col("c")).as("n_toks"), count(lit(1)).as("n_terms"))
     val nTot = ns.agg(sum(col("n_toks")).as("n_all"))
     st.join(g, "term")
-      .join(broadcast(ns), "source")
-      .crossJoin(broadcast(nTot))
+      .join(ns, "source")
+      .crossJoin(broadcast(nTot)) // hint: scalar
       .withColumn("dev", expr(
         "abs(CAST(c AS DECIMAL(38,0)) * n_all - CAST(g AS DECIMAL(38,0)) * n_toks)"))
       .groupBy(col("source"), col("n_toks"), col("n_terms"), col("n_all"))
@@ -1455,7 +1456,7 @@ object TextAnalysis {
       .agg(max(col("doc_id")).as("max_id"))
     val bucketed = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .crossJoin(broadcast(mx))
+      .crossJoin(broadcast(mx)) // hint: scalar
       .select(expr(s"doc_id * $HeapsBuckets div (max_id + 1)").as("ckpt"),
         col("toks"))
       .localCheckpoint(true) // doc-grain; histogram + type paths read it
@@ -1578,8 +1579,8 @@ object TextAnalysis {
     val byPred = cells.groupBy(col("predicted_lang"))
       .agg(sum(col("n")).as("n_predicted"))
     cells
-      .join(broadcast(byLabel), Seq("labeled_lang"))
-      .join(broadcast(byPred), Seq("predicted_lang"))
+      .join(byLabel, Seq("labeled_lang"))
+      .join(byPred, Seq("predicted_lang"))
       .select(col("labeled_lang"), col("predicted_lang"), col("n"),
         col("n_labeled"), col("n_predicted"),
         expr("n * 1000000 div n_labeled").as("recall_share_e6"),
@@ -1763,7 +1764,7 @@ object TextAnalysis {
       .agg(sum(col("n_toks")).as("nat_toks"))
       .localCheckpoint(true) // |sources| rows; totals + plan both read it
     val tot = src.agg(sum(col("nat_toks")).as("t"), sum(col("weight")).as("w"))
-    val base = src.crossJoin(broadcast(tot))
+    val base = src.crossJoin(broadcast(tot)) // hint: scalar
       .withColumn("budget", col("t") * BudgetMult)
       .withColumn("target_toks", expr("budget * weight div w"))
       .withColumn("capped",
@@ -1773,7 +1774,7 @@ object TextAnalysis {
     val pool = base.agg(
       sum(col("target_toks") - col("realized_toks")).as("deficit"),
       sum(when(col("capped") === 0, col("weight")).otherwise(0L)).as("wu"))
-    base.crossJoin(broadcast(pool))
+    base.crossJoin(broadcast(pool)) // hint: scalar
       .withColumn("extra_toks",
         when(col("capped") === 0 && col("wu") > 0,
           expr("deficit * weight div wu")).otherwise(0L))
@@ -1990,7 +1991,7 @@ object TextAnalysis {
         sum(greatest(col("n") - L, lit(0L))).as("lost_tokens"))
       .localCheckpoint(true) // <=64 rows; per-bucket + ~TOTAL read it
     val scal = per.agg(sum(col("n_tokens")).as("tot"))
-    val rows = per.join(broadcast(scal))
+    val rows = per.join(broadcast(scal)) // hint: scalar
       .select(lpad(col("fbin").cast("string"), 2, "0").as("key"),
         col("fbin"), col("n_docs"), col("n_tokens"),
         expr("n_tokens * CAST(1000000 AS DECIMAL(38,0)) div greatest(tot, 1)")
@@ -2066,7 +2067,7 @@ object TextAnalysis {
         coalesce(sum(col("n_occ") * col("n_tok")), lit(0L)).as("n_tokens"))
       .localCheckpoint(true) // <=4 rows; shares + ~TOTAL read it
     val scal = per.agg(sum(col("n_occ")).as("tot_occ"))
-    val rows = per.join(broadcast(scal))
+    val rows = per.join(broadcast(scal)) // hint: scalar
       .select(col("verdict"), col("n_types"), col("n_occ"), col("n_chars"),
         col("n_tokens"),
         expr("n_occ * CAST(1000000 AS DECIMAL(38,0)) div tot_occ")

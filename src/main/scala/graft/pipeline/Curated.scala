@@ -9,17 +9,18 @@ import graft.Tables
   * /root/reference/dags/pipeline_orchestration_dag.py:173-182) re-expressed
   * as customer⋈nation⋈region.
   *
-  * Scale: both dims are broadcast (nation/region are KBs at any SF), so the
-  * fact side streams through two broadcast-hash joins with zero shuffle.
+  * Scale: the planner broadcasts both dims with no hint — each is a plain
+  * nation/region scan, KBs at any SF — so the customer side streams
+  * through two broadcast-hash joins with zero shuffle.
   */
 object Curated {
 
   /** `p6_curated_join`: denormalized customer dimension. */
   def p6CuratedJoin(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "customer")
-      .join(broadcast(Tables.load(spark, dir, "nation")),
+      .join(Tables.load(spark, dir, "nation"),
         col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.load(spark, dir, "region")),
+      .join(Tables.load(spark, dir, "region"),
         col("n_regionkey") === col("r_regionkey"))
       .select(
         col("c_custkey"),

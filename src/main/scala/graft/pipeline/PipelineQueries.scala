@@ -124,7 +124,7 @@ object PipelineQueries {
     val z = "aggregate(sequence(0, 15), CAST(0 AS BIGINT), (acc, i) -> acc" +
       " + shiftleft(CAST(shiftrightunsigned(xn, i) & 1 AS BIGINT), 2 * i)" +
       " + shiftleft(CAST(shiftrightunsigned(yn, i) & 1 AS BIGINT), 2 * i + 1))"
-    o.crossJoin(broadcast(stats))
+    o.crossJoin(broadcast(stats)) // hint: scalar
       .withColumn("xn", expr(norm("day", "day_min", "day_max")))
       .withColumn("yn", expr(norm("cust", "cust_min", "cust_max")))
       .withColumn("zkey", expr(z))
@@ -221,7 +221,7 @@ object PipelineQueries {
     val tot = files.agg(sum(col("bytes")).as("total"))
     PrefixSum(files, Seq(col("zcell")), None, ranges)
       .runningSums("bytes" -> "cum")
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(tot)) // hint: scalar
       .withColumn("cum_before", col("cum") - col("bytes"))
       .withColumn("target", expr(s"(total + ${CompactBins - 1}) div $CompactBins"))
       .withColumn("bin", expr("cum_before div target"))
@@ -279,7 +279,7 @@ object PipelineQueries {
     val tot = files.agg(sum(col("n_rows")).as("total_rows"))
     val intersects = col("x_min") <= PruneXHi && col("x_max") >= PruneXLo &&
       col("y_min") <= PruneYHi && col("y_max") >= PruneYLo
-    val per = files.crossJoin(broadcast(tot))
+    val per = files.crossJoin(broadcast(tot)) // hint: scalar
       .withColumn("must_read", when(intersects, 1L).otherwise(0L))
       .withColumn("verdict",
         when(col("must_read") === 0, "skipped")
@@ -497,7 +497,7 @@ object PipelineQueries {
     val files = zkeyedOrders(spark, dir)
       .withColumn("zcell",
         shiftrightunsigned(col("zkey"), 2 * ZGridBits - ZFileBits))
-      .join(broadcast(req), col("cust") === col("rk"), "left")
+      .join(req, col("cust") === col("rk"), "left")
       .groupBy(col("zcell"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("cust")).as("cust_min"), max(col("cust")).as("cust_max"),
@@ -509,11 +509,11 @@ object PipelineQueries {
       max(col("cust_max")).as("ghi"))
     val bw = s"((ghi - glo) div $ErasureBands + 1)"
     val fileBands = files.select(col("zcell"), col("cust_min"), col("cust_max"))
-      .crossJoin(broadcast(gstats))
+      .crossJoin(broadcast(gstats)) // hint: scalar
       .withColumn("band", explode(expr(
         s"sequence((cust_min - glo) div $bw, (cust_max - glo) div $bw)")))
       .select(col("zcell"), col("cust_min"), col("cust_max"), col("band"))
-    val reqBands = req.crossJoin(broadcast(gstats))
+    val reqBands = req.crossJoin(broadcast(gstats)) // hint: scalar
       // requests outside the manifest's range land in out-of-range bands
       // and simply never match — they cannot be inside any file range
       .withColumn("band", expr(s"(rk - glo) div $bw"))
@@ -632,7 +632,7 @@ object PipelineQueries {
     def tier(age: Column): Column =
       when(age < HotMonths, "HOT").when(age < WarmMonths, "WARM")
         .otherwise("COLD")
-    led.crossJoin(broadcast(mx))
+    led.crossJoin(broadcast(mx)) // hint: scalar
       .withColumn("age", col("max_m") - col("m"))
       .withColumn("tier_to", tier(col("age")))
       .withColumn("tier_from",
@@ -726,7 +726,7 @@ object PipelineQueries {
       .withColumn("pmask",
         expr(s"shiftleft(CAST(1 AS BIGINT), CAST(pos % $BloomWordBits AS INT))"))
       .select(col("pk"), col("i"), col("word"), col("pmask"))
-    val cand = index.join(broadcast(ppairs), Seq("word"))
+    val cand = index.join(ppairs, Seq("word"))
       .filter(col("bits").bitwiseAND(col("pmask")) =!= 0L)
       .groupBy(col("pk"), col("file_id")).agg(count(lit(1)).as("nh"))
       .filter(col("nh") === BloomHashes.toLong)
@@ -739,7 +739,7 @@ object PipelineQueries {
     probes
       .join(cand, Seq("pk"), "left")
       .join(truth, col("pk") === col("key"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(tot)) // hint: scalar
       .select(col("pk"), col("n_files"),
         coalesce(col("cand_files"), lit(0L)).as("n_candidate_files"),
         coalesce(col("true_files"), lit(0L)).as("n_true_files"),
@@ -937,8 +937,8 @@ object PipelineQueries {
         sum(col("cents").cast("decimal(38,0)")).over(wCum))
       .withColumn("pos_in_yr", row_number()
         .over(Window.partitionBy(col("yr")).orderBy(col("mo"))).cast("long"))
-      .join(broadcast(yearCounts.select((col("yr") + 1).as("yr"),
-        col("n_m").as("prev_n_m"))), Seq("yr"), "left")
+      .join(yearCounts.select((col("yr") + 1).as("yr"),
+        col("n_m").as("prev_n_m")), Seq("yr"), "left")
       .withColumn("removed", when(col("pos_in_yr") === 1,
         coalesce(col("prev_n_m"), lit(0L))).otherwise(lit(0L)))
       .withColumn("added",
@@ -996,13 +996,13 @@ object PipelineQueries {
     val yrFirst = ver.groupBy(col("yr"))
       .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
     val monthFiles = ver
-      .join(broadcast(yrFirst.select((col("yr") - 1).as("yr"),
-        col("y_first").as("removed_v"))), Seq("yr"), "left")
+      .join(yrFirst.select((col("yr") - 1).as("yr"),
+        col("y_first").as("removed_v")), Seq("yr"), "left")
       .select(concat(lit("month_"), col("mo").cast("string")).as("key"),
         lit("month").as("kind"), col("version").as("born_v"),
         coalesce(col("removed_v"), lit(-1L)).as("removed_v"), col("n_rows"))
     val yearFiles = yrFirst.as("a")
-      .join(broadcast(yrFirst.select(col("yr"), col("y_first")).as("b")),
+      .join(yrFirst.select(col("yr"), col("y_first")).as("b"),
         col("b.yr") === col("a.yr") + 1)
       .select(concat(lit("year_"), col("a.yr").cast("string")).as("key"),
         lit("year").as("kind"), col("b.y_first").as("born_v"),
@@ -1106,7 +1106,7 @@ object PipelineQueries {
         make_date(col("y_mid").cast("int"), lit(7), lit(15)),
         lit("1970-01-01")).cast("long"))
       .select(col("y_mid"), col("p_lo"), col("p_hi"))
-    val files = o.crossJoin(broadcast(bounds))
+    val files = o.crossJoin(broadcast(bounds)) // hint: scalar
       .withColumn("spec",
         when(col("yr") < col("y_mid"), "v1_month").otherwise("v2_week"))
       .withColumn("file_key",
@@ -1230,7 +1230,7 @@ object PipelineQueries {
       .select(greatest(col("max_v") - RetainVersions + 1, lit(1L))
         .as("min_retained"))
     val files = chainFiles(ver)
-      .crossJoin(broadcast(floorV))
+      .crossJoin(broadcast(floorV)) // hint: scalar
       .withColumn("verdict",
         when(col("removed_v") === -1L, "live")
           .when(col("removed_v") - 1 >= col("min_retained"), "retained")
@@ -1336,11 +1336,11 @@ object PipelineQueries {
     val ver = versionedManifest(spark, dir)
     val heads = ver.agg(max(col("version")).as("v_head"))
       .withColumn("v_rep", greatest(col("v_head") - ReplicaLag, lit(1L)))
-    val hMark = ver.join(broadcast(heads), col("version") === col("v_head"))
+    val hMark = ver.join(broadcast(heads), col("version") === col("v_head")) // hint: scalar
       .select(col("mo").as("mo_h"), col("yr").as("yr_h"))
-    val rMark = ver.join(broadcast(heads), col("version") === col("v_rep"))
+    val rMark = ver.join(broadcast(heads), col("version") === col("v_rep")) // hint: scalar
       .select(col("mo").as("mo_r"), col("yr").as("yr_r"))
-    val marked = ver.crossJoin(broadcast(hMark)).crossJoin(broadcast(rMark))
+    val marked = ver.crossJoin(broadcast(hMark)).crossJoin(broadcast(rMark)) // hint: scalar
     val shipMonths = marked
       .filter(col("yr") === col("yr_h") && col("mo") <= col("mo_h") &&
         (col("yr_r") < col("yr_h") || col("mo") > col("mo_r")))
@@ -1509,7 +1509,7 @@ object PipelineQueries {
     // mo <= mo_v alone IS the live-month rule: yr < yr_v implies mo < mo_v
     // on the calendar-total mo key, so the year/month split below only
     // decides which FILE carries a live month, never liveness itself
-    val live = mf.crossJoin(broadcast(cursors))
+    val live = mf.crossJoin(broadcast(cursors)) // hint: dial
       .filter(col("mo") <= col("mo_v"))
     val years = live.filter(col("yr") < col("yr_v"))
       .groupBy(col("sample_v"), col("yr"))
@@ -1618,7 +1618,7 @@ object PipelineQueries {
     val width = oFiles.agg(
       expr(s"max(k_max) div $JoinPruneBuckets + 1").as("bw"))
     def spans(files: DataFrame): DataFrame =
-      files.crossJoin(broadcast(width))
+      files.crossJoin(broadcast(width)) // hint: scalar
         .withColumn("b",
           explode(sequence(expr("k_min div bw"), expr("k_max div bw"))))
         .select(col("layout"), col("file_id"), col("k_min"), col("k_max"),
@@ -1636,8 +1636,8 @@ object PipelineQueries {
       .agg(count(lit(1)).as("n_ord_files"))
     val lCnt = lFiles.groupBy(col("layout"))
       .agg(count(lit(1)).as("n_li_files"))
-    oCnt.join(broadcast(lCnt), "layout")
-      .join(broadcast(pairs), Seq("layout"), "left")
+    oCnt.join(broadcast(lCnt), "layout") // hint: dial
+      .join(broadcast(pairs), Seq("layout"), "left") // hint: dial
       .withColumn("n_overlap_pairs", coalesce(col("n_overlap_pairs"), lit(0L)))
       .withColumn("n_pairs", col("n_ord_files") * col("n_li_files"))
       .select(col("layout"), col("n_ord_files"), col("n_li_files"),
@@ -1738,7 +1738,7 @@ object PipelineQueries {
       expr(s"max(k_max) div $JoinPruneBuckets + 1").as("bw"),
       max(col("k_max")).as("maxk"))
     def spans(files: DataFrame): DataFrame =
-      files.crossJoin(broadcast(scalars))
+      files.crossJoin(broadcast(scalars)) // hint: scalar
         .withColumn("b",
           explode(sequence(expr("k_min div bw"), expr("k_max div bw"))))
         .select(col("layout"), col("file_id"), col("k_min"), col("k_max"),
@@ -1762,7 +1762,7 @@ object PipelineQueries {
         col("c.file_id").as("cf"))
       .distinct()
       .groupBy(col("layout")).agg(count(lit(1)).as("n_self_pairs"))
-    val boxed = oFiles.crossJoin(broadcast(scalars))
+    val boxed = oFiles.crossJoin(broadcast(scalars)) // hint: scalar
       .groupBy(col("layout"))
       .agg(count(lit(1)).as("n_files"),
         sum(when(col("k_max") < expr(s"maxk div 8 * $AdvisorBoxLoEighths") ||
@@ -1770,9 +1770,9 @@ object PipelineQueries {
           .otherwise(0L)).as("n_skipped"))
     val lCnt = lFiles.groupBy(col("layout"))
       .agg(count(lit(1)).as("n_li_files"))
-    val scored = boxed.join(broadcast(lCnt), "layout")
-      .join(broadcast(joinPairs), Seq("layout"), "left")
-      .join(broadcast(selfPairs), Seq("layout"), "left")
+    val scored = boxed.join(broadcast(lCnt), "layout") // hint: dial
+      .join(broadcast(joinPairs), Seq("layout"), "left") // hint: dial
+      .join(broadcast(selfPairs), Seq("layout"), "left") // hint: dial
       .withColumn("n_join_pairs", coalesce(col("n_join_pairs"), lit(0L)))
       .withColumn("n_self_pairs", coalesce(col("n_self_pairs"), lit(0L)))
       .select(col("layout"), col("n_files"), col("n_li_files"),
@@ -1794,7 +1794,7 @@ object PipelineQueries {
       .agg(min(struct((col("score_e6") * -1).as("neg"),
         col("layout").as("layout"))).as("b"))
       .select(col("b.layout").as("best_layout"))
-    scored.crossJoin(broadcast(best))
+    scored.crossJoin(broadcast(best)) // hint: scalar
       .withColumn("recommended",
         when(col("layout") === col("best_layout"), 1L).otherwise(0L))
       .drop("best_layout")
@@ -1920,7 +1920,7 @@ object PipelineQueries {
         greatest(col("head") - depth, lit(1L)).as("target"),
         greatest(col("head") - RetainVersions + 1, lit(1L)).as("min_retained"))
     val files = chainFiles(ver)
-      .crossJoin(broadcast(scal))
+      .crossJoin(broadcast(scal)) // hint: scalar
       .withColumn("live_head", col("removed_v") === -1L ||
         col("removed_v") > col("head"))
       .withColumn("live_tgt", col("born_v") <= col("target") &&
@@ -2036,9 +2036,9 @@ object PipelineQueries {
     val yrRows = ver.groupBy(col("yr"))
       .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
     val per = ver
-      .join(broadcast(yrRows.select(col("yr"), col("y_first"))), Seq("yr"))
-      .join(broadcast(yrRows.select((col("yr") + 1).as("yr"),
-        col("y_rows").as("rewrite_rows"))), Seq("yr"), "left")
+      .join(yrRows.select(col("yr"), col("y_first")), Seq("yr"))
+      .join(yrRows.select((col("yr") + 1).as("yr"),
+        col("y_rows").as("rewrite_rows")), Seq("yr"), "left")
       .select(col("version"), col("mo"), col("n_rows").as("rows_landed"),
         (col("n_rows") + when(col("version") === col("y_first"),
           coalesce(col("rewrite_rows"), lit(0L))).otherwise(0L))
@@ -2273,7 +2273,7 @@ object PipelineQueries {
     val per = zkeyedOrders(spark, dir)
       .withColumn("zcell",
         shiftrightunsigned(col("zkey"), 2 * ZGridBits - ZFileBits))
-      .join(broadcast(req), col("cust") === col("rk"), "left")
+      .join(req, col("cust") === col("rk"), "left")
       .groupBy(col("zcell"))
       .agg(count(lit(1)).as("n_rows"),
         count(col("rk")).as("n_deleted"),
@@ -2369,10 +2369,10 @@ object PipelineQueries {
     val yc = ver.groupBy(col("yr")).agg(count(lit(1)).as("n_m"))
     val heads = ver.agg(max(col("version")).as("v_head"))
       .withColumn("v_lo", greatest(col("v_head") - ReplicaLag, lit(1L)))
-    val w = ver.crossJoin(broadcast(heads))
+    val w = ver.crossJoin(broadcast(heads)) // hint: scalar
       .filter(col("version") > col("v_lo") && col("version") <= col("v_head"))
-      .join(broadcast(yc.select((col("yr") + 1).as("yr"),
-        col("n_m").as("prev_n_m"))), Seq("yr"), "left")
+      .join(yc.select((col("yr") + 1).as("yr"),
+        col("n_m").as("prev_n_m")), Seq("yr"), "left")
       .withColumn("prev_n_m", coalesce(col("prev_n_m"), lit(0L)))
     def vkey = concat(lit("v"), lpad(col("version").cast("string"), 4, "0"))
     val ins = w.select(vkey.as("key"), lit("insert").as("change"),

@@ -210,7 +210,7 @@ object Quality {
     // and the ~TOTAL L1 maxes out at 1e6: the gate FIRES on an outage
     // instead of dividing 0/0 (whose NaN Spark would silently cast to 0
     // while the oracle errors)
-    val per = counts.crossJoin(broadcast(tot))
+    val per = counts.crossJoin(broadcast(tot)) // hint: scalar
       .withColumn("share_a_e6", when(col("t_a") > 0,
         floor(col("n_a") * lit(1000000.0) / col("t_a")).cast("long")).otherwise(0L))
       .withColumn("share_b_e6", when(col("t_b") > 0,

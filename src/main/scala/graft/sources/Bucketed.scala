@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.BoundedBroadcast.hintIfBounded
 
 /** Bucketed fact layout + its shuffle-free consumers.
   *
@@ -127,7 +128,8 @@ object Bucketed {
     }
   }
 
-  /** q3 + `broadcast(cust)`: threshold -1 specs need it; q3 must not (customer grows with SF). */
+  /** q3 with a size-gated customer hint: SourcesSpec pins the bucketed
+    * plan with auto-broadcast off, where only a hint keeps the dim join unshuffled. */
   def q3OverBuckets(spark: SparkSession, dir: String,
                     lineitemTable: String, ordersTable: String): DataFrame = {
     val cutoff = lit("1998-06-01").cast("timestamp")
@@ -139,7 +141,7 @@ object Bucketed {
     val li = spark.table(lineitemTable).filter(col("l_shipdate") > cutoff)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      .join(hintIfBounded(cust, cust.count()), col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
         .as("revenue"))
@@ -150,16 +152,16 @@ object Bucketed {
       .limit(20)
   }
 
-  /** q47 + `broadcast(cust)`: threshold -1 specs need it; q47 must not (customer grows with SF). */
+  /** q47 with size-gated supplier and customer hints, as [[q3OverBuckets]]. */
   def q47OverBuckets(spark: SparkSession, dir: String,
                      lineitemTable: String, ordersTable: String): DataFrame = {
     val nat = Tables.load(spark, dir, "nation")
       .filter(col("n_name").isin("NATION_13", "NATION_19"))
     val sup = Tables.load(spark, dir, "supplier")
-      .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
+      .join(nat, col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation"))
     val cust = Tables.load(spark, dir, "customer")
-      .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
+      .join(nat, col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
     val li = spark.table(lineitemTable)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -167,10 +169,10 @@ object Bucketed {
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
-      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(hintIfBounded(sup, sup.count()), col("l_suppkey") === col("s_suppkey"))
     val ord = spark.table(ordersTable)
       .select(col("o_orderkey"), col("o_custkey"))
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+      .join(hintIfBounded(cust, cust.count()), col("o_custkey") === col("c_custkey"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("supp_nation") =!= col("cust_nation"))
       .groupBy(col("supp_nation"), col("cust_nation"),

@@ -124,7 +124,7 @@ object StreamQueries {
     val cut = ev.agg(
       expr("CAST((min(ts_us) + max(ts_us) + 1) div 2 AS BIGINT)").as("cut_us"))
     Seq(col("ts_us") < col("cut_us"), col("ts_us") >= col("cut_us"))
-      .map(side => ev.crossJoin(broadcast(cut)).filter(side).drop("cut_us"))
+      .map(side => ev.crossJoin(broadcast(cut)).filter(side).drop("cut_us")) // hint: scalar
   }
 
   /** The newest state version of st2/st4's versioned sink, once the

@@ -75,4 +75,31 @@ class BoundedBroadcastSpec extends AnyFunSuite {
     assert(BoundedBroadcast.DefaultMaxRows <= 512000000L / 10,
       "default bound leaves no headroom under the broadcast cap")
   }
+
+  test("hint lint: every raw broadcast( in src/main/scala names its bound " +
+    "(// hint: scalar | dial); everything else is the planner's or " +
+    "hintIfBounded's call") {
+    // a source scan, not a plan walk: a hint inside a checkpointed
+    // sub-frame never reaches the final frame's plan
+    val call = "(?<![.\\w])broadcast\\(".r
+    val tag = "// hint: (scalar|dial)\\b".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    assert(files.nonEmpty, "no sources under src/main/scala")
+    val untagged = for {
+      f <- files if f.getName != "BoundedBroadcast.scala" // the gated hint itself
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.toSeq
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      if call.findFirstIn(code.split("//", 2)(0)).isDefined && tag.findFirstIn(code).isEmpty
+    } yield s"${f.getPath}:${i + 1}: $code"
+    assert(untagged.isEmpty,
+      "broadcast( hint without a reason tag — drop it (the planner sizes " +
+        "the side), use BoundedBroadcast.hintIfBounded, or tag a one-row " +
+        s"(scalar) or dial-bounded (dial) side:\n${untagged.mkString("\n")}")
+  }
 }

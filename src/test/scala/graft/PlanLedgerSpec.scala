@@ -61,4 +61,41 @@ class PlanLedgerSpec extends AnyFunSuite {
     assert(parts.length == PlanLedger.columns.size + 1, r)
     assert(parts.head == "q1" && parts.tail.forall(_.forall(_.isDigit)), r)
   }
+
+  test("cross-scale ledger: every query whose join or exchange columns " +
+    "differ between the newest sf0.001 ledger and its sf0.1 sibling has " +
+    "a `# scale: <query> <reason>` line, and every such line names a row " +
+    "that differs") {
+    import scala.jdk.CollectionConverters._
+    val docs = new java.io.File("docs")
+    val small = Option(docs.listFiles()).toSeq.flatten
+      .filter(_.getName.matches("PLANS_r\\d+\\.txt"))
+      .sortBy(_.getName.stripPrefix("PLANS_r").stripSuffix(".txt").toInt)
+      .lastOption.getOrElse(fail("no docs/PLANS_r*.txt committed"))
+    val large = new java.io.File(docs, small.getName.stripSuffix(".txt") + "_sf0.1.txt")
+    assert(large.exists, s"no sf0.1 ledger beside ${small.getName}: commit " +
+      s"`graft.ExplainOne ledger <sf0.1 dir>` as docs/${large.getName}")
+    def lines(f: java.io.File) = java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+    val structural = Seq("exch_hash", "exch_range", "exch_single", "bcast_hj",
+      "shuffled_j", "bnlj", "cartesian").map(PlanLedger.columns.indexOf(_))
+    assert(!structural.contains(-1), s"ledger columns renamed: ${PlanLedger.columns}")
+    def rows(f: java.io.File): Map[String, Seq[String]] =
+      lines(f).filterNot(_.startsWith("#")).map(_.split(" ").toSeq)
+        .collect { case n +: cs if cs.size == PlanLedger.columns.size =>
+          n -> structural.map(cs) }.toMap
+    val (a, b) = (rows(small), rows(large))
+    assert(a.keySet == b.keySet, s"the two ledgers list different queries: " +
+      s"${(a.keySet diff b.keySet) ++ (b.keySet diff a.keySet)}")
+    val differ = a.keySet.filter(q => a(q) != b(q))
+    val reasons = lines(large).collect { case l if l.startsWith("# scale: ") =>
+      l.stripPrefix("# scale: ").split(" ", 2).toSeq }
+    val named = reasons.collect { case Seq(q, why) if why.trim.nonEmpty => q }.toSet
+    assert(named.size == reasons.size, s"a `# scale:` line lacks its reason: $reasons")
+    val unexplained = (differ -- named).toSeq.sorted
+      .map(q => s"$q: ${a(q).mkString(" ")} -> ${b(q).mkString(" ")}")
+    assert(unexplained.isEmpty, s"rows that change with scale need a `# scale: <query> " +
+      s"<reason>` line in ${large.getName}:\n${unexplained.mkString("\n")}")
+    val stale = (named -- differ).toSeq.sorted
+    assert(stale.isEmpty, s"`# scale:` lines name rows that do not differ: $stale")
+  }
 }
