@@ -25,6 +25,14 @@ object Tables {
     "orders" -> Set("o_orderdate"),
     "lineitem" -> Set("l_shipdate", "l_commitdate", "l_receiptdate"))
 
+  /** Row count of a base table, counted once per (JVM, dir, table): the
+    * measured bound a `BoundedBroadcast.hintIfBounded` dim side filtered
+    * from that table passes, so rebuilding the query runs no count job. */
+  private val rowCounts =
+    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  def rows(spark: SparkSession, dir: String, name: String): Long =
+    rowCounts.getOrElseUpdate((dir, name), load(spark, dir, name).count())
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts has shipped in two physical encodings across testdata
     // generations: parquet TIMESTAMP(NANOS) (which Spark's vectorized

@@ -38,14 +38,23 @@ object Analytics {
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
-  /** TPC-H Q3-style shipping priority: filtered fact-fact joins + top-N. */
-  def q3ShippingPriority(spark: SparkSession, dir: String): DataFrame = {
+  /** TPC-H Q3-style shipping priority: filtered fact-fact joins + top-N.
+    * The customer side is a size-gated hint: p34 runs this body over the
+    * bucketed layout, and SourcesSpec pins that plan with auto-broadcast
+    * off, where only a hint keeps the dim join unshuffled. */
+  def q3ShippingPriority(spark: SparkSession, dir: String): DataFrame =
+    q3ShippingPriorityOver(spark, dir, t(spark, dir, "lineitem"), t(spark, dir, "orders"))
+
+  /** q3 over the given fact frames: the parquet facts, or p34's bucketed layout. */
+  def q3ShippingPriorityOver(spark: SparkSession, dir: String,
+                             lineitem: DataFrame, orders: DataFrame): DataFrame = {
     val cutoff = lit("1998-06-01").cast("timestamp")
     val cust = t(spark, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val ord = t(spark, dir, "orders").filter(col("o_orderdate") < cutoff)
-    val li = t(spark, dir, "lineitem").filter(col("l_shipdate") > cutoff)
+    val ord = orders.filter(col("o_orderdate") < cutoff)
+    val li = lineitem.filter(col("l_shipdate") > cutoff)
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
+      .join(BoundedBroadcast.hintIfBounded(cust, Tables.rows(spark, dir, "customer")),
+        col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
       .select(
@@ -249,7 +258,7 @@ object Analytics {
       .distinct()
     // equal-width range bucket — the SAME expression at both consumers
     val bucketed = melted.filter(col("v").isNotNull)
-      .join(stats.select(col(grp), col("tag"), col("mn"), col("mx")),
+      .join(broadcast(stats.select(col(grp), col("tag"), col("mn"), col("mx"))), // hint: dial
         Seq(grp, "tag"))
       .filter(col("mn") =!= col("mx"))
       .withColumn("bucket", least(lit(buckets - 1),
@@ -288,13 +297,13 @@ object Analytics {
     // located in the cumulative counts of the sorted distinct values
     val wB = Window.partitionBy(col(grp), col("tag"), col("bucket")).orderBy(col("v"))
     val picked = bucketed
-      .join(bucketRanks.select(col(grp), col("tag"), col("bucket")).distinct(),
+      .join(broadcast(bucketRanks.select(col(grp), col("tag"), col("bucket")).distinct()), // hint: dial
         Seq(grp, "tag", "bucket"))
       .groupBy(col(grp), col("tag"), col("bucket"), col("v"))
       .agg(count(lit(1)).as("c"))
       .withColumn("cum", coalesce(
         sum(col("c")).over(wB.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .join(bucketRanks,
+      .join(broadcast(bucketRanks), // hint: dial
         Seq(grp, "tag", "bucket")) // + rank-in-range filter next line
       .filter(col("local_rank") > col("cum") &&
         col("local_rank") <= col("cum") + col("c"))
@@ -521,7 +530,7 @@ object Analytics {
     val cust = t(spark, dir, "customer").select(col("c_custkey"), col("c_name"))
     orders
       .join(big, col("o_orderkey") === col("l_orderkey"))
-      .join(BoundedBroadcast.hintIfBounded(cust, cust.count()),
+      .join(BoundedBroadcast.hintIfBounded(cust, Tables.rows(spark, dir, "customer")),
         col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
@@ -688,10 +697,16 @@ object Analytics {
     * to the two nations broadcasts onto lineitem before anything
     * fact-fact, so only the ~2/25 of lines sold by those nations reach
     * the orderkey shuffle. The customer nation attaches the same way on
-    * the orders side (nation is a broadcast dim on both). One fact-fact
+    * the orders side. Both dim sides are size-gated hints, as in q3 (p36
+    * runs this body over the bucketed layout). One fact-fact
     * shuffle on orderkey, then a 4-row aggregate with map-side
     * partials. The oracle states the textbook nation-pair disjunction. */
-  def q47VolumeShipping(spark: SparkSession, dir: String): DataFrame = {
+  def q47VolumeShipping(spark: SparkSession, dir: String): DataFrame =
+    q47VolumeShippingOver(spark, dir, t(spark, dir, "lineitem"), t(spark, dir, "orders"))
+
+  /** q47 over the given fact frames: the parquet facts, or p36's bucketed layout. */
+  def q47VolumeShippingOver(spark: SparkSession, dir: String,
+                            lineitem: DataFrame, orders: DataFrame): DataFrame = {
     val nat = t(spark, dir, "nation")
       .filter(col("n_name").isin("NATION_13", "NATION_19"))
     val sup = t(spark, dir, "supplier")
@@ -700,16 +715,18 @@ object Analytics {
     val cust = t(spark, dir, "customer")
       .join(nat, col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    val li = t(spark, dir, "lineitem")
+    val li = lineitem
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
-      .join(sup, col("l_suppkey") === col("s_suppkey"))
-    val ord = t(spark, dir, "orders")
+      .join(BoundedBroadcast.hintIfBounded(sup, Tables.rows(spark, dir, "supplier")),
+        col("l_suppkey") === col("s_suppkey"))
+    val ord = orders
       .select(col("o_orderkey"), col("o_custkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
+      .join(BoundedBroadcast.hintIfBounded(cust, Tables.rows(spark, dir, "customer")),
+        col("o_custkey") === col("c_custkey"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .filter(col("supp_nation") =!= col("cust_nation"))
       .groupBy(col("supp_nation"), col("cust_nation"),

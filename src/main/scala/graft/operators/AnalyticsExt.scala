@@ -172,8 +172,8 @@ object AnalyticsExt {
     val exactDistinct = li.select(col("l_returnflag"), col("l_orderkey")).distinct()
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("exact_orders"))
-    sketches.join(exactPct, Seq("l_returnflag"))
-      .join(exactDistinct, Seq("l_returnflag"))
+    sketches.join(broadcast(exactPct), Seq("l_returnflag")) // hint: dial
+      .join(broadcast(exactDistinct), Seq("l_returnflag")) // hint: dial
       .select(
         col("l_returnflag"),
         col("exact_orders"),
@@ -240,7 +240,7 @@ object AnalyticsExt {
       .select((col("day") + col("off")).as("day"), col("n"), col("cents"))
       .groupBy(col("day"))
       .agg(sum(col("n")).as("n_orders_7d"), sum(col("cents")).as("cents_7d"))
-    orders.join(band, Seq("day"))
+    orders.join(broadcast(band), Seq("day")) // hint: dial
       .select(col("o_orderkey"), col("day").cast("long").as("day"),
         col("n_orders_7d"), col("cents_7d"))
       .orderBy(col("o_orderkey"))
@@ -344,12 +344,12 @@ object AnalyticsExt {
     val med = Analytics.exactPercentiles(base, "prio", Seq(("x_c", 0.5, "med_raw")))
       .select(col("prio"), col("n"),
         (col("med_raw") * 2).cast("long").as("med_x2"))
-    val dev = base.join(med, Seq("prio"))
+    val dev = base.join(broadcast(med), Seq("prio")) // hint: dial
       .withColumn("ad", abs(col("x_c") * 2 - col("med_x2"))) // half-cents
     val mad = Analytics.exactPercentiles(
         dev.select(col("prio"), col("ad")), "prio", Seq(("ad", 0.5, "mad_raw")))
       .select(col("prio"), (col("mad_raw") * 2).cast("long").as("mad_x2"))
-    dev.join(mad, Seq("prio"))
+    dev.join(broadcast(mad), Seq("prio")) // hint: dial
       // 2·ad > K·mad_x2 <=> |x−med| > K·MAD, all integers
       .withColumn("is_out",
         (col("ad") * 2 > lit(MadK) * col("mad_x2")).cast("long"))

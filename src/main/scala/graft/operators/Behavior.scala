@@ -89,7 +89,7 @@ object Behavior {
       .join(cohorts, Seq("user_id"))
       .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
       .agg(count(lit(1)).as("n_active"))
-      .join(cohortSize, Seq("cohort_week"))
+      .join(broadcast(cohortSize), Seq("cohort_week")) // hint: dial
       .select(col("cohort_week"), col("week_offset"), col("n_active"), col("cohort_n"),
         floor(col("n_active") * lit(1000000.0) / col("cohort_n")).cast("long")
           .as("retention_e6"))
@@ -465,7 +465,7 @@ object Behavior {
       .agg(count(lit(1)).as("n"))
       .localCheckpoint(true)
     val outTotals = edges.groupBy(col("from_type")).agg(sum(col("n")).as("n_out"))
-    edges.join(outTotals, Seq("from_type"))
+    edges.join(broadcast(outTotals), Seq("from_type")) // hint: dial
       .select(col("from_type"), col("to_type"), col("n"),
         floor(col("n") * lit(1000000.0) / col("n_out")).cast("long").as("share_e6"))
       .orderBy(col("from_type"), col("to_type"))

@@ -18,13 +18,19 @@ import org.apache.spark.sql.functions.broadcast
   * A raw hint stays only where the planner cannot size the side, and its
   * line names the bound (BoundedBroadcastSpec's hint lint checks it):
   * `// hint: scalar` for a global aggregate or key lookup (one row), or
-  * `// hint: dial` for a side bounded by a named constant (the probe
-  * panel, a beam, the k-means cells, a config or layout list,
-  * [[PrefixSum]]'s per-range offsets).
+  * `// hint: dial` for a side bounded by a named constant or by a schema
+  * domain that does not grow with the scale factor (the probe panel, a
+  * beam, the k-means cells, a config or layout list, [[PrefixSum]]'s
+  * per-range offsets; returnflags, priorities, event types, languages,
+  * sources, and the days, weeks or years of the generated date range).
+  * The planner cannot size such an aggregate: its size-only estimate of
+  * a grouped aggregate is the child's, so a per-priority table built
+  * from orders would estimate as orders-sized and shuffle the fact side.
   *
   * [[hintIfBounded]] is the only size-gated hint: the caller passes a row
-  * count it measured (off a checkpointed frame, or one bounded
-  * re-derivation; this object runs no action) and the hint applies only
+  * count it measured (off a checkpointed frame, one bounded
+  * re-derivation, or `Tables.rows` of the base table a dim side filters,
+  * counted once per JVM; this object runs no action) and the hint applies only
   * up to [[maxRows]] — rows, not bytes, as each gated frame is a few
   * fixed-width columns. `SPARK_GRAFT_BROADCAST_MAX_ROWS` overrides the
   * 4M default. Over the bound the planner/AQE choose; the join result is

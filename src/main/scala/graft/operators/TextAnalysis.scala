@@ -858,7 +858,7 @@ object TextAnalysis {
     // source-grained, off the checkpointed ranged frame (no size estimate)
     val nPer = ps.ranged.groupBy(col("source")).agg(count(lit(1)).as("n_scored"))
     val verdicts = ps.runningCount("rank_in_source")
-      .join(BoundedBroadcast.hintIfBounded(nPer, nPer.count()), Seq("source"))
+      .join(broadcast(nPer), Seq("source")) // hint: dial
       .withColumn("bucket", expr("((n_scored - rank_in_source) * 3) div n_scored"))
       .select(col("doc_id"), col("lm_score_e6"), col("rank_in_source"),
         col("n_scored"), col("bucket"))
@@ -1215,7 +1215,7 @@ object TextAnalysis {
       .agg(sum(col("c")).as("n_toks"), count(lit(1)).as("n_terms"))
     val nTot = ns.agg(sum(col("n_toks")).as("n_all"))
     st.join(g, "term")
-      .join(ns, "source")
+      .join(broadcast(ns), "source") // hint: dial
       .crossJoin(broadcast(nTot)) // hint: scalar
       .withColumn("dev", expr(
         "abs(CAST(c AS DECIMAL(38,0)) * n_all - CAST(g AS DECIMAL(38,0)) * n_toks)"))
@@ -1579,8 +1579,8 @@ object TextAnalysis {
     val byPred = cells.groupBy(col("predicted_lang"))
       .agg(sum(col("n")).as("n_predicted"))
     cells
-      .join(byLabel, Seq("labeled_lang"))
-      .join(byPred, Seq("predicted_lang"))
+      .join(broadcast(byLabel), Seq("labeled_lang")) // hint: dial
+      .join(broadcast(byPred), Seq("predicted_lang")) // hint: dial
       .select(col("labeled_lang"), col("predicted_lang"), col("n"),
         col("n_labeled"), col("n_predicted"),
         expr("n * 1000000 div n_labeled").as("recall_share_e6"),

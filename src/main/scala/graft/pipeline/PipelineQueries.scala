@@ -937,8 +937,8 @@ object PipelineQueries {
         sum(col("cents").cast("decimal(38,0)")).over(wCum))
       .withColumn("pos_in_yr", row_number()
         .over(Window.partitionBy(col("yr")).orderBy(col("mo"))).cast("long"))
-      .join(yearCounts.select((col("yr") + 1).as("yr"),
-        col("n_m").as("prev_n_m")), Seq("yr"), "left")
+      .join(broadcast(yearCounts.select((col("yr") + 1).as("yr"), // hint: dial
+        col("n_m").as("prev_n_m"))), Seq("yr"), "left")
       .withColumn("removed", when(col("pos_in_yr") === 1,
         coalesce(col("prev_n_m"), lit(0L))).otherwise(lit(0L)))
       .withColumn("added",
@@ -996,13 +996,13 @@ object PipelineQueries {
     val yrFirst = ver.groupBy(col("yr"))
       .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
     val monthFiles = ver
-      .join(yrFirst.select((col("yr") - 1).as("yr"),
-        col("y_first").as("removed_v")), Seq("yr"), "left")
+      .join(broadcast(yrFirst.select((col("yr") - 1).as("yr"), // hint: dial
+        col("y_first").as("removed_v"))), Seq("yr"), "left")
       .select(concat(lit("month_"), col("mo").cast("string")).as("key"),
         lit("month").as("kind"), col("version").as("born_v"),
         coalesce(col("removed_v"), lit(-1L)).as("removed_v"), col("n_rows"))
     val yearFiles = yrFirst.as("a")
-      .join(yrFirst.select(col("yr"), col("y_first")).as("b"),
+      .join(broadcast(yrFirst.select(col("yr"), col("y_first")).as("b")), // hint: dial
         col("b.yr") === col("a.yr") + 1)
       .select(concat(lit("year_"), col("a.yr").cast("string")).as("key"),
         lit("year").as("kind"), col("b.y_first").as("born_v"),
@@ -1443,8 +1443,7 @@ object PipelineQueries {
     * inequality), q47 (bilateral trade: partitioning preserved through
     * broadcast dim joins on both sides), q49 (the customer-grain
     * aggregate keeps its own algebra-required shuffle — only the fact
-    * shuffle is deleted), q52 (ship-tier mix). p35/p37/p38 run their
-    * q-twin's body over the layout, as p29 runs q39's. Each is
+    * shuffle is deleted), q52 (ship-tier mix). Each is
     * semantically identical to its q-twin — the oracle is the q-twin's
     * SQL verbatim, so the layout changes the PLAN, never the answer — and
     * each has a BASELINE row, so a regression of any deleted exchange is
@@ -1452,10 +1451,12 @@ object PipelineQueries {
     * write every landing cycle: the orderkey shuffle they shared is the
     * engine's single biggest recurring cost, and `SourcesSpec` pins per
     * twin that NO exchange partitions on the orderkey while the
-    * unbucketed form pays ≥1. */
+    * unbucketed form pays ≥1. All five run their q-twin's body over the
+    * layout, as p29 runs q39's. */
   def p34BucketedPriority(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
-    graft.sources.Bucketed.q3OverBuckets(spark, dir, li, ord)
+    graft.operators.Analytics.q3ShippingPriorityOver(spark, dir,
+      spark.table(li), spark.table(ord))
   }
   def p35BucketedSemi(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
@@ -1463,7 +1464,8 @@ object PipelineQueries {
   }
   def p36BucketedTrade(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
-    graft.sources.Bucketed.q47OverBuckets(spark, dir, li, ord)
+    graft.operators.Analytics.q47VolumeShippingOver(spark, dir,
+      spark.table(li), spark.table(ord))
   }
   def p37BucketedReturns(spark: SparkSession, dir: String): DataFrame = {
     val (li, ord) = graft.sources.Bucketed.ensureFactLayout(spark, dir)
@@ -2036,9 +2038,9 @@ object PipelineQueries {
     val yrRows = ver.groupBy(col("yr"))
       .agg(min(col("version")).as("y_first"), sum(col("n_rows")).as("y_rows"))
     val per = ver
-      .join(yrRows.select(col("yr"), col("y_first")), Seq("yr"))
-      .join(yrRows.select((col("yr") + 1).as("yr"),
-        col("y_rows").as("rewrite_rows")), Seq("yr"), "left")
+      .join(broadcast(yrRows.select(col("yr"), col("y_first"))), Seq("yr")) // hint: dial
+      .join(broadcast(yrRows.select((col("yr") + 1).as("yr"), // hint: dial
+        col("y_rows").as("rewrite_rows"))), Seq("yr"), "left")
       .select(col("version"), col("mo"), col("n_rows").as("rows_landed"),
         (col("n_rows") + when(col("version") === col("y_first"),
           coalesce(col("rewrite_rows"), lit(0L))).otherwise(0L))
@@ -2371,8 +2373,8 @@ object PipelineQueries {
       .withColumn("v_lo", greatest(col("v_head") - ReplicaLag, lit(1L)))
     val w = ver.crossJoin(broadcast(heads)) // hint: scalar
       .filter(col("version") > col("v_lo") && col("version") <= col("v_head"))
-      .join(yc.select((col("yr") + 1).as("yr"),
-        col("n_m").as("prev_n_m")), Seq("yr"), "left")
+      .join(broadcast(yc.select((col("yr") + 1).as("yr"), // hint: dial
+        col("n_m").as("prev_n_m"))), Seq("yr"), "left")
       .withColumn("prev_n_m", coalesce(col("prev_n_m"), lit(0L)))
     def vkey = concat(lit("v"), lpad(col("version").cast("string"), 4, "0"))
     val ins = w.select(vkey.as("key"), lit("insert").as("change"),

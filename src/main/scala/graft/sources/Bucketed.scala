@@ -1,11 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.BoundedBroadcast.hintIfBounded
 
-/** Bucketed fact layout + its shuffle-free consumers.
+/** Bucketed fact layout for shuffle-free fact-fact consumers.
   *
   * The engine's single biggest recurring cost at 100 TB is the
   * `l_orderkey`/`o_orderkey` hash shuffle that every fact-fact operator
@@ -126,58 +124,5 @@ object Bucketed {
         s"bucket_col=$bucketCol\nschema=${df.schema.toDDL}\n").getBytes("UTF-8"))
       finally out.close()
     }
-  }
-
-  /** q3 with a size-gated customer hint: SourcesSpec pins the bucketed
-    * plan with auto-broadcast off, where only a hint keeps the dim join unshuffled. */
-  def q3OverBuckets(spark: SparkSession, dir: String,
-                    lineitemTable: String, ordersTable: String): DataFrame = {
-    val cutoff = lit("1998-06-01").cast("timestamp")
-    val cust = Tables.load(spark, dir, "customer")
-      .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    val ord = spark.table(ordersTable).filter(col("o_orderdate") < cutoff)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-        col("o_orderpriority"))
-    val li = spark.table(lineitemTable).filter(col("l_shipdate") > cutoff)
-      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(hintIfBounded(cust, cust.count()), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-        .as("revenue"))
-      .select(col("o_orderkey"), col("revenue"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("orderdate"),
-        col("o_orderpriority"))
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(20)
-  }
-
-  /** q47 with size-gated supplier and customer hints, as [[q3OverBuckets]]. */
-  def q47OverBuckets(spark: SparkSession, dir: String,
-                     lineitemTable: String, ordersTable: String): DataFrame = {
-    val nat = Tables.load(spark, dir, "nation")
-      .filter(col("n_name").isin("NATION_13", "NATION_19"))
-    val sup = Tables.load(spark, dir, "supplier")
-      .join(nat, col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-    val cust = Tables.load(spark, dir, "customer")
-      .join(nat, col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    val li = spark.table(lineitemTable)
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"),
-        floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
-          .cast("long").as("rev_c"))
-      .join(hintIfBounded(sup, sup.count()), col("l_suppkey") === col("s_suppkey"))
-    val ord = spark.table(ordersTable)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(hintIfBounded(cust, cust.count()), col("o_custkey") === col("c_custkey"))
-    li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .filter(col("supp_nation") =!= col("cust_nation"))
-      .groupBy(col("supp_nation"), col("cust_nation"),
-        year(col("l_shipdate")).cast("long").as("l_year"))
-      .agg(sum(col("rev_c")).as("revenue_cents"))
-      .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
 }

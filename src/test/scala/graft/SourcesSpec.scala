@@ -212,7 +212,7 @@ class SourcesSpec extends AnyFunSuite {
       // q3's twin goes further: bucket-key aggregate + broadcast dim +
       // TakeOrdered means the WHOLE plan is hash-exchange-free (p29's
       // q39 claim, now held by a second query shape)
-      val q3p = Bucketed.q3OverBuckets(spark, sf, liT, ordT)
+      val q3p = Analytics.q3ShippingPriorityOver(spark, sf, spark.table(liT), spark.table(ordT))
         .queryExecution.executedPlan.toString
       assert(!q3p.contains("Exchange hashpartitioning"),
         s"hash exchange in the p34 plan:\n$q3p")
@@ -253,7 +253,8 @@ class SourcesSpec extends AnyFunSuite {
     "rewrite instead") {
     import graft.sources.Bucketed
     val (liT, ordT) = Bucketed.ensureFactLayout(spark, sf)
-    val expected = Bucketed.q3OverBuckets(spark, sf, liT, ordT).collect().toSeq
+    val expected = graft.operators.Analytics.q3ShippingPriorityOver(spark, sf,
+      spark.table(liT), spark.table(ordT)).collect().toSeq
     val warehouse = new java.io.File(spark.conf
       .get("spark.sql.warehouse.dir").stripPrefix("file:"))
     val liDir = new java.io.File(warehouse, liT)
@@ -272,7 +273,8 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.catalog.tableExists(liT2), "adopt did not re-register")
     dataFiles.foreach(f => assert(f.lastModified == mtimes(f.getName),
       s"adopt rewrote ${f.getName}"))
-    val adopted = Bucketed.q3OverBuckets(spark, sf, liT2, ordT2)
+    val adopted = graft.operators.Analytics.q3ShippingPriorityOver(spark, sf,
+      spark.table(liT2), spark.table(ordT2))
     val p = adopted.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),
       s"hash exchange over the ADOPTED layout:\n$p")
