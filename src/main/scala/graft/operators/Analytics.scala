@@ -38,6 +38,18 @@ object Analytics {
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
+  /** `df` (keyed by `l_suppkey`) with its supplier's `s_name` and nation
+    * `n_name`. Supplier and nation each join `df` as a plain scan, so each
+    * keeps its own size estimate and the planner broadcasts it; a
+    * pre-joined supplier ⋈ nation side would carry the PRODUCT of the two
+    * estimates and, once that passed the threshold, shuffle `df` on
+    * `l_suppkey` although the side holds one row per supplier. */
+  private def withSupplierNation(spark: SparkSession, dir: String, df: DataFrame): DataFrame =
+    df.join(t(spark, dir, "supplier").select(col("s_suppkey"), col("s_name"), col("s_nationkey")),
+        col("l_suppkey") === col("s_suppkey"))
+      .join(t(spark, dir, "nation").select(col("n_nationkey"), col("n_name")),
+        col("s_nationkey") === col("n_nationkey"))
+
   /** TPC-H Q3-style shipping priority: filtered fact-fact joins + top-N.
     * The customer side is a size-gated hint: p34 runs this body over the
     * bucketed layout, and SourcesSpec pins that plan with auto-broadcast
@@ -742,42 +754,36 @@ object Analytics {
     *
     * Scale: the part-type filter is the big pruner — it broadcasts onto
     * the fact FIRST, so only that type's lines reach the orderkey
-    * shuffle; the market region restricts customers through broadcast
-    * nation/region dims on the orders side. One fact-fact shuffle, then
+    * shuffle; the market region restricts customers through semi joins
+    * on nation/region on the orders side. One fact-fact shuffle, then
     * a 2-row year aggregate with conditional map-side partials (the
     * numerator rides the same pass as the denominator — no second
     * scan). */
   def q48MarketShare(spark: SparkSession, dir: String): DataFrame = {
     val part = t(spark, dir, "part")
       .filter(col("p_type") === "ECONOMY").select(col("p_partkey"))
-    val supNat = t(spark, dir, "nation")
-      .select(col("n_nationkey"), col("n_name"))
-    val sup = t(spark, dir, "supplier")
-      .join(supNat, col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name").as("supp_nation"))
+    // semi joins keep customer's size estimate (see q35)
+    val asiaNations = t(spark, dir, "nation").join(
+      t(spark, dir, "region").filter(col("r_name") === "ASIA"),
+      col("n_regionkey") === col("r_regionkey"), "left_semi")
     val mktCust = t(spark, dir, "customer")
-      .join(t(spark, dir, "nation")
-          .join(t(spark, dir, "region")
-              .filter(col("r_name") === "ASIA"),
-            col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey")),
-        col("c_nationkey") === col("n_nationkey"))
+      .join(asiaNations, col("c_nationkey") === col("n_nationkey"), "left_semi")
       .select(col("c_custkey"))
     val ord = t(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
       .join(mktCust, col("o_custkey") === col("c_custkey"))
-    t(spark, dir, "lineitem")
+    val li = t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
       .join(part, col("l_partkey") === col("p_partkey"))
-      .join(sup, col("l_suppkey") === col("s_suppkey"))
+    withSupplierNation(spark, dir, li)
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
       .agg(
-        sum(when(col("supp_nation") === "NATION_18", col("rev_c"))
+        sum(when(col("n_name") === "NATION_18", col("rev_c"))
           .otherwise(0L)).as("nation_cents"),
         sum(col("rev_c")).as("total_cents"))
       .select(col("o_year"), col("nation_cents"), col("total_cents"),
@@ -836,7 +842,8 @@ object Analytics {
     *
     * Scale: the part-name filter broadcasts onto the fact FIRST, so
     * only that product line's lines reach the orderkey shuffle;
-    * supplier/nation broadcast; orders joins once on orderkey for the
+    * supplier and nation attach as plain scans ([[withSupplierNation]]);
+    * orders joins once on orderkey for the
     * year. One fact-fact shuffle, then a |nations|×|years| aggregate
     * with map-side partials. */
   def q50ProductMargin(spark: SparkSession, dir: String): DataFrame = {
@@ -844,19 +851,15 @@ object Analytics {
       .filter(col("p_name").contains("rod"))
       .select(col("p_partkey"),
         floor(col("p_retailprice") * 100).cast("long").as("retail_c"))
-    val sup = t(spark, dir, "supplier")
-      .join(t(spark, dir, "nation"),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("n_name"))
     val ord = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderdate"))
-    t(spark, dir, "lineitem")
+    val li = t(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity").cast("long").as("qty"),
         floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
           .cast("long").as("rev_c"))
       .join(part, col("l_partkey") === col("p_partkey"))
-      .join(sup, col("l_suppkey") === col("s_suppkey"))
+    withSupplierNation(spark, dir, li)
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name").as("nation"),
         year(col("o_orderdate")).cast("long").as("o_year"))
@@ -979,8 +982,8 @@ object Analytics {
     * scan, which collapses to (part, supplier) grain at the first
     * shuffle; the per-part total is an aggregate OF that small table
     * joined back on partkey (pair-grain, never fact-grain); the
-    * verdict filter, supplier rollup and broadcast name/nation lookups
-    * all run on supplier-grain rows. */
+    * verdict filter, supplier rollup and name/nation lookups
+    * ([[withSupplierNation]]) all run on supplier-grain rows. */
   def q54DominantSupplier(spark: SparkSession, dir: String): DataFrame = {
     val part = t(spark, dir, "part")
       .filter(col("p_name").contains("widget")).select(col("p_partkey"))
@@ -993,15 +996,11 @@ object Analytics {
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(sum(col("qty")).as("sq"))
     val tq = sq.groupBy(col("l_partkey")).agg(sum(col("sq")).as("total_q"))
-    val sup = t(spark, dir, "supplier")
-      .join(t(spark, dir, "nation"),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("s_name"), col("n_name"))
-    sq.join(tq, Seq("l_partkey"))
+    val dominant = sq.join(tq, Seq("l_partkey"))
       .filter(col("sq") * 2 > col("total_q"))
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("n_dominant_parts"), sum(col("sq")).as("dominant_qty"))
-      .join(sup, col("l_suppkey") === col("s_suppkey"))
+    withSupplierNation(spark, dir, dominant)
       .select(col("s_suppkey"), col("s_name"), col("n_name"),
         col("n_dominant_parts"), col("dominant_qty"))
       .orderBy(col("s_suppkey"))
@@ -1069,8 +1068,8 @@ object Analytics {
     * supplier/late-supplier counts, and the pair-grain join-back all
     * ride the SAME orderkey hash partitioning — no fact-fact
     * re-shuffle, no correlated re-scan of lineitem (the textbook form
-    * scans it three times). The supplier/nation lookup broadcasts onto
-    * supplier-grain rows. At 100 TB: one fact-grain shuffle, then
+    * scans it three times). The supplier/nation lookup
+    * ([[withSupplierNation]]) runs on supplier-grain rows. At 100 TB: one fact-grain shuffle, then
     * pair/order-grain work only. */
   def q56SoleLateSupplier(spark: SparkSession, dir: String): DataFrame = {
     val ord = t(spark, dir, "orders")
@@ -1087,16 +1086,12 @@ object Analytics {
       .localCheckpoint(true) // pair grain; per-order agg + join-back read it
     val perOrder = pair.groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_supp"), sum(col("late")).as("n_late_supp"))
-    val sup = t(spark, dir, "supplier")
-      .join(t(spark, dir, "nation"),
-        col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("s_name"), col("n_name"))
-    pair.filter(col("late") === 1L)
+    val waits = pair.filter(col("late") === 1L)
       .join(perOrder, Seq("l_orderkey"))
       .filter(col("n_supp") >= 2 && col("n_late_supp") === 1L)
       .groupBy(col("l_suppkey"))
       .agg(count(lit(1)).as("numwait"))
-      .join(sup, col("l_suppkey") === col("s_suppkey"))
+    withSupplierNation(spark, dir, waits)
       .select(col("s_suppkey"), col("s_name"), col("n_name"), col("numwait"))
       .orderBy(col("numwait").desc, col("s_suppkey"))
   }

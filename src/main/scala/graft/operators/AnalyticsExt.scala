@@ -574,7 +574,7 @@ object AnalyticsExt {
     * constant — never a fact self-join. The support filter collapses the
     * pair table before any join; per-item supports are a part-grained
     * aggregate of the SAME basket checkpoint (scanned once), joined
-    * broadcast like every part dim. Confidence and lift are defined as
+    * under a size-gated hint bounded by the part count. Confidence and lift are defined as
     * exact sequential integer arithmetic (`conf_e6 = n_both·1e6 div n_a`,
     * `lift_e6 = conf_e6·N div n_b` — each intermediate < 2^63 at any SF,
     * unlike the naive `n_both·N·1e6` which overflows at 100 TB), the
@@ -597,11 +597,13 @@ object AnalyticsExt {
     val supp = byOrder.select(explode(col("ps")).as("part"))
       .groupBy(col("part")).agg(count(lit(1)).as("n_item"))
     val nOrders = byOrder.agg(count(lit(1)).as("n_orders"))
+    // at most one row per part, but estimated at the basket table's size
+    val nParts = Tables.rows(spark, dir, "part")
     pairs
-      .join(supp.select(col("part").as("pa"), col("n_item").as("n_a")),
-        Seq("pa"))
-      .join(supp.select(col("part").as("pb"), col("n_item").as("n_b")),
-        Seq("pb"))
+      .join(BoundedBroadcast.hintIfBounded(
+        supp.select(col("part").as("pa"), col("n_item").as("n_a")), nParts), Seq("pa"))
+      .join(BoundedBroadcast.hintIfBounded(
+        supp.select(col("part").as("pb"), col("n_item").as("n_b")), nParts), Seq("pb"))
       .crossJoin(broadcast(nOrders)) // hint: scalar
       .withColumn("conf_e6", expr("n_both * 1000000 div n_a"))
       .withColumn("lift_e6", expr("conf_e6 * n_orders div n_b"))

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions.broadcast
   * lineitem, or a frame at their grain) nor on a plain nation/region
   * scan. A dimension FILTER is a `left_semi` join, which keeps the left
   * side's estimate where an inner join's is the product of its inputs',
-  * and dimension attributes attach after the fact aggregate (q35).
+  * dimension attributes attach after the fact aggregate (q35), and each
+  * dimension joins the fact as its own plain scan rather than pre-joined
+  * to another (`Analytics.withSupplierNation`).
   *
   * A raw hint stays only where the planner cannot size the side, and its
   * line names the bound (BoundedBroadcastSpec's hint lint checks it):
