@@ -28,8 +28,10 @@ class PlanPinSpec extends AnyFunSuite {
     "p29_bucketed_join", "p34_bucketed_priority", "p35_bucketed_semi",
     "p36_bucketed_trade", "p37_bucketed_returns", "p38_bucketed_delay",
     "p41_rollback_plan", "p46_analyze_priority", "d1_dedup_exact", "d3_dedup_minhash",
-    "s1_ann_brute", "t5_hash_split", "t8_repetition", "t11_filter_funnel",
-    "m1_multimodal_meta")
+    "d5_dedup_embed", "d7_embed_clusters", "s1_ann_brute", "s5_knn_join",
+    "s19_graph_beam", "s26_hnsw_layers", "s27_hnsw_recall", "s28_hnsw_insert",
+    "s29_hnsw_delete", "s31_beam_sweep", "t5_hash_split", "t8_repetition",
+    "t11_filter_funnel", "m1_multimodal_meta")
 
   private def newestLedger: Option[java.io.File] = {
     val docs = new java.io.File("docs")
