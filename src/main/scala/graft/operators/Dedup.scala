@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import Similarity.cosSql
 
 /** Deduplication family over `documents` (SURVEY.md §2 d1-d8): exact,
   * n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine, cluster
@@ -431,57 +432,26 @@ object Dedup {
 
   // ---------------------------------------------------------------- d5
 
-  /** d5 banding: 16 bands x 4 hyperplanes from the deterministic shared
-    * plane family. A pair is a candidate iff it shares a full sign pattern
-    * in ANY band — the band/sig pair is an equi-join (= partition) key, so
-    * pair generation is bounded per bucket, never a cross join. Recall vs
-    * the all-pairs form is measured in the spec (0.97 at tau=0.4 on the
-    * test corpus; at a realistic near-dup threshold like 0.9 the same
-    * machinery has both recall ~1 and far smaller buckets). */
-  val EmbedBands = 16
-  val EmbedPlanesPerBand = 4
-
   /** `d5_dedup_embed`: embedding-cosine near-dup pairs >= tau, LSH-banded.
-    * Candidates from hyperplane sign-pattern bands, exact-cosine confirm on
-    * candidates only (the oracle mirrors the banding, like d3's minhash).
-    * The all-pairs form lives only in the spec, as the recall baseline. */
+    * Candidates and their exact cosines come from s5's banded pass
+    * ([[Similarity.knnScoredPairs]]: 16 bands x 4 hyperplanes of the shared
+    * plane family, band/sig as the equi-join key, so pair generation is
+    * bounded per bucket, never a cross join); d5 keeps the pairs >= tau.
+    * Recall vs the all-pairs form is measured in the spec (0.97 at
+    * tau=0.4 on the test corpus; at a realistic near-dup threshold like
+    * 0.9 the same machinery has both recall ~1 and far smaller buckets).
+    * The oracle mirrors the banding, like d3's minhash; the all-pairs form
+    * lives only in the spec, as the recall baseline. */
   def d5DedupEmbed(spark: SparkSession, dir: String): DataFrame =
     d5Pairs(spark, dir).orderBy(col("vec_id_1"), col("vec_id_2"))
 
   /** d5's pair pipeline WITHOUT the final presentation sort — the form
     * consumers compose on (d7's connected components does not care about
     * pair order, and a global sort ahead of a checkpoint is pure waste). */
-  private def d5Pairs(spark: SparkSession, dir: String): DataFrame = {
-    val pl = Similarity.planesFor(EmbedBands * EmbedPlanesPerBand)
-    val e = Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    // all 64 hyperplane dots in ONE fused expression evaluation (bit 4b+p of
-    // _bkt = plane p of band b), then per-band sigs are pure bit arithmetic;
-    // _bkt is referenced 16x so CollapseProject keeps its projection — one
-    // matrix pass per row, not 16
-    val bandMask = (1L << EmbedPlanesPerBand) - 1
-    val bandCols = (0 until EmbedBands).map { b =>
-      val sig = shiftrightunsigned(col("_bkt"), b * EmbedPlanesPerBand)
-        .bitwiseAND(lit(bandMask))
-      struct(lit(b).as("band"), sig.as("sig"))
-    }
-    val sigs = e
-      .withColumn("_bkt", VectorFunctions.hyperplaneBucket(col("embedding"), pl))
-      .select(col("vec_id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("vec_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-    val cand = sigs.select(col("vec_id").as("vec_id_1"), col("band"), col("sig"))
-      .join(sigs.select(col("vec_id").as("vec_id_2"), col("band"), col("sig")), Seq("band", "sig"))
-      .filter(col("vec_id_1") < col("vec_id_2"))
-      .select(col("vec_id_1"), col("vec_id_2")).distinct()
-    // confirm joins fetch vectors by id — candidates are tiny relative to
-    // the corpus, so this is two bounded hash joins, not a re-scan per pair
-    val cosE6 = floor(VectorFunctions.cosineFast(col("ea"), col("eb"))
-      * lit(1000000.0)).cast("long")
-    cand
-      .join(e.select(col("vec_id").as("vec_id_1"), col("embedding").as("ea")), Seq("vec_id_1"))
-      .join(e.select(col("vec_id").as("vec_id_2"), col("embedding").as("eb")), Seq("vec_id_2"))
-      .select(col("vec_id_1"), col("vec_id_2"), cosE6.as("cos_e6"))
+  private def d5Pairs(spark: SparkSession, dir: String): DataFrame =
+    Similarity.knnScoredPairs(spark, dir)
+      .select(col("va").as("vec_id_1"), col("vb").as("vec_id_2"), col("cos_e6"))
       .filter(col("cos_e6") >= (CosineTau * 1e6).toLong)
-  }
 
   /** All-pairs exact form of d5 — the spec's recall baseline ONLY (it is a
     * cartesian at scale; deliberately not in `SparkEntry.queries`). */
@@ -743,10 +713,6 @@ object Dedup {
     * d5 threshold, transitive closure via the same recursive reach as
     * d6/d7, left-joined back onto the full assignment. */
   private def d12OracleSql(cents: Seq[(Long, Array[Long])]): String = {
-    def cosSql(a: String, b: String) =
-      s"""(list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-         | / (sqrt(list_sum(list_transform(list_zip($a, $a), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
-         |  * sqrt(list_sum(list_transform(list_zip($b, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))))""".stripMargin
     s"""WITH RECURSIVE cents(cid, cent) AS (VALUES
        |  ${Similarity.centroidRowsSql(cents)}),
        |scored AS (
@@ -778,15 +744,20 @@ object Dedup {
 
   // ---------------------------------------------------------------- d8
 
-  /** Batch membership for d8: stable 0-99 md5 bucket of doc_id (the same
-    * primitive as `t5_hash_split`); bucket >= NewBucketMin (20%) plays the
-    * "newly crawled batch", the rest the already-deduped corpus. A real
-    * pipeline swaps this for a snapshot/date predicate — the operator only
-    * needs SOME deterministic membership test. */
+  /** Batch membership for d8 (and, on vec_id, s11, s12, s28 and s29):
+    * stable 0-99 md5 bucket of the id (the same primitive as
+    * `t5_hash_split`); bucket >= NewBucketMin (20%) plays the "newly
+    * crawled batch", the rest the already-deduped corpus. A real pipeline
+    * swaps this for a snapshot/date predicate — the operator only needs
+    * SOME deterministic membership test. */
   val NewBucketMin = 80
 
-  private def isNewDoc(c: Column): Column =
+  private[graft] def isNewBatch(c: Column): Column =
     md5Long60(c.cast("string")) % 100 >= NewBucketMin
+
+  /** [[isNewBatch]] as oracle SQL over the id expression `x`. */
+  private[operators] def isNewSql(x: String): String =
+    s"CAST(('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= $NewBucketMin"
 
   /** `d8_dedup_incremental`: dedup a NEW batch against an existing corpus
     * without re-pairing the corpus with itself — the daily-crawl shape at
@@ -805,20 +776,20 @@ object Dedup {
     val arrays = shingleArrays(spark, dir).localCheckpoint(true)
     val cand = prefixCandidates(arrays, PrefixBlockSize)(Seq(
       // d2-side new: covers (old, new) and (new, new) pairs
-      (lit(true), isNewDoc(col("doc_id"))),
+      (lit(true), isNewBatch(col("doc_id"))),
       // d1 new, d2 old: the remaining (new, old) orientation
-      (isNewDoc(col("doc_id")), !isNewDoc(col("doc_id")))))
+      (isNewBatch(col("doc_id")), !isNewBatch(col("doc_id")))))
     val pairs = jaccardPairs(arrays, Some(cand), alreadyCheckpointed = true)
       .localCheckpoint(true) // feeds the count aggregate AND the best-match window
     // orient every confirmed pair around its NEW member(s)
-    val m = pairs.filter(isNewDoc(col("doc_id_1")))
+    val m = pairs.filter(isNewBatch(col("doc_id_1")))
       .select(col("doc_id_1").as("doc_id"), col("doc_id_2").as("other"), col("jaccard_e6"))
-      .unionByName(pairs.filter(isNewDoc(col("doc_id_2")))
+      .unionByName(pairs.filter(isNewBatch(col("doc_id_2")))
         .select(col("doc_id_2").as("doc_id"), col("doc_id_1").as("other"), col("jaccard_e6")))
     val agg = m.groupBy(col("doc_id")).agg(
-      sum(when(!isNewDoc(col("other")), 1L).otherwise(0L)).as("n_corpus_dups"),
-      sum(when(isNewDoc(col("other")), 1L).otherwise(0L)).as("n_batch_dups"),
-      sum(when(isNewDoc(col("other")) && col("other") < col("doc_id"), 1L)
+      sum(when(!isNewBatch(col("other")), 1L).otherwise(0L)).as("n_corpus_dups"),
+      sum(when(isNewBatch(col("other")), 1L).otherwise(0L)).as("n_batch_dups"),
+      sum(when(isNewBatch(col("other")) && col("other") < col("doc_id"), 1L)
         .otherwise(0L)).as("n_prior_batch_dups"))
     val wBest = Window.partitionBy(col("doc_id"))
       .orderBy(col("jaccard_e6").desc, col("other"))
@@ -847,7 +818,7 @@ object Dedup {
     // query's smaller candidate-side stages (same unknown-stats
     // broadcast preallocation, half the frame); both sizes are constant
     // in data, accepted.
-    docs(spark, dir).select(col("doc_id")).filter(isNewDoc(col("doc_id")))
+    docs(spark, dir).select(col("doc_id")).filter(isNewBatch(col("doc_id")))
       .join(agg, Seq("doc_id"), "left")
       .join(best, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1210,10 +1181,6 @@ object Dedup {
   /** d15 oracle: the injected-centroid assignment (d12's CTEs) + a plain
     * per-cell window replaying the same integer rank/bucket arithmetic. */
   private def d15OracleSql(cents: Seq[(Long, Array[Long])]): String = {
-    def cosSql(a: String, b: String) =
-      s"""(list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-         | / (sqrt(list_sum(list_transform(list_zip($a, $a), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
-         |  * sqrt(list_sum(list_transform(list_zip($b, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))))""".stripMargin
     s"""WITH cents(cid, cent) AS (VALUES
        |  ${Similarity.centroidRowsSql(cents)}),
        |scored AS (
@@ -1309,8 +1276,6 @@ object Dedup {
     * then the per-new-doc verdict aggregation. Bucket SQL matches
     * t5_hash_split's convention exactly. */
   private lazy val d8OracleSql: String = {
-    def isNewSql(x: String) =
-      s"CAST(('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= $NewBucketMin"
     s"""WITH $shinglesCte,
        |p AS (${jaccardSelectSql(s"WHERE ${isNewSql("a.doc_id")} OR ${isNewSql("b.doc_id")}")}),
        |m AS (
@@ -1338,49 +1303,28 @@ object Dedup {
        |ORDER BY doc_id""".stripMargin
   }
 
-  /** d5 oracle: the SAME 16x4 hyperplane banding (planes injected as the
-    * identical double literals), then exact-cosine confirm — mirrors the
-    * Spark plan the way d3's oracle mirrors its minhash banding. */
-  /** The d5 banded-pair SQL split as (CTEs, pair-select-without-ORDER-BY)
-    * so d5 uses it directly and d7 embeds it as a CTE. */
-  private lazy val d5PairSql: (String, String) = {
-    val pl = Similarity.planesFor(EmbedBands * EmbedPlanesPerBand)
-    def dotSql(p: Int) =
-      s"list_sum(list_transform(list_zip(embedding, ${Similarity.planeSqlFor(pl(p))}), x -> CAST(x[1] AS DOUBLE) * x[2]))"
-    val bandSelects = (0 until EmbedBands).map { b =>
-      val bits = (0 until EmbedPlanesPerBand).map(i =>
-        s"(CASE WHEN ${dotSql(b * EmbedPlanesPerBand + i)} > 0 THEN ${1L << i} ELSE 0 END)")
-        .mkString(" + ")
-      s"SELECT vec_id, $b AS band, $bits AS sig FROM embeddings"
-    }.mkString("\n UNION ALL ")
-    def cosSql(a: String, b: String) =
-      s"""(list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-         | / (sqrt(list_sum(list_transform(list_zip($a, $a), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
-         |  * sqrt(list_sum(list_transform(list_zip($b, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))))""".stripMargin
-    val ctes =
-      s"""sigs AS (
-         |$bandSelects),
-         |cand AS (
-         | SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
-         | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
-         |  AND s1.vec_id < s2.vec_id)""".stripMargin
-    val select =
-      s"""SELECT c.v1 AS vec_id_1, c.v2 AS vec_id_2,
-         | CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
-         |FROM cand c JOIN embeddings a ON a.vec_id = c.v1 JOIN embeddings b ON b.vec_id = c.v2
-         |WHERE ${cosSql("a.embedding", "b.embedding")} >= $CosineTau""".stripMargin
-    (ctes, select)
-  }
+  /** d5 oracle: s5's banded candidate CTEs ([[Similarity.knnCandSql]],
+    * the identical 16x4 plane literals), then the exact-cosine confirm as
+    * a pair select without ORDER BY, so d5 uses it directly and d7 and
+    * d26 embed it as a CTE — mirrors the Spark plan the way d3's oracle
+    * mirrors its minhash banding. */
+  private lazy val d5PairSql: String =
+    s"""SELECT c.v1 AS vec_id_1, c.v2 AS vec_id_2,
+       | CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
+       |FROM cand c JOIN embeddings a ON a.vec_id = c.v1 JOIN embeddings b ON b.vec_id = c.v2
+       |WHERE ${cosSql("a.embedding", "b.embedding")} >= $CosineTau""".stripMargin
 
   private lazy val d5OracleSql: String =
-    s"WITH ${d5PairSql._1}\n${d5PairSql._2}\nORDER BY vec_id_1, vec_id_2"
+    s"WITH ${Similarity.knnCandSql}\n$d5PairSql\nORDER BY vec_id_1, vec_id_2"
 
   /** d7 oracle: the d5 pair SQL as a CTE, closed transitively with the
-    * same recursive reach the d6 oracle uses. */
+    * same recursive reach the d6 oracle uses. `p` and `edges` are
+    * materialized: the recursion re-reads `edges` every step, and inlined
+    * each read re-expanded the whole banded pipeline. */
   private lazy val d7OracleSql: String =
-    s"""WITH RECURSIVE ${d5PairSql._1},
-       |p AS (${d5PairSql._2}),
-       |edges AS (
+    s"""WITH RECURSIVE ${Similarity.knnCandSql},
+       |p AS MATERIALIZED ($d5PairSql),
+       |edges AS MATERIALIZED (
        | SELECT vec_id_1 AS a, vec_id_2 AS b FROM p
        | UNION ALL SELECT vec_id_2, vec_id_1 FROM p),
        |reach(v, l) AS (
@@ -1829,7 +1773,7 @@ object Dedup {
     * corpus hash set is a join you do not want to pay per batch, while
     * its bloom ships broadcast in KBs and answers most probes without
     * touching the corpus at all. Same batch/corpus split as d8
-    * ([[isNewDoc]]). Per new-batch doc: its shard, the bloom verdict
+    * ([[isNewBatch]]). Per new-batch doc: its shard, the bloom verdict
     * (`admitted` — must go to exact confirmation), the exact truth
     * (`truly_dup`, the audit a deploy runs on a sample), and the
     * false-positive flag; a `~TOTAL` row carries the counts and the e6
@@ -1850,8 +1794,8 @@ object Dedup {
       .select(col("doc_id"), md5Long60(normText(col("text"))).as("h"))
       .withColumn("shard", pmod(col("h"), lit(D20Shards)))
       .localCheckpoint(true) // one corpus scan; bloom + probes + truth read it
-    val corpus = hashed.filter(!isNewDoc(col("doc_id")))
-    val batch = hashed.filter(isNewDoc(col("doc_id")))
+    val corpus = hashed.filter(!isNewBatch(col("doc_id")))
+    val batch = hashed.filter(isNewBatch(col("doc_id")))
     def positions(h: Column): Column =
       pmod(md5Long60(concat_ws("|", lit("d20"), col("i"), h)), lit(D20Bits))
     val bloom = corpus
@@ -1899,7 +1843,7 @@ object Dedup {
     s"""WITH hashed AS (
        | SELECT doc_id,
        |  CAST(('0x' || substr(md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))), 1, 15)) AS BIGINT) AS h,
-       |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= $NewBucketMin AS is_new
+       |  ${isNewSql("doc_id")} AS is_new
        | FROM documents),
        |sh AS (SELECT doc_id, h, h % $D20Shards AS shard, is_new FROM hashed),
        |pos AS (
@@ -2524,8 +2468,8 @@ object Dedup {
       s"""CASE WHEN CAST(('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
          | WHEN CAST(('0x' || substr(md5(CAST($id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'val'
          | ELSE 'test' END""".stripMargin
-    s"""WITH ${d5PairSql._1},
-       |p AS (${d5PairSql._2}),
+    s"""WITH ${Similarity.knnCandSql},
+       |p AS ($d5PairSql),
        |sp AS (
        | SELECT vec_id_1, vec_id_2, cos_e6,
        |  ${splitCase("vec_id_1")} AS s1,

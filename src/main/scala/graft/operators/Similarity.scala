@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.VectorFunctions._
+import Dedup.{isNewBatch, isNewSql}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY.md §2 s1-s4).
@@ -388,17 +389,12 @@ object Similarity {
     * the same 64 planes as 8 x 8 and cut the random-pair candidate rate
     * from ~64% to ~3%. The spec pins the reported-or-outranked invariant
     * against d5's confirmed pairs. */
-  /** s5/s19 shared: the banded-candidate kNN edge table —
-    * (vec_id, neighbor_id, cos_e6, rank) with rank ≤ [[KnnK]] per node.
-    * s5 reports it; s19 walks it. */
-  def knnEdges(spark: SparkSession, dir: String): DataFrame =
-    s5KnnJoin(spark, dir)
-
-  /** s5/s26 shared: the undirected banded-candidate SCORED pairs
-    * (va < vb, floored e6 cosine) — s5 mirrors+ranks the full set into
-    * the layer-0 graph; s26 re-links the level>=l subsets into its
+  /** The one banded candidate pass: the undirected SCORED pairs
+    * (va < vb, floored e6 cosine) — s5 and s19 mirror+rank the full set
+    * into the kNN graph; s26 re-links the level>=l subsets into its
     * upper-layer graphs (an upper HNSW layer is its own small-world
-    * graph over a sample, not a filtered view of layer 0's top-K). */
+    * graph over a sample, not a filtered view of layer 0's top-K); s28
+    * and s29 split it by batch membership; d5 keeps the pairs >= tau. */
   private[graft] def knnScoredPairs(spark: SparkSession, dir: String): DataFrame = {
     val pl = planesFor(KnnBands * KnnPlanesPerBand)
     val e = emb(spark, dir).select(col("vec_id"), col("embedding"))
@@ -434,19 +430,30 @@ object Similarity {
     scored
   }
 
-  def s5KnnJoin(spark: SparkSession, dir: String): DataFrame = {
-    val scored = knnScoredPairs(spark, dir)
-    val mirrored = scored.select(explode(array(
-        struct(col("va").as("vec_id"), col("vb").as("neighbor_id"), col("cos_e6")),
-        struct(col("vb").as("vec_id"), col("va").as("neighbor_id"), col("cos_e6")))).as("p"))
-      .select(col("p.vec_id"), col("p.neighbor_id"), col("p.cos_e6"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    mirrored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= KnnK)
+  /** Both directions (g_src, g_dst, cos_e6) of undirected scored pairs
+    * (va, vb, cos_e6), by a one-pass explode (no self-union). */
+  private def mirrorPairs(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(
+        struct(col("va").as("g_src"), col("vb").as("g_dst"), col("cos_e6")),
+        struct(col("vb").as("g_src"), col("va").as("g_dst"), col("cos_e6")))).as("p"))
+      .select(col("p.g_src"), col("p.g_dst"), col("p.cos_e6"))
+
+  /** A node's edges best first: cosine, then the neighbor id. */
+  private val edgeOrder = Window.partitionBy(col("g_src"))
+    .orderBy(col("cos_e6").desc, col("g_dst"))
+
+  /** The directed top-`k` edge table of undirected scored pairs: each
+    * node's `k` best mirrored edges, ranked `r` — s5's report, s19's
+    * graph, s26's layers and s28's stored adjacency. */
+  private def topKEdges(pairs: DataFrame, k: Int): DataFrame =
+    mirrorPairs(pairs).withColumn("r", row_number().over(edgeOrder))
+      .filter(col("r") <= k)
+
+  def s5KnnJoin(spark: SparkSession, dir: String): DataFrame =
+    topKEdges(knnScoredPairs(spark, dir), KnnK)
+      .select(col("g_src").as("vec_id"), col("g_dst").as("neighbor_id"),
+        col("cos_e6"), col("r").cast("long").as("rank"))
       .orderBy(col("vec_id"), col("rank"))
-  }
 
   val BinPlanes = 64 // s7: sign-sketch width — one BIGINT per vector
   val BinShortlist = 32 // s7: Hamming shortlist fed to the exact re-rank
@@ -509,26 +516,30 @@ object Similarity {
 
   // ------------------------------------------------------------- oracles
 
-  private def planeSql(p: Int): String = planeSqlFor(planes(p))
-
-  private def dotSql(embExpr: String, p: Int): String =
-    s"list_sum(list_transform(list_zip($embExpr, ${planeSql(p)}), x -> CAST(x[1] AS DOUBLE) * x[2]))"
+  /** One hyperplane dot of a list column: the fragment s2's buckets, the
+    * s5/d5 band signatures and s7's sketch all expand. */
+  private def dotSql(embExpr: String, plane: Array[Double]): String =
+    s"list_sum(list_transform(list_zip($embExpr, ${planeSqlFor(plane)}), x -> CAST(x[1] AS DOUBLE) * x[2]))"
 
   private val bucketSql: String =
     (0 until LshPlanes).map(p =>
-      s"(CASE WHEN ${dotSql("embedding", p)} > 0 THEN ${1L << p} ELSE 0 END)")
+      s"(CASE WHEN ${dotSql("embedding", planes(p))} > 0 THEN ${1L << p} ELSE 0 END)")
       .mkString(" + ")
+
+  private def prodSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
 
   /** Squared L2 norm of a list column — [[driftCosE6]]'s zero-norm guard
     * needs the same test SQL-side (0/0 must become the defined 0, not a
     * NaN whose BIGINT cast errors in DuckDB). */
-  private def normSql(a: String): String =
-    s"list_sum(list_transform(list_zip($a, $a), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
+  private def normSql(a: String): String = prodSql(a, a)
 
-  private def cosSql(a: String, b: String): String =
-    s"""(list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-       | / (sqrt(list_sum(list_transform(list_zip($a, $a), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))
-       |  * sqrt(list_sum(list_transform(list_zip($b, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))))))""".stripMargin
+  /** Exact cosine of two list columns — the one cosine every vector
+    * oracle (Similarity's and Dedup's d5/d12/d15) replays. */
+  private[operators] def cosSql(a: String, b: String): String =
+    s"""(${prodSql(a, b)}
+       | / (sqrt(${normSql(a)})
+       |  * sqrt(${normSql(b)})))""".stripMargin
 
   /** s3 oracle from a k-means model: the final centroids go in as a VALUES
     * literal (exact double round-trip via Double.toString), assignment and
@@ -557,28 +568,55 @@ object Similarity {
        |WHERE rank <= $LshTopK ORDER BY probe_id, rank""".stripMargin
   }
 
-  /** s5 band signatures: the identical 64-plane literals, sliced per the
-    * KnnBands x KnnPlanesPerBand config. */
+  /** [[knnScoredPairs]]'s band signatures: the identical 64-plane
+    * literals, sliced per the KnnBands x KnnPlanesPerBand layout. */
   private lazy val knnBandSql: String = {
     val pl = planesFor(KnnBands * KnnPlanesPerBand)
-    def dSql(p: Int) =
-      s"list_sum(list_transform(list_zip(embedding, ${planeSqlFor(pl(p))}), x -> CAST(x[1] AS DOUBLE) * x[2]))"
     (0 until KnnBands).map { b =>
       val bits = (0 until KnnPlanesPerBand).map(i =>
-        s"(CASE WHEN ${dSql(b * KnnPlanesPerBand + i)} > 0 THEN ${1L << i} ELSE 0 END)")
+        s"(CASE WHEN ${dotSql("embedding", pl(b * KnnPlanesPerBand + i))} > 0 THEN ${1L << i} ELSE 0 END)")
         .mkString(" + ")
       s"SELECT vec_id, $b AS band, $bits AS sig FROM embeddings"
     }.mkString("\n UNION ALL ")
   }
 
+  /** The distinct band-sharing pairs (v1 < v2) over a `sigs` CTE. */
+  private val bandPairsSql: String =
+    """ SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
+      | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
+      |  AND s1.vec_id < s2.vec_id""".stripMargin
+
+  /** [[knnScoredPairs]]'s candidate pass as the CTEs `sigs` and `cand` —
+    * the prefix of the s5 and d5/d7 oracles. */
+  private[operators] lazy val knnCandSql: String =
+    s"""sigs AS (
+       |$knnBandSql),
+       |cand AS (
+       |$bandPairsSql)""".stripMargin
+
+  /** The floored e6 cosine of each pair of a (v1, v2) candidate CTE. */
+  private def pairCosSql(cand: String): String =
+    s""" SELECT c.v1, c.v2,
+       |  CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
+       | FROM $cand c JOIN embeddings a ON a.vec_id = c.v1
+       |  JOIN embeddings b ON b.vec_id = c.v2""".stripMargin
+
+  /** [[knnScoredPairs]] whole, as the materialized CTEs `sigs`, `kcand`
+    * and `kscored` (v1, v2, cos_e6) the graph oracles (s19, s26-s31) re-read. */
+  private lazy val knnScoredSql: String =
+    s"""sigs AS MATERIALIZED (
+       |$knnBandSql),
+       |kcand AS MATERIALIZED (
+       |$bandPairsSql),
+       |kscored AS MATERIALIZED (
+       |${pairCosSql("kcand")})""".stripMargin
+
   /** s7 sketch: the identical 64-plane literals as one BIGINT bit sum
     * (distinct-bit addition ≡ bitwise OR, incl. the sign bit at p=63). */
   private lazy val binSigSql: String = {
     val pl = planesFor(BinPlanes)
-    def dSql(p: Int) =
-      s"list_sum(list_transform(list_zip(embedding, ${planeSqlFor(pl(p))}), x -> CAST(x[1] AS DOUBLE) * x[2]))"
     (0 until BinPlanes).map(p =>
-      s"(CASE WHEN ${dSql(p)} > 0 THEN ${1L << p} ELSE 0 END)")
+      s"(CASE WHEN ${dotSql("embedding", pl(p))} > 0 THEN ${1L << p} ELSE 0 END)")
       .mkString(" + ")
   }
 
@@ -667,17 +705,9 @@ object Similarity {
     "s10_nn_descent" -> s10OracleSql,
     "s7_ann_binary" -> s7OracleSql,
     "s5_knn_join" ->
-      s"""WITH sigs AS (
-         |$knnBandSql),
-         |cand AS (
-         | SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
-         | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
-         |  AND s1.vec_id < s2.vec_id),
+      s"""WITH $knnCandSql,
          |scored AS (
-         | SELECT c.v1, c.v2,
-         |  CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
-         | FROM cand c JOIN embeddings a ON a.vec_id = c.v1
-         |  JOIN embeddings b ON b.vec_id = c.v2),
+         |${pairCosSql("cand")}),
          |mirrored AS (
          | SELECT v1 AS vec_id, v2 AS neighbor_id, cos_e6 FROM scored
          | UNION ALL SELECT v2, v1, cos_e6 FROM scored)
@@ -977,19 +1007,15 @@ object Similarity {
 
   // ------------------------------------------- s11: incremental ANN indexing
 
-  /** s11 batch membership: the d8/t5 stable md5-bucket convention on
-    * vec_id — bucket >= [[Dedup.NewBucketMin]] (20%) plays the freshly
-    * embedded batch, the rest the already-indexed corpus. A real store
-    * swaps this for a snapshot/date predicate, exactly like d8. */
-  private def isNewVec(c: Column): Column =
-    graft.functions.TextFunctions.md5Long60(c.cast("string")) % 100 >= Dedup.NewBucketMin
+  // s11 batch membership is d8's ([[Dedup.isNewBatch]] on vec_id):
+  // bucket >= [[Dedup.NewBucketMin]] (20%) plays the freshly embedded
+  // batch, the rest the already-indexed corpus.
 
-  /** Test hooks for the s11 exactness pin (package-private): the batch
-    * membership predicate and a fresh corpus-slice model — the spec
-    * replays the union-equals-one-pass invariant from the raw pieces. */
-  private[graft] def s11IsNewVec(c: Column): Column = isNewVec(c)
+  /** Test hook for the s11 exactness pin (package-private): a fresh
+    * corpus-slice model — the spec replays the union-equals-one-pass
+    * invariant from the raw pieces. */
   private[graft] def s11CorpusModel(spark: SparkSession, dir: String): Seq[(Long, Array[Long])] =
-    kmeansOver(emb(spark, dir).filter(!isNewVec(col("vec_id"))))._1
+    kmeansOver(emb(spark, dir).filter(!isNewBatch(col("vec_id"))))._1
 
   /** `s11_index_delta`: incremental ANN indexing — d8's daily-batch shape
     * applied to the embedding store. The index model (s3/s6's k-means
@@ -1015,13 +1041,13 @@ object Similarity {
     * space — filed, nothing to dedup against). */
   def s11IndexDelta(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val (cents, corpusData) = kmeansOver(e.filter(!isNewVec(col("vec_id"))))
+    val (cents, corpusData) = kmeansOver(e.filter(!isNewBatch(col("vec_id"))))
     RunOracles.pending("s11_index_delta", dir, s11OracleSql(cents))
     val corpusIdx = assignCells(corpusData, cents) // at scale: the stored index
     // batch is consumed twice (nn probe + output spine) — checkpoint the
     // small side, not the corpus
     val batch = assignCells(
-      e.filter(isNewVec(col("vec_id"))).select(col("vec_id"), col("embedding")),
+      e.filter(isNewBatch(col("vec_id"))).select(col("vec_id"), col("embedding")),
       cents).localCheckpoint(true)
     val w = Window.partitionBy(col("vec_id")).orderBy(col("_cos").desc, col("nn_id"))
     val nn = batch.select(col("vec_id"), col("cell"), col("embedding").as("be"))
@@ -1046,8 +1072,6 @@ object Similarity {
     * corpus neighbor restricted to its cell, d8's bucket SQL for batch
     * membership. */
   private def s11OracleSql(cents: Seq[(Long, Array[Long])]): String = {
-    def isNewSql(x: String) =
-      s"CAST(('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= ${Dedup.NewBucketMin}"
     s"""WITH cents(cid, cent) AS (VALUES
        |  ${centroidRowsSql(cents)}),
        |scored AS (
@@ -1892,10 +1916,10 @@ object Similarity {
   def s12IndexDrift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = emb(spark, dir)
-    val (cents, _) = kmeansOver(e.filter(!isNewVec(col("vec_id"))))
+    val (cents, _) = kmeansOver(e.filter(!isNewBatch(col("vec_id"))))
     RunOracles.pending("s12_index_drift", dir, s12OracleSql(cents))
     val withCos = e.select(col("vec_id"), col("embedding"),
-        isNewVec(col("vec_id")).cast("long").as("is_new"))
+        isNewBatch(col("vec_id")).cast("long").as("is_new"))
       .withColumn("_cos", cosineMatrix(col("embedding"), centroidMatrix(cents)))
     val best = array_max(scoredCells(cents, col("_cos")))
     // consumed twice (stats aggregate + reassignment pass): checkpoint the
@@ -1949,7 +1973,7 @@ object Similarity {
   private[graft] def s12ModelAndMeans(spark: SparkSession, dir: String)
     : (Seq[(Long, Array[Long])], Map[Long, Array[Long]]) = {
     val e = emb(spark, dir)
-    val (cents, _) = kmeansOver(e.filter(!isNewVec(col("vec_id"))))
+    val (cents, _) = kmeansOver(e.filter(!isNewBatch(col("vec_id"))))
     val withCos = e.select(col("vec_id"), col("embedding"))
       .withColumn("_cos", cosineMatrix(col("embedding"), centroidMatrix(cents)))
     val rows = withCos.select(
@@ -1970,8 +1994,6 @@ object Similarity {
     * embeddings (floor-div integer component sums — the model is the only
     * injected state, everything the operator derives is re-derived). */
   private def s12OracleSql(cents: Seq[(Long, Array[Long])]): String = {
-    def isNewSql(x: String) =
-      s"CAST(('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= ${Dedup.NewBucketMin}"
     s"""WITH cents(cid, cent) AS (VALUES
        |  ${centroidRowsSql(cents)}),
        |scored AS (
@@ -2409,6 +2431,100 @@ object Similarity {
   val BeamRounds = 3 // s19: expansion rounds over the kNN graph
   val BeamTopK = 5 // s19: neighbors reported per probe
 
+  /** The frames a graph-beam query walks, built once per query: the
+    * probe panel, the candidate embeddings, the entry candidates
+    * (probe_id, cand) and the layer graphs (g_src, g_dst) — `g0` is the
+    * bottom (s19's one flat kNN graph), `upper` s26's g2 and g1, top
+    * first (empty for s19). Every round ([[beamRoundFrames]]) reads it,
+    * the plan probes ([[s19RoundIntraPlan]], [[hnswRoundIntraPlan]]) too
+    * (r20 verdict item 2: the round plans hide behind the checkpoints,
+    * so the committed plan pairs showed nothing). */
+  private case class GraphMachinery(probes: DataFrame, cembs: DataFrame,
+      entry: DataFrame, g0: DataFrame, upper: Seq[DataFrame])
+
+  /** s19's build: the prebuilt flat kNN graph and the fixed entry
+    * fan-out (every probe's [[BeamEntries]] entry vectors but itself). */
+  private def s19Build(spark: SparkSession, dir: String): GraphMachinery = {
+    val e = emb(spark, dir)
+    val graph = topKEdges(knnScoredPairs(spark, dir), KnnK)
+      .select(col("g_src"), col("g_dst"))
+      .localCheckpoint(true) // the prebuilt index; every round walks it
+    val probes = e.filter(col("vec_id") < NumProbes)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      .localCheckpoint(true)
+    val cembs = e.select(col("vec_id").as("cand"), col("embedding").as("ce"))
+    val entries = probes.select(col("probe_id"))
+      .crossJoin(broadcast( // hint: dial
+        e.filter(col("vec_id") < BeamEntries).select(col("vec_id").as("cand"))))
+      .filter(col("cand") =!= col("probe_id"))
+    GraphMachinery(probes, cembs, entries, graph, Nil)
+  }
+
+  /** A probe's candidates best first: cosine, then the candidate id. */
+  private val beamOrder = Window.partitionBy(col("probe_id"))
+    .orderBy(col("cos_e6").desc, col("cand"))
+
+  /** Scores a (probe_id, cand) candidate set and keeps each probe's
+    * `width` best (probe_id, cand, cos_e6). */
+  private def beamScore(m: GraphMachinery, cands: DataFrame, width: Int): DataFrame =
+    // the candidate set is panel-grained (dial-bounded), the embedding
+    // table is the corpus: broadcast the panel so the corpus side is one
+    // exchange-free, sort-free scan per round
+    broadcast(cands) // hint: dial
+      .join(m.cembs, Seq("cand"))
+      .join(broadcast(m.probes), Seq("probe_id")) // hint: dial
+      .select(col("probe_id"), col("cand"),
+        floor(cosineFast(col("pe"), col("ce")) * lit(1000000.0))
+          .cast("long").as("cos_e6"))
+      .withColumn("r", row_number().over(beamOrder))
+      .filter(col("r") <= width)
+      .select(col("probe_id"), col("cand"), col("cos_e6"))
+
+  /** One beam round with the final checkpoint left OFF: expand `base`
+    * (probe_id, cand) through `graph`, score the distinct candidate set,
+    * keep the top `width` per probe. Returns (the scored beam, the
+    * candidate SET — the per-round cost s31 bills each cell, checkpointed
+    * only when the caller counts it). s19 and s26 differ only in `base`:
+    * s19 expands its beam alone, s26 its beam ∪ entry set. */
+  private def beamRoundFrames(m: GraphMachinery, base: DataFrame,
+      graph: DataFrame, width: Int, keepCost: Boolean): (DataFrame, DataFrame) = {
+    // broadcast the PANEL-grained base (≤ NumProbes x (width+1) rows, a
+    // dial-bounded constant) so the corpus-grained graph streams with no
+    // exchange and no sort — the structurally right index-probe plan at
+    // any scale (guide §3.1/§2.4); a sort-merge here shuffles the graph
+    // once per round
+    val nb = broadcast(base).join(graph, col("cand") === col("g_src")) // hint: dial
+      .select(col("probe_id"), col("g_dst").as("cand"))
+    val candSet0 = base.union(nb)
+      .filter(col("cand") =!= col("probe_id")).distinct()
+    val candSet = if (keepCost) candSet0.localCheckpoint(true) else candSet0
+    (beamScore(m, candSet, width), candSet)
+  }
+
+  /** Each probe's final top [[BeamTopK]] of a beam (s19, s26). */
+  private def beamTopK(beam: DataFrame): DataFrame =
+    beam
+      .withColumn("rank", row_number().over(beamOrder).cast("long"))
+      .filter(col("rank") <= BeamTopK)
+      .select(col("probe_id"), col("rank"), col("cand").as("neighbor_id"),
+        col("cos_e6"))
+      .orderBy(col("probe_id"), col("rank"))
+
+  /** s19's round, UN-checkpointed: the beam alone is expanded (its
+    * entries were scored once, in round 1). */
+  private def s19Round(m: GraphMachinery, beam: DataFrame): DataFrame =
+    beamRoundFrames(m, beam.select(col("probe_id"), col("cand")), m.g0,
+      BeamWidth, keepCost = false)._1
+
+  /** Plan probe (never benched, never on the oracle surface): one s19
+    * round frame BEFORE its localCheckpoint, so `explain("formatted")`
+    * shows the per-round expansion and scoring joins the production
+    * loop hides behind checkpoints. Shares [[s19Round]] verbatim. */
+  private[graft] def s19RoundIntraPlan(spark: SparkSession, dir: String): DataFrame = {
+    val m = s19Build(spark, dir)
+    s19Round(m, beamScore(m, m.entry, BeamWidth).localCheckpoint(true))
+  }
+
   /** `s19_graph_beam`: graph-based ANN query — greedy beam search over
     * the banded kNN graph (the HNSW/NSG query path, on s5's edge table):
     * from [[BeamEntries]] fixed entry points, [[BeamRounds]] rounds of
@@ -2428,105 +2544,20 @@ object Similarity {
     * integers with an id tie-break, so beam membership (and therefore
     * the whole walk) is engine-exact; the oracle replays the identical
     * unrolled rounds. */
-  /** s19's build: the prebuilt flat kNN graph, the probe panel, the
-    * candidate embeddings and the fixed entry fan-out — extracted so the
-    * per-round body ([[s19Round]]) is one shared code path the query
-    * loop checkpoints and the plan probe ([[s19RoundIntraPlan]]) dumps
-    * un-checkpointed (r20 verdict item 2: the round plans hide behind
-    * the checkpoints, so the committed s19 plan pair showed nothing). */
-  private case class BeamMachinery(graph: DataFrame, probes: DataFrame,
-      cembs: DataFrame, entries: DataFrame)
-
-  private def s19Build(spark: SparkSession, dir: String): BeamMachinery = {
-    val e = emb(spark, dir)
-    val graph = knnEdges(spark, dir)
-      .select(col("vec_id").as("g_src"), col("neighbor_id").as("g_dst"))
-      .localCheckpoint(true) // the prebuilt index; every round walks it
-    val probes = e.filter(col("vec_id") < NumProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      .localCheckpoint(true)
-    val cembs = e.select(col("vec_id").as("cand"), col("embedding").as("ce"))
-    val entries = probes.select(col("probe_id"))
-      .crossJoin(broadcast( // hint: dial
-        e.filter(col("vec_id") < BeamEntries).select(col("vec_id").as("cand"))))
-      .filter(col("cand") =!= col("probe_id"))
-    BeamMachinery(graph, probes, cembs, entries)
-  }
-
-  private def s19Score(m: BeamMachinery, cands: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_e6").desc, col("cand"))
-    // the candidate set is probe-panel-grained (dial-bounded), the
-    // embedding table is the corpus: broadcast the panel so the corpus
-    // side streams exchange-free each round (s26's hnswRound rule)
-    broadcast(cands) // hint: dial
-      .join(m.cembs, Seq("cand"))
-      .join(broadcast(m.probes), Seq("probe_id")) // hint: dial
-      .select(col("probe_id"), col("cand"),
-        floor(cosineFast(col("pe"), col("ce")) * lit(1000000.0))
-          .cast("long").as("cos_e6"))
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= BeamWidth)
-      .select(col("probe_id"), col("cand"), col("cos_e6"))
-  }
-
-  /** One beam round, UN-checkpointed: expansion + distinct + score. */
-  private def s19Round(m: BeamMachinery, beam: DataFrame): DataFrame = {
-    // beam is panel-grained, the graph is the corpus-sized index —
-    // broadcast the beam so the expansion streams the graph without
-    // shuffling it each round (s26's hnswRound rule)
-    val nb = broadcast(beam) // hint: dial
-      .join(m.graph, col("cand") === col("g_src"))
-      .select(col("probe_id"), col("g_dst").as("cand"))
-    val candSet = beam.select(col("probe_id"), col("cand"))
-      .union(nb)
-      .filter(col("cand") =!= col("probe_id"))
-      .distinct()
-    s19Score(m, candSet)
-  }
-
-  /** Plan probe (never benched, never on the oracle surface): one s19
-    * round frame BEFORE its localCheckpoint, so `explain("formatted")`
-    * shows the per-round expansion and scoring joins the production
-    * loop hides behind checkpoints. Shares [[s19Round]] verbatim. */
-  private[graft] def s19RoundIntraPlan(spark: SparkSession, dir: String): DataFrame = {
-    val m = s19Build(spark, dir)
-    s19Round(m, s19Score(m, m.entries).localCheckpoint(true))
-  }
-
   def s19GraphBeam(spark: SparkSession, dir: String): DataFrame = {
     val m = s19Build(spark, dir)
-    var beam = s19Score(m, m.entries).localCheckpoint(true)
+    var beam = beamScore(m, m.entry, BeamWidth).localCheckpoint(true)
     for (_ <- 2 to BeamRounds)
       beam = s19Round(m, beam).localCheckpoint(true)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_e6").desc, col("cand"))
-    beam
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= BeamTopK)
-      .select(col("probe_id"), col("rank"), col("cand").as("neighbor_id"),
-        col("cos_e6"))
-      .orderBy(col("probe_id"), col("rank"))
+    beamTopK(beam)
   }
 
   private lazy val s19OracleSql: String = {
-    val cos = cosSql("p.pe", "ce.embedding")
     // AS MATERIALIZED throughout: every beam CTE is referenced twice by the
     // next round (base + neighbor expansion), so DuckDB's default inlining
     // re-expands the whole chain 2^rounds times — at sf0.1 that spilled the
     // host disk (>60 GB). Materialization makes the replay linear in the
     // round count (sf0.1 replays in seconds inside an 8 GB spill cap).
-    def scoreCte(name: String, candCte: String): String =
-      s"""$name AS MATERIALIZED (
-         | SELECT probe_id, cand, cos_e6 FROM (
-         |  SELECT c.probe_id, c.cand,
-         |   CAST(floor($cos * 1000000.0) AS BIGINT) AS cos_e6,
-         |   row_number() OVER (PARTITION BY c.probe_id
-         |     ORDER BY CAST(floor($cos * 1000000.0) AS BIGINT) DESC, c.cand) AS r
-         |  FROM $candCte c
-         |   JOIN embeddings ce ON ce.vec_id = c.cand
-         |   JOIN probes p ON p.probe_id = c.probe_id)
-         | WHERE r <= $BeamWidth)""".stripMargin
     val rounds = (2 to BeamRounds).map { r =>
       s"""cand$r AS MATERIALIZED (
          | SELECT DISTINCT probe_id, cand FROM (
@@ -2535,19 +2566,9 @@ object Similarity {
          |  SELECT b.probe_id, g.neighbor_id AS cand
          |  FROM beam${r - 1} b JOIN g ON b.cand = g.vec_id)
          | WHERE cand <> probe_id),
-         |${scoreCte(s"beam$r", s"cand$r")}""".stripMargin
+         |${beamScoreCteSql(s"beam$r", s"cand$r", BeamWidth)}""".stripMargin
     }.mkString(",\n")
-    s"""WITH sigs AS MATERIALIZED (
-       |$knnBandSql),
-       |kcand AS MATERIALIZED (
-       | SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
-       | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
-       |  AND s1.vec_id < s2.vec_id),
-       |kscored AS MATERIALIZED (
-       | SELECT c.v1, c.v2,
-       |  CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
-       | FROM kcand c JOIN embeddings a ON a.vec_id = c.v1
-       |  JOIN embeddings b ON b.vec_id = c.v2),
+    s"""WITH $knnScoredSql,
        |kmirrored AS (
        | SELECT v1 AS vec_id, v2 AS neighbor_id, cos_e6 FROM kscored
        | UNION ALL SELECT v2, v1, cos_e6 FROM kscored),
@@ -2556,23 +2577,15 @@ object Similarity {
        |  SELECT vec_id, neighbor_id, row_number() OVER (PARTITION BY vec_id
        |    ORDER BY cos_e6 DESC, neighbor_id) AS rnk
        |  FROM kmirrored) WHERE rnk <= $KnnK),
-       |probes AS MATERIALIZED (
-       | SELECT vec_id AS probe_id, embedding AS pe FROM embeddings
-       | WHERE vec_id < $NumProbes),
+       |$probesCteSql,
        |cand1 AS (
        | SELECT probe_id, e.vec_id AS cand
        | FROM probes CROSS JOIN (SELECT vec_id FROM embeddings
        |   WHERE vec_id < $BeamEntries) e
        | WHERE e.vec_id <> probe_id),
-       |${scoreCte("beam1", "cand1")},
+       |${beamScoreCteSql("beam1", "cand1", BeamWidth)},
        |$rounds
-       |SELECT probe_id, rank, cand AS neighbor_id, cos_e6 FROM (
-       | SELECT probe_id, cand, cos_e6,
-       |  CAST(row_number() OVER (PARTITION BY probe_id
-       |    ORDER BY cos_e6 DESC, cand) AS BIGINT) AS rank
-       | FROM beam$BeamRounds)
-       |WHERE rank <= $BeamTopK
-       |ORDER BY probe_id, rank""".stripMargin
+       |${beamTopKSql(s"beam$BeamRounds")}""".stripMargin
   }
 
   val HnswLevelMod = 4 // s26: geometric layer sampling, P(level >= l) = 4^-l
@@ -2610,33 +2623,26 @@ object Similarity {
   def s26HnswLayers(spark: SparkSession, dir: String): DataFrame = {
     val m = hnswBuild(spark, dir)
     var beam: Option[DataFrame] = None
-    for (_ <- 1 to HnswUpperRounds)
-      beam = Some(hnswRound(m, beam, m.g2, HnswUpperWidth)._1)
-    for (_ <- 1 to HnswUpperRounds)
-      beam = Some(hnswRound(m, beam, m.g1, HnswUpperWidth)._1)
+    for (g <- m.upper; _ <- 1 to HnswUpperRounds)
+      beam = Some(hnswRound(m, beam, g, HnswUpperWidth)._1)
     for (_ <- 1 to HnswBeamRounds)
       beam = Some(hnswRound(m, beam, m.g0, BeamWidth)._1)
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_e6").desc, col("cand"))
-    beam.get
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= BeamTopK)
-      .select(col("probe_id"), col("rank"), col("cand").as("neighbor_id"),
-        col("cos_e6"))
-      .orderBy(col("probe_id"), col("rank"))
+    beamTopK(beam.get)
+  }
+
+  /** s26's deterministic geometric level `lvl` of `vec_id` (md5_60 % 16
+    * = 0 → 2, % 4 = 0 → 1, else 0): the layer build (s26, s31) and the
+    * insert/delete paths (s28, s29) all read it. */
+  private def hnswLevel: Column = {
+    val h = graft.functions.TextFunctions.md5Long60(col("vec_id").cast("string"))
+    when(h % 16 === 0, 2).when(h % 4 === 0, 1).otherwise(0).as("lvl")
   }
 
   /** s26's build, shared with s31's dial sweep: level table, per-layer
     * re-linked graphs, probe panel, entry set, candidate embeddings. */
-  private case class HnswMachinery(probes: DataFrame, entry: DataFrame,
-      cembs: DataFrame, g2: DataFrame, g1: DataFrame, g0: DataFrame)
-
-  private def hnswBuild(spark: SparkSession, dir: String): HnswMachinery = {
+  private def hnswBuild(spark: SparkSession, dir: String): GraphMachinery = {
     val e = emb(spark, dir)
-    val h = graft.functions.TextFunctions.md5Long60(col("vec_id").cast("string"))
-    val lvl = e.select(col("vec_id"),
-        when(h % 16 === 0, 2).when(h % 4 === 0, 1).otherwise(0).as("lvl"))
-      .localCheckpoint(true)
+    val lvl = e.select(col("vec_id"), hnswLevel).localCheckpoint(true)
     val pairs = knnScoredPairs(spark, dir).localCheckpoint(true)
     def layerGraph(l: Int): DataFrame = {
       val p2 =
@@ -2647,15 +2653,7 @@ object Similarity {
             .join(members.select(col("vec_id").as("va")), Seq("va"))
             .join(members.select(col("vec_id").as("vb")), Seq("vb"))
         }
-      val mirrored = p2.select(explode(array(
-          struct(col("va").as("g_src"), col("vb").as("g_dst"), col("cos_e6")),
-          struct(col("vb").as("g_src"), col("va").as("g_dst"), col("cos_e6")))).as("p"))
-        .select(col("p.g_src"), col("p.g_dst"), col("p.cos_e6"))
-      val w = Window.partitionBy(col("g_src"))
-        .orderBy(col("cos_e6").desc, col("g_dst"))
-      mirrored.withColumn("r", row_number().over(w))
-        .filter(col("r") <= KnnK)
-        .select(col("g_src"), col("g_dst"))
+      topKEdges(p2, KnnK).select(col("g_src"), col("g_dst"))
         .localCheckpoint(true)
     }
     val g2 = layerGraph(2); val g1 = layerGraph(1); val g0 = layerGraph(0)
@@ -2670,58 +2668,25 @@ object Similarity {
     val entry = probes.select(col("probe_id"))
       .crossJoin(broadcast(entryRow)).localCheckpoint(true) // hint: scalar
     val cembs = e.select(col("vec_id").as("cand"), col("embedding").as("ce"))
-    HnswMachinery(probes, entry, cembs, g2, g1, g0)
+    GraphMachinery(probes, cembs, entry, g0, Seq(g2, g1))
   }
 
-  /** One descent round: expand the beam (∪ entry) through `graph`, score
-    * the distinct candidate set, keep the top `width` per probe. Returns
-    * (next beam — checkpointed, it feeds the next round twice — and the
-    * scored candidate SET, the per-round cost s31 bills each cell). */
-  private def hnswRound(m: HnswMachinery, beam: Option[DataFrame],
-      graph: DataFrame, width: Int,
-      keepCost: Boolean = false): (DataFrame, DataFrame) = {
-    val (scored, candSet) = hnswRoundFrames(m, beam, graph, width, keepCost)
-    (scored.localCheckpoint(true), candSet)
-  }
-
-  /** [[hnswRound]]'s body with the final checkpoint left OFF — the one
-    * shared code path the query loop materializes and the plan probe
-    * ([[hnswRoundIntraPlan]]) dumps, so the committed intra-round plan
-    * is the executed shape, not a reconstruction (r20 verdict item 2). */
-  private def hnswRoundFrames(m: HnswMachinery, beam: Option[DataFrame],
-      graph: DataFrame, width: Int,
-      keepCost: Boolean): (DataFrame, DataFrame) = {
-    val base = beam match {
+  /** s26's round base: the prior beam ∪ the entry set (the entry rides
+    * along every round), or the entry set alone in round 1. */
+  private def hnswBase(m: GraphMachinery, beam: Option[DataFrame]): DataFrame =
+    beam match {
       case Some(b) => b.select(col("probe_id"), col("cand")).union(m.entry)
       case None => m.entry
     }
-    // broadcast the PANEL-grained beam (≤ NumProbes x (width+1) rows, a
-    // dial-bounded constant) so the corpus-grained layer graph streams
-    // with no exchange and no sort — the structurally right index-probe
-    // plan at any scale (guide §3.1/§2.4); a sort-merge here shuffles the
-    // graph once per round
-    val nb = broadcast(base).join(graph, col("cand") === col("g_src")) // hint: dial
-      .select(col("probe_id"), col("g_dst").as("cand"))
-    val candSet0 = base.union(nb)
-      .filter(col("cand") =!= col("probe_id")).distinct()
-    // checkpoint the candidate set only when the caller counts it as the
-    // cost axis (s31) — s26's query path consumes it exactly once
-    val candSet = if (keepCost) candSet0.localCheckpoint(true) else candSet0
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_e6").desc, col("cand"))
-    // same rule for the scoring join: the candidate set is panel-grained,
-    // the embedding table is the corpus — broadcast the panel so the
-    // corpus side is one exchange-free, sort-free scan per round
-    val scored = broadcast(candSet) // hint: dial
-      .join(m.cembs, Seq("cand"))
-      .join(broadcast(m.probes), Seq("probe_id")) // hint: dial
-      .select(col("probe_id"), col("cand"),
-        floor(cosineFast(col("pe"), col("ce")) * lit(1000000.0))
-          .cast("long").as("cos_e6"))
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= width)
-      .select(col("probe_id"), col("cand"), col("cos_e6"))
-    (scored, candSet)
+
+  /** One descent round: [[beamRoundFrames]] over s26's base, the next
+    * beam checkpointed (it feeds the next round twice). */
+  private def hnswRound(m: GraphMachinery, beam: Option[DataFrame],
+      graph: DataFrame, width: Int,
+      keepCost: Boolean = false): (DataFrame, DataFrame) = {
+    val (scored, candSet) =
+      beamRoundFrames(m, hnswBase(m, beam), graph, width, keepCost)
+    (scored.localCheckpoint(true), candSet)
   }
 
   /** Plan probe (never benched, never on the oracle surface): one full
@@ -2730,8 +2695,9 @@ object Similarity {
     * its localCheckpoint, expansion and scoring joins visible. */
   private[graft] def hnswRoundIntraPlan(spark: SparkSession, dir: String): DataFrame = {
     val m = hnswBuild(spark, dir)
-    val first = hnswRound(m, None, m.g2, HnswUpperWidth)._1
-    hnswRoundFrames(m, Some(first), m.g2, HnswUpperWidth, keepCost = false)._1
+    val first = hnswRound(m, None, m.upper.head, HnswUpperWidth)._1
+    beamRoundFrames(m, hnswBase(m, Some(first)), m.upper.head, HnswUpperWidth,
+      keepCost = false)._1
   }
 
   // AS MATERIALIZED on every multiply-referenced CTE: the unrolled
@@ -2741,8 +2707,8 @@ object Similarity {
   // sweep. Materialized, the same statement replays at sf0.1 in ~9 s
   // inside an 8 GB spill cap (measured r18), so the full surface is
   // hash-verifiable at 10x driver scale and no oracle can exhaust disk.
-  // (Shared by s26 and s31, which replays the same machinery per cell.)
-  private def hnswScoreCteSql(name: String, candCte: String, width: Int): String = {
+  // (Shared by s19, s26 and s31, which replays the same machinery per cell.)
+  private def beamScoreCteSql(name: String, candCte: String, width: Int): String = {
     val cos = cosSql("p.pe", "ce.embedding")
     s"""$name AS MATERIALIZED (
        | SELECT probe_id, cand, cos_e6 FROM (
@@ -2755,6 +2721,32 @@ object Similarity {
        |   JOIN probes p ON p.probe_id = c.probe_id)
        | WHERE r <= $width)""".stripMargin
   }
+
+  /** [[beamTopK]] as the oracle's final select over a beam CTE. */
+  private def beamTopKSql(beam: String): String =
+    s"""SELECT probe_id, rank, cand AS neighbor_id, cos_e6 FROM (
+       | SELECT probe_id, cand, cos_e6,
+       |  CAST(row_number() OVER (PARTITION BY probe_id
+       |    ORDER BY cos_e6 DESC, cand) AS BIGINT) AS rank
+       | FROM $beam)
+       |WHERE rank <= $BeamTopK
+       |ORDER BY probe_id, rank""".stripMargin
+
+  /** The probe panel CTE every beam oracle scores against. */
+  private val probesCteSql: String =
+    s"""probes AS MATERIALIZED (
+       | SELECT vec_id AS probe_id, embedding AS pe FROM embeddings
+       | WHERE vec_id < $NumProbes)""".stripMargin
+
+  /** The oracle `lvl` CTE: [[hnswLevel]] per vec_id, plus `extraCols`
+    * (s28/s29 add their batch column). */
+  private def lvlCteSql(extraCols: String): String =
+    s"""lvl AS MATERIALIZED (
+       | SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2
+       |   WHEN h % 4 = 0 THEN 1 ELSE 0 END AS lvl$extraCols
+       | FROM (SELECT vec_id,
+       |   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
+       |  FROM embeddings))""".stripMargin
 
   /** The descent-round CTE chain: `<prefix>base$r` / `<prefix>cand$r` /
     * `<prefix>beam$r` for each (graph, width) layer. `startFrom` seeds
@@ -2784,7 +2776,7 @@ object Similarity {
          |  SELECT b.probe_id, g.g_dst AS cand
          |  FROM ${prefix}base$r b JOIN $g g ON b.cand = g.g_src)
          | WHERE cand <> probe_id),
-         |${hnswScoreCteSql(s"${prefix}beam$r", s"${prefix}cand$r", width)}""".stripMargin
+         |${beamScoreCteSql(s"${prefix}beam$r", s"${prefix}cand$r", width)}""".stripMargin
     }.mkString(",\n")
 
   /** The shared s26/s31 CTE prefix: banded scored pairs, level table,
@@ -2806,23 +2798,8 @@ object Similarity {
          |   SELECT s.v2, s.v1, s.cos_e6 FROM kscored s$flt))
          | WHERE r <= $KnnK)""".stripMargin
     }
-    s"""sigs AS MATERIALIZED (
-       |$knnBandSql),
-       |kcand AS MATERIALIZED (
-       | SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
-       | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
-       |  AND s1.vec_id < s2.vec_id),
-       |kscored AS MATERIALIZED (
-       | SELECT c.v1, c.v2,
-       |  CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
-       | FROM kcand c JOIN embeddings a ON a.vec_id = c.v1
-       |  JOIN embeddings b ON b.vec_id = c.v2),
-       |lvl AS MATERIALIZED (
-       | SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2
-       |   WHEN h % 4 = 0 THEN 1 ELSE 0 END AS lvl
-       | FROM (SELECT vec_id,
-       |   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-       |  FROM embeddings)),
+    s"""$knnScoredSql,
+       |${lvlCteSql("")},
        |${layerGraphCte("g2", 2)},
        |${layerGraphCte("g1", 1)},
        |${layerGraphCte("g0", 0)},
@@ -2830,9 +2807,7 @@ object Similarity {
        | SELECT coalesce(min(CASE WHEN lvl >= 2 THEN vec_id END),
        |   min(CASE WHEN lvl >= 1 THEN vec_id END), min(vec_id)) AS cand
        | FROM lvl),
-       |probes AS MATERIALIZED (
-       | SELECT vec_id AS probe_id, embedding AS pe FROM embeddings
-       | WHERE vec_id < $NumProbes),
+       |$probesCteSql,
        |entryset AS MATERIALIZED (SELECT probe_id, cand FROM probes CROSS JOIN ent)""".stripMargin
   }
 
@@ -2843,13 +2818,7 @@ object Similarity {
       Seq.fill(HnswBeamRounds)(("g0", BeamWidth))
     s"""WITH $hnswPrefixSql,
        |${hnswRoundChainSql("", layers, None)}
-       |SELECT probe_id, rank, cand AS neighbor_id, cos_e6 FROM (
-       | SELECT probe_id, cand, cos_e6,
-       |  CAST(row_number() OVER (PARTITION BY probe_id
-       |    ORDER BY cos_e6 DESC, cand) AS BIGINT) AS rank
-       | FROM beam${layers.size})
-       |WHERE rank <= $BeamTopK
-       |ORDER BY probe_id, rank""".stripMargin
+       |${beamTopKSql(s"beam${layers.size}")}""".stripMargin
   }
 
   /** `s27_hnsw_recall`: s26's eval twin — recall@[[BeamTopK]] of the
@@ -2917,7 +2886,7 @@ object Similarity {
     // identical for every cell, so its cost is a constant term
     var ub: Option[DataFrame] = None
     val upperCands = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (g <- Seq.fill(HnswUpperRounds)(m.g2) ++ Seq.fill(HnswUpperRounds)(m.g1)) {
+    for (g <- m.upper; _ <- 1 to HnswUpperRounds) {
       val (b, cs) = hnswRound(m, ub, g, HnswUpperWidth, keepCost = true)
       ub = Some(b); upperCands += cs
     }
@@ -2929,8 +2898,6 @@ object Similarity {
     val truthStats = truth.agg(
       countDistinct(col("probe_id")).as("n_probes"),
       count(lit(1)).as("n_exact"))
-    val wPr = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_e6").desc, col("cand"))
     val cells = S31Widths.flatMap { wdt =>
       var beam = upper
       var costs = Vector.empty[DataFrame]
@@ -2940,7 +2907,7 @@ object Similarity {
         costs = costs :+ cs.agg(count(lit(1)).as("n"))
         val cellCost = costs.reduce(_ unionAll _).agg(sum(col("n")).as("l0_n"))
         val hits = beam
-          .withColumn("rank", row_number().over(wPr))
+          .withColumn("rank", row_number().over(beamOrder))
           .filter(col("rank") <= BeamTopK)
           .select(col("probe_id"), col("cand").as("neighbor_id"))
           .join(truth, Seq("probe_id", "neighbor_id"), "left_semi")
@@ -3030,36 +2997,46 @@ object Similarity {
     * join is keyed on (band, sig) with bounded buckets, every window is
     * per-node, and untouched nodes are never rewritten (the left-semi
     * against touched prunes them before the merge shuffle). */
-  def s28HnswInsert(spark: SparkSession, dir: String): DataFrame = {
-    val h = graft.functions.TextFunctions.md5Long60(col("vec_id").cast("string"))
-    val lvl = emb(spark, dir).select(col("vec_id"),
-        when(h % 16 === 0, 2).when(h % 4 === 0, 1).otherwise(0).as("lvl"),
-        isNewVec(col("vec_id")).as("is_batch"))
+  /** s28/s29's inputs: the level table with each vector's batch flag
+    * `is_batch` (s28's inserts, s29's tombstones), and ONE banded pass
+    * over the union carrying both ends' level (la, lb) and flag (ba,
+    * bb). Every layer reads the pairs — checkpointed. */
+  private def batchLevelPairs(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val lvl = emb(spark, dir).select(col("vec_id"), hnswLevel,
+        isNewBatch(col("vec_id")).as("is_batch"))
       .localCheckpoint(true)
-    // one banded pass over the union, then partitioned by batch
-    // membership: corpus-corpus pairs reconstruct the stored index (at
-    // scale: a read of the persisted adjacency); >=1-batch pairs are the
-    // day's delta. The frame is consumed by all three layers — checkpoint.
     val pairs = knnScoredPairs(spark, dir)
       .join(lvl.select(col("vec_id").as("va"), col("lvl").as("la"),
         col("is_batch").as("ba")), Seq("va"))
       .join(lvl.select(col("vec_id").as("vb"), col("lvl").as("lb"),
         col("is_batch").as("bb")), Seq("vb"))
       .localCheckpoint(true)
-    def mirror(df: DataFrame): DataFrame = df.select(explode(array(
-        struct(col("va").as("g_src"), col("vb").as("g_dst"), col("cos_e6")),
-        struct(col("vb").as("g_src"), col("va").as("g_dst"), col("cos_e6")))).as("p"))
-      .select(col("p.g_src"), col("p.g_dst"), col("p.cos_e6"))
+    (lvl, pairs)
+  }
+
+  /** [[batchLevelPairs]] as oracle CTEs: the banded prefix, `lvl` with the
+    * batch flag named `flag`, and the flagged pairs `lp`. */
+  private def batchLevelPairsSql(flag: String): String =
+    s"""$knnScoredSql,
+       |${lvlCteSql(s",\n  ${isNewSql("vec_id")} AS $flag")},
+       |lp AS MATERIALIZED (
+       | SELECT k.v1, k.v2, k.cos_e6, a.lvl AS la, b.lvl AS lb,
+       |  a.$flag AS ba, b.$flag AS bb
+       | FROM kscored k JOIN lvl a ON a.vec_id = k.v1
+       |  JOIN lvl b ON b.vec_id = k.v2)""".stripMargin
+
+  def s28HnswInsert(spark: SparkSession, dir: String): DataFrame = {
+    // one banded pass over the union, then partitioned by batch
+    // membership: corpus-corpus pairs reconstruct the stored index (at
+    // scale: a read of the persisted adjacency); >=1-batch pairs are the
+    // day's delta
+    val (lvl, pairs) = batchLevelPairs(spark, dir)
     def layerRows(l: Int): DataFrame = {
       val p = pairs.filter(col("la") >= l && col("lb") >= l)
-      val w = Window.partitionBy(col("g_src"))
-        .orderBy(col("cos_e6").desc, col("g_dst"))
       // the stored per-layer adjacency: corpus-only candidates, top-K
-      val stored = mirror(p.filter(!col("ba") && !col("bb")))
-        .withColumn("r", row_number().over(w))
-        .filter(col("r") <= KnnK)
+      val stored = topKEdges(p.filter(!col("ba") && !col("bb")), KnnK)
         .select(col("g_src"), col("g_dst"), col("cos_e6"))
-      val delta = mirror(p.filter(col("ba") || col("bb")))
+      val delta = mirrorPairs(p.filter(col("ba") || col("bb")))
       // touched is batch-proportional, stored is the corpus-scaled index:
       // broadcast the batch side so the stored adjacency streams
       // un-shuffled through the prune (guide §3.1) — but batch size is a
@@ -3074,7 +3051,7 @@ object Similarity {
       stored.join(BoundedBroadcast.hintIfBounded(touched, nTouched),
           Seq("g_src"), "left_semi")
         .union(delta)
-        .withColumn("rank", row_number().over(w).cast("long"))
+        .withColumn("rank", row_number().over(edgeOrder).cast("long"))
         .filter(col("rank") <= KnnK)
         .select(lit(l.toLong).as("lvl"), col("g_src").as("vec_id"),
           col("rank"), col("g_dst").as("neighbor_id"), col("cos_e6"))
@@ -3092,8 +3069,6 @@ object Similarity {
     * every multiply-referenced CTE (the s26 lesson: default inlining
     * re-expands the banded pipeline once per reference). */
   private lazy val s28OracleSql: String = {
-    def isNewSql(x: String) =
-      s"CAST(('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= ${Dedup.NewBucketMin}"
     def layerCtes(l: Int): String =
       s"""m$l AS MATERIALIZED (
          | SELECT v1 AS g_src, v2 AS g_dst, cos_e6, ba OR bb AS any_batch
@@ -3110,29 +3085,7 @@ object Similarity {
       s"""SELECT CAST($l AS BIGINT) AS lvl, g.g_src AS vec_id,
          | CAST(g.rank AS BIGINT) AS rank, g.g_dst AS neighbor_id, g.cos_e6
          |FROM g$l g JOIN t$l t ON t.g_src = g.g_src WHERE g.rank <= $KnnK""".stripMargin
-    s"""WITH sigs AS MATERIALIZED (
-       |$knnBandSql),
-       |kcand AS MATERIALIZED (
-       | SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
-       | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
-       |  AND s1.vec_id < s2.vec_id),
-       |kscored AS MATERIALIZED (
-       | SELECT c.v1, c.v2,
-       |  CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
-       | FROM kcand c JOIN embeddings a ON a.vec_id = c.v1
-       |  JOIN embeddings b ON b.vec_id = c.v2),
-       |lvl AS MATERIALIZED (
-       | SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2
-       |   WHEN h % 4 = 0 THEN 1 ELSE 0 END AS lvl,
-       |  ${isNewSql("vec_id")} AS is_batch
-       | FROM (SELECT vec_id,
-       |   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-       |  FROM embeddings)),
-       |lp AS MATERIALIZED (
-       | SELECT k.v1, k.v2, k.cos_e6, a.lvl AS la, b.lvl AS lb,
-       |  a.is_batch AS ba, b.is_batch AS bb
-       | FROM kscored k JOIN lvl a ON a.vec_id = k.v1
-       |  JOIN lvl b ON b.vec_id = k.v2),
+    s"""WITH ${batchLevelPairsSql("is_batch")},
        |${layerCtes(2)},
        |${layerCtes(1)},
        |${layerCtes(0)}
@@ -3181,30 +3134,19 @@ object Similarity {
     * relink minority's keyed semi-join against the banded pairs. */
   def s29HnswDelete(spark: SparkSession, dir: String): DataFrame = {
     val Kp = KnnK + HnswSpareK
-    val h = graft.functions.TextFunctions.md5Long60(col("vec_id").cast("string"))
-    val lvl = emb(spark, dir).select(col("vec_id"),
-        when(h % 16 === 0, 2).when(h % 4 === 0, 1).otherwise(0).as("lvl"),
-        isNewVec(col("vec_id")).as("dead"))
-      .localCheckpoint(true)
-    val pairs = knnScoredPairs(spark, dir)
-      .join(lvl.select(col("vec_id").as("va"), col("lvl").as("la"),
-        col("dead").as("xa")), Seq("va"))
-      .join(lvl.select(col("vec_id").as("vb"), col("lvl").as("lb"),
-        col("dead").as("xb")), Seq("vb"))
-      .localCheckpoint(true)
+    // the batch flag marks today's tombstones
+    val (_, pairs) = batchLevelPairs(spark, dir)
     def layerRows(l: Int): DataFrame = {
       val mirrored = pairs.filter(col("la") >= l && col("lb") >= l)
         .select(explode(array(
           struct(col("va").as("g_src"), col("vb").as("g_dst"), col("cos_e6"),
-            col("xa").as("src_dead"), col("xb").as("dst_dead")),
+            col("ba").as("src_dead"), col("bb").as("dst_dead")),
           struct(col("vb").as("g_src"), col("va").as("g_dst"), col("cos_e6"),
-            col("xb").as("src_dead"), col("xa").as("dst_dead")))).as("p"))
+            col("bb").as("src_dead"), col("ba").as("dst_dead")))).as("p"))
         .select(col("p.*"))
-      val w = Window.partitionBy(col("g_src"))
-        .orderBy(col("cos_e6").desc, col("g_dst"))
       // the stored K' adjacency (at scale: a table read), consumed by the
       // class split AND the spare repair
-      val stored = mirrored.withColumn("r", row_number().over(w))
+      val stored = mirrored.withColumn("r", row_number().over(edgeOrder))
         .filter(col("r") <= Kp).localCheckpoint(true)
       val stats = stored.groupBy(col("g_src"), col("src_dead"))
         .agg(
@@ -3235,13 +3177,13 @@ object Similarity {
         .join(hintAff(affected.filter(col("repair_class") === "spare")
           .select(col("g_src"))), Seq("g_src"), "left_semi")
         .filter(!col("dst_dead"))
-        .withColumn("rank", row_number().over(w).cast("long"))
+        .withColumn("rank", row_number().over(edgeOrder).cast("long"))
         .filter(col("rank") <= KnnK)
       val relinkAdj = mirrored
         .join(hintAff(affected.filter(col("repair_class") === "relink")
           .select(col("g_src"))), Seq("g_src"), "left_semi")
         .filter(!col("dst_dead"))
-        .withColumn("rank", row_number().over(w).cast("long"))
+        .withColumn("rank", row_number().over(edgeOrder).cast("long"))
         .filter(col("rank") <= KnnK)
       spareAdj.select(col("g_src"), col("rank"), col("g_dst"), col("cos_e6"))
         .union(relinkAdj.select(col("g_src"), col("rank"), col("g_dst"),
@@ -3261,8 +3203,6 @@ object Similarity {
     * rebuild-exact. */
   private lazy val s29OracleSql: String = {
     val Kp = KnnK + HnswSpareK
-    def isNewSql(x: String) =
-      s"CAST(('0x' || substr(md5(CAST($x AS VARCHAR)), 1, 15)) AS BIGINT) % 100 >= ${Dedup.NewBucketMin}"
     def layerCtes(l: Int): String =
       s"""m$l AS MATERIALIZED (
          | SELECT v1 AS g_src, v2 AS g_dst, cos_e6, ba AS sd, bb AS dd
@@ -3291,29 +3231,7 @@ object Similarity {
          | CAST(g.rank AS BIGINT) AS rank, g.g_dst AS neighbor_id, g.cos_e6,
          | a.repair_class
          |FROM g$l g JOIN a$l a ON a.g_src = g.g_src WHERE g.rank <= $KnnK""".stripMargin
-    s"""WITH sigs AS MATERIALIZED (
-       |$knnBandSql),
-       |kcand AS MATERIALIZED (
-       | SELECT DISTINCT s1.vec_id AS v1, s2.vec_id AS v2
-       | FROM sigs s1 JOIN sigs s2 ON s1.band = s2.band AND s1.sig = s2.sig
-       |  AND s1.vec_id < s2.vec_id),
-       |kscored AS MATERIALIZED (
-       | SELECT c.v1, c.v2,
-       |  CAST(floor(${cosSql("a.embedding", "b.embedding")} * 1000000.0) AS BIGINT) AS cos_e6
-       | FROM kcand c JOIN embeddings a ON a.vec_id = c.v1
-       |  JOIN embeddings b ON b.vec_id = c.v2),
-       |lvl AS MATERIALIZED (
-       | SELECT vec_id, CASE WHEN h % 16 = 0 THEN 2
-       |   WHEN h % 4 = 0 THEN 1 ELSE 0 END AS lvl,
-       |  ${isNewSql("vec_id")} AS dead
-       | FROM (SELECT vec_id,
-       |   CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-       |  FROM embeddings)),
-       |lp AS MATERIALIZED (
-       | SELECT k.v1, k.v2, k.cos_e6, a.lvl AS la, b.lvl AS lb,
-       |  a.dead AS ba, b.dead AS bb
-       | FROM kscored k JOIN lvl a ON a.vec_id = k.v1
-       |  JOIN lvl b ON b.vec_id = k.v2),
+    s"""WITH ${batchLevelPairsSql("dead")},
        |${layerCtes(2)},
        |${layerCtes(1)},
        |${layerCtes(0)}

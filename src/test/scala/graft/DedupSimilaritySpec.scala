@@ -449,7 +449,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val e = Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val cents = Similarity.s11CorpusModel(spark, sf)
-    val isNew = Similarity.s11IsNewVec(col("vec_id"))
+    val isNew = Dedup.isNewBatch(col("vec_id"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cell", "cell_cos_e6").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
@@ -1511,7 +1511,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       math.floor(dot / (math.sqrt(na) * math.sqrt(nb)) * 1e6).toLong
     }
     // the graph is s5's OWN verified artifact — take it as given
-    val graph = operators.Similarity.knnEdges(spark, sf).collect()
+    val graph = operators.Similarity.s5KnnJoin(spark, sf).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("neighbor_id"))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val probes = vecs.keys.filter(_ < NumProbes).toSeq.sorted
