@@ -69,7 +69,7 @@ object Bench {
 
   /** Throttle canaries: three trivial queries (pure scan/agg, unchanged
     * since round 1) whose clean-environment floors are known from solo
-    * `BenchOne` medians at round-8 HEAD (BASELINE.md). No code change can
+    * per-query medians at round-8 HEAD (BASELINE.md). No code change can
     * slow all three at once — they share nothing but the host — so if a
     * majority of them run ≥ `CanaryFactor`× their floor, the RUN is
     * throttled, not the code, and the metric line says so in-band
@@ -84,7 +84,7 @@ object Bench {
     * `## Canary floors` table (the same artifact the per-query bars live
     * in), so the gate is always calibrated to whatever host the baseline
     * rows were captured on — re-hosting the bench means re-flooring the
-    * artifact (BenchOne solo medians × ~1.7 in-suite margin), never
+    * artifact (`JobCountProbe <q> 6` solo medians × ~1.7 in-suite margin), never
     * recompiling, and floors can never drift out of sync with the rows
     * they guard. [[FallbackFloor]] (the historical baseline-host values)
     * applies only when the artifact is missing or unparseable — e.g. the

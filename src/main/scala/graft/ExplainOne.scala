@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * `SparkEntry.benchQueries` entry — the `.explain("formatted")` loop the
   * performance discipline runs after every operator lands (pushdown
   * reached the scan? exchanges only where the algebra demands? codegen
-  * spans wide?). `BenchOne` measures; this shows WHY.
+  * spans wide?). `JobCountProbe` measures; this shows WHY.
   *
   * Usage: `graft.ExplainOne <query> [sfDir]` — or `all` to dump every
   * plan (grep the output for `PushedFilters` / `Arguments: hashpartitioning`

@@ -15,7 +15,7 @@ object GraftSession {
     tune(SparkSession.builder().master(s"local[$cores]"), shufflePartitions)
       .getOrCreate()
 
-  /** The harness mains' session (Bench, BenchOne, Verify, JobCountProbe,
+  /** The harness mains' session (Bench, Verify, JobCountProbe,
     * ExplainOne): `local[SPARK_GRAFT_CPUS]` with as many shuffle
     * partitions, engine defaults, `logLevel`, and the bounded-window
     * warning silenced. */

@@ -3,19 +3,27 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Diagnostic main (r20 optimization round): count the Spark JOBS, STAGES,
-  * TASKS and total shuffle bytes one query executes end-to-end — the
-  * fixed-overhead axis `explain("formatted")` cannot see on the engine's
-  * multi-job queries (every eager `localCheckpoint` is its own job, so a
-  * 16-round descent is ~40 jobs whose intra-round plans never appear in
-  * the final frame's explain). BenchOne measures wall; ExplainOne shows
-  * the final plan; this counts what actually RAN.
+/** The per-query probe main: N back-to-back reps of one named query
+  * (noop sink), printing per rep its wall time, the Spark JOBS, STAGES,
+  * TASKS and total shuffle bytes it executed, and the used heap after a
+  * `System.gc()`. The counts are the fixed-overhead axis
+  * `explain("formatted")` cannot see on the engine's multi-job queries
+  * (every eager `localCheckpoint` is its own job, so a 16-round descent
+  * is ~40 jobs whose intra-round plans never appear in the final frame's
+  * explain); ExplainOne shows the final plan, this counts what actually
+  * RAN. `graft.Bench` interleaves reps across queries to DECORRELATE JVM
+  * state; this runs them back to back on purpose, so state a query
+  * accumulates across its own runs (sketch buffers, broadcast refs, GC
+  * debt) shows as a heap floor rising with reps, apart from GC
+  * scheduling noise (flat floor, noisy times).
   *
   *   SPARK_GRAFT_SF_DIR=... java ... graft.JobCountProbe <query> [reps]
   *
-  * Rep 1 is warmup (JIT/codegen); counters reset per rep and print per
-  * rep, so compare warm reps across commits. Stage counts include reused
-  * exchanges (a stage submitted is a stage counted).
+  * Names resolve against `benchQueries`; prefix with `verified:` to run
+  * the `queries` form instead. Rep 1 is warmup (JIT/codegen); counters
+  * reset per rep and print per rep, so compare warm reps across commits.
+  * Stage counts include reused exchanges (a stage submitted is a stage
+  * counted).
   */
 object JobCountProbe {
   def main(args: Array[String]): Unit = {
@@ -42,7 +50,9 @@ object JobCountProbe {
         }
       }
     })
-    val fn = SparkEntry.benchQueries(name)
+    val fn = if (name.startsWith("verified:")) SparkEntry.queries(name.stripPrefix("verified:"))
+             else SparkEntry.benchQueries(name)
+    val rt = Runtime.getRuntime
     for (i <- 1 to reps) {
       jobs.set(0); stages.set(0); tasks.set(0); shufWrite.set(0); shufRead.set(0)
       val t0 = System.nanoTime()
@@ -54,8 +64,11 @@ object JobCountProbe {
       Thread.sleep(400)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
+      System.gc()
+      val usedMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
       println(f"rep $i%2d: $sec%8.3f s  jobs=${jobs.get}%4d stages=${stages.get}%4d " +
-        f"tasks=${tasks.get}%6d shuffleWrite=${shufWrite.get}%12d B shuffleRead=${shufRead.get}%12d B")
+        f"tasks=${tasks.get}%6d shuffleWrite=${shufWrite.get}%12d B shuffleRead=${shufRead.get}%12d B" +
+        f"  heap-after-gc: $usedMb%6d MB")
     }
     spark.stop()
   }
