@@ -1164,23 +1164,24 @@ object Analytics {
     * rows, and the revenue attach is one aggregated-fact equi-join. */
   def q58HierarchyReach(spark: SparkSession, dir: String): DataFrame = {
     val cust = t(spark, dir, "customer").select(col("c_custkey"))
-    // referrer must itself be a customer (the join makes the convention
-    // data-driven rather than key-arithmetic trusted) AND strictly
-    // precede the referee — custkeys start at 0, so without the strict
-    // filter customer 0 would refer itself (a self-loop, the degenerate
-    // cycle). With it, 0 is the forest's root.
+    // referrer must itself be a customer (the semi join makes the
+    // convention data-driven rather than key-arithmetic trusted, and keeps
+    // the customer scan's size estimate, where an inner join's is the
+    // product of both scans') AND strictly precede the referee — custkeys
+    // start at 0, so without the strict filter customer 0 would refer
+    // itself (a self-loop, the degenerate cycle). With it, 0 is the
+    // forest's root.
     val edges = cust
       .select(col("c_custkey").as("child"),
         expr(s"c_custkey div $RefFan").as("parent"))
       .filter(col("parent") < col("child"))
-      .join(cust.select(col("c_custkey").as("parent")), Seq("parent"))
+      .join(cust.select(col("c_custkey").as("parent")), Seq("parent"), "left_semi")
       .select(col("child"), col("parent"))
       .localCheckpoint(true) // edge-sized; reused by every frontier + root test
-    val rootFlag = cust
-      .join(edges.select(col("child").as("c_custkey"), lit(1L).as("_has_parent")),
-        Seq("c_custkey"), "left")
-      .select(col("c_custkey").as("anc_key"),
-        when(col("_has_parent").isNull, 1L).otherwise(0L).as("anc_is_root"))
+    // the roots: customers that are no edge's child
+    val roots = cust
+      .join(edges.select(col("child").as("c_custkey")), Seq("c_custkey"), "left_anti")
+      .select(col("c_custkey").as("anc_key"), lit(1L).as("_root"))
     val spend = t(spark, dir, "orders")
       .groupBy(col("o_custkey").as("custkey"))
       .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("spend_cents"))
@@ -1196,9 +1197,10 @@ object Analytics {
       closure = closure.union(frontier)
     }
     closure
-      .join(rootFlag, Seq("anc_key"))
+      .join(roots, Seq("anc_key"), "left")
       .join(spend, Seq("custkey"), "left")
-      .select(col("custkey"), col("anc_key"), col("depth"), col("anc_is_root"),
+      .select(col("custkey"), col("anc_key"), col("depth"),
+        coalesce(col("_root"), lit(0L)).as("anc_is_root"),
         coalesce(col("spend_cents"), lit(0L)).as("desc_spend_cents"))
       .orderBy(col("custkey"), col("depth"))
   }

@@ -24,7 +24,8 @@ class PlanPinSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   val Pinned = Seq("q1_pricing_summary", "q3_shipping_priority",
-    "q9_topn_per_group", "p6_curated_join", "p27_expire_snapshots",
+    "q9_topn_per_group", "q58_hierarchy_reach", "q60_subtree_rollup",
+    "p6_curated_join", "p27_expire_snapshots",
     "p29_bucketed_join", "p34_bucketed_priority", "p35_bucketed_semi",
     "p36_bucketed_trade", "p37_bucketed_returns", "p38_bucketed_delay",
     "p41_rollback_plan", "p46_analyze_priority", "d1_dedup_exact", "d3_dedup_minhash",
